@@ -2,23 +2,41 @@
 
 Re-expresses the reference's one join — ``batch_with_tile_grouping``
 (``htg/src/service.rs:409-480``: group points by tile key, load each tile
-once, apply the kernel, reassemble in input order) — as Spark plan shapes:
+once, apply the kernel, reassemble in input order) — as three Spark plans.
 
-- **broadcast** strategy: the tile catalog (raw HGT blobs) is broadcast to
-  executors as a Python dict and the whole join + kernel is ONE map-only
-  ``mapInPandas`` stage — zero shuffle, payload columns pass through
-  untouched, executor-local LRU decodes each tile once per worker (the
-  distributed analog of the reference's moka cache, ``service.rs:168``).
-  Right whenever the catalog fits in executor memory.
+All three plans append the same columns with one Arrow helper
+(``_kernel_arrays``): ``kernel_batch`` groups a batch by tile and reads
+decoded grids through a blob getter. The two map-side plans wrap it in
+ONE Python stage, a scalar-iterator ``arrow_udf`` over ``(lat, lon)``
+(``_kernel_udf``) that returns ``(tile_lat, tile_lon, in_coverage,
+tile_found, knn_used, elevation)`` as a struct. Spark plans it as
+``ArrowEvalPython``, which keeps every other column of the row in the
+JVM: only the two float64 arguments (16 B/row) cross into Python, never
+the image payload. Decoded grids live in an executor-local LRU (the
+distributed analog of the reference's moka cache, ``service.rs:168``);
+the map-side plans differ only in the blob getter behind it.
 
-- **cogroup** strategy (scale path, catalog >> memory): points are projected
-  narrow ``(row id, lat, lon, tile key, salt)`` and shuffled by
-  ``(tile_lat, tile_lon, salt)``; the catalog side is exploded x n_salts so
-  each hot tile's points spread over ``n_salts`` tasks while each tile blob
-  crosses the shuffle at most ``n_salts`` times; a grouped ``applyInArrow``
-  cogroup applies the kernel per (tile, salt) bucket; the multi-MB image
-  payload NEVER rides the tile shuffle — it is joined back by row id at the
-  end (plan-shape decision per SURVEY.md §4).
+- **broadcast** (map-only): the raw tile blobs ride a Spark broadcast and
+  the blob getter is a dict lookup. Zero shuffle. Right whenever the
+  catalog fits in executor memory.
+
+- **cogroup, blob_source='path'** (scale path for a path-bearing catalog,
+  e.g. ``tile_dir``): the full input rows are salted with the 2% histogram
+  (hot cells get up to ``n_salts`` salts) and repartitioned ONCE on the
+  salted tile key, so each task sees few tiles; the blob getter reads a
+  tile from shared storage by path (a per-engine broadcast path index).
+  kNN runs inside the kernel against the cached tile centres. Only the
+  input rows move, once: no catalog-side shuffle, no cogroup and no id
+  re-join, so duplicate ids stay rows of their own, as under broadcast.
+
+- **cogroup, blob_source='inline'** (in-memory catalogs past the broadcast
+  gate): blobs can only reach a task through a shuffle, so points are
+  projected narrow ``(row id, lat, lon, salted tile key)`` and cogrouped
+  with the catalog replicated ``k_salt(cell)`` times; the grouped
+  ``applyInArrow`` runs ``_kernel_arrays`` per (tile, salt) group.
+  The payload is joined back by row id at the end, so this plan needs
+  unique ids. kNN is a second pass (``_knn_second_pass``): the fallback
+  tile is data-dependent, so the first shuffle cannot route to it.
 
 Semantics (exact parity with the reference; FIXTURES.md §6):
 - out-of-coverage (|lat|>60, |lon|>180, inclusive bounds valid):
@@ -27,15 +45,19 @@ Semantics (exact parity with the reference; FIXTURES.md §6):
 - void sample / any-void bilinear corner: NULL/default
   (service.rs:344-347, tile.rs:271-273)
 - nearest = Rust f64::round (half away from zero); floor = srtm.py variant
-- order/identity preserved by keying every row with ``id_col``
+- every input row comes out once with its payload untouched; only the
+  inline cogroup keys rows by ``id_col`` (and so needs unique ids)
 
 kNN nearest-tile fallback (new, north rule): in-coverage points whose tile
 is absent are assigned the catalog tile with the nearest center (squared
 euclidean in degrees, ties by (tile_lat, tile_lon)), coordinates clamped
 into that tile's [0,1] frac range — half-open boundary semantics preserved
-via the explicit frac-based kernels. Supported by BOTH strategies: in-kernel
-on the broadcast path; a two-pass plan on the cogroup path
-(``_knn_second_pass`` — results row-identical by test).
+via the explicit frac-based kernels. In-kernel on the broadcast and path
+plans, a second pass on the inline cogroup; row-identical by test.
+
+NULL (or NaN) coordinates are out of coverage under every plan: lat/lon
+pass through unchanged, the tile key is NULL and the elevation is
+NULL/default.
 """
 
 from __future__ import annotations
@@ -44,16 +66,15 @@ from collections import OrderedDict
 from collections.abc import Iterator
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import cells, hgt
 
-# appended output columns (in order)
-_APPENDED = [
-    ("lat", T.DoubleType()),
-    ("lon", T.DoubleType()),
+# columns the kernel appends after lat/lon, before elevation (in order)
+_KERNEL = [
     ("tile_lat", T.IntegerType()),
     ("tile_lon", T.IntegerType()),
     ("in_coverage", T.BooleanType()),
@@ -284,33 +305,93 @@ def kernel_batch(
     }
 
 
-def _result_table(rid, res: dict, mode: str):
-    """Assemble the kernel's NumPy outputs straight into a pyarrow.Table
-    for the cogroup hot path. Skipping a per-group pandas DataFrame
-    round-trip (construct + block consolidation + Arrow re-conversion per
-    GROUP, and groups are small under salting) keeps the grouped kernel
-    stage's constant cost at the Arrow floor."""
-    import pyarrow as pa
-
+def _kernel_arrays(
+    lat: pa.Array, lon: pa.Array, get_grid, mode: str, knn_centers=None
+) -> list[pa.Array]:
+    """``kernel_batch`` over two Arrow float64 columns, returned as the
+    Arrow arrays of ``_KERNEL`` + elevation — the one body shared by the
+    map-side UDF and the inline cogroup's grouped apply. A NULL (or NaN)
+    coordinate reads as NaN: out of coverage, with a NULL tile key."""
+    lat_np = lat.to_numpy(zero_copy_only=False)
+    lon_np = lon.to_numpy(zero_copy_only=False)
+    with np.errstate(invalid="ignore"):  # NaN -> int cast of the tile key
+        res = kernel_batch(lat_np, lon_np, get_grid, mode, knn_centers=knn_centers)
+    no_key = np.isnan(lat_np) | np.isnan(lon_np)
     e = res["elevation"]
-    nan_mask = np.isnan(e)
     if mode == "bilinear":
         elev = pa.array(e, type=pa.float64(), from_pandas=True)  # NaN -> null
     else:
+        nan_mask = np.isnan(e)
         elev = pa.array(np.where(nan_mask, 0, e).astype(np.int32), mask=nan_mask)
-    arrays = [
-        rid,
-        pa.array(res["lat"], type=pa.float64()),
-        pa.array(res["lon"], type=pa.float64()),
-        pa.array(np.asarray(res["tile_lat"], dtype=np.int32)),
-        pa.array(np.asarray(res["tile_lon"], dtype=np.int32)),
-        pa.array(np.asarray(res["in_coverage"], dtype=bool)),
-        pa.array(np.asarray(res["tile_found"], dtype=bool)),
-        pa.array(np.asarray(res["knn_used"], dtype=bool)),
+    return [
+        pa.array(res["tile_lat"], mask=no_key),
+        pa.array(res["tile_lon"], mask=no_key),
+        pa.array(res["in_coverage"]),
+        pa.array(res["tile_found"]),
+        pa.array(res["knn_used"]),
         elev,
     ]
-    names = ["_rid"] + [n for n, _t in _APPENDED] + ["elevation"]
-    return pa.Table.from_arrays(arrays, names=names)
+
+
+_KERNEL_NAMES = [n for n, _t in _KERNEL] + ["elevation"]
+
+
+def _kernel_type(mode: str) -> T.StructType:
+    return T.StructType(
+        [T.StructField(n, t) for n, t in _KERNEL]
+        + [T.StructField("elevation", _elev_type(mode))]
+    )
+
+
+def _kernel_udf(get_blob, mode: str, token: str, cache_cap: int, knn_centers=None):
+    """The one Python stage of the map-side plans: a scalar-iterator
+    ``arrow_udf`` over (lat, lon) returning ``_KERNEL`` + elevation as a
+    struct. Spark plans it as ArrowEvalPython, which keeps every other
+    column in the JVM, so only the two float64 arguments cross into Python
+    and the payload never counts toward an Arrow batch. ``get_blob(key)``
+    runs executor-side and returns raw tile bytes or None; grids are
+    decoded once per worker into the engine's executor cache."""
+
+    def elevation_kernel(
+        batches: Iterator[tuple[pa.Array, pa.Array]],
+    ) -> Iterator[pa.Array]:
+        cache = _executor_cache(token, cache_cap)
+
+        def get_grid(key):
+            return cache.get(key, get_blob)
+
+        for lat, lon in batches:
+            arrays = _kernel_arrays(lat, lon, get_grid, mode, knn_centers)
+            yield pa.StructArray.from_arrays(arrays, names=_KERNEL_NAMES)
+
+    return F.arrow_udf(elevation_kernel, _kernel_type(mode))
+
+
+def _quoted(name: str):
+    return F.col("`" + name.replace("`", "``") + "`")
+
+
+def _append_kernel(frame: DataFrame, kernel_udf) -> DataFrame:
+    """frame minus (lat, lon), then lat, lon (as double), ``_KERNEL`` and
+    elevation — the output shape of the map-side plans."""
+    keep = [_quoted(c) for c in frame.columns if c not in ("lat", "lon")]
+    lat = F.col("lat").cast("double")
+    lon = F.col("lon").cast("double")
+    return frame.select(
+        *keep, lat.alias("lat"), lon.alias("lon"), kernel_udf(lat, lon).alias("_k")
+    ).select(
+        *keep, "lat", "lon", *[F.col("_k")[n].alias(n) for n in _KERNEL_NAMES]
+    )
+
+
+def _result_table(ltbl, arrays: list) -> pa.Table:
+    """Grouped-apply output: the group's (_rid, lat, lon) columns followed
+    by the kernel's arrays, straight into a pyarrow.Table (no per-group
+    pandas round-trip; groups are small under salting)."""
+    return pa.Table.from_arrays(
+        [ltbl.column("_rid"), ltbl.column("lat"), ltbl.column("lon")] + arrays,
+        names=["_rid", "lat", "lon"] + _KERNEL_NAMES,
+    )
 
 
 def _group_grid(rtbl, blob_source: str):
@@ -347,9 +428,6 @@ class ElevationEngine:
 
         self.spark = spark
         self.cache_size = cache_size
-        # histogram-estimated input rows of the latest _salted_inputs call;
-        # sizes the cogroup kernel stage's explicit partition count
-        self._last_hist_rows = 0
         # executor-cache namespace: a per-engine UUID, NOT id(self) — Python
         # recycles ids after GC and executor workers outlive driver objects,
         # so an id-keyed cache could serve another catalog's grids
@@ -363,6 +441,10 @@ class ElevationEngine:
         else:
             raise ValueError("one of catalog / grids / tile_dir is required")
         self._bcast = None
+        # broadcast {tile key: path} of a path-bearing catalog (_path_index)
+        self._paths = None
+        # (n, 2) int64 catalog tile keys, the kNN centres (tile_centers)
+        self._centers: np.ndarray | None = None
         # tiles warmed by previous preload() calls — the driver-side ledger
         # behind PreloadStats.tiles_already_cached (service.rs:705-708).
         # The reference consults the LIVE moka cache, whose capacity
@@ -657,11 +739,36 @@ class ElevationEngine:
                     rows = self.catalog.select("tile_lat", "tile_lon", "data").collect()
                     blobs = {(r.tile_lat, r.tile_lon): bytes(r.data) for r in rows}
                     self._bcast = self.spark.sparkContext.broadcast(blobs)
+                    self._set_centers(blobs)
         return self._bcast
 
+    def _path_index(self):
+        """Broadcast {(tile_lat, tile_lon): path} of a path-bearing catalog,
+        collected once per engine: paths only, so it broadcasts at any
+        catalog size."""
+        if self._paths is None:
+            with self._prep_lock:
+                if self._paths is None:
+                    rows = self.catalog.select("tile_lat", "tile_lon", "path").collect()
+                    paths = {(r.tile_lat, r.tile_lon): str(r.path) for r in rows}
+                    self._paths = self.spark.sparkContext.broadcast(paths)
+                    self._set_centers(paths)
+        return self._paths
+
+    def _set_centers(self, index: dict) -> None:
+        if self._centers is None:
+            self._centers = np.array(list(index), dtype=np.int64).reshape(-1, 2)
+
     def tile_centers(self) -> np.ndarray:
-        rows = self.catalog.select("tile_lat", "tile_lon").collect()
-        return np.array([[r.tile_lat, r.tile_lon] for r in rows], dtype=np.int64).reshape(-1, 2)
+        """(n, 2) int64 catalog tile keys — the kNN centres. Cached per
+        engine like _measure_catalog: taken from the broadcast blob keys or
+        the path index when one exists, else collected once."""
+        if self._centers is None:
+            with self._prep_lock:
+                if self._centers is None:
+                    rows = self.catalog.select("tile_lat", "tile_lon").collect()
+                    self._set_centers({(r.tile_lat, r.tile_lon): None for r in rows})
+        return self._centers
 
     # -- the join ------------------------------------------------------------
 
@@ -690,14 +797,15 @@ class ElevationEngine:
         out-of-coverage row (service.rs:485-490) instead of defaulting.
 
         blob_source (cogroup strategy only): 'inline' ships each tile blob
-        through the shuffle at most n_salts times; 'path' ships ONLY the
-        source URI and each task reads its tile from shared storage at
-        apply time — at 100 TB of rasters the blobs must never enter a
-        shuffle, this is that plan. Requires a path-bearing catalog
+        through the shuffle at most n_salts times; 'path' moves only the
+        input rows (once, salted by tile) and each task reads its tiles
+        from shared storage — at 100 TB of rasters the blobs must never
+        enter a shuffle, this is that plan. Requires a path-bearing catalog
         (catalog_from_dir / tile_dir engines). Default None = auto: a
         cogroup join over a path-bearing catalog picks 'path' (the only
         shape that survives when the raster corpus itself is the 100 TB);
-        in-memory catalogs fall back to 'inline'.
+        in-memory catalogs fall back to 'inline'. Both cogroup plans salt
+        by ``id_col``; only 'inline' re-joins by it and so needs it unique.
         """
         if mode not in ("nearest", "floor", "bilinear"):
             raise ValueError(f"bad mode {mode!r}")
@@ -735,8 +843,12 @@ class ElevationEngine:
 
         if strategy == "broadcast":
             out = self._join_broadcast(pts, mode, knn_fallback)
+        elif strategy == "cogroup" and id_col not in pts.columns:
+            raise ValueError(f"cogroup strategy needs an id column {id_col!r}")
+        elif strategy == "cogroup" and blob_source == "path":
+            out = self._join_by_path(pts, mode, knn_fallback, id_col, n_salts)
         elif strategy == "cogroup":
-            out = self._join_cogroup(pts, mode, knn_fallback, id_col, n_salts, blob_source)
+            out = self._join_cogroup(pts, mode, knn_fallback, id_col, n_salts)
         else:
             raise ValueError(f"bad strategy {strategy!r}")
 
@@ -766,97 +878,43 @@ class ElevationEngine:
     # -- broadcast (map-only) strategy ----------------------------------------
 
     def _join_broadcast(self, pts: DataFrame, mode: str, knn: bool) -> DataFrame:
-        """Map-only Arrow stage: lat/lon come off the Arrow buffers as
-        zero-copy NumPy views, the kernel runs vectorized, payload columns
-        are forwarded as untouched Arrow arrays (the multi-MB image bytes
-        never enter pandas or get copied)."""
-        import pyarrow as pa
-
+        """Map-only: the kernel UDF reads tile blobs from the broadcast."""
         bcast = self._broadcast_blobs()
         centers = self.tile_centers() if knn else None
-        cache_cap = self.cache_size
-        token = self._cache_token
-        out_schema = T.StructType(
-            [f for f in pts.schema.fields if f.name not in ("lat", "lon")]
-        )
-        for name, typ in _APPENDED:
-            out_schema = out_schema.add(name, typ)
-        out_schema = out_schema.add("elevation", _elev_type(mode))
-        passthrough = [f.name for f in pts.schema.fields if f.name not in ("lat", "lon")]
 
-        def run(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
-            cache = _executor_cache(token, cache_cap)
-            blobs = bcast.value
+        def get_blob(key):
+            return bcast.value.get(key)
 
-            def get_grid(key):
-                return cache.get(key, blobs.get)
+        udf = _kernel_udf(get_blob, mode, self._cache_token, self.cache_size, centers)
+        return _append_kernel(pts, udf)
 
-            for batch in batches:
-                lat = batch.column(batch.schema.get_field_index("lat")).to_numpy(
-                    zero_copy_only=False
-                )
-                lon = batch.column(batch.schema.get_field_index("lon")).to_numpy(
-                    zero_copy_only=False
-                )
-                res = kernel_batch(lat, lon, get_grid, mode, knn_centers=centers)
-                e = res["elevation"]
-                nan_mask = np.isnan(e)
-                if mode == "bilinear":
-                    elev_arr = pa.array(e, type=pa.float64(), from_pandas=True)  # NaN -> null
-                else:
-                    elev_arr = pa.array(
-                        np.where(nan_mask, 0, e).astype(np.int32), mask=nan_mask
-                    )
-                arrays = [batch.column(batch.schema.get_field_index(c)) for c in passthrough]
-                arrays += [
-                    pa.array(res["lat"], type=pa.float64()),
-                    pa.array(res["lon"], type=pa.float64()),
-                    pa.array(res["tile_lat"], type=pa.int32()),
-                    pa.array(res["tile_lon"], type=pa.int32()),
-                    pa.array(res["in_coverage"]),
-                    pa.array(res["tile_found"]),
-                    pa.array(res["knn_used"]),
-                    elev_arr,
-                ]
-                names = passthrough + [n for n, _t in _APPENDED] + ["elevation"]
-                yield pa.RecordBatch.from_arrays(arrays, names=names)
-
-        return pts.mapInArrow(run, schema=out_schema)
-
-    # -- cogroup (shuffle, salted) strategy -------------------------------------
+    # -- salted strategies -----------------------------------------------------
 
     # histogram pre-pass sample rate: k_salt needs only order-of-magnitude
     # per-cell counts (it is clamped to [1, n_salts] and the target is a
     # RATIO of sampled counts, so the 1/f scale factors cancel) — a 2%
     # sample makes the pre-pass ~free instead of a second full scan of the
     # points table per join call. Cells the sample misses default to
-    # k_salt=1 via the coalesce in both join legs, which is exactly right:
-    # a cell too cold to appear in a 2% sample is not a skew cell.
+    # k_salt=1 via the coalesce in every salted plan, which is exactly
+    # right: a cell too cold to appear in a 2% sample is not a skew cell.
     HIST_SAMPLE_FRACTION = 0.02
 
-    def _salted_inputs(
-        self, pts: DataFrame, id_col: str, n_salts: int, blob_source: str = "inline"
-    ):
-        """Adaptive-salt shuffle inputs for the cogroup join: returns
-        (narrow, cat) where `narrow` is (_rid, lat, lon, tile_lat, tile_lon,
-        salt) and `cat` is the catalog replicated k_salt(cell) times per
-        cell. The histogram pre-pass counts a HIST_SAMPLE_FRACTION sample
-        of points per 1-degree cell (output bounded by 64,800 cells — safe
-        to collect) and gives each cell
+    def _salt_table(self, keys: DataFrame, n_salts: int) -> tuple[DataFrame, float]:
+        """Adaptive salt counts from the histogram pre-pass over `keys`
+        (tile_lat, tile_lon per input row): returns (salt table
+        (tile_lat int, tile_lon int, k_salt int), estimated input rows).
+        The pre-pass counts a HIST_SAMPLE_FRACTION sample per 1-degree cell
+        (output bounded by 64,800 cells — safe to collect; this collect is
+        the plan's one intended eager job) and gives each cell
         k(cell) = clamp(ceil(count / target_rows_per_salt), 1, n_salts)
-        salt buckets, so only hot cells replicate their tile blob and cold
-        cells cross the shuffle once. Exposed separately from _join_cogroup
-        so the skew-stress test can assert the group-size distribution the
-        shuffle actually partitions on."""
-        narrow = pts.select(
-            F.col(id_col).alias("_rid"),
-            F.col("lat"),
-            F.col("lon"),
-            cells.tile_lat(F.col("lat")).alias("tile_lat"),
-            cells.tile_lon(F.col("lon")).alias("tile_lon"),
-        )
+        salt buckets, so only hot cells fan out. The table is built from a
+        pyarrow.Table: a JVM LocalRelation, where createDataFrame(list)
+        would parallelize a Python RDD and run a Python-worker job on every
+        use just to broadcast it."""
+        import math
+
         hist = (
-            narrow.sample(fraction=self.HIST_SAMPLE_FRACTION, seed=42)
+            keys.sample(fraction=self.HIST_SAMPLE_FRACTION, seed=42)
             .groupBy("tile_lat", "tile_lon")
             .count()
             .collect()
@@ -868,33 +926,116 @@ class ElevationEngine:
         f = self.HIST_SAMPLE_FRACTION
         est = [(r["tile_lat"], r["tile_lon"], r["count"] / f) for r in hist]
         total_rows = sum(c for _, _, c in est) or 1
-        slots = pts.sparkSession.sparkContext.defaultParallelism
+        slots = keys.sparkSession.sparkContext.defaultParallelism
         target = max(total_rows / max(slots * 2, 1), 1.0)
-        import math
-
         # salt only cells ABOVE 2x the per-slot target: a cell under 2x is
         # ordinary partition imbalance, not skew, and the 2x guard band also
         # absorbs the sampling noise of borderline-cold cells (a cell whose
         # sampled count is within noise of the target must not flap into
         # k_salt=2 and needlessly replicate its blob)
-        salt_rows = [
-            (
-                tl,
-                tn,
-                1 if c <= 2 * target else int(min(math.ceil(c / target), n_salts)),
-            )
-            for tl, tn, c in est
+        k_salt = [
+            1 if c <= 2 * target else int(min(math.ceil(c / target), n_salts))
+            for _, _, c in est
         ]
-        salt_df = F.broadcast(
-            pts.sparkSession.createDataFrame(
-                salt_rows, "tile_lat int, tile_lon int, k_salt int"
-            )
+        table = pa.table(
+            {
+                "tile_lat": pa.array([e[0] for e in est], pa.int32()),
+                "tile_lon": pa.array([e[1] for e in est], pa.int32()),
+                "k_salt": pa.array(k_salt, pa.int32()),
+            }
         )
-        self._last_hist_rows = total_rows  # kernel-stage sizing, see _join_cogroup
+        return keys.sparkSession.createDataFrame(table), total_rows
+
+    @staticmethod
+    def _kernel_partitions(spark: SparkSession, est_rows: float) -> int:
+        """Explicit partition count of a salted plan's kernel stage, sized
+        from the histogram's row estimate: AQE's byte-based coalescing
+        merges the kernel stage below core count (measured 23 tasks on 32
+        cores at 48M rows) and straggler groups serialize; conversely a
+        count pinned high wastes per-task Arrow setup at small volume.
+        ~400k rows per task measured best across both bench volumes (48M
+        rows: 32 parts 8.0s / 64 parts 6.1s / 128 parts 4.7s; 4.8M rows:
+        32 parts 2.2s / 64 parts 2.6s, interleaved minima), floored at the
+        configured shuffle parallelism and capped against task explosion."""
+        floor = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        return min(4096, max(floor, int(est_rows // 400_000)))
+
+    @staticmethod
+    def _salt(id_col: str, k_salt):
+        """Row salt in [0, k_salt): xxhash64 of the row id, so a recompute
+        puts every row in the same bucket (cells missing from the salt
+        table get k_salt = 1)."""
+        k = F.coalesce(k_salt, F.lit(1))
+        return F.pmod(F.xxhash64(_quoted(id_col)), k).cast("int")
+
+    @staticmethod
+    def _group_key(tile_lat, tile_lon, salt, n_salts: int):
+        """ONE packed int key instead of (tile_lat, tile_lon, salt):
+        mixed-radix gk = ((tile_lat+90) * 361 + (tile_lon+180)) * n_salts
+        + salt — collision-free (salt < n_salts, lon+180 < 361), exact in
+        int32 for n_salts up to ~3.3e4, and 8 fewer bytes on every row
+        through the exchange. NULL for a NULL coordinate."""
+        return (
+            ((tile_lat + 90).cast("long") * 361 + (tile_lon + 180).cast("long"))
+            * n_salts
+            + salt
+        ).cast("int")
+
+    def _join_by_path(
+        self, pts: DataFrame, mode: str, knn: bool, id_col: str, n_salts: int
+    ) -> DataFrame:
+        """blob_source='path': salt the FULL input rows by cell, repartition
+        them once on the salted tile key, and run the kernel UDF on the
+        shuffled partitions, reading each task's tiles by path through the
+        executor grid cache. Tiles never move and rows move once: no
+        catalog-side shuffle, no cogroup, no kNN second pass and no id
+        re-join — kNN runs in the kernel against the cached centres."""
+        paths = self._path_index()
+        centers = self.tile_centers() if knn else None
+        tl = cells.tile_lat(F.col("lat"))
+        tn = cells.tile_lon(F.col("lon"))
+        salt, est_rows = self._salt_table(
+            pts.select(tl.alias("tile_lat"), tn.alias("tile_lon")), n_salts
+        )
+        salt = F.broadcast(salt.toDF("_salt_lat", "_salt_lon", "_k_salt"))
+        keyed = pts.join(
+            salt, (tl == F.col("_salt_lat")) & (tn == F.col("_salt_lon")), "left"
+        )
+        gk = self._group_key(tl, tn, self._salt(id_col, F.col("_k_salt")), n_salts)
+        rows = (
+            keyed.select(*[_quoted(c) for c in pts.columns], gk.alias("_gk"))
+            .repartition(self._kernel_partitions(pts.sparkSession, est_rows), "_gk")
+            .drop("_gk")
+        )
+
+        def get_blob(key):
+            path = paths.value.get(key)
+            return None if path is None else _read_blob_from_path(path)
+
+        udf = _kernel_udf(get_blob, mode, self._cache_token, self.cache_size, centers)
+        return _append_kernel(rows, udf)
+
+    def _salted_inputs(
+        self, pts: DataFrame, id_col: str, n_salts: int, blob_source: str = "inline"
+    ):
+        """Adaptive-salt shuffle inputs for a cogroup: returns (narrow, cat,
+        est_rows) where `narrow` is (_rid, lat, lon, tile_lat, tile_lon,
+        salt), `cat` is the catalog replicated k_salt(cell) times per cell
+        (so only hot cells replicate their tile blob and cold cells cross
+        the shuffle once) and est_rows is the histogram's input-row
+        estimate. Exposed separately so the skew-stress test can assert
+        the group-size distribution the shuffle actually partitions on."""
+        narrow = pts.select(
+            _quoted(id_col).alias("_rid"),
+            F.col("lat").cast("double").alias("lat"),
+            F.col("lon").cast("double").alias("lon"),
+            cells.tile_lat(F.col("lat")).alias("tile_lat"),
+            cells.tile_lon(F.col("lon")).alias("tile_lon"),
+        )
+        salt_df, est_rows = self._salt_table(narrow, n_salts)
+        salt_df = F.broadcast(salt_df)
         narrow = narrow.join(salt_df, ["tile_lat", "tile_lon"], "left").withColumn(
-            "salt",
-            F.pmod(F.xxhash64(F.col("_rid")), F.coalesce(F.col("k_salt"), F.lit(1)))
-            .cast("int"),
+            "salt", self._salt("_rid", F.col("k_salt"))
         ).drop("k_salt")
         blob_col = "data" if blob_source == "inline" else "path"
         cat = (
@@ -907,94 +1048,54 @@ class ElevationEngine:
                 F.explode(F.sequence(F.lit(0), F.col("k_salt") - 1)).alias("salt"),
             )
         )
-        return narrow, cat
+        return narrow, cat, est_rows
 
     def _join_cogroup(
-        self,
-        pts: DataFrame,
-        mode: str,
-        knn: bool,
-        id_col: str,
-        n_salts: int,
-        blob_source: str = "inline",
+        self, pts: DataFrame, mode: str, knn: bool, id_col: str, n_salts: int
     ) -> DataFrame:
-        """Salted cogroup join with ADAPTIVE skew salting: a histogram
-        pre-pass counts points per tile cell, and each cell gets
-        k(cell) = clamp(ceil(count / target_rows_per_salt), 1, n_salts)
-        salt buckets. Cold tiles cross the shuffle once; only hot-cluster
-        tiles fan out — at 10^12 rows this is the difference between
-        replicating the whole catalog n_salts times and replicating just the
-        skewed cells (SURVEY.md §4 'Skew handling')."""
-        if id_col not in pts.columns:
-            raise ValueError(f"cogroup strategy needs a unique id column {id_col!r}")
-        narrow, cat = self._salted_inputs(pts, id_col, n_salts, blob_source)
-
-        id_field = pts.schema[id_col].dataType
-        out_schema = T.StructType([T.StructField("_rid", id_field)])
-        for name, typ in _APPENDED:
-            out_schema = out_schema.add(name, typ)
-        out_schema = out_schema.add("elevation", _elev_type(mode))
+        """blob_source='inline': salted cogroup of narrow point rows with
+        the k_salt-replicated catalog blobs. Cold tiles cross the shuffle
+        once; only hot-cluster tiles fan out — at 10^12 rows this is the
+        difference between replicating the whole catalog n_salts times and
+        replicating just the skewed cells (SURVEY.md §4 'Skew handling').
+        The payload re-joins by id afterwards."""
+        narrow, cat, est_rows = self._salted_inputs(pts, id_col, n_salts)
+        out_schema = T.StructType(
+            [
+                T.StructField("_rid", pts.schema[id_col].dataType),
+                T.StructField("lat", T.DoubleType()),
+                T.StructField("lon", T.DoubleType()),
+            ]
+            + _kernel_type(mode).fields
+        )
 
         def apply(key, ltbl, rtbl):
-            # Arrow-native grouped kernel: to_numpy on the Arrow columns is
-            # zero-copy for float64, and the result goes straight back into
-            # Arrow arrays — no per-group pandas DataFrame in either
-            # direction (the per-group constant cost is what dominates this
-            # stage once salting makes groups small).
-            lat = ltbl.column("lat").to_numpy(zero_copy_only=False)
-            lon = ltbl.column("lon").to_numpy(zero_copy_only=False)
-            grid = None if ltbl.num_rows == 0 else _group_grid(rtbl, blob_source)
-            cell = key[0].as_py() // n_salts
-            klat, klon = cell // 361 - 90, cell % 361 - 180
-            res = kernel_batch(
-                lat,
-                lon,
-                (lambda k, _g=grid: _g if (k[0], k[1]) == (klat, klon) else None),
-                mode,
-            )
-            return _result_table(ltbl.column("_rid"), res, mode)
+            grid = _group_grid(rtbl, "inline") if ltbl.num_rows else None
+            cell = None  # no tile, or the NULL-coordinate group
+            if grid is not None:
+                c = key[0].as_py() // n_salts
+                cell = (c // 361 - 90, c % 361 - 180)
 
-        # The shuffle + Python crossing carries ONE packed int key instead
-        # of (tile_lat int, tile_lon int, salt int): mixed-radix
-        # gk = ((tile_lat+90) * 361 + (tile_lon+180)) * n_salts + salt —
-        # collision-free (salt < n_salts, lon+180 < 361), exact in int32
-        # for n_salts up to ~3.3e4, and 8 fewer bytes on every narrow row
-        # through the exchange AND through Arrow into the worker (~380 MB
-        # less at 48M rows). The apply decodes the cell back from the key.
-        blob_col = "data" if blob_source == "inline" else "path"
-        gk = (
-            ((F.col("tile_lat") + 90).cast("long") * 361
-             + (F.col("tile_lon") + 180).cast("long")) * n_salts
-            + F.col("salt")
-        ).cast("int").alias("gk")
-        narrow = narrow.select("_rid", "lat", "lon", gk)
-        cat = cat.select(gk, blob_col)
+            def get_grid(k):
+                return grid if (k[0], k[1]) == cell else None
 
+            arrays = _kernel_arrays(ltbl.column("lat"), ltbl.column("lon"), get_grid, mode)
+            return _result_table(ltbl, arrays)
+
+        gk = self._group_key(F.col("tile_lat"), F.col("tile_lon"), F.col("salt"), n_salts)
+        narrow = narrow.select("_rid", "lat", "lon", gk.alias("gk"))
+        cat = cat.select(gk.alias("gk"), "data")
         # explicit-count repartition on the grouping key for BOTH cogroup
-        # sides, sized from the histogram pre-pass's row estimate: AQE's
-        # byte-based coalescing merges the kernel stage below core count
-        # (measured 23 tasks on 32 cores at 48M rows) and straggler groups
-        # serialize; conversely a count pinned high wastes per-task Arrow
-        # setup at small volume. ~400k narrow rows (~11 MB) per task
-        # measured best across both bench volumes (48M rows: 32 parts
-        # 8.0s / 64 parts 6.1s / 128 parts 4.7s; 4.8M rows: 32 parts 2.2s
-        # / 64 parts 2.6s, interleaved minima), floored at the configured
-        # shuffle parallelism and capped against task explosion. The
-        # groupBys reuse these exchanges — no extra shuffle.
-        n_parts = min(
-            4096,
-            max(
-                int(pts.sparkSession.conf.get("spark.sql.shuffle.partitions")),
-                int(self._last_hist_rows // 400_000),
-            ),
-        )
+        # sides (see _kernel_partitions); the groupBys reuse these
+        # exchanges — no extra shuffle
+        n_parts = self._kernel_partitions(pts.sparkSession, est_rows)
         joined = (
             narrow.repartition(n_parts, "gk").groupBy("gk")
             .cogroup(cat.repartition(n_parts, "gk").groupBy("gk"))
             .applyInArrow(apply, schema=out_schema)
         )
         if knn:
-            joined = self._knn_second_pass(joined, mode, out_schema, blob_source)
+            joined = self._knn_second_pass(joined, mode, out_schema)
         extra_cols = [c for c in pts.columns if c not in (id_col, "lat", "lon")]
         if not extra_cols:
             # no payload to re-attach: skip the rejoin shuffle entirely
@@ -1003,10 +1104,8 @@ class ElevationEngine:
             joined.withColumnRenamed("_rid", id_col), on=id_col, how="inner"
         )
 
-    def _knn_second_pass(
-        self, joined: DataFrame, mode: str, out_schema, blob_source: str = "inline"
-    ) -> DataFrame:
-        """kNN fallback for the cogroup strategy (J6 at scale): the fallback
+    def _knn_second_pass(self, joined: DataFrame, mode: str, out_schema) -> DataFrame:
+        """kNN fallback for the inline cogroup (J6 at scale): the fallback
         tile is data-dependent, so the first shuffle cannot route to it.
         Second pass: take the in-coverage missing-tile remainder (narrow
         rows only), assign each point its nearest catalog tile center
@@ -1015,8 +1114,6 @@ class ElevationEngine:
         then cogroup those rows with the semi-join-pruned catalog keyed by
         the ASSIGNED tile. Misses are typically a small fraction of rows,
         so the extra shuffle is proportional to the miss rate."""
-        import pyarrow as pa
-
         centers = self.tile_centers()
         if len(centers) == 0:
             return joined
@@ -1053,8 +1150,8 @@ class ElevationEngine:
                 yield pa.RecordBatch.from_arrays(
                     [
                         batch.column(0),
-                        pa.array(lat, type=pa.float64()),
-                        pa.array(lon, type=pa.float64()),
+                        batch.column(1),
+                        batch.column(2),
                         pa.array(t[:, 0].astype(np.int32)),
                         pa.array(t[:, 1].astype(np.int32)),
                     ],
@@ -1064,44 +1161,25 @@ class ElevationEngine:
         assigned = miss.mapInArrow(assign, schema=assign_schema)
         # prune the catalog to assigned tiles before the blob shuffle
         keys = assigned.select("tile_lat", "tile_lon").distinct()
-        blob_col = "data" if blob_source == "inline" else "path"
         cat = self.catalog.join(
             F.broadcast(keys), ["tile_lat", "tile_lon"], "left_semi"
-        ).select("tile_lat", "tile_lon", blob_col)
+        ).select("tile_lat", "tile_lon", "data")
 
         def apply_knn(key, ltbl, rtbl):
-            grid = None if ltbl.num_rows == 0 else _group_grid(rtbl, blob_source)
-            lat = ltbl.column("lat").to_numpy(zero_copy_only=False)
-            lon = ltbl.column("lon").to_numpy(zero_copy_only=False)
-            tl, tn = int(key[0].as_py()), int(key[1].as_py())
-            n = ltbl.num_rows
-            elev = np.full(n, np.nan, dtype=np.float64)
-            if grid is not None:
-                # clamp coordinates into the assigned tile -> frac in [0, 1]
-                # (identical math to kernel_batch's broadcast-path fallback)
-                fr_lat = np.clip(lat - tl, 0.0, 1.0)
-                fr_lon = np.clip(lon - tn, 0.0, 1.0)
-                nm1 = grid.shape[0] - 1.0
-                row_pos = (1.0 - fr_lat) * nm1
-                col_pos = fr_lon * nm1
-                if mode == "bilinear":
-                    elev, _void = hgt.lookup_bilinear_pos(grid, row_pos, col_pos)
-                else:
-                    vals = hgt.lookup_nearest_pos(grid, row_pos, col_pos, rounding=mode)
-                    elev = np.where(
-                        vals == hgt.VOID_VALUE, np.nan, vals.astype(np.float64)
-                    )
-            res = {
-                "lat": lat,
-                "lon": lon,
-                "tile_lat": np.full(n, tl, dtype=np.int32),
-                "tile_lon": np.full(n, tn, dtype=np.int32),
-                "in_coverage": np.ones(n, dtype=bool),
-                "tile_found": np.full(n, grid is not None, dtype=bool),
-                "knn_used": np.ones(n, dtype=bool),
-                "elevation": elev,
-            }
-            return _result_table(ltbl.column("_rid"), res, mode)
+            # the kernel's own kNN path with the assigned tile as the only
+            # centre: every row's own tile is absent from the catalog, so
+            # each falls back to it — identical math to the map-side plans
+            grid = _group_grid(rtbl, "inline") if ltbl.num_rows else None
+            tile = (key[0].as_py(), key[1].as_py())
+
+            def get_grid(k):
+                return grid if (k[0], k[1]) == tile else None
+
+            arrays = _kernel_arrays(
+                ltbl.column("lat"), ltbl.column("lon"), get_grid, mode,
+                np.array([tile], dtype=np.int64),
+            )
+            return _result_table(ltbl, arrays)
 
         second = (
             assigned.groupBy("tile_lat", "tile_lon")

@@ -9,7 +9,7 @@ terrain products computed from the SAME decoded tiles — the 3x3 Horn
 Design split (Spark-first):
 
 - The ONLY Python work is the raster gather: a map-only ``mapInArrow``
-  stage (same shape as ``engine._join_broadcast``) groups each Arrow batch
+  stage groups each Arrow batch
   by tile, reads the 3x3 neighborhood per point, and emits the two Horn
   stencil sums as EXACT int64 columns (``gxs``, ``gys``). Integer sums are
   order-free, so this stage has no float-parity surface at all.
@@ -298,7 +298,7 @@ def _terrain_cogroup(
 
     if id_col not in pts.columns:
         raise ValueError(f"cogroup strategy needs a unique id column {id_col!r}")
-    narrow, cat = engine._salted_inputs(pts, id_col, n_salts, blob_source)
+    narrow, cat, _est_rows = engine._salted_inputs(pts, id_col, n_salts, blob_source)
 
     id_field = pts.schema[id_col].dataType
     out_schema = T.StructType([T.StructField("_rid", id_field)])

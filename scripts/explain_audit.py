@@ -1,7 +1,9 @@
 """Capture .explain('formatted') plans for the engine's key plan shapes into
 PLANS.md — the plan-shape audit: broadcast join must be a single map-only
-Arrow stage with pushed filters on the scan; the cogroup path must shuffle
-only narrow columns; catalog aggregations must prune columns.
+Arrow stage with pushed filters on the scan; the inline cogroup must
+shuffle only narrow columns; the by-path plan must move the input rows
+through one Exchange and never the tile blobs; catalog aggregations must
+prune columns.
 """
 
 import io
@@ -50,19 +52,23 @@ def main():
     sections.append(
         (
             "Broadcast elevation join (map-only)",
-            "Expected: scan -> project (JVM key math) -> ONE MapInArrow/ArrowEvalPython "
-            "node. No Exchange anywhere: the tile catalog rides a Spark broadcast "
-            "variable, points never shuffle, payload columns pass through in Arrow.",
+            "Expected: scan -> project (JVM key math) -> ONE ArrowEvalPython "
+            "node (the kernel UDF over lat/lon only). No Exchange anywhere: the "
+            "tile catalog rides a Spark broadcast variable, points never "
+            "shuffle, payload columns stay in the JVM.",
             plan_of(broadcast),
         )
     )
+    if n_shuffle_ex(sections[-1][2]) or "ArrowEvalPython" not in sections[-1][2]:
+        print("FATAL: broadcast plan shuffles or lost its kernel UDF", file=sys.stderr)
+        sys.exit(1)
 
     cogroup = eng.elevation_join(pts, mode="nearest", strategy="cogroup", id_col="event_id", n_salts=4)
     sections.append(
         (
-            "Salted cogroup join (scale path)",
+            "Salted cogroup join, blob_source='inline' (in-memory catalog)",
             "Expected: points side exchanges ONLY narrow columns (id, lat, lon, "
-            "tile key, salt); catalog side exchanges each blob at most n_salts "
+            "salted tile key); catalog side exchanges each blob at most n_salts "
             "times; FlatMapCoGroupsInArrow applies the kernel (Arrow-native, "
             "no per-group pandas round-trip); payload re-joins by id "
             "afterwards.",
@@ -139,9 +145,12 @@ def main():
     sections.append(
         (
             "Cogroup join, blob_source='path' (no-blob-shuffle)",
-            "Expected: catalog side of the shuffle carries ONLY "
-            "(tile_lat, tile_lon, path, salt); NO Exchange anywhere carries "
-            "the binary `data` column — at 100 TB of rasters the tiles must "
+            "Expected: the input rows are salted by cell (a broadcast join "
+            "with the histogram's salt table) and cross ONE hash Exchange on "
+            "the salted tile key; ArrowEvalPython then runs the kernel UDF, "
+            "reading tiles by path. No catalog-side shuffle, no cogroup, no "
+            "id re-join (SortMergeJoin). NO Exchange anywhere carries the "
+            "binary `data` column — at 100 TB of rasters the tiles must "
             "never ride a shuffle (tasks read them from shared storage).",
             cgp_plan,
         )
@@ -150,6 +159,16 @@ def main():
     ex_blocks = _re.findall(r"\(\d+\) Exchange\nInput \[\d+\]: \[[^\]]*\]", cgp_plan)
     if any(_re.search(r"\bdata#", b) for b in ex_blocks):
         print("FATAL: path-strategy plan shuffles the binary data column", file=sys.stderr)
+        sys.exit(1)
+    # hard gate: the input rows move once, through the kernel UDF only
+    n_cgp = n_shuffle_ex(cgp_plan)
+    bad_nodes = _re.findall(r"SortMergeJoin|FlatMapCoGroupsIn\w+|MapInArrow", cgp_plan)
+    if n_cgp != 1 or bad_nodes or "ArrowEvalPython" not in cgp_plan:
+        print(
+            f"FATAL: path-strategy plan has {n_cgp} shuffle Exchanges (expected "
+            f"exactly 1) or unexpected nodes {sorted(set(bad_nodes))}",
+            file=sys.stderr,
+        )
         sys.exit(1)
 
     from htg_spark import pipeline_queries as pq

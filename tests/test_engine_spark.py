@@ -21,6 +21,20 @@ def engine(spark, grids):
 
 
 @pytest.fixture(scope="module")
+def tile_dir(grids, tmp_path_factory):
+    """The fixture catalog as a tile directory, one tile zip-wrapped."""
+    tiles = tmp_path_factory.mktemp("tiles")
+    for i, ((tl, tn), grid) in enumerate(sorted(grids.items())):
+        name = hgt.coords_to_filename(tl, tn)
+        data = hgt.encode_tile(grid)
+        if i == 0:
+            (tiles / f"{name}.zip").write_bytes(fixtures.zip_tile_bytes(name, data))
+        else:
+            (tiles / name).write_bytes(data)
+    return str(tiles)
+
+
+@pytest.fixture(scope="module")
 def points_pdf():
     """2000 deterministic points: in-tile, hot cluster, boundary, void,
     missing-tile, out-of-coverage."""
@@ -190,11 +204,16 @@ def test_assign_nearest_center_chunked_large_catalog():
     lat = rng.uniform(-60, 60, size=65536)
     lon = rng.uniform(-180, 180, size=65536)
     got = assign_nearest_center(lat, lon, centers, chunk=1000)
-    # reference: one-shot argmin over lexsorted centers (first-min tie rule)
+    # reference: argmin over ALL lexsorted centers at once (first-min tie
+    # rule), taken 4,096 points at a time so the reference matrix stays
+    # ~450 MB rather than the 7 GB the function itself is built to avoid
     order = np.lexsort((centers[:, 1], centers[:, 0]))
     sc = centers[order].astype(np.float64)
-    d = (lat[:, None] - (sc[:, 0] + 0.5)) ** 2 + (lon[:, None] - (sc[:, 1] + 0.5)) ** 2
-    want = sc[np.argmin(d, axis=1)].astype(np.int64)
+    want = np.empty((len(lat), 2), dtype=np.int64)
+    for s in range(0, len(lat), 4096):
+        pl, pn = lat[s : s + 4096, None], lon[s : s + 4096, None]
+        d = (pl - (sc[:, 0] + 0.5)) ** 2 + (pn - (sc[:, 1] + 0.5)) ** 2
+        want[s : s + 4096] = sc[np.argmin(d, axis=1)]
     assert np.array_equal(got, want)
     # point-axis chunking (bounds peak memory independent of batch size)
     # must not change a single assignment
@@ -202,23 +221,11 @@ def test_assign_nearest_center_chunked_large_catalog():
     assert np.array_equal(got2, want)
 
 
-def test_cogroup_blob_source_path(spark, grids, points_pdf, tmp_path):
-    """blob_source='path': the catalog side of the shuffle carries ONLY
-    source URIs; each task reads its tile from shared storage. Results must
-    be row-identical to the inline-blob cogroup and the broadcast path —
-    including through a .hgt.zip tile and with kNN fallback."""
-    from htg_spark import fixtures, hgt as hgt_mod
-
-    tiles = tmp_path / "tiles"
-    tiles.mkdir()
-    for i, ((tl, tn), grid) in enumerate(sorted(grids.items())):
-        name = hgt_mod.coords_to_filename(tl, tn)
-        data = hgt_mod.encode_tile(grid)
-        if i == 0:  # one zip-wrapped tile exercises the re-extract path
-            (tiles / f"{name}.zip").write_bytes(fixtures.zip_tile_bytes(name, data))
-        else:
-            (tiles / name).write_bytes(data)
-    eng = ElevationEngine(spark, tile_dir=str(tiles))
+def test_cogroup_blob_source_path(spark, grids, points_pdf, tile_dir):
+    """blob_source='path': each task reads its tiles from shared storage by
+    path. Results must be row-identical to the broadcast path — including
+    through a .hgt.zip tile and with kNN fallback."""
+    eng = ElevationEngine(spark, tile_dir=tile_dir)
     df = spark.createDataFrame(points_pdf)
     a = (
         eng.elevation_join(df, mode="nearest", strategy="broadcast", knn_fallback=True)
@@ -300,8 +307,10 @@ def test_broadcast_byte_gate(spark, grids, points_pdf):
 
     eng = ElevationEngine(spark, grids=grids)
     assert eng.catalog_bytes() == len(grids) * 2 * 1201 * 1201
-    plan = eng.elevation_join(df, strategy="auto")._jdf.queryExecution().toString()
-    assert "MapInArrow" in plan and "FlatMapCoGroupsIn" not in plan
+    plan = eng.elevation_join(df, strategy="auto")._jdf.queryExecution().executedPlan().toString()
+    # map-only: the kernel UDF's ArrowEvalPython node, and no Exchange
+    assert "ArrowEvalPython" in plan and "FlatMapCoGroupsIn" not in plan
+    assert "Exchange" not in plan
 
     big = ElevationEngine(spark, grids=grids)
     big.BROADCAST_MAX_BYTES = 1000  # few tiles, "huge" relative to the gate
@@ -323,17 +332,13 @@ def test_auto_blob_source_picks_path(spark, grids, points_pdf, tmp_path):
         (tiles / hgt_mod.coords_to_filename(tl, tn)).write_bytes(hgt_mod.encode_tile(grid))
     df = spark.createDataFrame(points_pdf.head(50))
 
-    import io
     import re
-    from contextlib import redirect_stdout
 
     eng = ElevationEngine(spark, tile_dir=str(tiles))
     eng.BROADCAST_MAX_BYTES = 1000  # force the cogroup branch
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        eng.elevation_join(df, strategy="auto").explain("formatted")
-    plan = buf.getvalue()
-    assert "FlatMapCoGroupsInArrow" in plan
+    plan = _plan_text(eng.elevation_join(df, strategy="auto"))
+    # the by-path plan: salted input rows, one Exchange, the kernel UDF
+    assert "ArrowEvalPython" in plan and "FlatMapCoGroupsIn" not in plan
     # same invariant the plan audit hard-gates for the explicit path query:
     # no Exchange block may carry the binary data column
     ex_blocks = re.findall(r"\(\d+\) Exchange\nInput \[\d+\]: \[[^\]]*\]", plan)
@@ -377,7 +382,9 @@ def test_cogroup_adaptive_salting_spreads_hot_tile(spark, engine, grids):
     )
     df = spark.createDataFrame(pdf)
 
-    narrow, cat = engine._salted_inputs(df, "image_id", n_salts=8)
+    narrow, cat, est_rows = engine._salted_inputs(df, "image_id", n_salts=8)
+    # the histogram's row estimate (it sizes the kernel stage) is returned
+    assert 0.5 * (n_hot + n_cold) < est_rows < 1.5 * (n_hot + n_cold)
     groups = (
         narrow.groupBy("tile_lat", "tile_lon", "salt").count().toPandas()
     )
@@ -531,3 +538,116 @@ def test_filename_expressions_match_python(spark):
             assert pd.isna(back["a"][i]) and pd.isna(back["b"][i])
         else:
             assert (back["a"][i], back["b"][i]) == e
+
+
+def _plan_text(df) -> str:
+    import io
+    from contextlib import redirect_stdout
+
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
+
+
+def test_path_plan_moves_input_rows_once(spark, tile_dir, points_pdf):
+    """blob_source='path' reads tiles by path, so only the input rows move:
+    ONE shuffle Exchange (the salted-key repartition; the histogram
+    pre-pass has already run while the plan was built), no cogroup, no
+    id re-join, no data column in any Exchange — with kNN as well."""
+    import re
+
+    eng = ElevationEngine(spark, tile_dir=tile_dir)
+    df = spark.createDataFrame(points_pdf.assign(caption="c"))
+    for knn in (False, True):
+        plan = _plan_text(
+            eng.elevation_join(
+                df, strategy="cogroup", blob_source="path", knn_fallback=knn, n_salts=4
+            )
+        )
+        ex_blocks = re.findall(r"\(\d+\) Exchange\nInput \[\d+\]: \[[^\]]*\]", plan)
+        assert len(ex_blocks) == 1, plan
+        assert "caption#" in ex_blocks[0] and not re.search(r"\bdata#", ex_blocks[0])
+        assert "ArrowEvalPython" in plan
+        for node in ("SortMergeJoin", "FlatMapCoGroups", "MapInArrow", "ExistingRDD"):
+            assert node not in plan, node
+
+
+def _rows(df, cols):
+    return df.select(*cols).orderBy(*cols).toPandas()
+
+
+def test_path_plan_duplicate_ids_match_broadcast(spark, grids, tile_dir):
+    """Duplicate ids with a payload column: the by-path plan keeps one
+    output row per input row, exactly like broadcast, and both match the
+    hgt.py oracle (the old cogroup id re-join multiplied duplicates)."""
+    pdf = pd.DataFrame(
+        {
+            "image_id": ["a", "a", "b", "b", "c"],
+            "caption": ["x", "y", "z", "w", "v"],
+            "lat": [35.5, 35.6, 40.2, 35.5, 70.0],
+            "lon": [138.5, 138.6, 138.4, 138.5, 0.0],
+        }
+    )
+    df = spark.createDataFrame(pdf)
+    eng = ElevationEngine(spark, tile_dir=tile_dir)
+    cols = ["image_id", "caption", "lat", "lon", "tile_lat", "tile_lon",
+            "in_coverage", "tile_found", "knn_used", "elevation"]
+    for mode in ("nearest", "bilinear"):
+        kw = dict(mode=mode, knn_fallback=True)
+        a = _rows(eng.elevation_join(df, strategy="broadcast", **kw), cols)
+        b = _rows(
+            eng.elevation_join(df, strategy="cogroup", blob_source="path", n_salts=4, **kw),
+            cols,
+        )
+        assert len(a) == len(b) == len(pdf)
+        pd.testing.assert_frame_equal(a, b)
+        got = a["elevation"].to_numpy(dtype="float64", na_value=np.nan)
+        plain = ~a["knn_used"].to_numpy(dtype=bool)
+        want = _oracle(a[["lat", "lon"]], grids, mode)
+        assert np.array_equal(np.isnan(got[plain]), np.isnan(want[plain]))
+        assert np.array_equal(got[plain & ~np.isnan(got)], want[plain & ~np.isnan(want)])
+
+
+def test_null_lat_is_out_of_coverage_under_every_plan(spark, grids, tile_dir):
+    """A NULL lat is out of coverage under broadcast, inline cogroup and the
+    by-path plan alike: lat stays NULL, tile key and elevation are NULL
+    (the inline cogroup used to raise TypeError on the NULL group key)."""
+    rows = [("n1", None, 138.5, "p"), ("n2", 35.5, 138.5, "q"), ("n3", 40.2, 138.4, "r")]
+    df = spark.createDataFrame(rows, "image_id string, lat double, lon double, caption string")
+    cols = ["image_id", "caption", "lat", "lon", "tile_lat", "tile_lon",
+            "in_coverage", "tile_found", "knn_used", "elevation"]
+    path_eng = ElevationEngine(spark, tile_dir=tile_dir)
+    mem_eng = ElevationEngine(spark, grids=grids)
+    for knn in (False, True):
+        kw = dict(mode="nearest", knn_fallback=knn)
+        a = _rows(path_eng.elevation_join(df, strategy="broadcast", **kw), cols)
+        b = _rows(
+            path_eng.elevation_join(df, strategy="cogroup", blob_source="path", n_salts=4, **kw),
+            cols,
+        )
+        c = _rows(mem_eng.elevation_join(df, strategy="cogroup", n_salts=4, **kw), cols)
+        pd.testing.assert_frame_equal(a, b)
+        pd.testing.assert_frame_equal(a, c)
+        n1 = a[a.image_id == "n1"].iloc[0]
+        assert pd.isna(n1["lat"]) and pd.isna(n1["tile_lat"]) and pd.isna(n1["elevation"])
+        assert not n1["in_coverage"] and not n1["tile_found"] and not n1["knn_used"]
+        want = hgt.get_elevations_batch([(np.nan, 138.5), (35.5, 138.5)], grids, default=-1)
+        assert want[0] == -1 and a[a.image_id == "n2"].iloc[0]["elevation"] == want[1]
+
+
+def test_repeated_broadcast_knn_join_builds_without_jobs(spark, grids, points_pdf):
+    """Building a repeated broadcast kNN join launches no Spark job: the
+    blobs and the kNN tile centres are both derived once per engine."""
+    eng = ElevationEngine(spark, grids=grids)
+    df = spark.createDataFrame(points_pdf.head(50))
+    eng.elevation_join(df, strategy="broadcast", knn_fallback=True)  # collects blobs once
+    sc = spark.sparkContext
+    sc.setJobGroup("repeated-knn-build", "plan build only")
+    try:
+        out = eng.elevation_join(df, mode="bilinear", strategy="broadcast", knn_fallback=True)
+        jobs = sc.statusTracker().getJobIdsForGroup("repeated-knn-build")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(jobs) == []
+    assert out.where("knn_used").count() > 0
