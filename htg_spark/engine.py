@@ -14,7 +14,10 @@ tile_found, knn_used, elevation)`` as a struct. Spark plans it as
 JVM: only the two float64 arguments (16 B/row) cross into Python, never
 the image payload. Decoded grids live in an executor-local LRU (the
 distributed analog of the reference's moka cache, ``service.rs:168``);
-the map-side plans differ only in the blob getter behind it.
+the map-side plans differ only in the blob getter behind it. The UDF
+runs the kernel over up to ``_KERNEL_BUFFER_ROWS`` rows at a time, not per
+Arrow batch, so a task reads each of its tiles about once even when its
+rows arrive interleaved and it holds more tiles than the cache.
 
 - **broadcast** (map-only): the raw tile blobs ride a Spark broadcast and
   the blob getter is a dict lookup. Zero shuffle. Right whenever the
@@ -343,6 +346,52 @@ def _kernel_type(mode: str) -> T.StructType:
     )
 
 
+# Rows the kernel UDF gathers before it runs kernel_batch (8 default Arrow
+# batches). A shuffled partition reaches the UDF with its tiles
+# interleaved, so every batch touches every tile of the task; run per
+# batch, a task holding more tiles than the grid cache would re-read and
+# re-decode each tile on every batch. Over the buffer each tile is read
+# once, and _kernel_partitions sizes tasks to ~400k rows, so a task is
+# usually one buffer. A Spark sort on the tile key cannot do this: the
+# optimizer drops a sortWithinPartitions under an aggregate or join
+# consumer. Cost: a full buffer peaks at ~40 MB of NumPy + Arrow arrays in
+# the Python worker (measured, bilinear), and the JVM queues the buffered
+# rows (spillable) until their results return.
+_KERNEL_BUFFER_ROWS = 1 << 19
+
+
+def _kernel_batches(
+    batches: Iterator[tuple[pa.Array, pa.Array]],
+    get_grid,
+    mode: str,
+    knn_centers=None,
+    buffer_rows: int = _KERNEL_BUFFER_ROWS,
+) -> Iterator[pa.StructArray]:
+    """The kernel UDF's body: ``_KERNEL`` + elevation as one struct array
+    per input (lat, lon) batch, computed over buffers of up to
+    ``buffer_rows`` rows (see ``_KERNEL_BUFFER_ROWS``)."""
+
+    def run(buf):
+        lat = pa.concat_arrays([b[0] for b in buf])
+        lon = pa.concat_arrays([b[1] for b in buf])
+        arrays = _kernel_arrays(lat, lon, get_grid, mode, knn_centers)
+        out = pa.StructArray.from_arrays(arrays, names=_KERNEL_NAMES)
+        start = 0
+        for b_lat, _b_lon in buf:
+            yield out.slice(start, len(b_lat))
+            start += len(b_lat)
+
+    buf, n = [], 0
+    for lat, lon in batches:
+        buf.append((lat, lon))
+        n += len(lat)
+        if n >= buffer_rows:
+            yield from run(buf)
+            buf, n = [], 0
+    if buf:
+        yield from run(buf)
+
+
 def _kernel_udf(get_blob, mode: str, token: str, cache_cap: int, knn_centers=None):
     """The one Python stage of the map-side plans: a scalar-iterator
     ``arrow_udf`` over (lat, lon) returning ``_KERNEL`` + elevation as a
@@ -351,6 +400,7 @@ def _kernel_udf(get_blob, mode: str, token: str, cache_cap: int, knn_centers=Non
     and the payload never counts toward an Arrow batch. ``get_blob(key)``
     runs executor-side and returns raw tile bytes or None; grids are
     decoded once per worker into the engine's executor cache."""
+    buffer_rows = _KERNEL_BUFFER_ROWS  # the driver's value, pickled with the UDF
 
     def elevation_kernel(
         batches: Iterator[tuple[pa.Array, pa.Array]],
@@ -360,9 +410,7 @@ def _kernel_udf(get_blob, mode: str, token: str, cache_cap: int, knn_centers=Non
         def get_grid(key):
             return cache.get(key, get_blob)
 
-        for lat, lon in batches:
-            arrays = _kernel_arrays(lat, lon, get_grid, mode, knn_centers)
-            yield pa.StructArray.from_arrays(arrays, names=_KERNEL_NAMES)
+        yield from _kernel_batches(batches, get_grid, mode, knn_centers, buffer_rows)
 
     return F.arrow_udf(elevation_kernel, _kernel_type(mode))
 
@@ -392,6 +440,12 @@ def _result_table(ltbl, arrays: list) -> pa.Table:
         [ltbl.column("_rid"), ltbl.column("lat"), ltbl.column("lon")] + arrays,
         names=["_rid", "lat", "lon"] + _KERNEL_NAMES,
     )
+
+
+def _gk_cell(gk: int, n_salts: int) -> tuple[int, int]:
+    """(tile_lat, tile_lon) of a packed ``ElevationEngine._group_key``."""
+    c = gk // n_salts
+    return c // 361 - 90, c % 361 - 180
 
 
 def _group_grid(rtbl, blob_source: str):
@@ -981,6 +1035,24 @@ class ElevationEngine:
             + salt
         ).cast("int")
 
+    def _salted_key(self, frame: DataFrame, id_col: str, n_salts: int):
+        """The one salting step of every salted plan: returns (frame +
+        ``_gk``, salt table, estimated input rows). ``_gk`` is the packed
+        (tile_lat, tile_lon, salt) key of each row, its salt drawn from the
+        row's cell in the histogram's salt table (``_salt_table``)."""
+        tl = cells.tile_lat(F.col("lat"))
+        tn = cells.tile_lon(F.col("lon"))
+        salt_df, est_rows = self._salt_table(
+            frame.select(tl.alias("tile_lat"), tn.alias("tile_lon")), n_salts
+        )
+        salt = F.broadcast(salt_df.toDF("_salt_lat", "_salt_lon", "_k_salt"))
+        keyed = frame.join(
+            salt, (tl == F.col("_salt_lat")) & (tn == F.col("_salt_lon")), "left"
+        )
+        gk = self._group_key(tl, tn, self._salt(id_col, F.col("_k_salt")), n_salts)
+        keyed = keyed.select(*[_quoted(c) for c in frame.columns], gk.alias("_gk"))
+        return keyed, salt_df, est_rows
+
     def _join_by_path(
         self, pts: DataFrame, mode: str, knn: bool, id_col: str, n_salts: int
     ) -> DataFrame:
@@ -992,19 +1064,9 @@ class ElevationEngine:
         re-join — kNN runs in the kernel against the cached centres."""
         paths = self._path_index()
         centers = self.tile_centers() if knn else None
-        tl = cells.tile_lat(F.col("lat"))
-        tn = cells.tile_lon(F.col("lon"))
-        salt, est_rows = self._salt_table(
-            pts.select(tl.alias("tile_lat"), tn.alias("tile_lon")), n_salts
-        )
-        salt = F.broadcast(salt.toDF("_salt_lat", "_salt_lon", "_k_salt"))
-        keyed = pts.join(
-            salt, (tl == F.col("_salt_lat")) & (tn == F.col("_salt_lon")), "left"
-        )
-        gk = self._group_key(tl, tn, self._salt(id_col, F.col("_k_salt")), n_salts)
+        keyed, _salt_df, est_rows = self._salted_key(pts, id_col, n_salts)
         rows = (
-            keyed.select(*[_quoted(c) for c in pts.columns], gk.alias("_gk"))
-            .repartition(self._kernel_partitions(pts.sparkSession, est_rows), "_gk")
+            keyed.repartition(self._kernel_partitions(pts.sparkSession, est_rows), "_gk")
             .drop("_gk")
         )
 
@@ -1019,8 +1081,8 @@ class ElevationEngine:
         self, pts: DataFrame, id_col: str, n_salts: int, blob_source: str = "inline"
     ):
         """Adaptive-salt shuffle inputs for a cogroup: returns (narrow, cat,
-        est_rows) where `narrow` is (_rid, lat, lon, tile_lat, tile_lon,
-        salt), `cat` is the catalog replicated k_salt(cell) times per cell
+        est_rows) where `narrow` is (_rid, lat, lon, _gk), `cat` is
+        (_gk, blob) with the catalog replicated k_salt(cell) times per cell
         (so only hot cells replicate their tile blob and cold cells cross
         the shuffle once) and est_rows is the histogram's input-row
         estimate. Exposed separately so the skew-stress test can assert
@@ -1029,23 +1091,23 @@ class ElevationEngine:
             _quoted(id_col).alias("_rid"),
             F.col("lat").cast("double").alias("lat"),
             F.col("lon").cast("double").alias("lon"),
-            cells.tile_lat(F.col("lat")).alias("tile_lat"),
-            cells.tile_lon(F.col("lon")).alias("tile_lon"),
         )
-        salt_df, est_rows = self._salt_table(narrow, n_salts)
-        salt_df = F.broadcast(salt_df)
-        narrow = narrow.join(salt_df, ["tile_lat", "tile_lon"], "left").withColumn(
-            "salt", self._salt("_rid", F.col("k_salt"))
-        ).drop("k_salt")
+        narrow, salt_df, est_rows = self._salted_key(narrow, "_rid", n_salts)
         blob_col = "data" if blob_source == "inline" else "path"
+        k_salt = F.coalesce(F.col("k_salt"), F.lit(1))
         cat = (
-            self.catalog.join(salt_df, ["tile_lat", "tile_lon"], "left")
-            .withColumn("k_salt", F.coalesce(F.col("k_salt"), F.lit(1)))
+            self.catalog.join(F.broadcast(salt_df), ["tile_lat", "tile_lon"], "left")
             .select(
                 "tile_lat",
                 "tile_lon",
                 blob_col,
-                F.explode(F.sequence(F.lit(0), F.col("k_salt") - 1)).alias("salt"),
+                F.explode(F.sequence(F.lit(0), k_salt - 1)).alias("salt"),
+            )
+            .select(
+                self._group_key(
+                    F.col("tile_lat"), F.col("tile_lon"), F.col("salt"), n_salts
+                ).alias("_gk"),
+                blob_col,
             )
         )
         return narrow, cat, est_rows
@@ -1071,10 +1133,8 @@ class ElevationEngine:
 
         def apply(key, ltbl, rtbl):
             grid = _group_grid(rtbl, "inline") if ltbl.num_rows else None
-            cell = None  # no tile, or the NULL-coordinate group
-            if grid is not None:
-                c = key[0].as_py() // n_salts
-                cell = (c // 361 - 90, c % 361 - 180)
+            # no tile, or the NULL-coordinate group
+            cell = None if grid is None else _gk_cell(key[0].as_py(), n_salts)
 
             def get_grid(k):
                 return grid if (k[0], k[1]) == cell else None
@@ -1082,16 +1142,13 @@ class ElevationEngine:
             arrays = _kernel_arrays(ltbl.column("lat"), ltbl.column("lon"), get_grid, mode)
             return _result_table(ltbl, arrays)
 
-        gk = self._group_key(F.col("tile_lat"), F.col("tile_lon"), F.col("salt"), n_salts)
-        narrow = narrow.select("_rid", "lat", "lon", gk.alias("gk"))
-        cat = cat.select(gk.alias("gk"), "data")
         # explicit-count repartition on the grouping key for BOTH cogroup
         # sides (see _kernel_partitions); the groupBys reuse these
         # exchanges — no extra shuffle
         n_parts = self._kernel_partitions(pts.sparkSession, est_rows)
         joined = (
-            narrow.repartition(n_parts, "gk").groupBy("gk")
-            .cogroup(cat.repartition(n_parts, "gk").groupBy("gk"))
+            narrow.repartition(n_parts, "_gk").groupBy("_gk")
+            .cogroup(cat.repartition(n_parts, "_gk").groupBy("_gk"))
             .applyInArrow(apply, schema=out_schema)
         )
         if knn:

@@ -294,7 +294,7 @@ def _terrain_cogroup(
     shuffle (engine._salted_inputs: 2% histogram pre-pass, per-cell k_salt,
     narrow point columns only; blob_source='path' keeps raster bytes out of
     the exchange entirely)."""
-    from ..engine import _group_grid
+    from ..engine import _gk_cell, _group_grid
 
     if id_col not in pts.columns:
         raise ValueError(f"cogroup strategy needs a unique id column {id_col!r}")
@@ -309,11 +309,12 @@ def _terrain_cogroup(
         lat = ltbl.column("lat").to_numpy(zero_copy_only=False)
         lon = ltbl.column("lon").to_numpy(zero_copy_only=False)
         grid = None if ltbl.num_rows == 0 else _group_grid(rtbl, blob_source)
-        klat, klon = key[0].as_py(), key[1].as_py()
+        # no tile, or the NULL-coordinate group
+        cell = None if grid is None else _gk_cell(key[0].as_py(), n_salts)
         res = terrain_batch(
             lat,
             lon,
-            (lambda k, _g=grid: _g if (k[0], k[1]) == (klat, klon) else None),
+            (lambda k, _g=grid: _g if (k[0], k[1]) == cell else None),
         )
         return _terrain_result_table(ltbl.column("_rid"), res)
 
@@ -322,8 +323,8 @@ def _terrain_cogroup(
     # equal-or-better than pinned partitions (interleaved A/B 1.46s vs
     # 1.55s), and at large volumes byte-based coalescing stops binding
     joined = (
-        narrow.groupBy("tile_lat", "tile_lon", "salt")
-        .cogroup(cat.groupBy("tile_lat", "tile_lon", "salt"))
+        narrow.groupBy("_gk")
+        .cogroup(cat.groupBy("_gk"))
         .applyInArrow(apply, schema=out_schema)
     )
     extra_cols = [c for c in pts.columns if c not in (id_col, "lat", "lon")]

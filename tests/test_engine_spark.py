@@ -5,6 +5,7 @@ unit-test expectations (tests/test_hgt_kernels.py)."""
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from htg_spark import cells, fixtures, hgt
 from htg_spark.engine import ElevationEngine
@@ -382,26 +383,39 @@ def test_cogroup_adaptive_salting_spreads_hot_tile(spark, engine, grids):
     )
     df = spark.createDataFrame(pdf)
 
+    def unpack(frame):
+        """tile_lat, tile_lon, salt out of the packed salted key _gk."""
+        c = F.floor(F.col("_gk") / 8)
+        return frame.select(
+            (F.floor(c / 361) - 90).cast("int").alias("tile_lat"),
+            (c % 361 - 180).cast("int").alias("tile_lon"),
+            (F.col("_gk") % 8).cast("int").alias("salt"),
+        )
+
     narrow, cat, est_rows = engine._salted_inputs(df, "image_id", n_salts=8)
     # the histogram's row estimate (it sizes the kernel stage) is returned
     assert 0.5 * (n_hot + n_cold) < est_rows < 1.5 * (n_hot + n_cold)
-    groups = (
-        narrow.groupBy("tile_lat", "tile_lon", "salt").count().toPandas()
+    # the by-path plan salts the FULL input rows (payload included) with
+    # the same helper; its key must spread the hot cell the same way
+    keyed, _salt_df, _est = engine._salted_key(
+        df.withColumn("caption", F.lit("c")), "image_id", n_salts=8
     )
-    hot = groups[(groups.tile_lat == 35) & (groups.tile_lon == 138)]
-    cold = groups[(groups.tile_lat == 33) & (groups.tile_lon == -97)]
-    # hot cell fans out to all 8 salts; cold cell crosses the shuffle once
-    assert sorted(hot["salt"]) == list(range(8))
-    assert cold["salt"].tolist() == [0]
-    # xxhash64 spreads the hot cell evenly: max/median rows per group <= 2
-    assert hot["count"].max() / hot["count"].median() <= 2.0
-    # no group exceeds 2x the per-slot target the pre-pass aimed for
     slots = spark.sparkContext.defaultParallelism
     target = (n_hot + n_cold) / (slots * 2)
-    assert groups["count"].max() <= 2 * target
+    for rows in (narrow, keyed):
+        groups = unpack(rows).groupBy("tile_lat", "tile_lon", "salt").count().toPandas()
+        hot = groups[(groups.tile_lat == 35) & (groups.tile_lon == 138)]
+        cold = groups[(groups.tile_lat == 33) & (groups.tile_lon == -97)]
+        # hot cell fans out to all 8 salts; cold cell crosses the shuffle once
+        assert sorted(hot["salt"]) == list(range(8))
+        assert cold["salt"].tolist() == [0]
+        # xxhash64 spreads the hot cell evenly: max/median rows per group <= 2
+        assert hot["count"].max() / hot["count"].median() <= 2.0
+        # no group exceeds 2x the per-slot target the pre-pass aimed for
+        assert groups["count"].max() <= 2 * target
     # catalog replication is hot-cell-only: 8 copies of the hot blob, 1 of
     # every other tile (cold cells never pay the replication)
-    cat_counts = cat.groupBy("tile_lat", "tile_lon").count().toPandas()
+    cat_counts = unpack(cat).groupBy("tile_lat", "tile_lon").count().toPandas()
     hot_cat = cat_counts[(cat_counts.tile_lat == 35) & (cat_counts.tile_lon == 138)]
     assert hot_cat["count"].tolist() == [8]
     assert (cat_counts[~((cat_counts.tile_lat == 35) & (cat_counts.tile_lon == 138))]["count"] == 1).all()
@@ -571,6 +585,90 @@ def test_path_plan_moves_input_rows_once(spark, tile_dir, points_pdf):
         assert "ArrowEvalPython" in plan
         for node in ("SortMergeJoin", "FlatMapCoGroups", "MapInArrow", "ExistingRDD"):
             assert node not in plan, node
+
+
+def test_kernel_buffer_reads_each_tile_once():
+    """A shuffled partition reaches the kernel UDF with its tiles
+    interleaved, so every Arrow batch touches every tile of the task. The
+    UDF body runs the kernel over a buffer of batches: with more tiles
+    than the grid cache, each tile is still read once per buffer (per
+    batch, the LRU would re-read all of them on every batch), and the
+    output is one struct array per input batch, equal to the per-batch
+    kernel's."""
+    import pyarrow as pa
+
+    from htg_spark import engine as engine_mod
+
+    rng = np.random.default_rng(11)
+    cells_ = [(30 + i, 100 + j) for i in range(2) for j in range(3)]  # 6 tiles
+    blobs = {
+        c: hgt.encode_tile(rng.integers(-50, 3000, size=(1201, 1201)).astype(np.int16))
+        for c in cells_
+    }
+    n, n_batches = 600, 5
+    lat = 30 + rng.random(n * n_batches) * 2
+    lon = 100 + rng.random(n * n_batches) * 3
+    batches = [
+        (pa.array(lat[i : i + n]), pa.array(lon[i : i + n]))
+        for i in range(0, n * n_batches, n)
+    ]
+    reads = []
+
+    def get_blob(key):
+        reads.append(key)
+        return blobs.get(key)
+
+    def kernel(buffer_rows):
+        reads.clear()
+        cache = engine_mod._GridCache(2)  # fewer slots than tiles per task
+        return list(
+            engine_mod._kernel_batches(
+                iter(batches), lambda k: cache.get(k, get_blob), "bilinear",
+                buffer_rows=buffer_rows,
+            )
+        ), list(reads)
+
+    per_batch, per_batch_reads = kernel(1)  # the old per-batch behaviour
+    assert len(per_batch_reads) == len(cells_) * n_batches
+    for buffer_rows, n_buffers in ((n * n_batches, 1), (2 * n, 3)):
+        out, got_reads = kernel(buffer_rows)
+        assert len(got_reads) == len(cells_) * n_buffers
+        assert [len(a) for a in out] == [n] * n_batches
+        for a, b in zip(out, per_batch):
+            assert a.equals(b)
+
+
+def test_kernel_buffer_spans_batches_under_spark(spark, tile_dir, points_pdf, monkeypatch):
+    """The kernel UDF consumes several Arrow batches before it yields:
+    with 64-row batches and a 300-row buffer, the broadcast and by-path
+    plans (kNN on) still return exactly their one-batch results."""
+    from htg_spark import engine as engine_mod
+
+    df = spark.createDataFrame(points_pdf.assign(caption="c"))
+    cols = ["image_id", "caption", "lat", "lon", "tile_lat", "tile_lon", "knn_used", "elevation"]
+    eng = ElevationEngine(spark, tile_dir=tile_dir)
+
+    def run():
+        out = {}
+        for strategy in ("broadcast", "cogroup"):
+            j = eng.elevation_join(
+                df, strategy=strategy, mode="bilinear", knn_fallback=True, n_salts=4
+            )
+            out[strategy] = _rows(j, cols)
+        return out
+
+    ref = run()
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    monkeypatch.setattr(engine_mod, "_KERNEL_BUFFER_ROWS", 300)
+    spark.conf.set(key, "64")
+    try:
+        small = run()
+    finally:
+        spark.conf.set(key, old)
+    for strategy in ref:
+        pd.testing.assert_frame_equal(small[strategy], ref[strategy])
+    pd.testing.assert_frame_equal(ref["broadcast"], ref["cogroup"])
 
 
 def _rows(df, cols):
