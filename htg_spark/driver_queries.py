@@ -417,10 +417,11 @@ def q_elevation_cogroup(spark, sf_dir):
 
 
 def q_elevation_cogroup_path(spark, sf_dir):
-    """The no-blob-shuffle scale plan: catalog side of the cogroup ships
-    ONLY tile source URIs; each task reads its tile from (shared) storage
-    at apply time. At 100 TB of rasters the blobs must never ride a
-    shuffle — this query proves that plan returns the identical rows."""
+    """The no-blob-shuffle scale plan: each task reads its tiles from
+    (shared) storage by path. At 100 TB of rasters the blobs must never
+    ride a shuffle — this query proves that plan returns the identical
+    rows. Its 3-tile catalog fits the grid cache, so the join runs
+    map-side; the plan audit also gates the over-cache (shuffled) shape."""
     eng = get_path_engine(spark)
     pts = derive_points(_events(spark, sf_dir))
     out = eng.elevation_join(

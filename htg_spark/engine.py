@@ -24,13 +24,20 @@ rows arrive interleaved and it holds more tiles than the cache.
   catalog fits in executor memory.
 
 - **cogroup, blob_source='path'** (scale path for a path-bearing catalog,
-  e.g. ``tile_dir``): the full input rows are salted with the 2% histogram
-  (hot cells get up to ``n_salts`` salts) and repartitioned ONCE on the
-  salted tile key, so each task sees few tiles; the blob getter reads a
-  tile from shared storage by path (a per-engine broadcast path index).
-  kNN runs inside the kernel against the cached tile centres. Only the
-  input rows move, once: no catalog-side shuffle, no cogroup and no id
-  re-join, so duplicate ids stay rows of their own, as under broadcast.
+  e.g. ``tile_dir``): the blob getter reads a tile from shared storage by
+  path (a per-engine broadcast path index). kNN runs inside the kernel
+  against the cached tile centres. No catalog-side shuffle, no cogroup and
+  no id re-join, so duplicate ids stay rows of their own, as under
+  broadcast. Whether the input rows move depends on the catalog:
+
+  - **fits the grid cache** (no more tiles than ``cache_size``): reused
+    Python workers keep every decoded tile across tasks and passes, so
+    grouping rows by tile buys nothing. The kernel UDF runs map-side on
+    the input partitions, exactly like broadcast: no histogram job, no
+    salting, no shuffle; ``n_salts`` is not read.
+  - **exceeds the grid cache**: the full input rows are salted with the
+    2% histogram (hot cells get up to ``n_salts`` salts) and repartitioned
+    ONCE on the salted tile key, so each task sees few tiles.
 
 - **cogroup, blob_source='inline'** (in-memory catalogs past the broadcast
   gate): blobs can only reach a task through a shuffle, so points are
@@ -65,6 +72,7 @@ NULL/default.
 
 from __future__ import annotations
 
+import numbers
 from collections import OrderedDict
 from collections.abc import Iterator
 
@@ -84,6 +92,24 @@ _KERNEL = [
     ("tile_found", T.BooleanType()),
     ("knn_used", T.BooleanType()),
 ]
+
+
+# Largest n_salts whose packed group key (ElevationEngine._group_key) is
+# exact in int32 for every valid latitude: the top cell (tile_lat 90,
+# tile_lon 180) packs to 65,340 * n_salts + salt with salt < n_salts, so
+# 65,341 * n_salts - 1 must stay below 2^31.
+MAX_SALTS = (1 << 31) // (181 * 361)
+
+
+def check_n_salts(n_salts) -> int:
+    """``n_salts`` as an int in [1, MAX_SALTS], else ValueError. The joins
+    that take ``n_salts`` check it up front on every plan, so a bad value
+    fails the same way whichever plan would (or would not) read it."""
+    if isinstance(n_salts, bool) or not isinstance(n_salts, numbers.Integral):
+        raise ValueError(f"n_salts must be an int, got {n_salts!r}")
+    if not 1 <= n_salts <= MAX_SALTS:
+        raise ValueError(f"n_salts must be in [1, {MAX_SALTS}], got {n_salts}")
+    return int(n_salts)
 
 
 def _elev_type(mode: str):
@@ -851,18 +877,44 @@ class ElevationEngine:
         out-of-coverage row (service.rs:485-490) instead of defaulting.
 
         blob_source (cogroup strategy only): 'inline' ships each tile blob
-        through the shuffle at most n_salts times; 'path' moves only the
-        input rows (once, salted by tile) and each task reads its tiles
-        from shared storage — at 100 TB of rasters the blobs must never
-        enter a shuffle, this is that plan. Requires a path-bearing catalog
-        (catalog_from_dir / tile_dir engines). Default None = auto: a
-        cogroup join over a path-bearing catalog picks 'path' (the only
-        shape that survives when the raster corpus itself is the 100 TB);
-        in-memory catalogs fall back to 'inline'. Both cogroup plans salt
-        by ``id_col``; only 'inline' re-joins by it and so needs it unique.
+        through the shuffle at most n_salts times; 'path' never moves a
+        tile blob: each task reads its tiles from shared storage — at 100 TB
+        of rasters the blobs must never enter a shuffle, this is that plan.
+        Requires a path-bearing catalog (catalog_from_dir / tile_dir
+        engines). Default None = auto: a cogroup join over a path-bearing
+        catalog picks 'path' (the only shape that survives when the raster
+        corpus itself is the 100 TB); in-memory catalogs fall back to
+        'inline'. Under 'path' the input rows move only when the catalog
+        holds more tiles than ``cache_size``: then they are salted by tile
+        (by ``id_col``) and shuffled once, so each task sees few tiles.
+        Otherwise every reused Python worker keeps every tile in its grid
+        cache, and the kernel runs map-side on the input partitions, as
+        under broadcast. Only 'inline' re-joins by ``id_col`` and so needs
+        it unique.
+
+        n_salts: the most salt buckets a hot cell fans out to, an int in
+        [1, MAX_SALTS]; checked on every plan, read only by the salted ones
+        (the inline cogroup and the over-cache 'path' plan).
+
+        Eager Spark jobs (launched while the plan is built, before any
+        action on the result):
+
+        - strict=True: 1 job per call (the out-of-coverage check).
+        - the salt histogram (``_salt_table``), on the inline cogroup and
+          the over-cache 'path' plan: 2 jobs per call.
+        - inline cogroup with knn_fallback: under AQE the lazy checkpoint
+          of pass 1 (``_knn_second_pass``) runs its upstream shuffle
+          stages while the plan is built: 4 more jobs per call.
+        - once per engine, then cached: the catalog tile count and blob
+          bytes (strategy='auto'), the path index ('path') and the blob
+          broadcast (broadcast strategy).
+
+        The broadcast plan and the fits-cache 'path' plan launch none
+        after the engine's first join.
         """
         if mode not in ("nearest", "floor", "bilinear"):
             raise ValueError(f"bad mode {mode!r}")
+        n_salts = check_n_salts(n_salts)
         pts = points
         if "lat" not in pts.columns or "lon" not in pts.columns:
             if "phash" not in pts.columns:
@@ -1027,7 +1079,7 @@ class ElevationEngine:
         """ONE packed int key instead of (tile_lat, tile_lon, salt):
         mixed-radix gk = ((tile_lat+90) * 361 + (tile_lon+180)) * n_salts
         + salt — collision-free (salt < n_salts, lon+180 < 361), exact in
-        int32 for n_salts up to ~3.3e4, and 8 fewer bytes on every row
+        int32 for n_salts up to MAX_SALTS, and 8 fewer bytes on every row
         through the exchange. NULL for a NULL coordinate."""
         return (
             ((tile_lat + 90).cast("long") * 361 + (tile_lon + 180).cast("long"))
@@ -1056,19 +1108,28 @@ class ElevationEngine:
     def _join_by_path(
         self, pts: DataFrame, mode: str, knn: bool, id_col: str, n_salts: int
     ) -> DataFrame:
-        """blob_source='path': salt the FULL input rows by cell, repartition
-        them once on the salted tile key, and run the kernel UDF on the
-        shuffled partitions, reading each task's tiles by path through the
-        executor grid cache. Tiles never move and rows move once: no
-        catalog-side shuffle, no cogroup, no kNN second pass and no id
-        re-join — kNN runs in the kernel against the cached centres."""
+        """blob_source='path': run the kernel UDF reading tiles by path
+        through the executor grid cache. Tiles never move; no catalog-side
+        shuffle, no cogroup, no kNN second pass and no id re-join — kNN
+        runs in the kernel against the cached centres.
+
+        Rows move only when the catalog holds more tiles than the grid
+        cache: then the FULL input rows are salted by cell and repartitioned
+        once on the salted tile key, so each task sees few tiles. When the
+        whole catalog fits the cache, a reused Python worker keeps every
+        tile across tasks and passes, so the kernel runs map-side on the
+        input partitions, as under broadcast: no histogram job, no salting,
+        no shuffle, and ``n_salts`` is not read."""
         paths = self._path_index()
         centers = self.tile_centers() if knn else None
-        keyed, _salt_df, est_rows = self._salted_key(pts, id_col, n_salts)
-        rows = (
-            keyed.repartition(self._kernel_partitions(pts.sparkSession, est_rows), "_gk")
-            .drop("_gk")
-        )
+        if len(paths.value) <= self.cache_size:
+            rows = pts
+        else:
+            keyed, _salt_df, est_rows = self._salted_key(pts, id_col, n_salts)
+            rows = (
+                keyed.repartition(self._kernel_partitions(pts.sparkSession, est_rows), "_gk")
+                .drop("_gk")
+            )
 
         def get_blob(key):
             path = paths.value.get(key)
@@ -1178,9 +1239,10 @@ class ElevationEngine:
         # two union branches would otherwise each embed the full pass-1
         # subtree and the expensive cogroup kernel stage would execute
         # TWICE (Spark SQL has no cross-branch common-subtree reuse). A
-        # lazy localCheckpoint swaps the subtree for one shared RDD — no
-        # driver-side job at plan-build time, and the checkpoint writes
-        # only the narrow pass-1 output, not the inputs.
+        # lazy localCheckpoint swaps the subtree for one shared RDD, and
+        # the checkpoint writes only the narrow pass-1 output, not the
+        # inputs. Under AQE it still runs pass 1's shuffle stages while
+        # the plan is built (an eager job listed in elevation_join).
         joined = joined.localCheckpoint(eager=False)
         is_miss = F.col("in_coverage") & ~F.col("tile_found")
         rest = joined.where(~is_miss)

@@ -201,6 +201,9 @@ def terrain_join(
     Derived float products are deliberately NOT computed here: apply
     ``terrain_cols`` (JVM codegen) on the result.
     """
+    from ..engine import check_n_salts
+
+    n_salts = check_n_salts(n_salts)
     pts = points
     if "lat" not in pts.columns or "lon" not in pts.columns:
         raise ValueError("points need (lat, lon) columns")

@@ -1,9 +1,10 @@
 """Capture .explain('formatted') plans for the engine's key plan shapes into
 PLANS.md — the plan-shape audit: broadcast join must be a single map-only
 Arrow stage with pushed filters on the scan; the inline cogroup must
-shuffle only narrow columns; the by-path plan must move the input rows
-through one Exchange and never the tile blobs; catalog aggregations must
-prune columns.
+shuffle only narrow columns; the by-path plan must never move the tile
+blobs, and moves the input rows (through one Exchange) only when the
+catalog exceeds the engine's grid cache; catalog aggregations must prune
+columns.
 """
 
 import io
@@ -133,18 +134,50 @@ def main():
         sys.exit(1)
 
     from htg_spark.driver_queries import get_path_engine
+    from htg_spark.engine import ElevationEngine
+
+    import re as _re
 
     path_eng = get_path_engine(spark)
-    cg_path = path_eng.elevation_join(
+    fit_plan = plan_of(
+        path_eng.elevation_join(
+            pts, mode="nearest", strategy="cogroup", id_col="event_id",
+            n_salts=4, blob_source="path",
+        )
+    )
+    sections.append(
+        (
+            "Cogroup join, blob_source='path', catalog fits the grid cache (map-side)",
+            "Expected: the catalog holds no more tiles than the engine's "
+            "cache_size, so every reused Python worker keeps every tile "
+            "across tasks and a shuffle for tile locality buys nothing. "
+            "ArrowEvalPython runs the kernel UDF on the input partitions, "
+            "reading tiles by path: no histogram job, no salt join, no "
+            "shuffle Exchange, and the binary `data` column appears nowhere.",
+            fit_plan,
+        )
+    )
+    # hard gate: no shuffle at all, the kernel UDF, no data column
+    n_fit = n_shuffle_ex(fit_plan)
+    if n_fit != 0 or "ArrowEvalPython" not in fit_plan or _re.search(r"\bdata#", fit_plan):
+        print(
+            f"FATAL: fits-cache path plan has {n_fit} shuffle Exchanges (expected "
+            "0), lacks ArrowEvalPython, or carries the data column",
+            file=sys.stderr,
+        )
+        sys.exit(1)
+
+    # the same directory with a grid cache smaller than the catalog
+    over_eng = ElevationEngine(spark, catalog=path_eng.catalog, cache_size=2)
+    cg_path = over_eng.elevation_join(
         pts, mode="nearest", strategy="cogroup", id_col="event_id",
         n_salts=4, blob_source="path",
     )
-    import re as _re
 
     cgp_plan = plan_of(cg_path)
     sections.append(
         (
-            "Cogroup join, blob_source='path' (no-blob-shuffle)",
+            "Cogroup join, blob_source='path', catalog exceeds the grid cache (salted shuffle)",
             "Expected: the input rows are salted by cell (a broadcast join "
             "with the histogram's salt table) and cross ONE hash Exchange on "
             "the salted tile key; ArrowEvalPython then runs the kernel UDF, "

@@ -2,6 +2,8 @@
 the pure-NumPy oracle (htg_spark.hgt), which itself carries the reference's
 unit-test expectations (tests/test_hgt_kernels.py)."""
 
+import itertools
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -225,8 +227,11 @@ def test_assign_nearest_center_chunked_large_catalog():
 def test_cogroup_blob_source_path(spark, grids, points_pdf, tile_dir):
     """blob_source='path': each task reads its tiles from shared storage by
     path. Results must be row-identical to the broadcast path — including
-    through a .hgt.zip tile and with kNN fallback."""
-    eng = ElevationEngine(spark, tile_dir=tile_dir)
+    through a .hgt.zip tile and with kNN fallback. The grid cache holds
+    fewer tiles than the catalog, so this is the shuffled by-path plan
+    (test_path_plan_runs_map_side_when_catalog_fits_cache covers the
+    map-side one)."""
+    eng = ElevationEngine(spark, tile_dir=tile_dir, cache_size=2)
     df = spark.createDataFrame(points_pdf)
     a = (
         eng.elevation_join(df, mode="nearest", strategy="broadcast", knn_fallback=True)
@@ -335,7 +340,8 @@ def test_auto_blob_source_picks_path(spark, grids, points_pdf, tmp_path):
 
     import re
 
-    eng = ElevationEngine(spark, tile_dir=str(tiles))
+    # cache_size below the tile count: the shuffled by-path plan
+    eng = ElevationEngine(spark, tile_dir=str(tiles), cache_size=2)
     eng.BROADCAST_MAX_BYTES = 1000  # force the cogroup branch
     plan = _plan_text(eng.elevation_join(df, strategy="auto"))
     # the by-path plan: salted input rows, one Exchange, the kernel UDF
@@ -568,10 +574,12 @@ def test_path_plan_moves_input_rows_once(spark, tile_dir, points_pdf):
     """blob_source='path' reads tiles by path, so only the input rows move:
     ONE shuffle Exchange (the salted-key repartition; the histogram
     pre-pass has already run while the plan was built), no cogroup, no
-    id re-join, no data column in any Exchange — with kNN as well."""
+    id re-join, no data column in any Exchange — with kNN as well. The
+    catalog holds more tiles than the engine's grid cache, so the plan
+    shuffles for tile locality."""
     import re
 
-    eng = ElevationEngine(spark, tile_dir=tile_dir)
+    eng = ElevationEngine(spark, tile_dir=tile_dir, cache_size=2)
     df = spark.createDataFrame(points_pdf.assign(caption="c"))
     for knn in (False, True):
         plan = _plan_text(
@@ -641,12 +649,14 @@ def test_kernel_buffer_reads_each_tile_once():
 def test_kernel_buffer_spans_batches_under_spark(spark, tile_dir, points_pdf, monkeypatch):
     """The kernel UDF consumes several Arrow batches before it yields:
     with 64-row batches and a 300-row buffer, the broadcast and by-path
-    plans (kNN on) still return exactly their one-batch results."""
+    plans (kNN on) still return exactly their one-batch results. The grid
+    cache holds fewer tiles than the catalog, so the by-path leg is the
+    shuffled plan, whose partitions interleave tiles."""
     from htg_spark import engine as engine_mod
 
     df = spark.createDataFrame(points_pdf.assign(caption="c"))
     cols = ["image_id", "caption", "lat", "lon", "tile_lat", "tile_lon", "knn_used", "elevation"]
-    eng = ElevationEngine(spark, tile_dir=tile_dir)
+    eng = ElevationEngine(spark, tile_dir=tile_dir, cache_size=2)
 
     def run():
         out = {}
@@ -678,7 +688,9 @@ def _rows(df, cols):
 def test_path_plan_duplicate_ids_match_broadcast(spark, grids, tile_dir):
     """Duplicate ids with a payload column: the by-path plan keeps one
     output row per input row, exactly like broadcast, and both match the
-    hgt.py oracle (the old cogroup id re-join multiplied duplicates)."""
+    hgt.py oracle (the old cogroup id re-join multiplied duplicates) —
+    under the shuffled plan (grid cache smaller than the catalog) and the
+    map-side one (catalog fits the cache)."""
     pdf = pd.DataFrame(
         {
             "image_id": ["a", "a", "b", "b", "c"],
@@ -688,10 +700,10 @@ def test_path_plan_duplicate_ids_match_broadcast(spark, grids, tile_dir):
         }
     )
     df = spark.createDataFrame(pdf)
-    eng = ElevationEngine(spark, tile_dir=tile_dir)
     cols = ["image_id", "caption", "lat", "lon", "tile_lat", "tile_lon",
             "in_coverage", "tile_found", "knn_used", "elevation"]
-    for mode in ("nearest", "bilinear"):
+    for cache_size, mode in itertools.product((2, 64), ("nearest", "bilinear")):
+        eng = ElevationEngine(spark, tile_dir=tile_dir, cache_size=cache_size)
         kw = dict(mode=mode, knn_fallback=True)
         a = _rows(eng.elevation_join(df, strategy="broadcast", **kw), cols)
         b = _rows(
@@ -710,14 +722,16 @@ def test_path_plan_duplicate_ids_match_broadcast(spark, grids, tile_dir):
 def test_null_lat_is_out_of_coverage_under_every_plan(spark, grids, tile_dir):
     """A NULL lat is out of coverage under broadcast, inline cogroup and the
     by-path plan alike: lat stays NULL, tile key and elevation are NULL
-    (the inline cogroup used to raise TypeError on the NULL group key)."""
+    (the inline cogroup used to raise TypeError on the NULL group key).
+    The by-path plan runs shuffled (grid cache smaller than the catalog)
+    and map-side (catalog fits the cache)."""
     rows = [("n1", None, 138.5, "p"), ("n2", 35.5, 138.5, "q"), ("n3", 40.2, 138.4, "r")]
     df = spark.createDataFrame(rows, "image_id string, lat double, lon double, caption string")
     cols = ["image_id", "caption", "lat", "lon", "tile_lat", "tile_lon",
             "in_coverage", "tile_found", "knn_used", "elevation"]
-    path_eng = ElevationEngine(spark, tile_dir=tile_dir)
     mem_eng = ElevationEngine(spark, grids=grids)
-    for knn in (False, True):
+    for cache_size, knn in itertools.product((2, 64), (False, True)):
+        path_eng = ElevationEngine(spark, tile_dir=tile_dir, cache_size=cache_size)
         kw = dict(mode="nearest", knn_fallback=knn)
         a = _rows(path_eng.elevation_join(df, strategy="broadcast", **kw), cols)
         b = _rows(
@@ -749,3 +763,88 @@ def test_repeated_broadcast_knn_join_builds_without_jobs(spark, grids, points_pd
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert list(jobs) == []
     assert out.where("knn_used").count() > 0
+
+
+def test_path_plan_runs_map_side_when_catalog_fits_cache(spark, grids, tile_dir, points_pdf):
+    """With no more tiles than the grid cache, a reused Python worker keeps
+    every tile across tasks and passes, so the by-path plan runs the kernel
+    UDF map-side on the input partitions: no histogram job, no salting, no
+    shuffle Exchange. A repeated join builds without a Spark job, and its
+    rows equal broadcast's and the hgt.py oracle's for nearest and
+    bilinear, with and without kNN (one catalog tile is .hgt.zip)."""
+    import re
+
+    eng = ElevationEngine(spark, tile_dir=tile_dir)
+    assert len(grids) <= eng.cache_size
+    df = spark.createDataFrame(points_pdf.assign(caption="c"))
+    path_kw = dict(strategy="cogroup", blob_source="path", n_salts=4)
+    for knn in (False, True):
+        plan = _plan_text(eng.elevation_join(df, knn_fallback=knn, **path_kw))
+        assert not re.findall(r"\(\d+\) Exchange", plan), plan
+        assert "ArrowEvalPython" in plan and not re.search(r"\bdata#", plan)
+        for node in ("SortMergeJoin", "BroadcastHashJoin", "FlatMapCoGroups", "MapInArrow"):
+            assert node not in plan, node
+
+    sc = spark.sparkContext
+    sc.setJobGroup("repeated-path-build", "plan build only")
+    try:
+        out = eng.elevation_join(df, mode="bilinear", knn_fallback=True, **path_kw)
+        jobs = sc.statusTracker().getJobIdsForGroup("repeated-path-build")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(jobs) == []
+    assert out.where("knn_used").count() > 0
+
+    cols = ["image_id", "caption", "lat", "lon", "tile_lat", "tile_lon",
+            "in_coverage", "tile_found", "knn_used", "elevation"]
+    for mode, knn in itertools.product(("nearest", "bilinear"), (False, True)):
+        a = _rows(eng.elevation_join(df, mode=mode, strategy="broadcast", knn_fallback=knn), cols)
+        b = _rows(eng.elevation_join(df, mode=mode, knn_fallback=knn, **path_kw), cols)
+        pd.testing.assert_frame_equal(a, b)
+        assert a["knn_used"].any() == knn
+        got = a["elevation"].to_numpy(dtype="float64", na_value=np.nan)
+        plain = ~a["knn_used"].to_numpy(dtype=bool)
+        want = _oracle(a[["lat", "lon"]], grids, mode)
+        assert np.array_equal(np.isnan(got[plain]), np.isnan(want[plain]))
+        assert np.array_equal(got[plain & ~np.isnan(got)], want[plain & ~np.isnan(want)])
+
+
+def test_bad_n_salts_raises_under_every_plan(spark, grids, tile_dir):
+    """n_salts is checked when the join is called, on every plan —
+    including the broadcast and map-side by-path plans, which never read
+    it — so a bad value fails the same way everywhere (it used to fail
+    inside a task with REMAINDER_BY_ZERO at 0, pass silently at -1, and
+    overflow the packed int32 group key past MAX_SALTS)."""
+    from htg_spark.engine import MAX_SALTS
+    from htg_spark.operators.terrain import terrain_join
+
+    df = spark.createDataFrame(
+        [("a", 35.5, 138.5), ("b", 36.2, 138.4), ("c", 70.0, 0.0)],
+        "image_id string, lat double, lon double",
+    )
+    mem = ElevationEngine(spark, grids=grids)
+    plans = [
+        (mem, dict(strategy="broadcast")),
+        (mem, dict(strategy="cogroup")),
+    ] + [
+        (ElevationEngine(spark, tile_dir=tile_dir, cache_size=c),
+         dict(strategy="cogroup", blob_source="path"))
+        for c in (2, 64)  # shuffled and map-side by-path plans
+    ]
+    for bad in (0, -1, MAX_SALTS + 1, 4.0, "4", True, None):
+        for eng, kw in plans:
+            with pytest.raises(ValueError, match="n_salts"):
+                eng.elevation_join(df, n_salts=bad, **kw)
+        for strategy in ("broadcast", "cogroup"):
+            with pytest.raises(ValueError, match="n_salts"):
+                terrain_join(mem, df, strategy=strategy, id_col="image_id", n_salts=bad)
+
+    # MAX_SALTS is the exact int32 bound of the packed key at the top cell
+    top = ElevationEngine._group_key(F.lit(90), F.lit(180), F.lit(MAX_SALTS - 1), MAX_SALTS)
+    assert spark.range(1).select(top.alias("gk")).first()["gk"] == 65341 * MAX_SALTS - 1
+    assert 65341 * (MAX_SALTS + 1) - 1 > 2**31 - 1
+    # both ends of the range run on the salted plans, equal to broadcast
+    cols = ["image_id", "lat", "lon", "tile_lat", "tile_lon", "elevation"]
+    want = _rows(mem.elevation_join(df, strategy="broadcast"), cols)
+    for (eng, kw), n in itertools.product([plans[1], plans[2]], (1, MAX_SALTS)):
+        pd.testing.assert_frame_equal(_rows(eng.elevation_join(df, n_salts=n, **kw), cols), want)
