@@ -28,16 +28,20 @@ rows arrive interleaved and it holds more tiles than the cache.
   path (a per-engine broadcast path index). kNN runs inside the kernel
   against the cached tile centres. No catalog-side shuffle, no cogroup and
   no id re-join, so duplicate ids stay rows of their own, as under
-  broadcast. Whether the input rows move depends on the catalog:
+  broadcast. Whether the input rows move depends on the catalog and on
+  Python worker reuse:
 
-  - **fits the grid cache** (no more tiles than ``cache_size``): reused
-    Python workers keep every decoded tile across tasks and passes, so
-    grouping rows by tile buys nothing. The kernel UDF runs map-side on
-    the input partitions, exactly like broadcast: no histogram job, no
-    salting, no shuffle; ``n_salts`` is not read.
-  - **exceeds the grid cache**: the full input rows are salted with the
-    2% histogram (hot cells get up to ``n_salts`` salts) and repartitioned
-    ONCE on the salted tile key, so each task sees few tiles.
+  - **fits the grid cache** (no more tiles than ``cache_size``, and
+    ``spark.python.worker.reuse`` on, Spark's default): reused Python
+    workers keep every decoded tile across tasks and passes, so grouping
+    rows by tile buys nothing. The kernel UDF runs map-side on the input
+    partitions, exactly like broadcast: no histogram job, no salting, no
+    shuffle; ``n_salts`` is not read.
+  - **otherwise** (more tiles than the cache, or workers not reused, so
+    each task starts with an empty cache): the full input rows are salted
+    with the 2% histogram (hot cells get up to ``n_salts`` salts) and
+    repartitioned ONCE on the salted tile key, so each task sees few
+    tiles.
 
 - **cogroup, blob_source='inline'** (in-memory catalogs past the broadcast
   gate): blobs can only reach a task through a shuffle, so points are
@@ -110,6 +114,14 @@ def check_n_salts(n_salts) -> int:
     if not 1 <= n_salts <= MAX_SALTS:
         raise ValueError(f"n_salts must be in [1, {MAX_SALTS}], got {n_salts}")
     return int(n_salts)
+
+
+def _python_workers_reused(spark) -> bool:
+    """``spark.python.worker.reuse`` (Spark's default: true). Read from the
+    context's live conf, as the Python runners read it; ``getConf()``
+    would copy every entry over Py4J on each join."""
+    reuse = spark.sparkContext._conf.get("spark.python.worker.reuse", "true")
+    return reuse.strip().lower() == "true"
 
 
 def _elev_type(mode: str):
@@ -884,24 +896,24 @@ class ElevationEngine:
         engines). Default None = auto: a cogroup join over a path-bearing
         catalog picks 'path' (the only shape that survives when the raster
         corpus itself is the 100 TB); in-memory catalogs fall back to
-        'inline'. Under 'path' the input rows move only when the catalog
-        holds more tiles than ``cache_size``: then they are salted by tile
-        (by ``id_col``) and shuffled once, so each task sees few tiles.
-        Otherwise every reused Python worker keeps every tile in its grid
-        cache, and the kernel runs map-side on the input partitions, as
-        under broadcast. Only 'inline' re-joins by ``id_col`` and so needs
-        it unique.
+        'inline'. Under 'path' the kernel runs map-side on the input
+        partitions, as under broadcast, when the catalog holds no more
+        tiles than ``cache_size`` and ``spark.python.worker.reuse`` is on:
+        every reused Python worker then keeps every tile in its grid
+        cache. Otherwise the input rows are salted by tile (by ``id_col``)
+        and shuffled once, so each task sees few tiles. Only 'inline'
+        re-joins by ``id_col`` and so needs it unique.
 
         n_salts: the most salt buckets a hot cell fans out to, an int in
         [1, MAX_SALTS]; checked on every plan, read only by the salted ones
-        (the inline cogroup and the over-cache 'path' plan).
+        (the inline cogroup and the shuffled 'path' plan).
 
         Eager Spark jobs (launched while the plan is built, before any
         action on the result):
 
         - strict=True: 1 job per call (the out-of-coverage check).
         - the salt histogram (``_salt_table``), on the inline cogroup and
-          the over-cache 'path' plan: 2 jobs per call.
+          the shuffled 'path' plan: 2 jobs per call.
         - inline cogroup with knn_fallback: under AQE the lazy checkpoint
           of pass 1 (``_knn_second_pass``) runs its upstream shuffle
           stages while the plan is built: 4 more jobs per call.
@@ -909,7 +921,7 @@ class ElevationEngine:
           bytes (strategy='auto'), the path index ('path') and the blob
           broadcast (broadcast strategy).
 
-        The broadcast plan and the fits-cache 'path' plan launch none
+        The broadcast plan and the map-side 'path' plan launch none
         after the engine's first join.
         """
         if mode not in ("nearest", "floor", "bilinear"):
@@ -1113,16 +1125,16 @@ class ElevationEngine:
         shuffle, no cogroup, no kNN second pass and no id re-join — kNN
         runs in the kernel against the cached centres.
 
-        Rows move only when the catalog holds more tiles than the grid
-        cache: then the FULL input rows are salted by cell and repartitioned
-        once on the salted tile key, so each task sees few tiles. When the
-        whole catalog fits the cache, a reused Python worker keeps every
-        tile across tasks and passes, so the kernel runs map-side on the
-        input partitions, as under broadcast: no histogram job, no salting,
-        no shuffle, and ``n_salts`` is not read."""
+        When the whole catalog fits the grid cache and Python workers are
+        reused, a worker keeps every tile across tasks and passes, so the
+        kernel runs map-side on the input partitions, as under broadcast:
+        no histogram job, no salting, no shuffle, and ``n_salts`` is not
+        read. Otherwise the FULL input rows are salted by cell and
+        repartitioned once on the salted tile key, so each task sees few
+        tiles: with reuse off every task starts with an empty cache."""
         paths = self._path_index()
         centers = self.tile_centers() if knn else None
-        if len(paths.value) <= self.cache_size:
+        if len(paths.value) <= self.cache_size and _python_workers_reused(pts.sparkSession):
             rows = pts
         else:
             keyed, _salt_df, est_rows = self._salted_key(pts, id_col, n_salts)

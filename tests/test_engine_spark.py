@@ -226,32 +226,40 @@ def test_assign_nearest_center_chunked_large_catalog():
 
 def test_cogroup_blob_source_path(spark, grids, points_pdf, tile_dir):
     """blob_source='path': each task reads its tiles from shared storage by
-    path. Results must be row-identical to the broadcast path — including
-    through a .hgt.zip tile and with kNN fallback. The grid cache holds
-    fewer tiles than the catalog, so this is the shuffled by-path plan
-    (test_path_plan_runs_map_side_when_catalog_fits_cache covers the
-    map-side one)."""
-    eng = ElevationEngine(spark, tile_dir=tile_dir, cache_size=2)
+    path. Results must be row-identical to the broadcast path and match
+    the hgt.py oracle — including through a .hgt.zip tile, for nearest and
+    bilinear, with and without kNN fallback — under the shuffled by-path
+    plan (grid cache smaller than the catalog) and the map-side one
+    (catalog fits the cache)."""
     df = spark.createDataFrame(points_pdf)
-    a = (
-        eng.elevation_join(df, mode="nearest", strategy="broadcast", knn_fallback=True)
-        .orderBy("image_id")
-        .toPandas()
-    )
-    b = (
-        eng.elevation_join(
-            df, mode="nearest", strategy="cogroup", knn_fallback=True,
-            n_salts=4, blob_source="path",
+    for cache_size, mode, knn in itertools.product(
+        (2, 64), ("nearest", "bilinear"), (False, True)
+    ):
+        eng = ElevationEngine(spark, tile_dir=tile_dir, cache_size=cache_size)
+        a = (
+            eng.elevation_join(df, mode=mode, strategy="broadcast", knn_fallback=knn)
+            .orderBy("image_id")
+            .toPandas()
         )
-        .orderBy("image_id")
-        .toPandas()
-    )
-    av = a["elevation"].to_numpy(dtype="float64", na_value=np.nan)
-    bv = b["elevation"].to_numpy(dtype="float64", na_value=np.nan)
-    assert np.array_equal(np.isnan(av), np.isnan(bv))
-    assert np.array_equal(av[~np.isnan(av)], bv[~np.isnan(bv)])
-    for c in ("tile_lat", "tile_lon", "in_coverage", "tile_found", "knn_used"):
-        assert a[c].tolist() == b[c].tolist(), c
+        b = (
+            eng.elevation_join(
+                df, mode=mode, strategy="cogroup", knn_fallback=knn,
+                n_salts=4, blob_source="path",
+            )
+            .orderBy("image_id")
+            .toPandas()
+        )
+        av = a["elevation"].to_numpy(dtype="float64", na_value=np.nan)
+        bv = b["elevation"].to_numpy(dtype="float64", na_value=np.nan)
+        assert np.array_equal(np.isnan(av), np.isnan(bv))
+        assert np.array_equal(av[~np.isnan(av)], bv[~np.isnan(bv)])
+        for c in ("tile_lat", "tile_lon", "in_coverage", "tile_found", "knn_used"):
+            assert a[c].tolist() == b[c].tolist(), c
+        assert a["knn_used"].any() == knn
+        plain = ~a["knn_used"].to_numpy(dtype=bool)
+        want = _oracle(a[["lat", "lon"]], grids, mode)
+        assert np.array_equal(np.isnan(av[plain]), np.isnan(want[plain]))
+        assert np.array_equal(av[plain & ~np.isnan(av)], want[plain & ~np.isnan(want)])
 
     # contract errors: in-memory catalog has no paths; broadcast never fetches
     mem_eng = ElevationEngine(spark, grids=grids)
@@ -575,18 +583,27 @@ def test_path_plan_moves_input_rows_once(spark, tile_dir, points_pdf):
     ONE shuffle Exchange (the salted-key repartition; the histogram
     pre-pass has already run while the plan was built), no cogroup, no
     id re-join, no data column in any Exchange — with kNN as well. The
-    catalog holds more tiles than the engine's grid cache, so the plan
-    shuffles for tile locality."""
+    plan shuffles for tile locality when the catalog holds more tiles than
+    the engine's grid cache, or when spark.python.worker.reuse is off (every
+    task then starts a fresh worker with an empty cache). The setting is
+    read from the live context conf, as the Python runners read it, and
+    restored before anything runs."""
     import re
 
-    eng = ElevationEngine(spark, tile_dir=tile_dir, cache_size=2)
     df = spark.createDataFrame(points_pdf.assign(caption="c"))
-    for knn in (False, True):
-        plan = _plan_text(
-            eng.elevation_join(
-                df, strategy="cogroup", blob_source="path", knn_fallback=knn, n_salts=4
+    conf = spark.sparkContext._conf
+    shapes = [(2, "true"), (64, "false"), (64, "False ")]  # (cache_size, reuse)
+    for (cache_size, reuse), knn in itertools.product(shapes, (False, True)):
+        eng = ElevationEngine(spark, tile_dir=tile_dir, cache_size=cache_size)
+        conf.set("spark.python.worker.reuse", reuse)
+        try:
+            plan = _plan_text(
+                eng.elevation_join(
+                    df, strategy="cogroup", blob_source="path", knn_fallback=knn, n_salts=4
+                )
             )
-        )
+        finally:
+            conf.set("spark.python.worker.reuse", "true")
         ex_blocks = re.findall(r"\(\d+\) Exchange\nInput \[\d+\]: \[[^\]]*\]", plan)
         assert len(ex_blocks) == 1, plan
         assert "caption#" in ex_blocks[0] and not re.search(r"\bdata#", ex_blocks[0])
@@ -769,9 +786,8 @@ def test_path_plan_runs_map_side_when_catalog_fits_cache(spark, grids, tile_dir,
     """With no more tiles than the grid cache, a reused Python worker keeps
     every tile across tasks and passes, so the by-path plan runs the kernel
     UDF map-side on the input partitions: no histogram job, no salting, no
-    shuffle Exchange. A repeated join builds without a Spark job, and its
-    rows equal broadcast's and the hgt.py oracle's for nearest and
-    bilinear, with and without kNN (one catalog tile is .hgt.zip)."""
+    shuffle Exchange, and a repeated join builds without a Spark job
+    (test_cogroup_blob_source_path checks its rows)."""
     import re
 
     eng = ElevationEngine(spark, tile_dir=tile_dir)
@@ -794,19 +810,6 @@ def test_path_plan_runs_map_side_when_catalog_fits_cache(spark, grids, tile_dir,
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert list(jobs) == []
     assert out.where("knn_used").count() > 0
-
-    cols = ["image_id", "caption", "lat", "lon", "tile_lat", "tile_lon",
-            "in_coverage", "tile_found", "knn_used", "elevation"]
-    for mode, knn in itertools.product(("nearest", "bilinear"), (False, True)):
-        a = _rows(eng.elevation_join(df, mode=mode, strategy="broadcast", knn_fallback=knn), cols)
-        b = _rows(eng.elevation_join(df, mode=mode, knn_fallback=knn, **path_kw), cols)
-        pd.testing.assert_frame_equal(a, b)
-        assert a["knn_used"].any() == knn
-        got = a["elevation"].to_numpy(dtype="float64", na_value=np.nan)
-        plain = ~a["knn_used"].to_numpy(dtype=bool)
-        want = _oracle(a[["lat", "lon"]], grids, mode)
-        assert np.array_equal(np.isnan(got[plain]), np.isnan(want[plain]))
-        assert np.array_equal(got[plain & ~np.isnan(got)], want[plain & ~np.isnan(want)])
 
 
 def test_bad_n_salts_raises_under_every_plan(spark, grids, tile_dir):
