@@ -1,15 +1,21 @@
-"""ElevationEngine — the bulk raster<->vector elevation join.
+"""ElevationEngine — the bulk raster<->vector tile-kernel join.
 
 Re-expresses the reference's one join — ``batch_with_tile_grouping``
 (``htg/src/service.rs:409-480``: group points by tile key, load each tile
 once, apply the kernel, reassemble in input order) — as three Spark plans.
+The plans take the kernel as a parameter (``TileKernel``: NumPy code over
+a batch of points plus its output struct) and serve both kernels of this
+repo: elevation (``kernel_batch``, via ``elevation_join``) and the Horn
+terrain stencil (``operators.terrain.terrain_join``). Both joins share
+one strategy / blob_source dispatch (``_tile_join``).
 
-All three plans append the same columns with one Arrow helper
-(``_kernel_arrays``): ``kernel_batch`` groups a batch by tile and reads
-decoded grids through a blob getter. The two map-side plans wrap it in
-ONE Python stage, a scalar-iterator ``arrow_udf`` over ``(lat, lon)``
-(``_kernel_udf``) that returns ``(tile_lat, tile_lon, in_coverage,
-tile_found, knn_used, elevation)`` as a struct. Spark plans it as
+All three plans append the kernel's columns with one Arrow helper
+(``_kernel_arrays``): the kernel groups a batch by tile
+(``hgt.tile_groups``) and reads decoded grids through a blob getter. The
+two map-side plans wrap it in ONE Python stage, a scalar-iterator
+``arrow_udf`` over ``(lat, lon)`` (``_kernel_udf``) that returns the
+kernel's columns as a struct — for elevation ``(tile_lat, tile_lon,
+in_coverage, tile_found, knn_used, elevation)``. Spark plans it as
 ``ArrowEvalPython``, which keeps every other column of the row in the
 JVM: only the two float64 arguments (16 B/row) cross into Python, never
 the image payload. Decoded grids live in an executor-local LRU (the
@@ -49,8 +55,9 @@ rows arrive interleaved and it holds more tiles than the cache.
   with the catalog replicated ``k_salt(cell)`` times; the grouped
   ``applyInArrow`` runs ``_kernel_arrays`` per (tile, salt) group.
   The payload is joined back by row id at the end, so this plan needs
-  unique ids. kNN is a second pass (``_knn_second_pass``): the fallback
-  tile is data-dependent, so the first shuffle cannot route to it.
+  unique ids. kNN (elevation only) is a second pass
+  (``_knn_second_pass``): the fallback tile is data-dependent, so the
+  first shuffle cannot route to it.
 
 Semantics (exact parity with the reference; FIXTURES.md §6):
 - out-of-coverage (|lat|>60, |lon|>180, inclusive bounds valid):
@@ -69,16 +76,18 @@ into that tile's [0,1] frac range — half-open boundary semantics preserved
 via the explicit frac-based kernels. In-kernel on the broadcast and path
 plans, a second pass on the inline cogroup; row-identical by test.
 
-NULL (or NaN) coordinates are out of coverage under every plan: lat/lon
-pass through unchanged, the tile key is NULL and the elevation is
-NULL/default.
+NULL (or NaN) coordinates are out of coverage under every plan and for
+every kernel: lat/lon pass through unchanged, the tile key is NULL and the
+kernel's values are NULL (elevation NULL/default; terrain_ok false).
 """
 
 from __future__ import annotations
 
+import functools
 import numbers
 from collections import OrderedDict
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from typing import NamedTuple
 
 import numpy as np
 import pyarrow as pa
@@ -122,10 +131,6 @@ def _python_workers_reused(spark) -> bool:
     would copy every entry over Py4J on each join."""
     reuse = spark.sparkContext._conf.get("spark.python.worker.reuse", "true")
     return reuse.strip().lower() == "true"
-
-
-def _elev_type(mode: str):
-    return T.DoubleType() if mode == "bilinear" else T.IntegerType()
 
 
 def _read_blob_from_path(path: str) -> bytes:
@@ -275,64 +280,46 @@ def kernel_batch(
     knn_used = np.zeros(n, dtype=bool)
 
     idx = np.nonzero(in_cov)[0]
-    if len(idx):
-        # group by a scalar composite key: one int64 argsort beats
-        # np.unique(axis=0)'s structured-dtype sort by ~50x on 64k batches
-        code = (klat[idx].astype(np.int64) + 90) * 400 + (klon[idx].astype(np.int64) + 180)
-        order = np.argsort(code, kind="stable")
-        sc = code[order]
-        bounds = np.flatnonzero(np.r_[True, sc[1:] != sc[:-1]])
-        ends = np.r_[bounds[1:], len(sc)]
-        missing_pts: list[np.ndarray] = []
-        for s, e in zip(bounds, ends):
-            gi = idx[order[s:e]]
-            tl = int(sc[s] // 400 - 90)
-            tn = int(sc[s] % 400 - 180)
-            grid = get_grid((tl, tn))
-            if grid is None:
-                missing_pts.append(gi)
-                continue
-            found[gi] = True
-            if mode == "bilinear":
-                vals, _void = hgt.lookup_bilinear(grid, lat[gi], lon[gi])
-                elev[gi] = vals  # NaN where void
-            else:
-                vals = hgt.lookup_nearest(grid, lat[gi], lon[gi], rounding=mode)
-                elev[gi] = np.where(vals == hgt.VOID_VALUE, np.nan, vals.astype(np.float64))
+    missing_pts: list[np.ndarray] = []
+    for key, pos in hgt.tile_groups(klat[idx], klon[idx]):
+        gi = idx[pos]
+        grid = get_grid(key)
+        if grid is None:
+            missing_pts.append(gi)
+            continue
+        found[gi] = True
+        if mode == "bilinear":
+            vals, _void = hgt.lookup_bilinear(grid, lat[gi], lon[gi])
+            elev[gi] = vals  # NaN where void
+        else:
+            vals = hgt.lookup_nearest(grid, lat[gi], lon[gi], rounding=mode)
+            elev[gi] = np.where(vals == hgt.VOID_VALUE, np.nan, vals.astype(np.float64))
 
-        # kNN nearest-tile fallback for in-coverage points with no tile (J6)
-        if missing_pts and knn_centers is not None and len(knn_centers):
-            mi = np.concatenate(missing_pts)
-            tsel = assign_nearest_center(lat[mi], lon[mi], knn_centers)
-            klat[mi] = tsel[:, 0]
-            klon[mi] = tsel[:, 1]
-            knn_used[mi] = True
-            # clamp coordinates into the assigned tile -> frac in [0, 1]
-            fr_lat = np.clip(lat[mi] - tsel[:, 0], 0.0, 1.0)
-            fr_lon = np.clip(lon[mi] - tsel[:, 1], 0.0, 1.0)
-            kcode = (tsel[:, 0] + 90) * 400 + (tsel[:, 1] + 180)
-            korder = np.argsort(kcode, kind="stable")
-            ksc = kcode[korder]
-            kb = np.flatnonzero(np.r_[True, ksc[1:] != ksc[:-1]])
-            ke = np.r_[kb[1:], len(ksc)]
-            for s, e in zip(kb, ke):
-                sub = korder[s:e]
-                tl = int(ksc[s] // 400 - 90)
-                tn = int(ksc[s] % 400 - 180)
-                grid = get_grid((tl, tn))
-                if grid is None:  # cannot happen: centers come from catalog
-                    continue
-                gi = mi[sub]
-                found[gi] = True
-                nm1 = grid.shape[0] - 1.0
-                row_pos = (1.0 - fr_lat[sub]) * nm1
-                col_pos = fr_lon[sub] * nm1
-                if mode == "bilinear":
-                    vals, _void = hgt.lookup_bilinear_pos(grid, row_pos, col_pos)
-                    elev[gi] = vals
-                else:
-                    vals = hgt.lookup_nearest_pos(grid, row_pos, col_pos, rounding=mode)
-                    elev[gi] = np.where(vals == hgt.VOID_VALUE, np.nan, vals.astype(np.float64))
+    # kNN nearest-tile fallback for in-coverage points with no tile (J6)
+    if missing_pts and knn_centers is not None and len(knn_centers):
+        mi = np.concatenate(missing_pts)
+        tsel = assign_nearest_center(lat[mi], lon[mi], knn_centers)
+        klat[mi] = tsel[:, 0]
+        klon[mi] = tsel[:, 1]
+        knn_used[mi] = True
+        # clamp coordinates into the assigned tile -> frac in [0, 1]
+        fr_lat = np.clip(lat[mi] - tsel[:, 0], 0.0, 1.0)
+        fr_lon = np.clip(lon[mi] - tsel[:, 1], 0.0, 1.0)
+        for key, sub in hgt.tile_groups(tsel[:, 0], tsel[:, 1]):
+            grid = get_grid(key)
+            if grid is None:  # cannot happen: centers come from catalog
+                continue
+            gi = mi[sub]
+            found[gi] = True
+            nm1 = grid.shape[0] - 1.0
+            row_pos = (1.0 - fr_lat[sub]) * nm1
+            col_pos = fr_lon[sub] * nm1
+            if mode == "bilinear":
+                vals, _void = hgt.lookup_bilinear_pos(grid, row_pos, col_pos)
+                elev[gi] = vals
+            else:
+                vals = hgt.lookup_nearest_pos(grid, row_pos, col_pos, rounding=mode)
+                elev[gi] = np.where(vals == hgt.VOID_VALUE, np.nan, vals.astype(np.float64))
 
     return {
         "lat": lat,
@@ -346,45 +333,71 @@ def kernel_batch(
     }
 
 
+class TileKernel(NamedTuple):
+    """A tile kernel, the one parameter of the join plans: NumPy code over
+    the points of a batch plus its output struct.
+
+    ``columns(lat, lon, get_grid)`` takes float64 coordinate arrays (NaN
+    for a NULL coordinate) and ``get_grid((tile_lat, tile_lon)) -> int16
+    grid or None``, and returns one NumPy array per field of ``fields`` (a
+    masked array marks NULL entries). ``fields`` is the struct the plans
+    append after lat/lon; it starts with the tile key (tile_lat,
+    tile_lon), which every plan nulls where a coordinate is NaN.
+    ``knn``: the kernel falls back to the nearest catalog tile; the plans
+    bind the tile centres with ``with_centers``."""
+
+    columns: Callable
+    fields: tuple
+    knn: bool = False
+
+    @property
+    def names(self) -> list[str]:
+        return [n for n, _t in self.fields]
+
+    def struct(self) -> T.StructType:
+        return T.StructType([T.StructField(n, t) for n, t in self.fields])
+
+    def with_centers(self, centers: np.ndarray) -> "TileKernel":
+        """This kNN kernel with its fallback tile centres bound."""
+        return self._replace(columns=functools.partial(self.columns, knn_centers=centers))
+
+
+def _elevation_columns(lat, lon, get_grid, *, mode: str, knn_centers=None) -> dict:
+    res = kernel_batch(lat, lon, get_grid, mode, knn_centers=knn_centers)
+    e = res["elevation"]
+    void = np.isnan(e)
+    if mode != "bilinear":
+        e = np.where(void, 0, e).astype(np.int32)
+    res["elevation"] = np.ma.masked_array(e, void)
+    return res
+
+
+def _elevation_kernel(mode: str, knn: bool = False) -> TileKernel:
+    """``kernel_batch`` as a tile kernel: ``_KERNEL`` + elevation (Int32
+    for nearest/floor, Double for bilinear; NULL where NaN)."""
+    elev = T.DoubleType() if mode == "bilinear" else T.IntegerType()
+    fields = (*_KERNEL, ("elevation", elev))
+    return TileKernel(functools.partial(_elevation_columns, mode=mode), fields, knn)
+
+
 def _kernel_arrays(
-    lat: pa.Array, lon: pa.Array, get_grid, mode: str, knn_centers=None
+    lat: pa.Array, lon: pa.Array, kernel: TileKernel, get_grid
 ) -> list[pa.Array]:
-    """``kernel_batch`` over two Arrow float64 columns, returned as the
-    Arrow arrays of ``_KERNEL`` + elevation — the one body shared by the
-    map-side UDF and the inline cogroup's grouped apply. A NULL (or NaN)
-    coordinate reads as NaN: out of coverage, with a NULL tile key."""
+    """``kernel`` over two Arrow float64 columns, returned as the Arrow
+    arrays of its fields — the one body shared by the map-side UDF and the
+    inline cogroup's grouped apply. A NULL (or NaN) coordinate reads as
+    NaN: out of coverage, with a NULL tile key."""
     lat_np = lat.to_numpy(zero_copy_only=False)
     lon_np = lon.to_numpy(zero_copy_only=False)
     with np.errstate(invalid="ignore"):  # NaN -> int cast of the tile key
-        res = kernel_batch(lat_np, lon_np, get_grid, mode, knn_centers=knn_centers)
+        cols = kernel.columns(lat_np, lon_np, get_grid)
     no_key = np.isnan(lat_np) | np.isnan(lon_np)
-    e = res["elevation"]
-    if mode == "bilinear":
-        elev = pa.array(e, type=pa.float64(), from_pandas=True)  # NaN -> null
-    else:
-        nan_mask = np.isnan(e)
-        elev = pa.array(np.where(nan_mask, 0, e).astype(np.int32), mask=nan_mask)
-    return [
-        pa.array(res["tile_lat"], mask=no_key),
-        pa.array(res["tile_lon"], mask=no_key),
-        pa.array(res["in_coverage"]),
-        pa.array(res["tile_found"]),
-        pa.array(res["knn_used"]),
-        elev,
-    ]
+    for k in ("tile_lat", "tile_lon"):
+        cols[k] = np.ma.masked_array(cols[k], no_key)
+    return [pa.array(cols[n]) for n in kernel.names]
 
 
-_KERNEL_NAMES = [n for n, _t in _KERNEL] + ["elevation"]
-
-
-def _kernel_type(mode: str) -> T.StructType:
-    return T.StructType(
-        [T.StructField(n, t) for n, t in _KERNEL]
-        + [T.StructField("elevation", _elev_type(mode))]
-    )
-
-
-# Rows the kernel UDF gathers before it runs kernel_batch (8 default Arrow
+# Rows the kernel UDF gathers before it runs the kernel (8 default Arrow
 # batches). A shuffled partition reaches the UDF with its tiles
 # interleaved, so every batch touches every tile of the task; run per
 # batch, a task holding more tiles than the grid cache would re-read and
@@ -393,27 +406,26 @@ def _kernel_type(mode: str) -> T.StructType:
 # usually one buffer. A Spark sort on the tile key cannot do this: the
 # optimizer drops a sortWithinPartitions under an aggregate or join
 # consumer. Cost: a full buffer peaks at ~40 MB of NumPy + Arrow arrays in
-# the Python worker (measured, bilinear), and the JVM queues the buffered
-# rows (spillable) until their results return.
+# the Python worker (measured, bilinear elevation), and the JVM queues the
+# buffered rows (spillable) until their results return.
 _KERNEL_BUFFER_ROWS = 1 << 19
 
 
 def _kernel_batches(
     batches: Iterator[tuple[pa.Array, pa.Array]],
     get_grid,
-    mode: str,
-    knn_centers=None,
+    kernel: TileKernel,
     buffer_rows: int = _KERNEL_BUFFER_ROWS,
 ) -> Iterator[pa.StructArray]:
-    """The kernel UDF's body: ``_KERNEL`` + elevation as one struct array
-    per input (lat, lon) batch, computed over buffers of up to
-    ``buffer_rows`` rows (see ``_KERNEL_BUFFER_ROWS``)."""
+    """The kernel UDF's body: the kernel's fields as one struct array per
+    input (lat, lon) batch, computed over buffers of up to ``buffer_rows``
+    rows (see ``_KERNEL_BUFFER_ROWS``)."""
 
     def run(buf):
         lat = pa.concat_arrays([b[0] for b in buf])
         lon = pa.concat_arrays([b[1] for b in buf])
-        arrays = _kernel_arrays(lat, lon, get_grid, mode, knn_centers)
-        out = pa.StructArray.from_arrays(arrays, names=_KERNEL_NAMES)
+        arrays = _kernel_arrays(lat, lon, kernel, get_grid)
+        out = pa.StructArray.from_arrays(arrays, names=kernel.names)
         start = 0
         for b_lat, _b_lon in buf:
             yield out.slice(start, len(b_lat))
@@ -430,9 +442,9 @@ def _kernel_batches(
         yield from run(buf)
 
 
-def _kernel_udf(get_blob, mode: str, token: str, cache_cap: int, knn_centers=None):
+def _kernel_udf(get_blob, kernel: TileKernel, token: str, cache_cap: int):
     """The one Python stage of the map-side plans: a scalar-iterator
-    ``arrow_udf`` over (lat, lon) returning ``_KERNEL`` + elevation as a
+    ``arrow_udf`` over (lat, lon) returning the kernel's fields as a
     struct. Spark plans it as ArrowEvalPython, which keeps every other
     column in the JVM, so only the two float64 arguments cross into Python
     and the payload never counts toward an Arrow batch. ``get_blob(key)``
@@ -440,7 +452,7 @@ def _kernel_udf(get_blob, mode: str, token: str, cache_cap: int, knn_centers=Non
     decoded once per worker into the engine's executor cache."""
     buffer_rows = _KERNEL_BUFFER_ROWS  # the driver's value, pickled with the UDF
 
-    def elevation_kernel(
+    def tile_kernel(
         batches: Iterator[tuple[pa.Array, pa.Array]],
     ) -> Iterator[pa.Array]:
         cache = _executor_cache(token, cache_cap)
@@ -448,35 +460,53 @@ def _kernel_udf(get_blob, mode: str, token: str, cache_cap: int, knn_centers=Non
         def get_grid(key):
             return cache.get(key, get_blob)
 
-        yield from _kernel_batches(batches, get_grid, mode, knn_centers, buffer_rows)
+        yield from _kernel_batches(batches, get_grid, kernel, buffer_rows)
 
-    return F.arrow_udf(elevation_kernel, _kernel_type(mode))
+    return F.arrow_udf(tile_kernel, kernel.struct())
+
+
+def _broadcast_blob_getter(bcast):
+    """Blob getter over the broadcast {tile key: raw blob} dict."""
+
+    def get_blob(key):
+        return bcast.value.get(key)
+
+    return get_blob
+
+
+def _path_blob_getter(paths):
+    """Blob getter over the broadcast {tile key: path} index: reads the
+    tile from shared storage (``_read_blob_from_path``)."""
+
+    def get_blob(key):
+        path = paths.value.get(key)
+        return None if path is None else _read_blob_from_path(path)
+
+    return get_blob
 
 
 def _quoted(name: str):
     return F.col("`" + name.replace("`", "``") + "`")
 
 
-def _append_kernel(frame: DataFrame, kernel_udf) -> DataFrame:
-    """frame minus (lat, lon), then lat, lon (as double), ``_KERNEL`` and
-    elevation — the output shape of the map-side plans."""
+def _append_kernel(frame: DataFrame, kernel_udf, names: list[str]) -> DataFrame:
+    """frame minus (lat, lon), then lat, lon (as double) and the kernel's
+    fields ``names`` — the output shape of the map-side plans."""
     keep = [_quoted(c) for c in frame.columns if c not in ("lat", "lon")]
     lat = F.col("lat").cast("double")
     lon = F.col("lon").cast("double")
     return frame.select(
         *keep, lat.alias("lat"), lon.alias("lon"), kernel_udf(lat, lon).alias("_k")
-    ).select(
-        *keep, "lat", "lon", *[F.col("_k")[n].alias(n) for n in _KERNEL_NAMES]
-    )
+    ).select(*keep, "lat", "lon", *[F.col("_k")[n].alias(n) for n in names])
 
 
-def _result_table(ltbl, arrays: list) -> pa.Table:
+def _result_table(ltbl, arrays: list, names: list[str]) -> pa.Table:
     """Grouped-apply output: the group's (_rid, lat, lon) columns followed
     by the kernel's arrays, straight into a pyarrow.Table (no per-group
     pandas round-trip; groups are small under salting)."""
     return pa.Table.from_arrays(
         [ltbl.column("_rid"), ltbl.column("lat"), ltbl.column("lon")] + arrays,
-        names=["_rid", "lat", "lon"] + _KERNEL_NAMES,
+        names=["_rid", "lat", "lon"] + names,
     )
 
 
@@ -486,13 +516,11 @@ def _gk_cell(gk: int, n_salts: int) -> tuple[int, int]:
     return c // 361 - 90, c % 361 - 180
 
 
-def _group_grid(rtbl, blob_source: str):
+def _group_grid(rtbl):
     """Decode the (single) tile blob of a cogroup's catalog side, or None."""
     if rtbl.num_rows == 0:
         return None
-    if blob_source == "inline":
-        return hgt.decode_tile(rtbl.column("data")[0].as_py())
-    return hgt.decode_tile(_read_blob_from_path(str(rtbl.column("path")[0].as_py())))
+    return hgt.decode_tile(rtbl.column("data")[0].as_py())
 
 
 class ElevationEngine:
@@ -562,8 +590,9 @@ class ElevationEngine:
 
     # -- srtm_rs-parity point API (SURVEY.md §2.8; htg-python/src/lib.rs) ----
     #
-    # Single-point and small-batch lookups run driver-side on the collected
-    # catalog (launching a cluster job per point would be absurd); they share
+    # Single-point and small-batch lookups run driver-side, on the collected
+    # blobs of an in-memory catalog or by path from a path-bearing one
+    # (launching a cluster job per point would be absurd); they share
     # the exact same NumPy kernels as the distributed path, so semantics are
     # identical by construction.
 
@@ -573,8 +602,13 @@ class ElevationEngine:
         return self._driver_cache
 
     def _local_get_grid(self, key):
-        blobs = self._broadcast_blobs().value
-        return self._local_cache().get(key, blobs.get)
+        # a path-bearing catalog (tile_dir, from_env) may hold a whole SRTM
+        # corpus: never collect its blobs to the driver
+        if "path" in self.catalog.columns:
+            get_blob = _path_blob_getter(self._path_index())
+        else:
+            get_blob = _broadcast_blob_getter(self._broadcast_blobs())
+        return self._local_cache().get(key, get_blob)
 
     def get_elevation(self, lat: float, lon: float, rounding: str = "nearest"):
         """Optional[int] — void/missing -> None; out-of-coverage raises
@@ -940,35 +974,8 @@ class ElevationEngine:
             if bad:
                 raise ValueError("coordinates out of SRTM coverage (strict mode)")
 
-        if strategy == "auto":
-            # broadcast while the raw catalog fits comfortably in memory —
-            # gated on tile count AND total blob bytes (both cached)
-            strategy = "broadcast" if self._fits_broadcast() else "cogroup"
-
-        if blob_source is None:
-            blob_source = (
-                "path"
-                if strategy == "cogroup" and "path" in self.catalog.columns
-                else "inline"
-            )
-        if blob_source not in ("inline", "path"):
-            raise ValueError(f"bad blob_source {blob_source!r}")
-        if blob_source == "path":
-            if strategy != "cogroup":
-                raise ValueError("blob_source='path' requires strategy='cogroup'")
-            if "path" not in self.catalog.columns:
-                raise ValueError("blob_source='path' needs a path-bearing catalog")
-
-        if strategy == "broadcast":
-            out = self._join_broadcast(pts, mode, knn_fallback)
-        elif strategy == "cogroup" and id_col not in pts.columns:
-            raise ValueError(f"cogroup strategy needs an id column {id_col!r}")
-        elif strategy == "cogroup" and blob_source == "path":
-            out = self._join_by_path(pts, mode, knn_fallback, id_col, n_salts)
-        elif strategy == "cogroup":
-            out = self._join_cogroup(pts, mode, knn_fallback, id_col, n_salts)
-        else:
-            raise ValueError(f"bad strategy {strategy!r}")
+        kernel = _elevation_kernel(mode, knn_fallback)
+        out = self._tile_join(pts, kernel, strategy, id_col, n_salts, blob_source)
 
         if default is not None:
             out = out.withColumn(
@@ -993,18 +1000,63 @@ class ElevationEngine:
             self.last_observation = obs
         return out
 
-    # -- broadcast (map-only) strategy ----------------------------------------
+    def _tile_join(
+        self,
+        pts: DataFrame,
+        kernel: TileKernel,
+        strategy: str,
+        id_col: str,
+        n_salts: int,
+        blob_source: str | None,
+    ) -> DataFrame:
+        """The strategy / blob_source dispatch shared by every tile-kernel
+        join (``elevation_join``, ``terrain.terrain_join``): picks one of
+        the three plans and runs ``kernel`` on it. ``pts`` carries
+        (lat, lon); ``n_salts`` is already checked."""
+        if strategy == "auto":
+            # broadcast while the raw catalog fits comfortably in memory —
+            # gated on tile count AND total blob bytes (both cached)
+            strategy = "broadcast" if self._fits_broadcast() else "cogroup"
 
-    def _join_broadcast(self, pts: DataFrame, mode: str, knn: bool) -> DataFrame:
+        if blob_source is None:
+            blob_source = (
+                "path"
+                if strategy == "cogroup" and "path" in self.catalog.columns
+                else "inline"
+            )
+        if blob_source not in ("inline", "path"):
+            raise ValueError(f"bad blob_source {blob_source!r}")
+        if blob_source == "path":
+            if strategy != "cogroup":
+                raise ValueError("blob_source='path' requires strategy='cogroup'")
+            if "path" not in self.catalog.columns:
+                raise ValueError("blob_source='path' needs a path-bearing catalog")
+
+        if strategy == "broadcast":
+            return self._join_broadcast(pts, kernel)
+        if strategy != "cogroup":
+            raise ValueError(f"bad strategy {strategy!r}")
+        if id_col not in pts.columns:
+            raise ValueError(f"cogroup strategy needs an id column {id_col!r}")
+        if blob_source == "path":
+            return self._join_by_path(pts, kernel, id_col, n_salts)
+        return self._join_cogroup(pts, kernel, id_col, n_salts)
+
+    # -- map-side plans --------------------------------------------------------
+
+    def _map_kernel(self, rows: DataFrame, kernel: TileKernel, get_blob) -> DataFrame:
+        """Run the kernel UDF on ``rows``' partitions, tiles read through
+        ``get_blob`` into the executor grid cache. Call it after the blob
+        source is prepared: the kNN centres come from its keys."""
+        if kernel.knn:
+            kernel = kernel.with_centers(self.tile_centers())
+        udf = _kernel_udf(get_blob, kernel, self._cache_token, self.cache_size)
+        return _append_kernel(rows, udf, kernel.names)
+
+    def _join_broadcast(self, pts: DataFrame, kernel: TileKernel) -> DataFrame:
         """Map-only: the kernel UDF reads tile blobs from the broadcast."""
-        bcast = self._broadcast_blobs()
-        centers = self.tile_centers() if knn else None
-
-        def get_blob(key):
-            return bcast.value.get(key)
-
-        udf = _kernel_udf(get_blob, mode, self._cache_token, self.cache_size, centers)
-        return _append_kernel(pts, udf)
+        get_blob = _broadcast_blob_getter(self._broadcast_blobs())
+        return self._map_kernel(pts, kernel, get_blob)
 
     # -- salted strategies -----------------------------------------------------
 
@@ -1118,7 +1170,7 @@ class ElevationEngine:
         return keyed, salt_df, est_rows
 
     def _join_by_path(
-        self, pts: DataFrame, mode: str, knn: bool, id_col: str, n_salts: int
+        self, pts: DataFrame, kernel: TileKernel, id_col: str, n_salts: int
     ) -> DataFrame:
         """blob_source='path': run the kernel UDF reading tiles by path
         through the executor grid cache. Tiles never move; no catalog-side
@@ -1133,7 +1185,6 @@ class ElevationEngine:
         repartitioned once on the salted tile key, so each task sees few
         tiles: with reuse off every task starts with an empty cache."""
         paths = self._path_index()
-        centers = self.tile_centers() if knn else None
         if len(paths.value) <= self.cache_size and _python_workers_reused(pts.sparkSession):
             rows = pts
         else:
@@ -1142,20 +1193,12 @@ class ElevationEngine:
                 keyed.repartition(self._kernel_partitions(pts.sparkSession, est_rows), "_gk")
                 .drop("_gk")
             )
+        return self._map_kernel(rows, kernel, _path_blob_getter(paths))
 
-        def get_blob(key):
-            path = paths.value.get(key)
-            return None if path is None else _read_blob_from_path(path)
-
-        udf = _kernel_udf(get_blob, mode, self._cache_token, self.cache_size, centers)
-        return _append_kernel(rows, udf)
-
-    def _salted_inputs(
-        self, pts: DataFrame, id_col: str, n_salts: int, blob_source: str = "inline"
-    ):
+    def _salted_inputs(self, pts: DataFrame, id_col: str, n_salts: int):
         """Adaptive-salt shuffle inputs for a cogroup: returns (narrow, cat,
         est_rows) where `narrow` is (_rid, lat, lon, _gk), `cat` is
-        (_gk, blob) with the catalog replicated k_salt(cell) times per cell
+        (_gk, data) with the catalog replicated k_salt(cell) times per cell
         (so only hot cells replicate their tile blob and cold cells cross
         the shuffle once) and est_rows is the histogram's input-row
         estimate. Exposed separately so the skew-stress test can assert
@@ -1166,34 +1209,34 @@ class ElevationEngine:
             F.col("lon").cast("double").alias("lon"),
         )
         narrow, salt_df, est_rows = self._salted_key(narrow, "_rid", n_salts)
-        blob_col = "data" if blob_source == "inline" else "path"
         k_salt = F.coalesce(F.col("k_salt"), F.lit(1))
         cat = (
             self.catalog.join(F.broadcast(salt_df), ["tile_lat", "tile_lon"], "left")
             .select(
                 "tile_lat",
                 "tile_lon",
-                blob_col,
+                "data",
                 F.explode(F.sequence(F.lit(0), k_salt - 1)).alias("salt"),
             )
             .select(
                 self._group_key(
                     F.col("tile_lat"), F.col("tile_lon"), F.col("salt"), n_salts
                 ).alias("_gk"),
-                blob_col,
+                "data",
             )
         )
         return narrow, cat, est_rows
 
     def _join_cogroup(
-        self, pts: DataFrame, mode: str, knn: bool, id_col: str, n_salts: int
+        self, pts: DataFrame, kernel: TileKernel, id_col: str, n_salts: int
     ) -> DataFrame:
         """blob_source='inline': salted cogroup of narrow point rows with
         the k_salt-replicated catalog blobs. Cold tiles cross the shuffle
         once; only hot-cluster tiles fan out — at 10^12 rows this is the
         difference between replicating the whole catalog n_salts times and
         replicating just the skewed cells (SURVEY.md §4 'Skew handling').
-        The payload re-joins by id afterwards."""
+        The payload re-joins by id afterwards, so ``id_col`` must be
+        unique."""
         narrow, cat, est_rows = self._salted_inputs(pts, id_col, n_salts)
         out_schema = T.StructType(
             [
@@ -1201,19 +1244,19 @@ class ElevationEngine:
                 T.StructField("lat", T.DoubleType()),
                 T.StructField("lon", T.DoubleType()),
             ]
-            + _kernel_type(mode).fields
+            + kernel.struct().fields
         )
 
         def apply(key, ltbl, rtbl):
-            grid = _group_grid(rtbl, "inline") if ltbl.num_rows else None
+            grid = _group_grid(rtbl) if ltbl.num_rows else None
             # no tile, or the NULL-coordinate group
             cell = None if grid is None else _gk_cell(key[0].as_py(), n_salts)
 
             def get_grid(k):
                 return grid if (k[0], k[1]) == cell else None
 
-            arrays = _kernel_arrays(ltbl.column("lat"), ltbl.column("lon"), get_grid, mode)
-            return _result_table(ltbl, arrays)
+            arrays = _kernel_arrays(ltbl.column("lat"), ltbl.column("lon"), kernel, get_grid)
+            return _result_table(ltbl, arrays, kernel.names)
 
         # explicit-count repartition on the grouping key for BOTH cogroup
         # sides (see _kernel_partitions); the groupBys reuse these
@@ -1224,8 +1267,8 @@ class ElevationEngine:
             .cogroup(cat.repartition(n_parts, "_gk").groupBy("_gk"))
             .applyInArrow(apply, schema=out_schema)
         )
-        if knn:
-            joined = self._knn_second_pass(joined, mode, out_schema)
+        if kernel.knn:
+            joined = self._knn_second_pass(joined, kernel, out_schema)
         extra_cols = [c for c in pts.columns if c not in (id_col, "lat", "lon")]
         if not extra_cols:
             # no payload to re-attach: skip the rejoin shuffle entirely
@@ -1234,16 +1277,19 @@ class ElevationEngine:
             joined.withColumnRenamed("_rid", id_col), on=id_col, how="inner"
         )
 
-    def _knn_second_pass(self, joined: DataFrame, mode: str, out_schema) -> DataFrame:
-        """kNN fallback for the inline cogroup (J6 at scale): the fallback
-        tile is data-dependent, so the first shuffle cannot route to it.
-        Second pass: take the in-coverage missing-tile remainder (narrow
-        rows only), assign each point its nearest catalog tile center
-        (chunked NumPy argmin over broadcast centers — centers are 2 ints
-        per tile, NOT blobs, so this broadcasts fine at any catalog size),
-        then cogroup those rows with the semi-join-pruned catalog keyed by
-        the ASSIGNED tile. Misses are typically a small fraction of rows,
-        so the extra shuffle is proportional to the miss rate."""
+    def _knn_second_pass(
+        self, joined: DataFrame, kernel: TileKernel, out_schema
+    ) -> DataFrame:
+        """kNN fallback for the inline cogroup (J6 at scale; only the
+        elevation kernel asks for kNN): the fallback tile is data-dependent,
+        so the first shuffle cannot route to it. Second pass: take the
+        in-coverage missing-tile remainder (narrow rows only), assign each
+        point its nearest catalog tile center (chunked NumPy argmin over
+        broadcast centers — centers are 2 ints per tile, NOT blobs, so this
+        broadcasts fine at any catalog size), then cogroup those rows with
+        the semi-join-pruned catalog keyed by the ASSIGNED tile. Misses are
+        typically a small fraction of rows, so the extra shuffle is
+        proportional to the miss rate."""
         centers = self.tile_centers()
         if len(centers) == 0:
             return joined
@@ -1300,17 +1346,17 @@ class ElevationEngine:
             # the kernel's own kNN path with the assigned tile as the only
             # centre: every row's own tile is absent from the catalog, so
             # each falls back to it — identical math to the map-side plans
-            grid = _group_grid(rtbl, "inline") if ltbl.num_rows else None
+            grid = _group_grid(rtbl) if ltbl.num_rows else None
             tile = (key[0].as_py(), key[1].as_py())
 
             def get_grid(k):
                 return grid if (k[0], k[1]) == tile else None
 
             arrays = _kernel_arrays(
-                ltbl.column("lat"), ltbl.column("lon"), get_grid, mode,
-                np.array([tile], dtype=np.int64),
+                ltbl.column("lat"), ltbl.column("lon"),
+                kernel.with_centers(np.array([tile], dtype=np.int64)), get_grid,
             )
-            return _result_table(ltbl, arrays)
+            return _result_table(ltbl, arrays, kernel.names)
 
         second = (
             assigned.groupBy("tile_lat", "tile_lon")

@@ -8,11 +8,11 @@ terrain products computed from the SAME decoded tiles — the 3x3 Horn
 
 Design split (Spark-first):
 
-- The ONLY Python work is the raster gather: a map-only ``mapInArrow``
-  stage groups each Arrow batch
-  by tile, reads the 3x3 neighborhood per point, and emits the two Horn
-  stencil sums as EXACT int64 columns (``gxs``, ``gys``). Integer sums are
-  order-free, so this stage has no float-parity surface at all.
+- The ONLY Python work is the raster gather: ``TERRAIN_KERNEL``, run by
+  the engine's tile-kernel join plans, groups the points by tile, reads
+  the 3x3 neighborhood per point, and emits the two Horn stencil sums as
+  EXACT int64 columns (``gxs``, ``gys``). Integer sums are order-free, so
+  this stage has no float-parity surface at all.
 - Every derived product — gradient, slope magnitude, hillshade, aspect
   octant — is a JVM-side whole-stage-codegen expression over those two
   longs (``terrain_cols``), built from correctly-rounded IEEE ops only
@@ -50,11 +50,14 @@ Per-POINT stencils treat tiles as independent, matching the reference
 (tile.rs:299-318); the boundary-correct whole-raster path is the halo
 exchange at the bottom of this module (``mosaic_horn_stats``).
 
-Scale shape: identical to the broadcast elevation join — tile blobs ride
-a broadcast, the stage is map-only (ZERO shuffle Exchanges, gated in
-PLANS.md), and per-batch work is one argsort group-by plus nine vectorized
-gathers. At 10^12 points this is the same plan that already scales; there
-is nothing new to shuffle.
+Scale shape: the elevation join's own plans (``ElevationEngine._tile_join``),
+with the terrain kernel in place of the elevation kernel.
+The default broadcast plan is map-only: tile blobs ride a broadcast and
+one ``ArrowEvalPython`` kernel UDF sees only (lat, lon), so the payload
+stays in the JVM (ZERO shuffle Exchanges, gated in PLANS.md); per buffer
+the work is one argsort group-by plus nine vectorized gathers. The
+cogroup strategy takes the by-path or inline salted plan, exactly as
+``elevation_join`` does.
 """
 
 from __future__ import annotations
@@ -68,6 +71,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import hgt
+from ..engine import TileKernel, check_n_salts
 
 # default sun: azimuth 315 (NW), altitude 45. Exact-double literals shared
 # verbatim with the SQL oracle (cos45*sin315 == -0.5 and cos45*cos315 ==
@@ -76,9 +80,8 @@ SUN_LX = -0.5
 SUN_LY = 0.5
 SUN_LZ = 0.7071067811865476
 
-_TERRAIN_APPENDED = [
-    ("lat", T.DoubleType()),
-    ("lon", T.DoubleType()),
+# the terrain kernel's output struct, appended after (lat, lon)
+_TERRAIN_FIELDS = (
     ("tile_lat", T.IntegerType()),
     ("tile_lon", T.IntegerType()),
     ("in_coverage", T.BooleanType()),
@@ -86,7 +89,7 @@ _TERRAIN_APPENDED = [
     ("terrain_ok", T.BooleanType()),
     ("gxs", T.LongType()),
     ("gys", T.LongType()),
-]
+)
 
 
 def horn_sums(grid: np.ndarray, row: np.ndarray, col: np.ndarray):
@@ -127,10 +130,11 @@ def horn_sums(grid: np.ndarray, row: np.ndarray, col: np.ndarray):
 
 
 def terrain_batch(lat: np.ndarray, lon: np.ndarray, get_grid):
-    """Batch kernel: tile-group the points (same composite-code argsort as
-    ``engine.kernel_batch``), locate each point's nearest sample
+    """Batch kernel: tile-group the points (``hgt.tile_groups``, as
+    ``engine.kernel_batch`` does), locate each point's nearest sample
     (round-half-away, tile.rs:158-186), and evaluate the Horn stencil.
-    Returns a dict of column arrays matching ``_TERRAIN_APPENDED``."""
+    Returns a dict of column arrays: lat, lon and ``_TERRAIN_FIELDS``
+    (gxs/gys are 0 where terrain_ok is false)."""
     lat = np.asarray(lat, dtype=np.float64)
     lon = np.asarray(lon, dtype=np.float64)
     n = len(lat)
@@ -142,29 +146,16 @@ def terrain_batch(lat: np.ndarray, lon: np.ndarray, get_grid):
     gys = np.zeros(n, dtype=np.int64)
 
     idx = np.nonzero(in_cov)[0]
-    if len(idx):
-        code = (klat[idx].astype(np.int64) + 90) * 400 + (
-            klon[idx].astype(np.int64) + 180
-        )
-        order = np.argsort(code, kind="stable")
-        sc = code[order]
-        bounds = np.flatnonzero(np.r_[True, sc[1:] != sc[:-1]])
-        ends = np.r_[bounds[1:], len(sc)]
-        for s, e in zip(bounds, ends):
-            gi = idx[order[s:e]]
-            tl = int(sc[s] // 400 - 90)
-            tn = int(sc[s] % 400 - 180)
-            grid = get_grid((tl, tn))
-            if grid is None:
-                continue
-            found[gi] = True
-            row_pos, col_pos = hgt.grid_position(lat[gi], lon[gi], grid.shape[0])
-            r = hgt.round_half_away_nonneg(row_pos).astype(np.int64)
-            c = hgt.round_half_away_nonneg(col_pos).astype(np.int64)
-            gx_g, gy_g, ok_g = horn_sums(grid, r, c)
-            gxs[gi] = gx_g
-            gys[gi] = gy_g
-            ok[gi] = ok_g
+    for key, pos in hgt.tile_groups(klat[idx], klon[idx]):
+        gi = idx[pos]
+        grid = get_grid(key)
+        if grid is None:
+            continue
+        found[gi] = True
+        row_pos, col_pos = hgt.grid_position(lat[gi], lon[gi], grid.shape[0])
+        r = hgt.round_half_away_nonneg(row_pos).astype(np.int64)
+        c = hgt.round_half_away_nonneg(col_pos).astype(np.int64)
+        gxs[gi], gys[gi], ok[gi] = horn_sums(grid, r, c)
 
     return {
         "lat": lat,
@@ -179,6 +170,18 @@ def terrain_batch(lat: np.ndarray, lon: np.ndarray, get_grid):
     }
 
 
+def _terrain_columns(lat, lon, get_grid) -> dict:
+    res = terrain_batch(lat, lon, get_grid)
+    bad = ~res["terrain_ok"]
+    res["gxs"] = np.ma.masked_array(res["gxs"], bad)
+    res["gys"] = np.ma.masked_array(res["gys"], bad)
+    return res
+
+
+# terrain_batch as the engine's tile kernel: gxs/gys NULL where not ok
+TERRAIN_KERNEL = TileKernel(_terrain_columns, _TERRAIN_FIELDS)
+
+
 def terrain_join(
     engine,
     points: DataFrame,
@@ -187,155 +190,38 @@ def terrain_join(
     n_salts: int = 8,
     blob_source: str | None = None,
 ) -> DataFrame:
-    """Append (tile_lat, tile_lon, in_coverage, tile_found, terrain_ok,
-    gxs, gys) to `points`. gxs/gys are NULL wherever terrain_ok is false.
+    """Append (lat, lon, tile_lat, tile_lon, in_coverage, tile_found,
+    terrain_ok, gxs, gys) to `points`. gxs/gys are NULL wherever
+    terrain_ok is false.
 
-    strategy='broadcast' is the map-only plan (tile blobs ride a Spark
-    broadcast — the terrain twin of ``ElevationEngine._join_broadcast``);
-    strategy='cogroup' is the 100-TB scale path: the engine's adaptive
-    salted-cogroup shuffle (histogram pre-pass, hot cells fan out, cold
-    cells cross once; blob_source='path' ships only tile URIs so raster
-    bytes never enter a shuffle). Both return identical rows
+    Runs ``TERRAIN_KERNEL`` on the engine's elevation-join plans
+    (``ElevationEngine._tile_join``), with the same strategy and
+    blob_source rules as ``elevation_join``:
+
+    - strategy='broadcast' (default): map-only; the kernel UDF reads the
+      broadcast tile blobs, and only (lat, lon) cross into Python.
+    - strategy='cogroup': the scale path. blob_source None picks 'path' on
+      a path-bearing catalog (tiles read by path, never shuffled; the
+      rows run map-side when the catalog fits the grid cache, else they
+      are salted and shuffled once) and 'inline' otherwise (salted
+      cogroup with the catalog blobs, payload re-joined by ``id_col``).
+    - strategy='auto': broadcast while the catalog fits the broadcast
+      gates, else cogroup.
+
+    Every input row comes out once with its payload untouched, so
+    duplicate ids stay separate rows, except under the inline cogroup,
+    which re-joins by ``id_col`` and needs it unique. A NULL (or NaN)
+    lat/lon passes through unchanged and is out of coverage: NULL tile
+    key, terrain_ok false, NULL gxs/gys. All plans return identical rows
     (test_terrain_cogroup_equals_broadcast).
 
     Derived float products are deliberately NOT computed here: apply
     ``terrain_cols`` (JVM codegen) on the result.
     """
-    from ..engine import check_n_salts
-
     n_salts = check_n_salts(n_salts)
-    pts = points
-    if "lat" not in pts.columns or "lon" not in pts.columns:
+    if "lat" not in points.columns or "lon" not in points.columns:
         raise ValueError("points need (lat, lon) columns")
-    if strategy == "cogroup":
-        if blob_source is None:
-            blob_source = "path" if "path" in engine.catalog.columns else "inline"
-        return _terrain_cogroup(engine, pts, id_col, n_salts, blob_source)
-    if strategy != "broadcast":
-        raise ValueError(f"bad strategy {strategy!r}")
-    return _terrain_broadcast(engine, pts)
-
-
-def _terrain_broadcast(engine, pts: DataFrame) -> DataFrame:
-    import pyarrow as pa
-
-    from ..engine import _executor_cache
-
-    bcast = engine._broadcast_blobs()
-    cache_cap = engine.cache_size
-    token = engine._cache_token
-
-    out_schema = T.StructType(
-        [f for f in pts.schema.fields if f.name not in ("lat", "lon")]
-    )
-    for name, typ in _TERRAIN_APPENDED:
-        out_schema = out_schema.add(name, typ)
-    passthrough = [f.name for f in pts.schema.fields if f.name not in ("lat", "lon")]
-
-    def run(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
-        cache = _executor_cache(token, cache_cap)
-        blobs = bcast.value
-
-        def get_grid(key):
-            return cache.get(key, blobs.get)
-
-        for batch in batches:
-            lat = batch.column(batch.schema.get_field_index("lat")).to_numpy(
-                zero_copy_only=False
-            )
-            lon = batch.column(batch.schema.get_field_index("lon")).to_numpy(
-                zero_copy_only=False
-            )
-            res = terrain_batch(lat, lon, get_grid)
-            bad = ~res["terrain_ok"]
-            arrays = [
-                batch.column(batch.schema.get_field_index(c)) for c in passthrough
-            ]
-            arrays += [
-                pa.array(res["lat"], type=pa.float64()),
-                pa.array(res["lon"], type=pa.float64()),
-                pa.array(res["tile_lat"], type=pa.int32()),
-                pa.array(res["tile_lon"], type=pa.int32()),
-                pa.array(res["in_coverage"]),
-                pa.array(res["tile_found"]),
-                pa.array(res["terrain_ok"]),
-                pa.array(res["gxs"], mask=bad),
-                pa.array(res["gys"], mask=bad),
-            ]
-            names = passthrough + [n for n, _t in _TERRAIN_APPENDED]
-            yield pa.RecordBatch.from_arrays(arrays, names=names)
-
-    return pts.mapInArrow(run, schema=out_schema)
-
-
-def _terrain_result_table(rid, res: dict):
-    """Arrow-native grouped-kernel output (no per-group pandas round-trip —
-    same rationale as engine._result_table)."""
-    import pyarrow as pa
-
-    bad = ~res["terrain_ok"]
-    arrays = [
-        rid,
-        pa.array(res["lat"], type=pa.float64()),
-        pa.array(res["lon"], type=pa.float64()),
-        pa.array(np.asarray(res["tile_lat"], dtype=np.int32)),
-        pa.array(np.asarray(res["tile_lon"], dtype=np.int32)),
-        pa.array(np.asarray(res["in_coverage"], dtype=bool)),
-        pa.array(np.asarray(res["tile_found"], dtype=bool)),
-        pa.array(np.asarray(res["terrain_ok"], dtype=bool)),
-        pa.array(res["gxs"], mask=bad),
-        pa.array(res["gys"], mask=bad),
-    ]
-    names = ["_rid"] + [n for n, _t in _TERRAIN_APPENDED]
-    return pa.Table.from_arrays(arrays, names=names)
-
-
-def _terrain_cogroup(
-    engine, pts: DataFrame, id_col: str, n_salts: int, blob_source: str
-) -> DataFrame:
-    """Scale-path terrain join through the engine's adaptive salted-cogroup
-    shuffle (engine._salted_inputs: 2% histogram pre-pass, per-cell k_salt,
-    narrow point columns only; blob_source='path' keeps raster bytes out of
-    the exchange entirely)."""
-    from ..engine import _gk_cell, _group_grid
-
-    if id_col not in pts.columns:
-        raise ValueError(f"cogroup strategy needs a unique id column {id_col!r}")
-    narrow, cat, _est_rows = engine._salted_inputs(pts, id_col, n_salts, blob_source)
-
-    id_field = pts.schema[id_col].dataType
-    out_schema = T.StructType([T.StructField("_rid", id_field)])
-    for name, typ in _TERRAIN_APPENDED:
-        out_schema = out_schema.add(name, typ)
-
-    def apply(key, ltbl, rtbl):
-        lat = ltbl.column("lat").to_numpy(zero_copy_only=False)
-        lon = ltbl.column("lon").to_numpy(zero_copy_only=False)
-        grid = None if ltbl.num_rows == 0 else _group_grid(rtbl, blob_source)
-        # no tile, or the NULL-coordinate group
-        cell = None if grid is None else _gk_cell(key[0].as_py(), n_salts)
-        res = terrain_batch(
-            lat,
-            lon,
-            (lambda k, _g=grid: _g if (k[0], k[1]) == cell else None),
-        )
-        return _terrain_result_table(ltbl.column("_rid"), res)
-
-    # no explicit repartition here (unlike engine._join_cogroup): at this
-    # operator's bench volume (1e5 rows) AQE's coalesced layout measured
-    # equal-or-better than pinned partitions (interleaved A/B 1.46s vs
-    # 1.55s), and at large volumes byte-based coalescing stops binding
-    joined = (
-        narrow.groupBy("_gk")
-        .cogroup(cat.groupBy("_gk"))
-        .applyInArrow(apply, schema=out_schema)
-    )
-    extra_cols = [c for c in pts.columns if c not in (id_col, "lat", "lon")]
-    if not extra_cols:
-        return joined.withColumnRenamed("_rid", id_col)
-    return pts.drop("lat", "lon").join(
-        joined.withColumnRenamed("_rid", id_col), on=id_col, how="inner"
-    )
+    return engine._tile_join(points, TERRAIN_KERNEL, strategy, id_col, n_salts, blob_source)
 
 
 def aspect_octant_col(gxs: Column, gys: Column) -> Column:

@@ -3,7 +3,8 @@ SURVEY.md §2.7: the reference has no streaming surface; parity does not
 require it, but a 100TB ingest pipeline does).
 
 The broadcast elevation join is a stateless map-only transformation
-(mapInArrow over a broadcast tile catalog — no shuffle, no state), so it
+(one ArrowEvalPython kernel UDF over a broadcast tile catalog — no
+shuffle, no state), so it
 composes with any streaming source/sink unchanged: readStream -> derive
 points -> elevation_join(strategy='broadcast') -> writeStream. Watermarks /
 windowed aggregation can be layered on the enriched stream by the caller
@@ -33,8 +34,8 @@ def stream_elevation_join(
 
 def stream_terrain_join(engine: ElevationEngine, stream: DataFrame, **kw) -> DataFrame:
     """Apply the Horn terrain join (operators/terrain.py) to a streaming
-    DataFrame: the broadcast stencil stage is stateless map-only (tiles
-    ride a broadcast, nothing shuffles, no state), so it is streaming-safe
+    DataFrame: the broadcast stencil kernel UDF is stateless map-only
+    (tiles ride a broadcast, nothing shuffles, no state), so it is streaming-safe
     by construction — the terrain twin of stream_elevation_join. The
     cogroup strategy is deliberately not offered for streams (stream-static
     shuffle joins repartition every micro-batch)."""

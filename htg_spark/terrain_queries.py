@@ -42,8 +42,9 @@ OBSERVER_HEIGHT = 10.0  # meters above the start sample for line-of-sight
 
 def q_terrain_horn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Horn terrain products at every derived point: the raster gather is
-    a zero-shuffle mapInArrow stage emitting exact int64 stencil sums; all
-    float products are JVM codegen expressions (terrain.terrain_cols)."""
+    the broadcast plan's zero-shuffle ArrowEvalPython kernel UDF over
+    (lat, lon), emitting exact int64 stencil sums; all float products are
+    JVM codegen expressions (terrain.terrain_cols)."""
     eng = get_engine(spark)
     pts = derive_points(_events(spark, sf_dir))
     out = terrain.terrain_join(eng, pts)
@@ -67,9 +68,10 @@ def q_terrain_horn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_terrain_cogroup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The same Horn products through the salted-cogroup SCALE path (the
-    plan that survives a catalog too big to broadcast) — shares the
-    terrain_horn oracle, proving the shuffle variant returns identical
-    rows."""
+    plan that survives a catalog too big to broadcast): the engine's
+    inline cogroup, blobs replicated per salt and the grouped
+    applyInArrow running the terrain kernel — shares the terrain_horn
+    oracle, proving the shuffle variant returns identical rows."""
     eng = get_engine(spark)
     pts = derive_points(_events(spark, sf_dir))
     out = terrain.terrain_join(

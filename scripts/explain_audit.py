@@ -488,19 +488,21 @@ def main():
     sections.append(
         (
             "Horn terrain products (map-only)",
-            "Expected: events scan -> JVM point derivation -> ONE MapInArrow "
-            "stage (3x3 stencil gather over broadcast tiles, exact int64 "
-            "sums out) -> JVM codegen projection for slope/hillshade/aspect. "
-            "HARD REQUIREMENT: zero Exchanges — the raster never shuffles "
-            "and neither do the points.",
+            "Expected: events scan -> JVM point derivation -> ONE "
+            "ArrowEvalPython node (the engine's kernel UDF running the terrain "
+            "kernel over lat/lon only: 3x3 stencil gather over broadcast "
+            "tiles, exact int64 sums out) -> JVM codegen projection for "
+            "slope/hillshade/aspect. HARD REQUIREMENT: zero Exchanges — the "
+            "raster never shuffles and neither do the points — and no "
+            "MapInArrow: the payload stays in the JVM.",
             terr_plan,
         )
     )
     n_terr_ex = n_shuffle_ex(terr_plan)
-    if n_terr_ex != 0:
+    if n_terr_ex != 0 or "ArrowEvalPython" not in terr_plan or "MapInArrow" in terr_plan:
         print(
             f"FATAL: terrain plan has {n_terr_ex} shuffle Exchanges "
-            "(expected 0 — map-only)",
+            "(expected 0 — map-only), lacks ArrowEvalPython, or runs MapInArrow",
             file=sys.stderr,
         )
         sys.exit(1)

@@ -648,8 +648,8 @@ def test_kernel_buffer_reads_each_tile_once():
         cache = engine_mod._GridCache(2)  # fewer slots than tiles per task
         return list(
             engine_mod._kernel_batches(
-                iter(batches), lambda k: cache.get(k, get_blob), "bilinear",
-                buffer_rows=buffer_rows,
+                iter(batches), lambda k: cache.get(k, get_blob),
+                engine_mod._elevation_kernel("bilinear"), buffer_rows=buffer_rows,
             )
         ), list(reads)
 
@@ -851,3 +851,29 @@ def test_bad_n_salts_raises_under_every_plan(spark, grids, tile_dir):
     want = _rows(mem.elevation_join(df, strategy="broadcast"), cols)
     for (eng, kw), n in itertools.product([plans[1], plans[2]], (1, MAX_SALTS)):
         pd.testing.assert_frame_equal(_rows(eng.elevation_join(df, n_salts=n, **kw), cols), want)
+
+
+def test_point_api_on_tile_dir_reads_tiles_by_path(spark, grids, tile_dir, points_pdf):
+    """The point API on a path-bearing catalog (tile_dir / from_env) reads
+    each tile by path, like the by-path join: single and batch lookups
+    equal the in-memory engine's, and no blob is collected to the driver
+    or broadcast (the catalog may be a whole SRTM corpus)."""
+    mem = ElevationEngine(spark, grids=grids)
+    eng = ElevationEngine(spark, tile_dir=tile_dir)
+    coords = list(zip(points_pdf["lat"][:300], points_pdf["lon"][:300]))
+    in_cov = [c for c in coords if hgt.is_valid_srtm_coord(*c)]
+
+    def lookups(e):
+        return (
+            [e.get_elevation(*c) for c in in_cov],
+            [e.get_elevation_floor(*c) for c in in_cov],
+            [e.get_elevation_interpolated(*c) for c in in_cov],
+            e.get_elevations_batch(coords, default=-1),
+            e.get_elevations_batch(coords, default=-1, rounding="floor"),
+            e.get_elevations_batch_interpolated(coords, default=-1.0),
+        )
+
+    got = lookups(eng)
+    assert got == lookups(mem)
+    assert any(v is not None for v in got[0])
+    assert eng._bcast is None

@@ -156,6 +156,8 @@ def test_terrain_join_plan_is_map_only(spark):
         final.explain("formatted")
     plan = buf.getvalue()
     assert len(re.findall(r"\(\d+\) Exchange\b", plan)) == 0, plan
+    # the kernel UDF over (lat, lon) only: the payload stays in the JVM
+    assert "ArrowEvalPython" in plan and "MapInArrow" not in plan, plan
 
 
 def test_line_of_sight_semantics(spark):
@@ -518,49 +520,83 @@ def test_render_hillshade_flushes_large_batches(monkeypatch, spark):
 
 
 def test_terrain_cogroup_equals_broadcast(spark):
-    """The salted-cogroup scale path returns IDENTICAL rows to the
-    broadcast plan — inline blobs AND the no-blob-shuffle path variant."""
-    from htg_spark.driver_queries import get_engine, get_path_engine
+    """Every terrain plan returns the broadcast plan's rows: the inline
+    salted cogroup, and the by-path plan both salted (cache_size 2, fewer
+    slots than catalog tiles) and map-side (cache_size 64). The input adds
+    a NULL-lat row, which passes through with a NULL tile key and
+    terrain_ok false, and a second row for one id with a different payload,
+    which broadcast and the path plans keep as a row of its own. The
+    inline cogroup re-joins the payload by id, so it needs unique ids and
+    runs without that duplicate."""
+    from htg_spark.driver_queries import CATALOG_KEYS, get_engine, get_path_engine
+    from htg_spark.engine import ElevationEngine
 
     pts = derive_points(spark.read.parquet("/root/testdata/sf0.001/events.parquet"))
-    cols = ["event_id", "tile_lat", "tile_lon", "in_coverage", "tile_found",
-            "terrain_ok", "gxs", "gys"]
-    ref = (
-        terrain.terrain_join(get_engine(spark), pts)
-        .select(*cols).orderBy("event_id").collect()
+    pts = pts.withColumn("note", F.lit("a"))
+    one = pts.where(F.col("event_id") == pts.agg(F.min("event_id")).first()[0])
+    extra = one.withColumn("note", F.lit("dup")).unionByName(
+        one.select((F.col("event_id") - 1).alias("event_id"), "note",
+                   F.lit(None).cast("double").alias("lat"), "lon")
     )
-    assert len(ref) > 0
-    for eng, bs in ((get_engine(spark), "inline"), (get_path_engine(spark), "path")):
-        got = (
-            terrain.terrain_join(
-                eng, pts, strategy="cogroup", id_col="event_id",
-                n_salts=4, blob_source=bs,
-            )
-            .select(*cols).orderBy("event_id").collect()
-        )
-        assert got == ref, bs
+    pts = pts.unionByName(extra)
+    unique = pts.where(F.col("note") != "dup")
+    cols = ["event_id", "note", "lat", "lon", "tile_lat", "tile_lon", "in_coverage",
+            "tile_found", "terrain_ok", "gxs", "gys"]
+
+    def rows(eng, frame, **kw):
+        out = terrain.terrain_join(eng, frame, id_col="event_id", n_salts=4, **kw)
+        return out.select(*cols).orderBy("event_id", "note").collect()
+
+    ref = rows(get_engine(spark), pts)
+    assert len(ref) == pts.count() > 2
+    null_row = [r for r in ref if r.lat is None]
+    assert len(null_row) == 1 and null_row[0].lon is not None
+    r = null_row[0]
+    assert r.tile_lat is None and r.tile_lon is None and r.gxs is None and r.gys is None
+    assert not r.in_coverage and not r.tile_found and not r.terrain_ok
+    dups = [r for r in ref if r.event_id == one.first().event_id]
+    assert [d.note for d in dups] == ["a", "dup"] and dups[0][2:] == dups[1][2:]
+
+    assert rows(get_engine(spark), unique, strategy="cogroup", blob_source="inline") == [
+        r for r in ref if r.note != "dup"
+    ]
+    assert len(CATALOG_KEYS) > 2
+    path_eng = get_path_engine(spark)  # cache_size 64
+    salted_eng = ElevationEngine(spark, catalog=path_eng.catalog, cache_size=2)
+    for eng in (salted_eng, path_eng):
+        got = rows(eng, pts, strategy="cogroup", blob_source="path")
+        assert len(got) == len(ref), eng.cache_size
+        assert got == ref, eng.cache_size
 
 
 def test_terrain_cogroup_path_never_shuffles_blobs(spark):
     """blob_source='path' terrain cogroup: no Exchange in the plan may
-    carry the binary data column (same gate as the elevation path plan)."""
+    carry the binary data column (same gate as the elevation path plan),
+    whether the rows are salted and shuffled (cache_size 2, fewer slots
+    than catalog tiles: one Exchange) or run map-side (cache_size 64: no
+    Exchange)."""
     import io
     import re
     from contextlib import redirect_stdout
 
     from htg_spark.driver_queries import get_path_engine
+    from htg_spark.engine import ElevationEngine
 
     pts = derive_points(spark.read.parquet("/root/testdata/sf0.001/events.parquet"))
-    out = terrain.terrain_join(
-        get_path_engine(spark), pts, strategy="cogroup", id_col="event_id",
-        n_salts=4, blob_source="path",
-    )
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        out.explain("formatted")
-    plan = buf.getvalue()
-    for m in re.findall(r"\(\d+\) Exchange\nInput \[\d+\]: \[([^\]]*)\]", plan):
-        assert "data#" not in m, m
+    path_eng = get_path_engine(spark)  # cache_size 64
+    salted_eng = ElevationEngine(spark, catalog=path_eng.catalog, cache_size=2)
+    for eng, n_exchanges in ((path_eng, 0), (salted_eng, 1)):
+        out = terrain.terrain_join(
+            eng, pts, strategy="cogroup", id_col="event_id", n_salts=4, blob_source="path",
+        )
+        buf = io.StringIO()
+        with redirect_stdout(buf):
+            out.explain("formatted")
+        plan = buf.getvalue()
+        exchanges = re.findall(r"\(\d+\) Exchange\nInput \[\d+\]: \[([^\]]*)\]", plan)
+        for m in exchanges:
+            assert "data#" not in m, m
+        assert len(exchanges) == n_exchanges, plan
 
 
 def test_path_profile_cum_gain(spark):
