@@ -32,9 +32,9 @@ def bench_engine(spark: SparkSession) -> ElevationEngine:
 
 def bench_path_engine(spark: SparkSession) -> ElevationEngine:
     """The same 36-tile bench catalog scanned from real .hgt files on disk —
-    backs blob_source='path' (tile blobs never enter a shuffle; each task
-    reads its tile from shared storage at apply time). Every tile shares
-    one gradient pattern, so encode once and write 36 names."""
+    a path-bearing catalog: each task reads its tiles from shared storage
+    by the paths of the scan. Every tile shares one gradient pattern, so
+    encode once and write 36 names."""
     import atexit
     import os
     import shutil

@@ -40,9 +40,9 @@ CATALOG_SCHEMA = T.StructType(
 )
 
 # directory-scanned catalogs additionally carry the source URI (binaryFile
-# `path`) — enables the blob_source='path' join strategy that never ships
-# raster bytes through a shuffle; in-memory catalogs have no path column
-# (the engine rejects blob_source='path' for them up front)
+# `path`), which the engine's path index reads tiles by; an in-memory
+# catalog has no path column, so the engine spills its blobs to files once
+# (ElevationEngine._path_index)
 PATH_FIELD = T.StructField("path", T.StringType(), True)
 
 

@@ -45,14 +45,18 @@ def gradient_void_grid(samples: int = SAMPLES) -> np.ndarray:
 # engine caches keyed by applicationId — NOT id(spark), which Python
 # recycles after GC (a new session allocated at a dead session's address
 # would receive an engine bound to the stopped SparkContext)
-_ENGINES: dict[str, ElevationEngine] = {}
+_ENGINES: dict[tuple[str, int], ElevationEngine] = {}
 
 
-def get_engine(spark: SparkSession) -> ElevationEngine:
-    key = spark.sparkContext.applicationId
+def get_engine(spark: SparkSession, cache_size: int = 64) -> ElevationEngine:
+    """The in-memory gradient catalog. ``cache_size=2``, below its tile
+    count, gives the engine whose cogroup joins take the salted layout."""
+    key = (spark.sparkContext.applicationId, cache_size)
     if key not in _ENGINES:
         g = gradient_void_grid()
-        _ENGINES[key] = ElevationEngine(spark, grids={k: g for k in CATALOG_KEYS})
+        _ENGINES[key] = ElevationEngine(
+            spark, grids={k: g for k in CATALOG_KEYS}, cache_size=cache_size
+        )
     return _ENGINES[key]
 
 
@@ -61,7 +65,7 @@ _PATH_ENGINES: dict[str, ElevationEngine] = {}
 
 def get_path_engine(spark: SparkSession) -> ElevationEngine:
     """Same gradient catalog, but scanned from real .hgt files on disk —
-    backs the blob_source='path' (no-blob-shuffle) strategy queries."""
+    the path-bearing catalog of a ``tile_dir`` engine."""
     key = spark.sparkContext.applicationId
     if key not in _PATH_ENGINES:
         import atexit
@@ -406,9 +410,11 @@ def q_elevation_default_fill(spark, sf_dir):
 
 
 def q_elevation_cogroup(spark, sf_dir):
-    """Same join through the salted-cogroup scale path (J5) — proves the
-    shuffle variant returns identical rows."""
-    eng = get_engine(spark)
+    """Same join through the salted scale layout (J5): the in-memory engine
+    with a grid cache smaller than its catalog, so the rows are salted by
+    tile and shuffled once while each task reads the spilled tiles by
+    path — proves the shuffle variant returns identical rows."""
+    eng = get_engine(spark, cache_size=2)
     pts = derive_points(_events(spark, sf_dir))
     out = eng.elevation_join(
         pts, mode="nearest", strategy="cogroup", id_col="event_id", n_salts=4
@@ -417,16 +423,16 @@ def q_elevation_cogroup(spark, sf_dir):
 
 
 def q_elevation_cogroup_path(spark, sf_dir):
-    """The no-blob-shuffle scale plan: each task reads its tiles from
-    (shared) storage by path. At 100 TB of rasters the blobs must never
-    ride a shuffle — this query proves that plan returns the identical
-    rows. Its 3-tile catalog fits the grid cache, so the join runs
-    map-side; the plan audit also gates the over-cache (shuffled) shape."""
+    """The join over a path-bearing catalog: each task reads its tiles
+    from (shared) storage by path. At 100 TB of rasters the blobs must
+    never ride a shuffle — this query proves that plan returns the
+    identical rows. Its 3-tile catalog fits the grid cache, so the join
+    runs map-side; the plan audit also gates the over-cache (salted)
+    shape."""
     eng = get_path_engine(spark)
     pts = derive_points(_events(spark, sf_dir))
     out = eng.elevation_join(
-        pts, mode="nearest", strategy="cogroup", id_col="event_id",
-        n_salts=4, blob_source="path",
+        pts, mode="nearest", strategy="cogroup", id_col="event_id", n_salts=4
     )
     return out.select("event_id", F.col("elevation").cast("int").alias("elevation"))
 
@@ -493,11 +499,12 @@ def q_knn_fallback(spark, sf_dir):
 
 
 def q_elevation_cogroup_knn(spark, sf_dir):
-    """J6 through the scale path: the same kNN-fallback rows as
-    q_knn_fallback, produced by the two-pass cogroup strategy (first salted
-    cogroup join, then nearest-center assignment + assigned-tile cogroup
-    over the missing remainder). Shares the broadcast-path `knn` oracle."""
-    eng = get_engine(spark)
+    """J6 through the salted scale layout: the same kNN-fallback rows as
+    q_knn_fallback, produced on the in-memory engine with a grid cache
+    smaller than its catalog (rows salted by tile and shuffled once; the
+    kernel falls back to the nearest catalog tile in the same pass).
+    Shares the broadcast-path `knn` oracle."""
+    eng = get_engine(spark, cache_size=2)
     pts = derive_points(_events(spark, sf_dir))
     out = eng.elevation_join(
         pts, mode="nearest", strategy="cogroup", id_col="event_id",

@@ -2,62 +2,53 @@
 
 Re-expresses the reference's one join — ``batch_with_tile_grouping``
 (``htg/src/service.rs:409-480``: group points by tile key, load each tile
-once, apply the kernel, reassemble in input order) — as three Spark plans.
-The plans take the kernel as a parameter (``TileKernel``: NumPy code over
-a batch of points plus its output struct) and serve both kernels of this
-repo: elevation (``kernel_batch``, via ``elevation_join``) and the Horn
-terrain stencil (``operators.terrain.terrain_join``). Both joins share
-one strategy / blob_source dispatch (``_tile_join``).
+once, apply the kernel, reassemble in input order) — as one Python stage
+over two row layouts. The stage takes the kernel as a parameter
+(``TileKernel``: NumPy code over a batch of points plus its output struct)
+and serves both kernels of this repo: elevation (``kernel_batch``, via
+``elevation_join``) and the Horn terrain stencil
+(``operators.terrain.terrain_join``). Both joins share one strategy
+dispatch (``_tile_join``).
 
-All three plans append the kernel's columns with one Arrow helper
-(``_kernel_arrays``): the kernel groups a batch by tile
-(``hgt.tile_groups``) and reads decoded grids through a blob getter. The
-two map-side plans wrap it in ONE Python stage, a scalar-iterator
-``arrow_udf`` over ``(lat, lon)`` (``_kernel_udf``) that returns the
-kernel's columns as a struct — for elevation ``(tile_lat, tile_lon,
-in_coverage, tile_found, knn_used, elevation)``. Spark plans it as
-``ArrowEvalPython``, which keeps every other column of the row in the
-JVM: only the two float64 arguments (16 B/row) cross into Python, never
-the image payload. Decoded grids live in an executor-local LRU (the
-distributed analog of the reference's moka cache, ``service.rs:168``);
-the map-side plans differ only in the blob getter behind it. The UDF
-runs the kernel over up to ``_KERNEL_BUFFER_ROWS`` rows at a time, not per
-Arrow batch, so a task reads each of its tiles about once even when its
-rows arrive interleaved and it holds more tiles than the cache.
+The stage is a scalar-iterator ``arrow_udf`` over ``(lat, lon)``
+(``_kernel_udf``) that returns the kernel's columns as a struct — for
+elevation ``(tile_lat, tile_lon, in_coverage, tile_found, knn_used,
+elevation)``. Spark plans it as ``ArrowEvalPython``, which keeps every
+other column of the row in the JVM: only the two float64 arguments
+(16 B/row) cross into Python, never the image payload. The kernel groups
+its rows by tile (``hgt.tile_groups``) and reads decoded grids from an
+executor-local LRU (the distributed analog of the reference's moka cache,
+``service.rs:168``). The UDF runs the kernel over up to
+``_KERNEL_BUFFER_ROWS`` rows at a time, not per Arrow batch, so a task
+reads each of its tiles about once even when its rows arrive interleaved
+and it holds more tiles than the cache.
 
-- **broadcast** (map-only): the raw tile blobs ride a Spark broadcast and
-  the blob getter is a dict lookup. Zero shuffle. Right whenever the
-  catalog fits in executor memory.
+One blob source: every tile is read by path, as the reference reads
+every tile (``service.rs:546-576``). The blob getter
+(``_path_blob_getter``) looks a tile key up in a per-engine broadcast
+{tile key: path} index (``_path_index``) and reads the file at the one
+reading seam, ``_read_blob_from_path``. A path-bearing catalog
+(``tile_dir``, ``catalog_from_dir``) indexes its own paths. A path-less
+one (``grids=``, ``catalog_from_grids``, a user ``catalog=`` frame) is
+spilled once per engine: its blobs stream to the driver into ``.hgt``
+files named by a hash of their bytes, in one per-process directory, and
+each file is shipped with ``SparkContext.addFile``; the index holds the
+bare file names, which the seam resolves with ``SparkFiles.get``.
 
-- **cogroup, blob_source='path'** (scale path for a path-bearing catalog,
-  e.g. ``tile_dir``): the blob getter reads a tile from shared storage by
-  path (a per-engine broadcast path index). kNN runs inside the kernel
-  against the cached tile centres. No catalog-side shuffle, no cogroup and
-  no id re-join, so duplicate ids stay rows of their own, as under
-  broadcast. Whether the input rows move depends on the catalog and on
-  Python worker reuse:
+Two row layouts over that one getter:
 
-  - **fits the grid cache** (no more tiles than ``cache_size``, and
-    ``spark.python.worker.reuse`` on, Spark's default): reused Python
-    workers keep every decoded tile across tasks and passes, so grouping
-    rows by tile buys nothing. The kernel UDF runs map-side on the input
-    partitions, exactly like broadcast: no histogram job, no salting, no
-    shuffle; ``n_salts`` is not read.
-  - **otherwise** (more tiles than the cache, or workers not reused, so
-    each task starts with an empty cache): the full input rows are salted
-    with the 2% histogram (hot cells get up to ``n_salts`` salts) and
-    repartitioned ONCE on the salted tile key, so each task sees few
-    tiles.
-
-- **cogroup, blob_source='inline'** (in-memory catalogs past the broadcast
-  gate): blobs can only reach a task through a shuffle, so points are
-  projected narrow ``(row id, lat, lon, salted tile key)`` and cogrouped
-  with the catalog replicated ``k_salt(cell)`` times; the grouped
-  ``applyInArrow`` runs ``_kernel_arrays`` per (tile, salt) group.
-  The payload is joined back by row id at the end, so this plan needs
-  unique ids. kNN (elevation only) is a second pass
-  (``_knn_second_pass``): the fallback tile is data-dependent, so the
-  first shuffle cannot route to it.
+- **map-side** (``strategy='broadcast'``; and ``'cogroup'`` / ``'auto'``
+  when the catalog holds no more tiles than ``cache_size`` and
+  ``spark.python.worker.reuse`` is on, Spark's default): the kernel UDF
+  runs on the input partitions. Reused Python workers keep every decoded
+  tile across tasks and passes, so grouping rows by tile buys nothing: no
+  histogram job, no salting, no shuffle; ``n_salts`` is not read.
+- **salted** (``'cogroup'`` / ``'auto'`` otherwise: more tiles than the
+  cache, or workers not reused, so each task starts with an empty cache):
+  the full input rows are salted with the 2% histogram (hot cells get up
+  to ``n_salts`` salts, a row's salt hashed from ``id_col``) and
+  repartitioned ONCE on the salted tile key, so each task sees few tiles.
+  Tiles never ride the shuffle.
 
 Semantics (exact parity with the reference; FIXTURES.md §6):
 - out-of-coverage (|lat|>60, |lon|>180, inclusive bounds valid):
@@ -66,25 +57,31 @@ Semantics (exact parity with the reference; FIXTURES.md §6):
 - void sample / any-void bilinear corner: NULL/default
   (service.rs:344-347, tile.rs:271-273)
 - nearest = Rust f64::round (half away from zero); floor = srtm.py variant
-- every input row comes out once with its payload untouched; only the
-  inline cogroup keys rows by ``id_col`` (and so needs unique ids)
+- every input row comes out once with its payload untouched; no layout
+  joins by ``id_col``, so duplicate ids stay rows of their own
 
 kNN nearest-tile fallback (new, north rule): in-coverage points whose tile
 is absent are assigned the catalog tile with the nearest center (squared
 euclidean in degrees, ties by (tile_lat, tile_lon)), coordinates clamped
 into that tile's [0,1] frac range — half-open boundary semantics preserved
-via the explicit frac-based kernels. In-kernel on the broadcast and path
-plans, a second pass on the inline cogroup; row-identical by test.
+via the explicit frac-based kernels. It runs in the kernel on both
+layouts, against the index's tile keys.
 
-NULL (or NaN) coordinates are out of coverage under every plan and for
+NULL (or NaN) coordinates are out of coverage under both layouts and for
 every kernel: lat/lon pass through unchanged, the tile key is NULL and the
 kernel's values are NULL (elevation NULL/default; terrain_ok false).
 """
 
 from __future__ import annotations
 
+import atexit
 import functools
+import hashlib
 import numbers
+import os
+import shutil
+import tempfile
+import threading
 from collections import OrderedDict
 from collections.abc import Callable, Iterator
 from typing import NamedTuple
@@ -134,24 +131,32 @@ def _python_workers_reused(spark) -> bool:
 
 
 def _read_blob_from_path(path: str) -> bytes:
-    """Executor-side tile fetch from shared storage (blob_source='path'):
-    the real-cluster pattern where rasters live in an object store and
-    only their PATHS ride the shuffle. Handles the .hgt.zip wrapping the
-    directory scan accepts (service.rs:546-576).
+    """Executor-side tile fetch, the one reading seam of every plan and of
+    the point API: the real-cluster pattern where rasters live in an
+    object store and only their PATHS ride a plan. Handles the .hgt.zip
+    wrapping the directory scan accepts (service.rs:546-576).
 
-    The binaryFile `path` column is a URI: percent-decoded here, and
-    non-local schemes (hdfs://, s3a://, ...) raise a clear error rather
-    than failing inside open() — on a real cluster plug an fsspec/Hadoop
-    filesystem in at this single seam. file://host paths (non-local host)
-    are rejected for the same reason."""
+    A bare file name (no directory) is a spilled tile of a path-less
+    catalog (``_spill_blob``), shipped with ``SparkContext.addFile`` and
+    resolved with ``SparkFiles.get``. Any other path is a binaryFile
+    ``path`` URI: percent-decoded here, and non-local schemes (hdfs://,
+    s3a://, ...) raise a clear error rather than failing inside open() —
+    on a real cluster plug an fsspec/Hadoop filesystem in at this single
+    seam. file://host paths (non-local host) are rejected for the same
+    reason."""
     from urllib.parse import unquote, urlparse
 
+    if os.path.basename(path) == path:
+        from pyspark import SparkFiles
+
+        with open(SparkFiles.get(path), "rb") as f:
+            return f.read()
     u = urlparse(path)
     if u.scheme in ("", "file"):
         if u.scheme == "file" and u.netloc not in ("", "localhost"):
             raise NotImplementedError(
-                f"non-local file URI {path!r}: blob_source='path' reads via "
-                "the local filesystem in this build (mount the store or swap "
+                f"non-local file URI {path!r}: tiles are read via the local "
+                "filesystem in this build (mount the store or swap "
                 "_read_blob_from_path for an fsspec-backed reader)"
             )
         p = unquote(u.path) if u.scheme == "file" else path
@@ -167,6 +172,33 @@ def _read_blob_from_path(path: str) -> bytes:
     if p.endswith(".hgt.zip"):
         raw = hgt.extract_hgt_from_zip(raw)
     return raw
+
+
+# The spilled tiles of every path-less catalog in this process: one
+# directory, removed at exit. A file is named by a hash of its bytes, so
+# engines over different grids never collide on a name (addFile refuses a
+# second file of the same name with other contents) and engines over the
+# same grids write and ship each tile once.
+_SPILL_LOCK = threading.Lock()
+_SPILL_DIR: str | None = None
+
+
+def _spill_blob(sc, blob: bytes) -> str:
+    """Write ``blob`` to the spill directory (once per distinct content),
+    ship it with ``sc.addFile`` and return its bare file name."""
+    global _SPILL_DIR
+    with _SPILL_LOCK:
+        if _SPILL_DIR is None:
+            _SPILL_DIR = tempfile.mkdtemp(prefix="htg_spill_")
+            atexit.register(shutil.rmtree, _SPILL_DIR, ignore_errors=True)
+        name = hashlib.blake2b(blob, digest_size=16).hexdigest() + ".hgt"
+        path = os.path.join(_SPILL_DIR, name)
+        if not os.path.exists(path):
+            with open(path + ".tmp", "wb") as f:
+                f.write(blob)
+            os.replace(path + ".tmp", path)
+    sc.addFile(path)  # a no-op for a path this context already ships
+    return name
 
 
 class _GridCache:
@@ -384,13 +416,11 @@ def _kernel_arrays(
     lat: pa.Array, lon: pa.Array, kernel: TileKernel, get_grid
 ) -> list[pa.Array]:
     """``kernel`` over two Arrow float64 columns, returned as the Arrow
-    arrays of its fields — the one body shared by the map-side UDF and the
-    inline cogroup's grouped apply. A NULL (or NaN) coordinate reads as
-    NaN: out of coverage, with a NULL tile key."""
+    arrays of its fields. A NULL (or NaN) coordinate reads as NaN: out of
+    coverage, with a NULL tile key."""
     lat_np = lat.to_numpy(zero_copy_only=False)
     lon_np = lon.to_numpy(zero_copy_only=False)
-    with np.errstate(invalid="ignore"):  # NaN -> int cast of the tile key
-        cols = kernel.columns(lat_np, lon_np, get_grid)
+    cols = kernel.columns(lat_np, lon_np, get_grid)
     no_key = np.isnan(lat_np) | np.isnan(lon_np)
     for k in ("tile_lat", "tile_lon"):
         cols[k] = np.ma.masked_array(cols[k], no_key)
@@ -443,7 +473,7 @@ def _kernel_batches(
 
 
 def _kernel_udf(get_blob, kernel: TileKernel, token: str, cache_cap: int):
-    """The one Python stage of the map-side plans: a scalar-iterator
+    """The one Python stage of both row layouts: a scalar-iterator
     ``arrow_udf`` over (lat, lon) returning the kernel's fields as a
     struct. Spark plans it as ArrowEvalPython, which keeps every other
     column in the JVM, so only the two float64 arguments cross into Python
@@ -465,18 +495,10 @@ def _kernel_udf(get_blob, kernel: TileKernel, token: str, cache_cap: int):
     return F.arrow_udf(tile_kernel, kernel.struct())
 
 
-def _broadcast_blob_getter(bcast):
-    """Blob getter over the broadcast {tile key: raw blob} dict."""
-
-    def get_blob(key):
-        return bcast.value.get(key)
-
-    return get_blob
-
-
 def _path_blob_getter(paths):
-    """Blob getter over the broadcast {tile key: path} index: reads the
-    tile from shared storage (``_read_blob_from_path``)."""
+    """The blob getter of every plan and of the point API, over the
+    broadcast {tile key: path} index (``ElevationEngine._path_index``):
+    reads the tile at the one seam, ``_read_blob_from_path``."""
 
     def get_blob(key):
         path = paths.value.get(key)
@@ -491,7 +513,7 @@ def _quoted(name: str):
 
 def _append_kernel(frame: DataFrame, kernel_udf, names: list[str]) -> DataFrame:
     """frame minus (lat, lon), then lat, lon (as double) and the kernel's
-    fields ``names`` — the output shape of the map-side plans."""
+    fields ``names`` — the output shape of every plan."""
     keep = [_quoted(c) for c in frame.columns if c not in ("lat", "lon")]
     lat = F.col("lat").cast("double")
     lon = F.col("lon").cast("double")
@@ -500,39 +522,9 @@ def _append_kernel(frame: DataFrame, kernel_udf, names: list[str]) -> DataFrame:
     ).select(*keep, "lat", "lon", *[F.col("_k")[n].alias(n) for n in names])
 
 
-def _result_table(ltbl, arrays: list, names: list[str]) -> pa.Table:
-    """Grouped-apply output: the group's (_rid, lat, lon) columns followed
-    by the kernel's arrays, straight into a pyarrow.Table (no per-group
-    pandas round-trip; groups are small under salting)."""
-    return pa.Table.from_arrays(
-        [ltbl.column("_rid"), ltbl.column("lat"), ltbl.column("lon")] + arrays,
-        names=["_rid", "lat", "lon"] + names,
-    )
-
-
-def _gk_cell(gk: int, n_salts: int) -> tuple[int, int]:
-    """(tile_lat, tile_lon) of a packed ``ElevationEngine._group_key``."""
-    c = gk // n_salts
-    return c // 361 - 90, c % 361 - 180
-
-
-def _group_grid(rtbl):
-    """Decode the (single) tile blob of a cogroup's catalog side, or None."""
-    if rtbl.num_rows == 0:
-        return None
-    return hgt.decode_tile(rtbl.column("data")[0].as_py())
-
-
 class ElevationEngine:
     """DataFrame-level elevation service — the `SrtmService` analog
     (API parity table: SURVEY.md §2.8; htg-python/src/lib.rs:110-316)."""
-
-    # raw blobs broadcast only while the catalog fits comfortably in memory.
-    # BOTH gates apply: tile count alone is not a size (256 SRTM1 tiles are
-    # ~6.6 GB — enough to OOM a stock driver — while 256 SRTM3 tiles are
-    # ~740 MB), so the byte gate measures sum(length(data)) once.
-    BROADCAST_MAX_TILES = 256
-    BROADCAST_MAX_BYTES = 512 << 20  # 512 MB of raw tile blobs
 
     def __init__(
         self,
@@ -560,8 +552,7 @@ class ElevationEngine:
             self.catalog = cat_mod.catalog_from_dir(spark, tile_dir)
         else:
             raise ValueError("one of catalog / grids / tile_dir is required")
-        self._bcast = None
-        # broadcast {tile key: path} of a path-bearing catalog (_path_index)
+        # broadcast {tile key: path or spilled file name} (_path_index)
         self._paths = None
         # (n, 2) int64 catalog tile keys, the kNN centres (tile_centers)
         self._centers: np.ndarray | None = None
@@ -577,24 +568,18 @@ class ElevationEngine:
         # re-checked/re-warmed by the next preload — exactly what the
         # reference does after a capacity eviction.
         self._preloaded_keys: dict[tuple[int, int], None] = {}
-        # lazily measured ONCE (catalog is immutable): (n_tiles, total_bytes);
-        # total_bytes is None while unmeasured (see _measure_catalog)
-        self._catalog_stats: tuple[int, int | None] | None = None
-        # serializes the lazy one-time catalog work (blob collect+broadcast,
-        # stats agg) against preload(blocking=False)'s background thread —
-        # without it two threads can each collect the full raw-blob catalog
-        # to the driver (2x transient memory) and leak one broadcast
-        import threading
-
+        # serializes the lazy one-time catalog work (the path index, and the
+        # spill of a path-less catalog) against preload(blocking=False)'s
+        # background thread — without it two threads can each stream the
+        # whole catalog to the driver and leak one broadcast
         self._prep_lock = threading.Lock()
 
     # -- srtm_rs-parity point API (SURVEY.md §2.8; htg-python/src/lib.rs) ----
     #
-    # Single-point and small-batch lookups run driver-side, on the collected
-    # blobs of an in-memory catalog or by path from a path-bearing one
-    # (launching a cluster job per point would be absurd); they share
-    # the exact same NumPy kernels as the distributed path, so semantics are
-    # identical by construction.
+    # Single-point and small-batch lookups run driver-side, reading tiles
+    # through the same path index as the joins (launching a cluster job per
+    # point would be absurd); they share the exact same NumPy kernels as
+    # the distributed path, so semantics are identical by construction.
 
     def _local_cache(self) -> "_GridCache":
         if not hasattr(self, "_driver_cache"):
@@ -602,13 +587,7 @@ class ElevationEngine:
         return self._driver_cache
 
     def _local_get_grid(self, key):
-        # a path-bearing catalog (tile_dir, from_env) may hold a whole SRTM
-        # corpus: never collect its blobs to the driver
-        if "path" in self.catalog.columns:
-            get_blob = _path_blob_getter(self._path_index())
-        else:
-            get_blob = _broadcast_blob_getter(self._broadcast_blobs())
-        return self._local_cache().get(key, get_blob)
+        return self._local_cache().get(key, _path_blob_getter(self._path_index()))
 
     def get_elevation(self, lat: float, lon: float, rounding: str = "nearest"):
         """Optional[int] — void/missing -> None; out-of-coverage raises
@@ -735,11 +714,9 @@ class ElevationEngine:
             frames.append(warmed)
             while len(frames) > 4:
                 frames.pop(0).unpersist()
-        # blob broadcast collects every tile to the driver — safe only for
-        # broadcast-sized catalogs; past the threshold (exactly when preload
-        # matters most) the warmed catalog persist above is the preload
-        if self._fits_broadcast():
-            self._broadcast_blobs()
+        # the joins' one-time catalog prep: the path index (a path-less
+        # catalog is spilled here)
+        self._path_index()
         return {
             "tiles_matched": len(tile_checks),
             "tiles_loaded": loaded,
@@ -813,87 +790,40 @@ class ElevationEngine:
 
     # -- catalog helpers ---------------------------------------------------
 
-    def _measure_catalog(self) -> tuple[int, int | None]:
-        """(n_tiles, total_blob_bytes) — cached; a Spark action must not sit
-        in the hot path of every repeated join. The tile COUNT is measured
-        first; when it alone already exceeds BROADCAST_MAX_TILES the byte
-        aggregation is skipped (total_bytes stays None) — the broadcast gate
-        is decided either way, and summing length(data) over a huge
-        tile_dir catalog would force a full read of every raster blob
-        exactly when the catalog is too big for that to be cheap. Callers
-        that genuinely need the byte total use catalog_bytes(), which
-        measures on demand."""
-        if self._catalog_stats is None:
-            with self._prep_lock:
-                if self._catalog_stats is None:
-                    n = self.catalog.count()
-                    if n > self.BROADCAST_MAX_TILES:
-                        self._catalog_stats = (n, None)
-                    else:
-                        row = self.catalog.agg(
-                            F.sum(F.length("data")).alias("nbytes")
-                        ).collect()[0]
-                        self._catalog_stats = (n, int(row["nbytes"] or 0))
-        return self._catalog_stats
-
     def n_tiles(self) -> int:
-        return self._measure_catalog()[0]
-
-    def catalog_bytes(self) -> int:
-        n, nbytes = self._measure_catalog()
-        if nbytes is None:
-            with self._prep_lock:
-                n, nbytes = self._catalog_stats
-                if nbytes is None:
-                    row = self.catalog.agg(
-                        F.sum(F.length("data")).alias("nbytes")
-                    ).collect()[0]
-                    nbytes = int(row["nbytes"] or 0)
-                    self._catalog_stats = (n, nbytes)
-        return nbytes
-
-    def _fits_broadcast(self) -> bool:
-        n, nbytes = self._measure_catalog()
-        if n > self.BROADCAST_MAX_TILES:
-            return False
-        return nbytes <= self.BROADCAST_MAX_BYTES
-
-    def _broadcast_blobs(self):
-        if self._bcast is None:
-            with self._prep_lock:
-                if self._bcast is None:
-                    rows = self.catalog.select("tile_lat", "tile_lon", "data").collect()
-                    blobs = {(r.tile_lat, r.tile_lon): bytes(r.data) for r in rows}
-                    self._bcast = self.spark.sparkContext.broadcast(blobs)
-                    self._set_centers(blobs)
-        return self._bcast
+        return len(self._path_index().value)
 
     def _path_index(self):
-        """Broadcast {(tile_lat, tile_lon): path} of a path-bearing catalog,
-        collected once per engine: paths only, so it broadcasts at any
-        catalog size."""
+        """Broadcast {(tile_lat, tile_lon): path} over the catalog, built
+        once per engine; its keys are the kNN centres. A path-bearing
+        catalog gives its own paths: only paths are collected, so it
+        broadcasts at any catalog size. A path-less catalog is spilled:
+        its blobs stream to the driver at most two partitions at a time
+        (``toLocalIterator``, the next partition prefetched: 1.8 s against
+        3.2 s unprefetched for the 36-tile bench catalog on local[4]) into
+        content-named files (``_spill_blob``), and the index holds their
+        bare names."""
         if self._paths is None:
             with self._prep_lock:
                 if self._paths is None:
-                    rows = self.catalog.select("tile_lat", "tile_lon", "path").collect()
-                    paths = {(r.tile_lat, r.tile_lon): str(r.path) for r in rows}
+                    if "path" in self.catalog.columns:
+                        rows = self.catalog.select("tile_lat", "tile_lon", "path").collect()
+                        paths = {(r.tile_lat, r.tile_lon): str(r.path) for r in rows}
+                    else:
+                        sc = self.spark.sparkContext
+                        rows = self.catalog.select("tile_lat", "tile_lon", "data")
+                        paths = {
+                            (r.tile_lat, r.tile_lon): _spill_blob(sc, bytes(r.data))
+                            for r in rows.toLocalIterator(prefetchPartitions=True)
+                        }
+                    self._centers = np.array(list(paths), dtype=np.int64).reshape(-1, 2)
                     self._paths = self.spark.sparkContext.broadcast(paths)
-                    self._set_centers(paths)
         return self._paths
 
-    def _set_centers(self, index: dict) -> None:
-        if self._centers is None:
-            self._centers = np.array(list(index), dtype=np.int64).reshape(-1, 2)
-
     def tile_centers(self) -> np.ndarray:
-        """(n, 2) int64 catalog tile keys — the kNN centres. Cached per
-        engine like _measure_catalog: taken from the broadcast blob keys or
-        the path index when one exists, else collected once."""
-        if self._centers is None:
-            with self._prep_lock:
-                if self._centers is None:
-                    rows = self.catalog.select("tile_lat", "tile_lon").collect()
-                    self._set_centers({(r.tile_lat, r.tile_lon): None for r in rows})
+        """(n, 2) int64 catalog tile keys — the kNN centres, taken from the
+        path index."""
+        self._path_index()
         return self._centers
 
     # -- the join ------------------------------------------------------------
@@ -909,7 +839,6 @@ class ElevationEngine:
         n_salts: int = 8,
         strict: bool = False,
         observe: bool = False,
-        blob_source: str | None = None,
     ) -> DataFrame:
         """Append elevation columns to `points`.
 
@@ -922,41 +851,37 @@ class ElevationEngine:
         strict=True replicates the single-point API contract: raise on any
         out-of-coverage row (service.rs:485-490) instead of defaulting.
 
-        blob_source (cogroup strategy only): 'inline' ships each tile blob
-        through the shuffle at most n_salts times; 'path' never moves a
-        tile blob: each task reads its tiles from shared storage — at 100 TB
-        of rasters the blobs must never enter a shuffle, this is that plan.
-        Requires a path-bearing catalog (catalog_from_dir / tile_dir
-        engines). Default None = auto: a cogroup join over a path-bearing
-        catalog picks 'path' (the only shape that survives when the raster
-        corpus itself is the 100 TB); in-memory catalogs fall back to
-        'inline'. Under 'path' the kernel runs map-side on the input
-        partitions, as under broadcast, when the catalog holds no more
-        tiles than ``cache_size`` and ``spark.python.worker.reuse`` is on:
-        every reused Python worker then keeps every tile in its grid
-        cache. Otherwise the input rows are salted by tile (by ``id_col``)
-        and shuffled once, so each task sees few tiles. Only 'inline'
-        re-joins by ``id_col`` and so needs it unique.
+        strategy picks the row layout (module docstring). Every plan reads
+        tiles by path through the executor grid cache, and all return the
+        same rows:
+
+        - 'broadcast': map-side, the kernel UDF on the input partitions,
+          no shuffle. (The name is kept from the plan that broadcast the
+          tile blobs.)
+        - 'cogroup' and 'auto' (default): map-side too when the catalog
+          holds no more tiles than ``cache_size`` and
+          ``spark.python.worker.reuse`` is on: every reused Python worker
+          then keeps every tile in its grid cache. Otherwise the input rows
+          are salted by tile (salt hashed from ``id_col``, which must then
+          exist) and shuffled once, so each task sees few tiles. Tiles
+          never enter a shuffle: at 100 TB of rasters that is the plan.
 
         n_salts: the most salt buckets a hot cell fans out to, an int in
-        [1, MAX_SALTS]; checked on every plan, read only by the salted ones
-        (the inline cogroup and the shuffled 'path' plan).
+        [1, MAX_SALTS]; checked on every plan, read only by the salted
+        layout.
 
         Eager Spark jobs (launched while the plan is built, before any
         action on the result):
 
         - strict=True: 1 job per call (the out-of-coverage check).
-        - the salt histogram (``_salt_table``), on the inline cogroup and
-          the shuffled 'path' plan: 2 jobs per call.
-        - inline cogroup with knn_fallback: under AQE the lazy checkpoint
-          of pass 1 (``_knn_second_pass``) runs its upstream shuffle
-          stages while the plan is built: 4 more jobs per call.
-        - once per engine, then cached: the catalog tile count and blob
-          bytes (strategy='auto'), the path index ('path') and the blob
-          broadcast (broadcast strategy).
+        - the salted layout: the salt histogram (``_salt_table``), 2 jobs
+          per call.
+        - once per engine, then cached: the path index (``_path_index``):
+          1 job collecting a path-bearing catalog's paths, or 1 job per
+          catalog partition streaming a path-less catalog's blobs to its
+          spill files.
 
-        The broadcast plan and the map-side 'path' plan launch none
-        after the engine's first join.
+        The map-side layout launches none after the engine's first join.
         """
         if mode not in ("nearest", "floor", "bilinear"):
             raise ValueError(f"bad mode {mode!r}")
@@ -975,7 +900,7 @@ class ElevationEngine:
                 raise ValueError("coordinates out of SRTM coverage (strict mode)")
 
         kernel = _elevation_kernel(mode, knn_fallback)
-        out = self._tile_join(pts, kernel, strategy, id_col, n_salts, blob_source)
+        out = self._tile_join(pts, kernel, strategy, id_col, n_salts)
 
         if default is not None:
             out = out.withColumn(
@@ -1007,65 +932,45 @@ class ElevationEngine:
         strategy: str,
         id_col: str,
         n_salts: int,
-        blob_source: str | None,
     ) -> DataFrame:
-        """The strategy / blob_source dispatch shared by every tile-kernel
-        join (``elevation_join``, ``terrain.terrain_join``): picks one of
-        the three plans and runs ``kernel`` on it. ``pts`` carries
-        (lat, lon); ``n_salts`` is already checked."""
-        if strategy == "auto":
-            # broadcast while the raw catalog fits comfortably in memory —
-            # gated on tile count AND total blob bytes (both cached)
-            strategy = "broadcast" if self._fits_broadcast() else "cogroup"
+        """The strategy dispatch shared by every tile-kernel join
+        (``elevation_join``, ``terrain.terrain_join``): runs ``kernel`` on
+        one of the two row layouts, tiles read by path through the executor
+        grid cache. ``pts`` carries (lat, lon); ``n_salts`` is already
+        checked.
 
-        if blob_source is None:
-            blob_source = (
-                "path"
-                if strategy == "cogroup" and "path" in self.catalog.columns
-                else "inline"
-            )
-        if blob_source not in ("inline", "path"):
-            raise ValueError(f"bad blob_source {blob_source!r}")
-        if blob_source == "path":
-            if strategy != "cogroup":
-                raise ValueError("blob_source='path' requires strategy='cogroup'")
-            if "path" not in self.catalog.columns:
-                raise ValueError("blob_source='path' needs a path-bearing catalog")
-
-        if strategy == "broadcast":
-            return self._join_broadcast(pts, kernel)
-        if strategy != "cogroup":
+        'broadcast' runs map-side. 'cogroup' and 'auto' run map-side when
+        the whole catalog fits the grid cache and Python workers are
+        reused: a worker then keeps every tile across tasks and passes, and
+        ``n_salts`` is not read. Otherwise the FULL input rows are salted
+        by cell and repartitioned once on the salted tile key, so each task
+        sees few tiles: with reuse off every task starts with an empty
+        cache."""
+        if strategy not in ("auto", "broadcast", "cogroup"):
             raise ValueError(f"bad strategy {strategy!r}")
-        if id_col not in pts.columns:
-            raise ValueError(f"cogroup strategy needs an id column {id_col!r}")
-        if blob_source == "path":
-            return self._join_by_path(pts, kernel, id_col, n_salts)
-        return self._join_cogroup(pts, kernel, id_col, n_salts)
-
-    # -- map-side plans --------------------------------------------------------
-
-    def _map_kernel(self, rows: DataFrame, kernel: TileKernel, get_blob) -> DataFrame:
-        """Run the kernel UDF on ``rows``' partitions, tiles read through
-        ``get_blob`` into the executor grid cache. Call it after the blob
-        source is prepared: the kNN centres come from its keys."""
+        paths = self._path_index()
+        rows = pts
+        if strategy != "broadcast" and not (
+            len(paths.value) <= self.cache_size and _python_workers_reused(pts.sparkSession)
+        ):
+            if id_col not in pts.columns:
+                raise ValueError(f"the salted layout needs an id column {id_col!r}")
+            keyed, est_rows = self._salted_key(pts, id_col, n_salts)
+            n_parts = self._kernel_partitions(pts.sparkSession, est_rows)
+            rows = keyed.repartition(n_parts, "_gk").drop("_gk")
         if kernel.knn:
             kernel = kernel.with_centers(self.tile_centers())
-        udf = _kernel_udf(get_blob, kernel, self._cache_token, self.cache_size)
+        udf = _kernel_udf(_path_blob_getter(paths), kernel, self._cache_token, self.cache_size)
         return _append_kernel(rows, udf, kernel.names)
 
-    def _join_broadcast(self, pts: DataFrame, kernel: TileKernel) -> DataFrame:
-        """Map-only: the kernel UDF reads tile blobs from the broadcast."""
-        get_blob = _broadcast_blob_getter(self._broadcast_blobs())
-        return self._map_kernel(pts, kernel, get_blob)
-
-    # -- salted strategies -----------------------------------------------------
+    # -- the salted layout -----------------------------------------------------
 
     # histogram pre-pass sample rate: k_salt needs only order-of-magnitude
     # per-cell counts (it is clamped to [1, n_salts] and the target is a
     # RATIO of sampled counts, so the 1/f scale factors cancel) — a 2%
     # sample makes the pre-pass ~free instead of a second full scan of the
     # points table per join call. Cells the sample misses default to
-    # k_salt=1 via the coalesce in every salted plan, which is exactly
+    # k_salt=1 via the coalesce in _salt, which is exactly
     # right: a cell too cold to appear in a 2% sample is not a skew cell.
     HIST_SAMPLE_FRACTION = 0.02
 
@@ -1102,7 +1007,7 @@ class ElevationEngine:
         # ordinary partition imbalance, not skew, and the 2x guard band also
         # absorbs the sampling noise of borderline-cold cells (a cell whose
         # sampled count is within noise of the target must not flap into
-        # k_salt=2 and needlessly replicate its blob)
+        # k_salt=2 and needlessly split its rows)
         k_salt = [
             1 if c <= 2 * target else int(min(math.ceil(c / target), n_salts))
             for _, _, c in est
@@ -1118,7 +1023,7 @@ class ElevationEngine:
 
     @staticmethod
     def _kernel_partitions(spark: SparkSession, est_rows: float) -> int:
-        """Explicit partition count of a salted plan's kernel stage, sized
+        """Explicit partition count of the salted layout's kernel stage, sized
         from the histogram's row estimate: AQE's byte-based coalescing
         merges the kernel stage below core count (measured 23 tasks on 32
         cores at 48M rows) and straggler groups serialize; conversely a
@@ -1152,10 +1057,10 @@ class ElevationEngine:
         ).cast("int")
 
     def _salted_key(self, frame: DataFrame, id_col: str, n_salts: int):
-        """The one salting step of every salted plan: returns (frame +
-        ``_gk``, salt table, estimated input rows). ``_gk`` is the packed
-        (tile_lat, tile_lon, salt) key of each row, its salt drawn from the
-        row's cell in the histogram's salt table (``_salt_table``)."""
+        """The salted layout's one salting step: returns (frame + ``_gk``,
+        estimated input rows). ``_gk`` is the packed (tile_lat, tile_lon,
+        salt) key of each row, its salt drawn from the row's cell in the
+        histogram's salt table (``_salt_table``)."""
         tl = cells.tile_lat(F.col("lat"))
         tn = cells.tile_lon(F.col("lon"))
         salt_df, est_rows = self._salt_table(
@@ -1167,200 +1072,4 @@ class ElevationEngine:
         )
         gk = self._group_key(tl, tn, self._salt(id_col, F.col("_k_salt")), n_salts)
         keyed = keyed.select(*[_quoted(c) for c in frame.columns], gk.alias("_gk"))
-        return keyed, salt_df, est_rows
-
-    def _join_by_path(
-        self, pts: DataFrame, kernel: TileKernel, id_col: str, n_salts: int
-    ) -> DataFrame:
-        """blob_source='path': run the kernel UDF reading tiles by path
-        through the executor grid cache. Tiles never move; no catalog-side
-        shuffle, no cogroup, no kNN second pass and no id re-join — kNN
-        runs in the kernel against the cached centres.
-
-        When the whole catalog fits the grid cache and Python workers are
-        reused, a worker keeps every tile across tasks and passes, so the
-        kernel runs map-side on the input partitions, as under broadcast:
-        no histogram job, no salting, no shuffle, and ``n_salts`` is not
-        read. Otherwise the FULL input rows are salted by cell and
-        repartitioned once on the salted tile key, so each task sees few
-        tiles: with reuse off every task starts with an empty cache."""
-        paths = self._path_index()
-        if len(paths.value) <= self.cache_size and _python_workers_reused(pts.sparkSession):
-            rows = pts
-        else:
-            keyed, _salt_df, est_rows = self._salted_key(pts, id_col, n_salts)
-            rows = (
-                keyed.repartition(self._kernel_partitions(pts.sparkSession, est_rows), "_gk")
-                .drop("_gk")
-            )
-        return self._map_kernel(rows, kernel, _path_blob_getter(paths))
-
-    def _salted_inputs(self, pts: DataFrame, id_col: str, n_salts: int):
-        """Adaptive-salt shuffle inputs for a cogroup: returns (narrow, cat,
-        est_rows) where `narrow` is (_rid, lat, lon, _gk), `cat` is
-        (_gk, data) with the catalog replicated k_salt(cell) times per cell
-        (so only hot cells replicate their tile blob and cold cells cross
-        the shuffle once) and est_rows is the histogram's input-row
-        estimate. Exposed separately so the skew-stress test can assert
-        the group-size distribution the shuffle actually partitions on."""
-        narrow = pts.select(
-            _quoted(id_col).alias("_rid"),
-            F.col("lat").cast("double").alias("lat"),
-            F.col("lon").cast("double").alias("lon"),
-        )
-        narrow, salt_df, est_rows = self._salted_key(narrow, "_rid", n_salts)
-        k_salt = F.coalesce(F.col("k_salt"), F.lit(1))
-        cat = (
-            self.catalog.join(F.broadcast(salt_df), ["tile_lat", "tile_lon"], "left")
-            .select(
-                "tile_lat",
-                "tile_lon",
-                "data",
-                F.explode(F.sequence(F.lit(0), k_salt - 1)).alias("salt"),
-            )
-            .select(
-                self._group_key(
-                    F.col("tile_lat"), F.col("tile_lon"), F.col("salt"), n_salts
-                ).alias("_gk"),
-                "data",
-            )
-        )
-        return narrow, cat, est_rows
-
-    def _join_cogroup(
-        self, pts: DataFrame, kernel: TileKernel, id_col: str, n_salts: int
-    ) -> DataFrame:
-        """blob_source='inline': salted cogroup of narrow point rows with
-        the k_salt-replicated catalog blobs. Cold tiles cross the shuffle
-        once; only hot-cluster tiles fan out — at 10^12 rows this is the
-        difference between replicating the whole catalog n_salts times and
-        replicating just the skewed cells (SURVEY.md §4 'Skew handling').
-        The payload re-joins by id afterwards, so ``id_col`` must be
-        unique."""
-        narrow, cat, est_rows = self._salted_inputs(pts, id_col, n_salts)
-        out_schema = T.StructType(
-            [
-                T.StructField("_rid", pts.schema[id_col].dataType),
-                T.StructField("lat", T.DoubleType()),
-                T.StructField("lon", T.DoubleType()),
-            ]
-            + kernel.struct().fields
-        )
-
-        def apply(key, ltbl, rtbl):
-            grid = _group_grid(rtbl) if ltbl.num_rows else None
-            # no tile, or the NULL-coordinate group
-            cell = None if grid is None else _gk_cell(key[0].as_py(), n_salts)
-
-            def get_grid(k):
-                return grid if (k[0], k[1]) == cell else None
-
-            arrays = _kernel_arrays(ltbl.column("lat"), ltbl.column("lon"), kernel, get_grid)
-            return _result_table(ltbl, arrays, kernel.names)
-
-        # explicit-count repartition on the grouping key for BOTH cogroup
-        # sides (see _kernel_partitions); the groupBys reuse these
-        # exchanges — no extra shuffle
-        n_parts = self._kernel_partitions(pts.sparkSession, est_rows)
-        joined = (
-            narrow.repartition(n_parts, "_gk").groupBy("_gk")
-            .cogroup(cat.repartition(n_parts, "_gk").groupBy("_gk"))
-            .applyInArrow(apply, schema=out_schema)
-        )
-        if kernel.knn:
-            joined = self._knn_second_pass(joined, kernel, out_schema)
-        extra_cols = [c for c in pts.columns if c not in (id_col, "lat", "lon")]
-        if not extra_cols:
-            # no payload to re-attach: skip the rejoin shuffle entirely
-            return joined.withColumnRenamed("_rid", id_col)
-        return pts.drop("lat", "lon").join(
-            joined.withColumnRenamed("_rid", id_col), on=id_col, how="inner"
-        )
-
-    def _knn_second_pass(
-        self, joined: DataFrame, kernel: TileKernel, out_schema
-    ) -> DataFrame:
-        """kNN fallback for the inline cogroup (J6 at scale; only the
-        elevation kernel asks for kNN): the fallback tile is data-dependent,
-        so the first shuffle cannot route to it. Second pass: take the
-        in-coverage missing-tile remainder (narrow rows only), assign each
-        point its nearest catalog tile center (chunked NumPy argmin over
-        broadcast centers — centers are 2 ints per tile, NOT blobs, so this
-        broadcasts fine at any catalog size), then cogroup those rows with
-        the semi-join-pruned catalog keyed by the ASSIGNED tile. Misses are
-        typically a small fraction of rows, so the extra shuffle is
-        proportional to the miss rate."""
-        centers = self.tile_centers()
-        if len(centers) == 0:
-            return joined
-        # Materialize pass 1 ONCE before splitting it into rest/miss: the
-        # two union branches would otherwise each embed the full pass-1
-        # subtree and the expensive cogroup kernel stage would execute
-        # TWICE (Spark SQL has no cross-branch common-subtree reuse). A
-        # lazy localCheckpoint swaps the subtree for one shared RDD, and
-        # the checkpoint writes only the narrow pass-1 output, not the
-        # inputs. Under AQE it still runs pass 1's shuffle stages while
-        # the plan is built (an eager job listed in elevation_join).
-        joined = joined.localCheckpoint(eager=False)
-        is_miss = F.col("in_coverage") & ~F.col("tile_found")
-        rest = joined.where(~is_miss)
-        miss = joined.where(is_miss).select("_rid", "lat", "lon")
-
-        bc = self.spark.sparkContext.broadcast(centers)
-        rid_field = out_schema["_rid"].dataType
-        assign_schema = T.StructType(
-            [
-                T.StructField("_rid", rid_field),
-                T.StructField("lat", T.DoubleType()),
-                T.StructField("lon", T.DoubleType()),
-                T.StructField("tile_lat", T.IntegerType()),
-                T.StructField("tile_lon", T.IntegerType()),
-            ]
-        )
-
-        def assign(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
-            cent = bc.value
-            for batch in batches:
-                lat = batch.column(1).to_numpy(zero_copy_only=False)
-                lon = batch.column(2).to_numpy(zero_copy_only=False)
-                t = assign_nearest_center(lat, lon, cent)
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        batch.column(0),
-                        batch.column(1),
-                        batch.column(2),
-                        pa.array(t[:, 0].astype(np.int32)),
-                        pa.array(t[:, 1].astype(np.int32)),
-                    ],
-                    names=["_rid", "lat", "lon", "tile_lat", "tile_lon"],
-                )
-
-        assigned = miss.mapInArrow(assign, schema=assign_schema)
-        # prune the catalog to assigned tiles before the blob shuffle
-        keys = assigned.select("tile_lat", "tile_lon").distinct()
-        cat = self.catalog.join(
-            F.broadcast(keys), ["tile_lat", "tile_lon"], "left_semi"
-        ).select("tile_lat", "tile_lon", "data")
-
-        def apply_knn(key, ltbl, rtbl):
-            # the kernel's own kNN path with the assigned tile as the only
-            # centre: every row's own tile is absent from the catalog, so
-            # each falls back to it — identical math to the map-side plans
-            grid = _group_grid(rtbl) if ltbl.num_rows else None
-            tile = (key[0].as_py(), key[1].as_py())
-
-            def get_grid(k):
-                return grid if (k[0], k[1]) == tile else None
-
-            arrays = _kernel_arrays(
-                ltbl.column("lat"), ltbl.column("lon"),
-                kernel.with_centers(np.array([tile], dtype=np.int64)), get_grid,
-            )
-            return _result_table(ltbl, arrays, kernel.names)
-
-        second = (
-            assigned.groupBy("tile_lat", "tile_lon")
-            .cogroup(cat.groupBy("tile_lat", "tile_lon"))
-            .applyInArrow(apply_knn, schema=out_schema)
-        )
-        return rest.unionByName(second)
+        return keyed, est_rows

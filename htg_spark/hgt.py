@@ -88,12 +88,15 @@ def extract_hgt_from_zip(raw: bytes) -> bytes:
 def tile_key(lat, lon):
     """(floor(lat), floor(lon)) as int32 — floor, NOT trunc (service.rs:493).
 
-    Vectorized; accepts scalars or arrays.
+    Vectorized; accepts scalars or arrays. A NaN coordinate casts to an
+    arbitrary key without a warning: it is out of coverage, so no caller
+    reads that key.
     """
-    return (
-        np.floor(np.asarray(lat, dtype=np.float64)).astype(np.int32),
-        np.floor(np.asarray(lon, dtype=np.float64)).astype(np.int32),
-    )
+    with np.errstate(invalid="ignore"):
+        return (
+            np.floor(np.asarray(lat, dtype=np.float64)).astype(np.int32),
+            np.floor(np.asarray(lon, dtype=np.float64)).astype(np.int32),
+        )
 
 
 def tile_groups(tile_lat, tile_lon):

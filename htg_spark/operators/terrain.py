@@ -52,12 +52,11 @@ exchange at the bottom of this module (``mosaic_horn_stats``).
 
 Scale shape: the elevation join's own plans (``ElevationEngine._tile_join``),
 with the terrain kernel in place of the elevation kernel.
-The default broadcast plan is map-only: tile blobs ride a broadcast and
-one ``ArrowEvalPython`` kernel UDF sees only (lat, lon), so the payload
-stays in the JVM (ZERO shuffle Exchanges, gated in PLANS.md); per buffer
-the work is one argsort group-by plus nine vectorized gathers. The
-cogroup strategy takes the by-path or inline salted plan, exactly as
-``elevation_join`` does.
+The map-side layout is map-only: one ``ArrowEvalPython`` kernel UDF reads
+tiles by path and sees only (lat, lon), so the payload stays in the JVM
+(ZERO shuffle Exchanges, gated in PLANS.md); per buffer the work is one
+argsort group-by plus nine vectorized gathers. Past the engine's grid
+cache the rows take the salted layout, exactly as in ``elevation_join``.
 """
 
 from __future__ import annotations
@@ -185,34 +184,30 @@ TERRAIN_KERNEL = TileKernel(_terrain_columns, _TERRAIN_FIELDS)
 def terrain_join(
     engine,
     points: DataFrame,
-    strategy: str = "broadcast",
+    strategy: str = "auto",
     id_col: str = "event_id",
     n_salts: int = 8,
-    blob_source: str | None = None,
 ) -> DataFrame:
     """Append (lat, lon, tile_lat, tile_lon, in_coverage, tile_found,
     terrain_ok, gxs, gys) to `points`. gxs/gys are NULL wherever
     terrain_ok is false.
 
     Runs ``TERRAIN_KERNEL`` on the engine's elevation-join plans
-    (``ElevationEngine._tile_join``), with the same strategy and
-    blob_source rules as ``elevation_join``:
+    (``ElevationEngine._tile_join``), with the same strategy rules as
+    ``elevation_join``; every plan reads tiles by path and only (lat, lon)
+    cross into Python:
 
-    - strategy='broadcast' (default): map-only; the kernel UDF reads the
-      broadcast tile blobs, and only (lat, lon) cross into Python.
-    - strategy='cogroup': the scale path. blob_source None picks 'path' on
-      a path-bearing catalog (tiles read by path, never shuffled; the
-      rows run map-side when the catalog fits the grid cache, else they
-      are salted and shuffled once) and 'inline' otherwise (salted
-      cogroup with the catalog blobs, payload re-joined by ``id_col``).
-    - strategy='auto': broadcast while the catalog fits the broadcast
-      gates, else cogroup.
+    - strategy='broadcast': map-side, the kernel UDF on the input
+      partitions, no shuffle.
+    - strategy='auto' (default) or 'cogroup': map-side too when the
+      catalog fits the engine's grid cache and Python workers are reused;
+      otherwise the rows are salted by tile (by ``id_col``) and shuffled
+      once, so each task sees few tiles.
 
     Every input row comes out once with its payload untouched, so
-    duplicate ids stay separate rows, except under the inline cogroup,
-    which re-joins by ``id_col`` and needs it unique. A NULL (or NaN)
-    lat/lon passes through unchanged and is out of coverage: NULL tile
-    key, terrain_ok false, NULL gxs/gys. All plans return identical rows
+    duplicate ids stay separate rows. A NULL (or NaN) lat/lon passes
+    through unchanged and is out of coverage: NULL tile key, terrain_ok
+    false, NULL gxs/gys. All plans return identical rows
     (test_terrain_cogroup_equals_broadcast).
 
     Derived float products are deliberately NOT computed here: apply
@@ -221,7 +216,7 @@ def terrain_join(
     n_salts = check_n_salts(n_salts)
     if "lat" not in points.columns or "lon" not in points.columns:
         raise ValueError("points need (lat, lon) columns")
-    return engine._tile_join(points, TERRAIN_KERNEL, strategy, id_col, n_salts, blob_source)
+    return engine._tile_join(points, TERRAIN_KERNEL, strategy, id_col, n_salts)
 
 
 def aspect_octant_col(gxs: Column, gys: Column) -> Column:

@@ -2,9 +2,9 @@
 SURVEY.md §2.7: the reference has no streaming surface; parity does not
 require it, but a 100TB ingest pipeline does).
 
-The broadcast elevation join is a stateless map-only transformation
-(one ArrowEvalPython kernel UDF over a broadcast tile catalog — no
-shuffle, no state), so it
+The map-side elevation join (``strategy='broadcast'``) is a stateless
+map-only transformation (one ArrowEvalPython kernel UDF reading tiles by
+path through the executor grid cache — no shuffle, no state), so it
 composes with any streaming source/sink unchanged: readStream -> derive
 points -> elevation_join(strategy='broadcast') -> writeStream. Watermarks /
 windowed aggregation can be layered on the enriched stream by the caller
@@ -22,10 +22,11 @@ from .engine import ElevationEngine
 def stream_elevation_join(
     engine: ElevationEngine, stream: DataFrame, mode: str = "nearest", **kw
 ) -> DataFrame:
-    """Apply the broadcast elevation join to a streaming DataFrame.
+    """Apply the map-side elevation join (``strategy='broadcast'``) to a
+    streaming DataFrame.
 
-    Only the broadcast strategy is stateless and therefore streaming-safe;
-    cogroup would need a stream-static join rewrite.
+    Only the map-side layout is stateless and therefore streaming-safe;
+    the salted layout would repartition every micro-batch.
     """
     if not stream.isStreaming:
         raise ValueError("stream_elevation_join expects a streaming DataFrame")
@@ -34,11 +35,11 @@ def stream_elevation_join(
 
 def stream_terrain_join(engine: ElevationEngine, stream: DataFrame, **kw) -> DataFrame:
     """Apply the Horn terrain join (operators/terrain.py) to a streaming
-    DataFrame: the broadcast stencil kernel UDF is stateless map-only
-    (tiles ride a broadcast, nothing shuffles, no state), so it is streaming-safe
-    by construction — the terrain twin of stream_elevation_join. The
-    cogroup strategy is deliberately not offered for streams (stream-static
-    shuffle joins repartition every micro-batch)."""
+    DataFrame: the map-side stencil kernel UDF (``strategy='broadcast'``)
+    is stateless map-only (tiles read by path, nothing shuffles, no
+    state), so it is streaming-safe by construction — the terrain twin of
+    stream_elevation_join. The salted layout is deliberately not offered
+    for streams (it would repartition every micro-batch)."""
     if not stream.isStreaming:
         raise ValueError("stream_terrain_join expects a streaming DataFrame")
     from .operators.terrain import terrain_join

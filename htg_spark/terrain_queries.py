@@ -42,7 +42,7 @@ OBSERVER_HEIGHT = 10.0  # meters above the start sample for line-of-sight
 
 def q_terrain_horn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Horn terrain products at every derived point: the raster gather is
-    the broadcast plan's zero-shuffle ArrowEvalPython kernel UDF over
+    the map-side layout's zero-shuffle ArrowEvalPython kernel UDF over
     (lat, lon), emitting exact int64 stencil sums; all float products are
     JVM codegen expressions (terrain.terrain_cols)."""
     eng = get_engine(spark)
@@ -67,12 +67,12 @@ def q_terrain_horn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_terrain_cogroup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The same Horn products through the salted-cogroup SCALE path (the
-    plan that survives a catalog too big to broadcast): the engine's
-    inline cogroup, blobs replicated per salt and the grouped
-    applyInArrow running the terrain kernel — shares the terrain_horn
+    """The same Horn products through the salted SCALE layout (the plan
+    for a catalog past the grid cache): the in-memory engine with
+    cache_size 2, so the rows are salted by tile and shuffled once and the
+    kernel UDF reads the spilled tiles by path — shares the terrain_horn
     oracle, proving the shuffle variant returns identical rows."""
-    eng = get_engine(spark)
+    eng = get_engine(spark, cache_size=2)
     pts = derive_points(_events(spark, sf_dir))
     out = terrain.terrain_join(
         eng, pts, strategy="cogroup", id_col="event_id", n_salts=4

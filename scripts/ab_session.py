@@ -28,7 +28,7 @@ spark = get_spark(app_name="ab-sf1", master="local[32]", shuffle_partitions=32)
 spark.sparkContext.setLogLevel("ERROR")
 sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 eng = bench_engine(spark)
-eng._broadcast_blobs()
+eng._path_index()
 pts = bench_points(spark, sf_dir, replicate=replicate).persist()
 n = pts.count()
 t0 = time.perf_counter()

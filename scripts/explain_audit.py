@@ -1,10 +1,12 @@
 """Capture .explain('formatted') plans for the engine's key plan shapes into
-PLANS.md — the plan-shape audit: broadcast join must be a single map-only
-Arrow stage with pushed filters on the scan; the inline cogroup must
-shuffle only narrow columns; the by-path plan must never move the tile
-blobs, and moves the input rows (through one Exchange) only when the
-catalog exceeds the engine's grid cache; catalog aggregations must prune
-columns.
+PLANS.md — the plan-shape audit: the map-side layout must be a single
+map-only Arrow stage with pushed filters on the scan; the salted layout
+moves the input rows (through one Exchange) only when the catalog exceeds
+the engine's grid cache, for an in-memory and a tile_dir catalog alike;
+no engine plan may move the tile blobs, cogroup or read a checkpoint;
+catalog aggregations must prune columns.
+
+Run from the repo root: python scripts/explain_audit.py
 """
 
 import io
@@ -40,6 +42,33 @@ def n_shuffle_ex(plan: str) -> int:
     return n - plan.count("Arguments: RoundRobinPartitioning(")
 
 
+def engine_plan_faults(plan: str) -> list[str]:
+    """What no elevation-engine plan may contain: a cogroup, a checkpoint
+    scan, or an Exchange that carries the binary tile `data` column (every
+    plan reads tiles by path; the blobs never ride a shuffle)."""
+    import re as _re
+
+    faults = sorted(set(_re.findall(r"FlatMapCoGroupsIn\w+|Scan ExistingRDD", plan)))
+    ex_blocks = _re.findall(r"\(\d+\) Exchange\nInput \[\d+\]: \[[^\]]*\]", plan)
+    if any(_re.search(r"\bdata#", b) for b in ex_blocks):
+        faults.append("Exchange carrying data#")
+    return faults
+
+
+def salted_plan_faults(plan: str) -> list[str]:
+    """The salted layout moves the input rows once, through the kernel UDF
+    only: exactly one shuffle Exchange, ArrowEvalPython, and no id re-join
+    (SortMergeJoin) or grouped/mapped Arrow node."""
+    import re as _re
+
+    faults = sorted(set(_re.findall(r"SortMergeJoin|FlatMapCoGroupsIn\w+|MapInArrow", plan)))
+    if n_shuffle_ex(plan) != 1:
+        faults.append(f"{n_shuffle_ex(plan)} shuffle Exchanges (expected 1)")
+    if "ArrowEvalPython" not in plan:
+        faults.append("no ArrowEvalPython")
+    return faults
+
+
 def main():
     sf_dir = "/root/testdata/sf0.01"
     spark = get_spark(app_name="explain-audit", master="local[4]", shuffle_partitions=4)
@@ -48,34 +77,56 @@ def main():
     pts = derive_points(spark.read.parquet(f"{sf_dir}/events.parquet"))
 
     sections = []
+    # the elevation-engine sections, gated by engine_plan_faults at the end
+    engine_sections = []
 
     broadcast = eng.elevation_join(pts, mode="nearest", strategy="broadcast", id_col="event_id")
     sections.append(
         (
-            "Broadcast elevation join (map-only)",
+            "strategy='broadcast' elevation join (map-side)",
             "Expected: scan -> project (JVM key math) -> ONE ArrowEvalPython "
             "node (the kernel UDF over lat/lon only). No Exchange anywhere: the "
-            "tile catalog rides a Spark broadcast variable, points never "
-            "shuffle, payload columns stay in the JVM.",
+            "kernel reads tiles by path through the engine's index (this "
+            "in-memory catalog spilled to files), points never shuffle, "
+            "payload columns stay in the JVM.",
             plan_of(broadcast),
         )
     )
+    engine_sections.append(sections[-1])
     if n_shuffle_ex(sections[-1][2]) or "ArrowEvalPython" not in sections[-1][2]:
         print("FATAL: broadcast plan shuffles or lost its kernel UDF", file=sys.stderr)
         sys.exit(1)
 
-    cogroup = eng.elevation_join(pts, mode="nearest", strategy="cogroup", id_col="event_id", n_salts=4)
-    sections.append(
-        (
-            "Salted cogroup join, blob_source='inline' (in-memory catalog)",
-            "Expected: points side exchanges ONLY narrow columns (id, lat, lon, "
-            "salted tile key); catalog side exchanges each blob at most n_salts "
-            "times; FlatMapCoGroupsInArrow applies the kernel (Arrow-native, "
-            "no per-group pandas round-trip); payload re-joins by id "
-            "afterwards.",
-            plan_of(cogroup),
+    # the in-memory catalog with a grid cache below its tile count
+    salted_eng = get_engine(spark, cache_size=2)
+    for knn in (False, True):
+        salted_plan = plan_of(
+            salted_eng.elevation_join(
+                pts, mode="nearest", strategy="cogroup", id_col="event_id",
+                knn_fallback=knn, n_salts=4,
+            )
         )
-    )
+        sections.append(
+            (
+                "Cogroup join, in-memory catalog exceeds the grid cache "
+                f"(salted{', kNN fallback' if knn else ''})",
+                "Expected: the catalog was spilled once to content-named files "
+                "shipped with addFile, so this plan reads tiles by path like a "
+                "tile_dir engine. The input rows are salted by cell (a "
+                "broadcast join with the histogram's salt table) and cross ONE "
+                "hash Exchange on the salted tile key; ArrowEvalPython then "
+                "runs the kernel UDF"
+                + (" with the kNN fallback in the same pass" if knn else "")
+                + ". No cogroup, no checkpoint, no id re-join (SortMergeJoin), "
+                "and the binary `data` column appears nowhere.",
+                salted_plan,
+            )
+        )
+        engine_sections.append(sections[-1])
+        faults = salted_plan_faults(salted_plan)
+        if faults:
+            print(f"FATAL: in-memory salted plan (knn={knn}): {faults}", file=sys.stderr)
+            sys.exit(1)
 
     # predicate pushdown / column pruning on a parquet-backed points scan
     filtered = (
@@ -102,37 +153,6 @@ def main():
         )
     )
 
-    cogroup_knn = eng.elevation_join(
-        pts, mode="nearest", strategy="cogroup", id_col="event_id",
-        knn_fallback=True, n_salts=4,
-    )
-    knn_plan = plan_of(cogroup_knn)
-    sections.append(
-        (
-            "Cogroup join with kNN fallback (two-pass)",
-            "Expected: pass 1 is a SHARED checkpointed RDD (Scan ExistingRDD "
-            "— materialized once before the rest/miss split), so exactly ONE "
-            "FlatMapCoGroupsInArrow appears: pass 2, keyed by the ASSIGNED "
-            "tile over the missing remainder, catalog side semi-join-pruned "
-            "before any blob moves. Still no cartesian product.",
-            knn_plan,
-        )
-    )
-    # hard gate: the pass-1 cogroup must NOT be duplicated into both union
-    # branches — one cogroup node total (pass 2), pass 1 hidden behind the
-    # checkpoint's Scan ExistingRDD. Count "(N) Node" detail headers: the
-    # formatted dump prints every node twice (tree line + details block).
-    import re as _re2
-
-    n_cg = len(_re2.findall(r"\(\d+\) FlatMapCoGroupsIn(?:Pandas|Arrow)", knn_plan))
-    if n_cg != 1 or "Scan ExistingRDD" not in knn_plan:
-        print(
-            f"FATAL: kNN plan has {n_cg} cogroup nodes (expected 1 + a "
-            "checkpointed pass-1 Scan ExistingRDD) — pass 1 executes twice",
-            file=sys.stderr,
-        )
-        sys.exit(1)
-
     from htg_spark.driver_queries import get_path_engine
     from htg_spark.engine import ElevationEngine
 
@@ -142,12 +162,12 @@ def main():
     fit_plan = plan_of(
         path_eng.elevation_join(
             pts, mode="nearest", strategy="cogroup", id_col="event_id",
-            n_salts=4, blob_source="path",
+            n_salts=4,
         )
     )
     sections.append(
         (
-            "Cogroup join, blob_source='path', catalog fits the grid cache (map-side)",
+            "Cogroup join, tile_dir catalog fits the grid cache (map-side)",
             "Expected: the catalog holds no more tiles than the engine's "
             "cache_size, so every reused Python worker keeps every tile "
             "across tasks and a shuffle for tile locality buys nothing. "
@@ -157,6 +177,7 @@ def main():
             fit_plan,
         )
     )
+    engine_sections.append(sections[-1])
     # hard gate: no shuffle at all, the kernel UDF, no data column
     n_fit = n_shuffle_ex(fit_plan)
     if n_fit != 0 or "ArrowEvalPython" not in fit_plan or _re.search(r"\bdata#", fit_plan):
@@ -170,14 +191,13 @@ def main():
     # the same directory with a grid cache smaller than the catalog
     over_eng = ElevationEngine(spark, catalog=path_eng.catalog, cache_size=2)
     cg_path = over_eng.elevation_join(
-        pts, mode="nearest", strategy="cogroup", id_col="event_id",
-        n_salts=4, blob_source="path",
+        pts, mode="nearest", strategy="cogroup", id_col="event_id", n_salts=4
     )
 
     cgp_plan = plan_of(cg_path)
     sections.append(
         (
-            "Cogroup join, blob_source='path', catalog exceeds the grid cache (salted shuffle)",
+            "Cogroup join, tile_dir catalog exceeds the grid cache (salted)",
             "Expected: the input rows are salted by cell (a broadcast join "
             "with the histogram's salt table) and cross ONE hash Exchange on "
             "the salted tile key; ArrowEvalPython then runs the kernel UDF, "
@@ -188,20 +208,10 @@ def main():
             cgp_plan,
         )
     )
-    # hard gate: no formatted-plan Exchange block may list the data column
-    ex_blocks = _re.findall(r"\(\d+\) Exchange\nInput \[\d+\]: \[[^\]]*\]", cgp_plan)
-    if any(_re.search(r"\bdata#", b) for b in ex_blocks):
-        print("FATAL: path-strategy plan shuffles the binary data column", file=sys.stderr)
-        sys.exit(1)
-    # hard gate: the input rows move once, through the kernel UDF only
-    n_cgp = n_shuffle_ex(cgp_plan)
-    bad_nodes = _re.findall(r"SortMergeJoin|FlatMapCoGroupsIn\w+|MapInArrow", cgp_plan)
-    if n_cgp != 1 or bad_nodes or "ArrowEvalPython" not in cgp_plan:
-        print(
-            f"FATAL: path-strategy plan has {n_cgp} shuffle Exchanges (expected "
-            f"exactly 1) or unexpected nodes {sorted(set(bad_nodes))}",
-            file=sys.stderr,
-        )
+    engine_sections.append(sections[-1])
+    faults = salted_plan_faults(cgp_plan)
+    if faults:
+        print(f"FATAL: tile_dir salted plan: {faults}", file=sys.stderr)
         sys.exit(1)
 
     from htg_spark import pipeline_queries as pq
@@ -490,14 +500,15 @@ def main():
             "Horn terrain products (map-only)",
             "Expected: events scan -> JVM point derivation -> ONE "
             "ArrowEvalPython node (the engine's kernel UDF running the terrain "
-            "kernel over lat/lon only: 3x3 stencil gather over broadcast "
-            "tiles, exact int64 sums out) -> JVM codegen projection for "
+            "kernel over lat/lon only: 3x3 stencil gather over tiles read "
+            "by path, exact int64 sums out) -> JVM codegen projection for "
             "slope/hillshade/aspect. HARD REQUIREMENT: zero Exchanges — the "
             "raster never shuffles and neither do the points — and no "
             "MapInArrow: the payload stays in the JVM.",
             terr_plan,
         )
     )
+    engine_sections.append(sections[-1])
     n_terr_ex = n_shuffle_ex(terr_plan)
     if n_terr_ex != 0 or "ArrowEvalPython" not in terr_plan or "MapInArrow" in terr_plan:
         print(
@@ -935,6 +946,14 @@ def main():
                 f"exactly 1) or unexpected nodes {sorted(set(bad_nodes))}",
                 file=sys.stderr,
             )
+            sys.exit(1)
+
+    # hard gate: no engine plan cogroups, reads a checkpoint or shuffles
+    # the tile blobs
+    for title, _expect, plan in engine_sections:
+        faults = engine_plan_faults(plan)
+        if faults:
+            print(f"FATAL: engine section {title!r}: {faults}", file=sys.stderr)
             sys.exit(1)
 
     with open("PLANS.md", "w") as f:

@@ -184,13 +184,14 @@ def test_preload_stats_progression(spark):
 
 
 def test_preload_corrupt_tile_in_cogroup_size_catalog(spark):
-    """VERDICT r4 #8: past the broadcast gate (> BROADCAST_MAX_TILES tiles,
-    the cogroup regime) a corrupt tile must land in tiles_failed via the
-    distributed decode check WITHOUT failing the preload — and stay
-    retried, never remembered as cached."""
+    """VERDICT r4 #8: on a 260-tile catalog of full-size tiles (once past
+    the deleted broadcast gate) a corrupt tile must land in tiles_failed via the
+    distributed decode check WITHOUT failing the preload — nor the spill of
+    the catalog that preload builds — and stay retried, never remembered as
+    cached."""
     import pandas as pd
 
-    n = ElevationEngine.BROADCAST_MAX_TILES + 4  # 260 full-size tiles
+    n = 260  # full-size tiles
 
     def gen(batches):
         import numpy as np
@@ -208,13 +209,11 @@ def test_preload_corrupt_tile_in_cogroup_size_catalog(spark):
                 rows, columns=["tile_lat", "tile_lon", "samples", "filename", "data"]
             )
 
-    # blobs generated executor-side (260 x 2.9 MB never routes through the
-    # driver), exactly the shape a real >broadcast-gate catalog scan has
+    # blobs generated executor-side, the shape a real large catalog scan has
     cat = spark.range(n).mapInPandas(
         gen, schema="tile_lat int, tile_lon int, samples int, filename string, data binary"
     )
     eng = ElevationEngine(spark, catalog=cat, cache_size=512)
-    assert not eng._fits_broadcast()  # genuinely in the cogroup regime
     s1 = eng.preload()
     assert s1["tiles_matched"] == n
     assert s1["tiles_loaded"] == n - 1

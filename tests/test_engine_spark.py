@@ -3,6 +3,7 @@ the pure-NumPy oracle (htg_spark.hgt), which itself carries the reference's
 unit-test expectations (tests/test_hgt_kernels.py)."""
 
 import itertools
+import os
 
 import numpy as np
 import pandas as pd
@@ -120,7 +121,11 @@ def test_reference_expectations_through_spark(spark, engine):
     assert list(out_f["elevation"]) == [500, -1, 0, -1, 191]
 
 
-def test_cogroup_equals_broadcast(spark, engine, points_pdf):
+def test_cogroup_equals_broadcast(spark, engine, grids, points_pdf):
+    """The salted layout over an in-memory catalog (grid cache smaller than
+    the catalog: rows salted and shuffled, tiles read from the spill)
+    returns the broadcast plan's rows."""
+    salted = ElevationEngine(spark, grids=grids, cache_size=2)
     df = spark.createDataFrame(points_pdf)
     for mode in ("nearest", "bilinear"):
         a = (
@@ -129,7 +134,7 @@ def test_cogroup_equals_broadcast(spark, engine, points_pdf):
             .toPandas()
         )
         b = (
-            engine.elevation_join(df, mode=mode, strategy="cogroup", n_salts=4)
+            salted.elevation_join(df, mode=mode, strategy="cogroup", n_salts=4)
             .orderBy("image_id")
             .toPandas()
         )
@@ -168,9 +173,11 @@ def test_knn_fallback(spark, grids):
     assert not bool(k2["knn_used"]) and k2["elevation"] == 500
 
 
-def test_cogroup_knn_equals_broadcast_knn(spark, engine, points_pdf):
-    """J6 via the scale path: the two-pass cogroup kNN fallback must return
+def test_cogroup_knn_equals_broadcast_knn(spark, engine, grids, points_pdf):
+    """J6 via the scale path: the kNN fallback on the salted layout over an
+    in-memory catalog (grid cache smaller than the catalog) must return
     row-identical results to the broadcast-path kNN for every mode."""
+    salted = ElevationEngine(spark, grids=grids, cache_size=2)
     df = spark.createDataFrame(points_pdf)
     for mode in ("nearest", "bilinear"):
         a = (
@@ -179,7 +186,7 @@ def test_cogroup_knn_equals_broadcast_knn(spark, engine, points_pdf):
             .toPandas()
         )
         b = (
-            engine.elevation_join(df, mode=mode, strategy="cogroup", knn_fallback=True, n_salts=4)
+            salted.elevation_join(df, mode=mode, strategy="cogroup", knn_fallback=True, n_salts=4)
             .orderBy("image_id")
             .toPandas()
         )
@@ -225,7 +232,7 @@ def test_assign_nearest_center_chunked_large_catalog():
 
 
 def test_cogroup_blob_source_path(spark, grids, points_pdf, tile_dir):
-    """blob_source='path': each task reads its tiles from shared storage by
+    """A tile_dir catalog: each task reads its tiles from shared storage by
     path. Results must be row-identical to the broadcast path and match
     the hgt.py oracle — including through a .hgt.zip tile, for nearest and
     bilinear, with and without kNN fallback — under the shuffled by-path
@@ -243,8 +250,7 @@ def test_cogroup_blob_source_path(spark, grids, points_pdf, tile_dir):
         )
         b = (
             eng.elevation_join(
-                df, mode=mode, strategy="cogroup", knn_fallback=knn,
-                n_salts=4, blob_source="path",
+                df, mode=mode, strategy="cogroup", knn_fallback=knn, n_salts=4
             )
             .orderBy("image_id")
             .toPandas()
@@ -261,26 +267,31 @@ def test_cogroup_blob_source_path(spark, grids, points_pdf, tile_dir):
         assert np.array_equal(np.isnan(av[plain]), np.isnan(want[plain]))
         assert np.array_equal(av[plain & ~np.isnan(av)], want[plain & ~np.isnan(want)])
 
-    # contract errors: in-memory catalog has no paths; broadcast never fetches
-    mem_eng = ElevationEngine(spark, grids=grids)
-    with pytest.raises(ValueError, match="path-bearing"):
-        mem_eng.elevation_join(df, strategy="cogroup", blob_source="path")
-    with pytest.raises(ValueError, match="cogroup"):
-        eng.elevation_join(df, strategy="broadcast", blob_source="path")
+    # contract errors: an unknown strategy; the salted layout (cache_size 2)
+    # hashes its salt from id_col, which the map-side layout never reads
+    with pytest.raises(ValueError, match="bad strategy"):
+        eng.elevation_join(df, strategy="inline")
+    no_id = df.drop("image_id")
+    with pytest.raises(ValueError, match="id column"):
+        ElevationEngine(spark, tile_dir=tile_dir, cache_size=2).elevation_join(
+            no_id, strategy="cogroup"
+        )
+    assert eng.elevation_join(no_id, strategy="cogroup").count() == len(points_pdf)
 
 
 def test_auto_strategy_counts_catalog_once(spark, grids, points_pdf):
-    """The auto-strategy catalog count must be cached — a Spark action in
-    the hot path of every repeated join is a driver-side stall at scale."""
+    """The catalog is read once per engine, for its path index (here the
+    spill of an in-memory catalog): a Spark action in the hot path of
+    every repeated join is a driver-side stall at scale."""
     eng = ElevationEngine(spark, grids=grids)
     calls = {"n": 0}
-    orig = eng.catalog.agg
+    orig = eng.catalog.select
 
     def counting(*a, **k):
         calls["n"] += 1
         return orig(*a, **k)
 
-    eng.catalog.agg = counting
+    eng.catalog.select = counting
     df = spark.createDataFrame(points_pdf.head(50))
     eng.elevation_join(df, strategy="auto").count()
     eng.elevation_join(df, strategy="auto").count()
@@ -288,56 +299,46 @@ def test_auto_strategy_counts_catalog_once(spark, grids, points_pdf):
     assert calls["n"] == 1
 
 
-def test_catalog_measure_is_thread_safe(spark, grids):
+def test_catalog_measure_is_thread_safe(spark, grids, monkeypatch):
     """preload(blocking=False) runs catalog prep on a background thread;
-    the lazy one-time stats aggregation must run EXACTLY once even under
-    concurrent first calls (the pre-lock race collected the catalog twice)."""
+    the lazy one-time spill of an in-memory catalog must stream the
+    catalog and write its tiles EXACTLY once even under concurrent first
+    calls (without the lock, each thread would collect the catalog and
+    leak a broadcast index)."""
     import threading
 
+    from htg_spark import engine as engine_mod
+
     eng = ElevationEngine(spark, grids=grids)
-    calls = {"n": 0}
-    orig = eng.catalog.agg
+    calls = {"select": 0, "spill": 0}
+    orig_select = eng.catalog.select
+    orig_spill = engine_mod._spill_blob
 
-    def counting(*a, **k):
-        calls["n"] += 1
-        return orig(*a, **k)
+    def counting_select(*a, **k):
+        calls["select"] += 1
+        return orig_select(*a, **k)
 
-    eng.catalog.agg = counting
+    def counting_spill(*a, **k):
+        calls["spill"] += 1
+        return orig_spill(*a, **k)
+
+    eng.catalog.select = counting_select
+    monkeypatch.setattr(engine_mod, "_spill_blob", counting_spill)
     threads = [threading.Thread(target=eng.n_tiles) for _ in range(8)]
     for t in threads:
         t.start()
     for t in threads:
         t.join()
-    assert calls["n"] == 1
+    assert calls == {"select": 1, "spill": len(grids)}
     assert eng.n_tiles() == len(fixtures.default_catalog_grids())
 
 
-def test_broadcast_byte_gate(spark, grids, points_pdf):
-    """Auto strategy gates on catalog BYTES, not just tile count: a
-    few-but-huge-tiles catalog must route to cogroup (collecting it to the
-    driver is the OOM the gate exists to prevent), while the fixture-sized
-    catalog still picks broadcast."""
-    df = spark.createDataFrame(points_pdf.head(50))
-
-    eng = ElevationEngine(spark, grids=grids)
-    assert eng.catalog_bytes() == len(grids) * 2 * 1201 * 1201
-    plan = eng.elevation_join(df, strategy="auto")._jdf.queryExecution().executedPlan().toString()
-    # map-only: the kernel UDF's ArrowEvalPython node, and no Exchange
-    assert "ArrowEvalPython" in plan and "FlatMapCoGroupsIn" not in plan
-    assert "Exchange" not in plan
-
-    big = ElevationEngine(spark, grids=grids)
-    big.BROADCAST_MAX_BYTES = 1000  # few tiles, "huge" relative to the gate
-    plan = big.elevation_join(df, strategy="auto")._jdf.queryExecution().toString()
-    assert "FlatMapCoGroupsInArrow" in plan
-    assert big._bcast is None  # blobs never collected to the driver
-
-
 def test_auto_blob_source_picks_path(spark, grids, points_pdf, tmp_path):
-    """strategy='auto' past the broadcast gate over a PATH-BEARING catalog
-    must choose the no-blob-shuffle transport on its own — at 100 TB of
-    rasters the blobs must never ride a shuffle, and the user should not
-    have to know the flag. In-memory catalogs keep the inline transport."""
+    """strategy='auto' past the grid cache reads tiles by path on every
+    catalog, path-bearing or in-memory (spilled to files): the salted
+    input rows cross one Exchange and no Exchange carries the binary data
+    column — at 100 TB of rasters the blobs must never ride a shuffle.
+    Within the cache, auto runs map-side with no Exchange at all."""
     from htg_spark import hgt as hgt_mod
 
     tiles = tmp_path / "tiles"
@@ -348,42 +349,49 @@ def test_auto_blob_source_picks_path(spark, grids, points_pdf, tmp_path):
 
     import re
 
-    # cache_size below the tile count: the shuffled by-path plan
-    eng = ElevationEngine(spark, tile_dir=str(tiles), cache_size=2)
-    eng.BROADCAST_MAX_BYTES = 1000  # force the cogroup branch
-    plan = _plan_text(eng.elevation_join(df, strategy="auto"))
-    # the by-path plan: salted input rows, one Exchange, the kernel UDF
-    assert "ArrowEvalPython" in plan and "FlatMapCoGroupsIn" not in plan
-    # same invariant the plan audit hard-gates for the explicit path query:
-    # no Exchange block may carry the binary data column
-    ex_blocks = re.findall(r"\(\d+\) Exchange\nInput \[\d+\]: \[[^\]]*\]", plan)
-    assert ex_blocks and not any(re.search(r"\bdata#", b) for b in ex_blocks)
+    # cache_size below the tile count: the salted layout
+    for eng in (
+        ElevationEngine(spark, tile_dir=str(tiles), cache_size=2),
+        ElevationEngine(spark, grids=grids, cache_size=2),
+    ):
+        plan = _plan_text(eng.elevation_join(df, strategy="auto"))
+        assert "ArrowEvalPython" in plan and "FlatMapCoGroupsIn" not in plan
+        # same invariant the plan audit hard-gates for every engine section:
+        # no Exchange block may carry the binary data column
+        ex_blocks = re.findall(r"\(\d+\) Exchange\nInput \[\d+\]: \[[^\]]*\]", plan)
+        assert len(ex_blocks) == 1 and not re.search(r"\bdata#", ex_blocks[0])
 
-    mem = ElevationEngine(spark, grids=grids)
-    mem.BROADCAST_MAX_BYTES = 1000
-    plan = mem.elevation_join(df, strategy="auto")._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapCoGroupsInArrow" in plan  # inline fallback still plans
+    plan = _plan_text(ElevationEngine(spark, grids=grids).elevation_join(df, strategy="auto"))
+    assert "ArrowEvalPython" in plan and "Exchange" not in plan
 
 
-def test_knn_second_pass_runs_pass1_once(spark, engine, points_pdf):
-    """The cogroup+kNN plan must materialize pass 1 before the rest/miss
-    split: exactly ONE FlatMapCoGroupsInArrow in the final plan (pass 2) —
-    pass 1 is a shared checkpointed RDD, not two copies of the subtree."""
-    df = spark.createDataFrame(points_pdf)
-    out = engine.elevation_join(
-        df, mode="nearest", strategy="cogroup", knn_fallback=True, n_salts=4
-    )
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("FlatMapCoGroupsInArrow") == 1
+def test_cogroup_knn_in_memory_builds_without_jobs(spark, grids, points_pdf):
+    """A cogroup kNN join over an in-memory catalog that fits the grid
+    cache runs map-side: after the engine's first join (which spills the
+    catalog) it builds without a Spark job. The deleted two-pass cogroup
+    launched 2 histogram jobs and 4 checkpoint jobs on every build."""
+    eng = ElevationEngine(spark, grids=grids)
+    assert len(grids) <= eng.cache_size
+    df = spark.createDataFrame(points_pdf.head(200))
+    kw = dict(strategy="cogroup", knn_fallback=True, n_salts=4)
+    eng.elevation_join(df, **kw)  # spills the catalog once
+    sc = spark.sparkContext
+    sc.setJobGroup("cogroup-knn-build", "plan build only")
+    try:
+        out = eng.elevation_join(df, mode="bilinear", **kw)
+        jobs = sc.statusTracker().getJobIdsForGroup("cogroup-knn-build")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(jobs) == []
+    assert out.where("knn_used").count() > 0
 
 
 def test_cogroup_adaptive_salting_spreads_hot_tile(spark, engine, grids):
     """Skew stress (SURVEY.md §4): 90% of points land in ONE 1-degree cell.
     The adaptive salt pre-pass must fan that cell out across n_salts shuffle
-    groups of near-equal size (max/median <= 2 at n_salts=8), keep cold
-    cells at one un-replicated group each, and replicate the hot tile's
-    catalog blob exactly n_salts times — and the salted result must still
-    equal the broadcast join row-for-row."""
+    groups of near-equal size (max/median <= 2 at n_salts=8) and keep cold
+    cells at one group each — and the salted result must still equal the
+    broadcast join row-for-row."""
     rng = np.random.default_rng(7)
     n_hot, n_cold = 9000, 1000
     lat = np.concatenate(
@@ -406,41 +414,33 @@ def test_cogroup_adaptive_salting_spreads_hot_tile(spark, engine, grids):
             (F.col("_gk") % 8).cast("int").alias("salt"),
         )
 
-    narrow, cat, est_rows = engine._salted_inputs(df, "image_id", n_salts=8)
-    # the histogram's row estimate (it sizes the kernel stage) is returned
-    assert 0.5 * (n_hot + n_cold) < est_rows < 1.5 * (n_hot + n_cold)
-    # the by-path plan salts the FULL input rows (payload included) with
-    # the same helper; its key must spread the hot cell the same way
-    keyed, _salt_df, _est = engine._salted_key(
+    # the salted layout salts the FULL input rows (payload included)
+    keyed, est_rows = engine._salted_key(
         df.withColumn("caption", F.lit("c")), "image_id", n_salts=8
     )
+    # the histogram's row estimate (it sizes the kernel stage) is returned
+    assert 0.5 * (n_hot + n_cold) < est_rows < 1.5 * (n_hot + n_cold)
     slots = spark.sparkContext.defaultParallelism
     target = (n_hot + n_cold) / (slots * 2)
-    for rows in (narrow, keyed):
-        groups = unpack(rows).groupBy("tile_lat", "tile_lon", "salt").count().toPandas()
-        hot = groups[(groups.tile_lat == 35) & (groups.tile_lon == 138)]
-        cold = groups[(groups.tile_lat == 33) & (groups.tile_lon == -97)]
-        # hot cell fans out to all 8 salts; cold cell crosses the shuffle once
-        assert sorted(hot["salt"]) == list(range(8))
-        assert cold["salt"].tolist() == [0]
-        # xxhash64 spreads the hot cell evenly: max/median rows per group <= 2
-        assert hot["count"].max() / hot["count"].median() <= 2.0
-        # no group exceeds 2x the per-slot target the pre-pass aimed for
-        assert groups["count"].max() <= 2 * target
-    # catalog replication is hot-cell-only: 8 copies of the hot blob, 1 of
-    # every other tile (cold cells never pay the replication)
-    cat_counts = unpack(cat).groupBy("tile_lat", "tile_lon").count().toPandas()
-    hot_cat = cat_counts[(cat_counts.tile_lat == 35) & (cat_counts.tile_lon == 138)]
-    assert hot_cat["count"].tolist() == [8]
-    assert (cat_counts[~((cat_counts.tile_lat == 35) & (cat_counts.tile_lon == 138))]["count"] == 1).all()
+    groups = unpack(keyed).groupBy("tile_lat", "tile_lon", "salt").count().toPandas()
+    hot = groups[(groups.tile_lat == 35) & (groups.tile_lon == 138)]
+    cold = groups[(groups.tile_lat == 33) & (groups.tile_lon == -97)]
+    # hot cell fans out to all 8 salts; cold cell crosses the shuffle once
+    assert sorted(hot["salt"]) == list(range(8))
+    assert cold["salt"].tolist() == [0]
+    # xxhash64 spreads the hot cell evenly: max/median rows per group <= 2
+    assert hot["count"].max() / hot["count"].median() <= 2.0
+    # no group exceeds 2x the per-slot target the pre-pass aimed for
+    assert groups["count"].max() <= 2 * target
 
     a = (
         engine.elevation_join(df, mode="nearest", strategy="broadcast")
         .orderBy("image_id")
         .toPandas()
     )
+    salted = ElevationEngine(spark, grids=grids, cache_size=2)  # fewer slots than tiles
     b = (
-        engine.elevation_join(df, mode="nearest", strategy="cogroup", n_salts=8)
+        salted.elevation_join(df, mode="nearest", strategy="cogroup", n_salts=8)
         .orderBy("image_id")
         .toPandas()
     )
@@ -485,8 +485,11 @@ def test_read_blob_from_path_uri_handling(tmp_path):
 
 
 def test_preload_gates_blob_broadcast(spark):
-    """preload on a past-threshold catalog must NOT collect every blob to
-    the driver (that is a driver OOM exactly when preload matters most)."""
+    """preload on a path-less catalog builds the path index: it spills the
+    blobs to content-named files, and only their names are broadcast —
+    never the blobs (a driver OOM exactly when preload matters most). Its
+    300 tiles share one blob, so one file is written and shipped."""
+    from htg_spark import engine as engine_mod
     from htg_spark.catalog import CATALOG_SCHEMA
 
     rows = [
@@ -497,7 +500,11 @@ def test_preload_gates_blob_broadcast(spark):
     eng = ElevationEngine(spark, catalog=cat)
     stats = eng.preload()
     assert stats["tiles_matched"] == 300
-    assert eng._bcast is None  # blobs never collected
+    index = eng._path_index().value
+    assert len(index) == 300 and len(set(index.values())) == 1
+    name = next(iter(index.values()))
+    with open(os.path.join(engine_mod._SPILL_DIR, name), "rb") as f:
+        assert f.read() == b"xx"
     cat.unpersist()
 
 
@@ -579,7 +586,7 @@ def _plan_text(df) -> str:
 
 
 def test_path_plan_moves_input_rows_once(spark, tile_dir, points_pdf):
-    """blob_source='path' reads tiles by path, so only the input rows move:
+    """The salted layout reads tiles by path, so only the input rows move:
     ONE shuffle Exchange (the salted-key repartition; the histogram
     pre-pass has already run while the plan was built), no cogroup, no
     id re-join, no data column in any Exchange — with kNN as well. The
@@ -598,9 +605,7 @@ def test_path_plan_moves_input_rows_once(spark, tile_dir, points_pdf):
         conf.set("spark.python.worker.reuse", reuse)
         try:
             plan = _plan_text(
-                eng.elevation_join(
-                    df, strategy="cogroup", blob_source="path", knn_fallback=knn, n_salts=4
-                )
+                eng.elevation_join(df, strategy="cogroup", knn_fallback=knn, n_salts=4)
             )
         finally:
             conf.set("spark.python.worker.reuse", "true")
@@ -703,11 +708,12 @@ def _rows(df, cols):
 
 
 def test_path_plan_duplicate_ids_match_broadcast(spark, grids, tile_dir):
-    """Duplicate ids with a payload column: the by-path plan keeps one
+    """Duplicate ids with a payload column: the cogroup strategy keeps one
     output row per input row, exactly like broadcast, and both match the
     hgt.py oracle (the old cogroup id re-join multiplied duplicates) —
-    under the shuffled plan (grid cache smaller than the catalog) and the
-    map-side one (catalog fits the cache)."""
+    under the salted layout (grid cache smaller than the catalog) and the
+    map-side one (catalog fits the cache), over a tile_dir catalog and an
+    in-memory one."""
     pdf = pd.DataFrame(
         {
             "image_id": ["a", "a", "b", "b", "c"],
@@ -719,14 +725,14 @@ def test_path_plan_duplicate_ids_match_broadcast(spark, grids, tile_dir):
     df = spark.createDataFrame(pdf)
     cols = ["image_id", "caption", "lat", "lon", "tile_lat", "tile_lon",
             "in_coverage", "tile_found", "knn_used", "elevation"]
-    for cache_size, mode in itertools.product((2, 64), ("nearest", "bilinear")):
-        eng = ElevationEngine(spark, tile_dir=tile_dir, cache_size=cache_size)
+    sources = (dict(tile_dir=tile_dir), dict(grids=grids))
+    for source, cache_size, mode in itertools.product(
+        sources, (2, 64), ("nearest", "bilinear")
+    ):
+        eng = ElevationEngine(spark, cache_size=cache_size, **source)
         kw = dict(mode=mode, knn_fallback=True)
         a = _rows(eng.elevation_join(df, strategy="broadcast", **kw), cols)
-        b = _rows(
-            eng.elevation_join(df, strategy="cogroup", blob_source="path", n_salts=4, **kw),
-            cols,
-        )
+        b = _rows(eng.elevation_join(df, strategy="cogroup", n_salts=4, **kw), cols)
         assert len(a) == len(b) == len(pdf)
         pd.testing.assert_frame_equal(a, b)
         got = a["elevation"].to_numpy(dtype="float64", na_value=np.nan)
@@ -737,24 +743,21 @@ def test_path_plan_duplicate_ids_match_broadcast(spark, grids, tile_dir):
 
 
 def test_null_lat_is_out_of_coverage_under_every_plan(spark, grids, tile_dir):
-    """A NULL lat is out of coverage under broadcast, inline cogroup and the
-    by-path plan alike: lat stays NULL, tile key and elevation are NULL
-    (the inline cogroup used to raise TypeError on the NULL group key).
-    The by-path plan runs shuffled (grid cache smaller than the catalog)
-    and map-side (catalog fits the cache)."""
+    """A NULL lat is out of coverage under both layouts alike: lat stays
+    NULL, tile key and elevation are NULL (the deleted inline cogroup once
+    raised TypeError on the NULL group key). The cogroup strategy runs
+    salted (grid cache smaller than the catalog) and map-side (catalog
+    fits the cache), over a tile_dir catalog and an in-memory one."""
     rows = [("n1", None, 138.5, "p"), ("n2", 35.5, 138.5, "q"), ("n3", 40.2, 138.4, "r")]
     df = spark.createDataFrame(rows, "image_id string, lat double, lon double, caption string")
     cols = ["image_id", "caption", "lat", "lon", "tile_lat", "tile_lon",
             "in_coverage", "tile_found", "knn_used", "elevation"]
-    mem_eng = ElevationEngine(spark, grids=grids)
     for cache_size, knn in itertools.product((2, 64), (False, True)):
         path_eng = ElevationEngine(spark, tile_dir=tile_dir, cache_size=cache_size)
+        mem_eng = ElevationEngine(spark, grids=grids, cache_size=cache_size)
         kw = dict(mode="nearest", knn_fallback=knn)
         a = _rows(path_eng.elevation_join(df, strategy="broadcast", **kw), cols)
-        b = _rows(
-            path_eng.elevation_join(df, strategy="cogroup", blob_source="path", n_salts=4, **kw),
-            cols,
-        )
+        b = _rows(path_eng.elevation_join(df, strategy="cogroup", n_salts=4, **kw), cols)
         c = _rows(mem_eng.elevation_join(df, strategy="cogroup", n_salts=4, **kw), cols)
         pd.testing.assert_frame_equal(a, b)
         pd.testing.assert_frame_equal(a, c)
@@ -793,7 +796,7 @@ def test_path_plan_runs_map_side_when_catalog_fits_cache(spark, grids, tile_dir,
     eng = ElevationEngine(spark, tile_dir=tile_dir)
     assert len(grids) <= eng.cache_size
     df = spark.createDataFrame(points_pdf.assign(caption="c"))
-    path_kw = dict(strategy="cogroup", blob_source="path", n_salts=4)
+    path_kw = dict(strategy="cogroup", n_salts=4)
     for knn in (False, True):
         plan = _plan_text(eng.elevation_join(df, knn_fallback=knn, **path_kw))
         assert not re.findall(r"\(\d+\) Exchange", plan), plan
@@ -828,11 +831,10 @@ def test_bad_n_salts_raises_under_every_plan(spark, grids, tile_dir):
     mem = ElevationEngine(spark, grids=grids)
     plans = [
         (mem, dict(strategy="broadcast")),
-        (mem, dict(strategy="cogroup")),
+        (ElevationEngine(spark, grids=grids, cache_size=2), dict(strategy="cogroup")),
     ] + [
-        (ElevationEngine(spark, tile_dir=tile_dir, cache_size=c),
-         dict(strategy="cogroup", blob_source="path"))
-        for c in (2, 64)  # shuffled and map-side by-path plans
+        (ElevationEngine(spark, tile_dir=tile_dir, cache_size=c), dict(strategy="cogroup"))
+        for c in (2, 64)  # salted and map-side layouts
     ]
     for bad in (0, -1, MAX_SALTS + 1, 4.0, "4", True, None):
         for eng, kw in plans:
@@ -846,7 +848,7 @@ def test_bad_n_salts_raises_under_every_plan(spark, grids, tile_dir):
     top = ElevationEngine._group_key(F.lit(90), F.lit(180), F.lit(MAX_SALTS - 1), MAX_SALTS)
     assert spark.range(1).select(top.alias("gk")).first()["gk"] == 65341 * MAX_SALTS - 1
     assert 65341 * (MAX_SALTS + 1) - 1 > 2**31 - 1
-    # both ends of the range run on the salted plans, equal to broadcast
+    # both ends of the range run on the salted layout, equal to broadcast
     cols = ["image_id", "lat", "lon", "tile_lat", "tile_lon", "elevation"]
     want = _rows(mem.elevation_join(df, strategy="broadcast"), cols)
     for (eng, kw), n in itertools.product([plans[1], plans[2]], (1, MAX_SALTS)):
@@ -855,9 +857,10 @@ def test_bad_n_salts_raises_under_every_plan(spark, grids, tile_dir):
 
 def test_point_api_on_tile_dir_reads_tiles_by_path(spark, grids, tile_dir, points_pdf):
     """The point API on a path-bearing catalog (tile_dir / from_env) reads
-    each tile by path, like the by-path join: single and batch lookups
-    equal the in-memory engine's, and no blob is collected to the driver
-    or broadcast (the catalog may be a whole SRTM corpus)."""
+    each tile by the scan's own path, like the joins: single and batch
+    lookups equal the in-memory engine's (which reads its spilled files),
+    and no blob is collected to the driver, spilled or broadcast (the
+    catalog may be a whole SRTM corpus)."""
     mem = ElevationEngine(spark, grids=grids)
     eng = ElevationEngine(spark, tile_dir=tile_dir)
     coords = list(zip(points_pdf["lat"][:300], points_pdf["lon"][:300]))
@@ -876,4 +879,47 @@ def test_point_api_on_tile_dir_reads_tiles_by_path(spark, grids, tile_dir, point
     got = lookups(eng)
     assert got == lookups(mem)
     assert any(v is not None for v in got[0])
-    assert eng._bcast is None
+    assert all(p.startswith("file:") for p in eng._path_index().value.values())
+
+
+def test_spill_isolates_engines_sharing_a_tile_key(spark):
+    """Two in-memory engines in one session hold different grids under the
+    same tile key. Spilled files are named by a hash of their bytes, so
+    neither engine reads the other's tile: each returns its own
+    elevations through the join, salted (cache_size 2) and map-side
+    (cache_size 64), and through the point API."""
+    key = (35, 138)
+    grid_a = np.full((1201, 1201), 100, dtype=np.int16)
+    grid_b = np.full((1201, 1201), 700, dtype=np.int16)
+    extra = {(36, 138): grid_a, (35, 139): grid_b}  # 3 tiles: past cache_size 2
+    df = spark.createDataFrame(
+        [("a", 35.5, 138.5), ("b", 36.5, 138.5), ("c", 35.5, 139.5)],
+        "image_id string, lat double, lon double",
+    )
+    for cache_size in (2, 64):
+        for grid, want in ((grid_a, 100), (grid_b, 700)):
+            eng = ElevationEngine(spark, grids={key: grid, **extra}, cache_size=cache_size)
+            got = {
+                r.image_id: r.elevation
+                for r in eng.elevation_join(df, strategy="cogroup", n_salts=4).collect()
+            }
+            assert got == {"a": want, "b": 100, "c": 700}, cache_size
+            assert eng.get_elevation(35.5, 138.5) == want
+            assert eng.get_elevations_batch([(35.5, 138.5), (36.5, 138.5)]) == [want, 100]
+
+
+def test_nan_coordinate_casts_without_warning(spark, grids):
+    """A NaN coordinate is out of coverage without a NumPy warning: the
+    tile-key cast of NaN runs under np.errstate, in the NumPy reference and
+    in the point API alike."""
+    import warnings
+
+    eng = ElevationEngine(spark, grids=grids)
+    # spill outside the block: PySpark's toLocalIterator leaves its socket
+    # to the garbage collector, which warns (ResourceWarning) on collection
+    eng.n_tiles()
+    coords = [(np.nan, 138.5), (35.5, 138.5), (35.5, np.nan)]
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        assert list(hgt.get_elevations_batch(coords, grids, default=-1)) == [-1, 500, -1]
+        assert eng.get_elevations_batch(coords, default=-1) == [-1, 500, -1]

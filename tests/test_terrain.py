@@ -160,6 +160,28 @@ def test_terrain_join_plan_is_map_only(spark):
     assert "ArrowEvalPython" in plan and "MapInArrow" not in plan, plan
 
 
+def test_terrain_join_default_strategy_is_auto(spark):
+    """A default terrain_join plans like a default elevation_join
+    (strategy='auto'): over a catalog with more tiles than the grid cache
+    the rows take the salted layout, one shuffle Exchange. (The old
+    default, 'broadcast', ran map-side at any catalog size.)"""
+    import io
+    import re
+    from contextlib import redirect_stdout
+
+    from htg_spark.driver_queries import CATALOG_KEYS, get_engine
+
+    eng = get_engine(spark, cache_size=2)
+    assert len(CATALOG_KEYS) > eng.cache_size
+    pts = derive_points(spark.read.parquet("/root/testdata/sf0.001/events.parquet"))
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        terrain.terrain_join(eng, pts).explain("formatted")
+    plan = buf.getvalue()
+    assert len(re.findall(r"\(\d+\) Exchange\b", plan)) == 1, plan
+    assert "ArrowEvalPython" in plan
+
+
 def test_line_of_sight_semantics(spark):
     """Hand-built profile through a synthetic engine: a wall hides
     everything behind it until a taller sample; void samples are
@@ -520,14 +542,13 @@ def test_render_hillshade_flushes_large_batches(monkeypatch, spark):
 
 
 def test_terrain_cogroup_equals_broadcast(spark):
-    """Every terrain plan returns the broadcast plan's rows: the inline
-    salted cogroup, and the by-path plan both salted (cache_size 2, fewer
-    slots than catalog tiles) and map-side (cache_size 64). The input adds
-    a NULL-lat row, which passes through with a NULL tile key and
-    terrain_ok false, and a second row for one id with a different payload,
-    which broadcast and the path plans keep as a row of its own. The
-    inline cogroup re-joins the payload by id, so it needs unique ids and
-    runs without that duplicate."""
+    """Every terrain plan returns the broadcast plan's rows: the cogroup
+    strategy both salted (cache_size 2, fewer slots than catalog tiles)
+    and map-side (cache_size 64), over the tile_dir catalog and the
+    in-memory one (spilled to files). The input adds a NULL-lat row, which
+    passes through with a NULL tile key and terrain_ok false, and a second
+    row for one id with a different payload, which every plan keeps as a
+    row of its own: no plan re-joins by id."""
     from htg_spark.driver_queries import CATALOG_KEYS, get_engine, get_path_engine
     from htg_spark.engine import ElevationEngine
 
@@ -539,7 +560,6 @@ def test_terrain_cogroup_equals_broadcast(spark):
                    F.lit(None).cast("double").alias("lat"), "lon")
     )
     pts = pts.unionByName(extra)
-    unique = pts.where(F.col("note") != "dup")
     cols = ["event_id", "note", "lat", "lon", "tile_lat", "tile_lon", "in_coverage",
             "tile_found", "terrain_ok", "gxs", "gys"]
 
@@ -557,20 +577,22 @@ def test_terrain_cogroup_equals_broadcast(spark):
     dups = [r for r in ref if r.event_id == one.first().event_id]
     assert [d.note for d in dups] == ["a", "dup"] and dups[0][2:] == dups[1][2:]
 
-    assert rows(get_engine(spark), unique, strategy="cogroup", blob_source="inline") == [
-        r for r in ref if r.note != "dup"
-    ]
     assert len(CATALOG_KEYS) > 2
     path_eng = get_path_engine(spark)  # cache_size 64
-    salted_eng = ElevationEngine(spark, catalog=path_eng.catalog, cache_size=2)
-    for eng in (salted_eng, path_eng):
-        got = rows(eng, pts, strategy="cogroup", blob_source="path")
+    engines = [
+        path_eng,
+        ElevationEngine(spark, catalog=path_eng.catalog, cache_size=2),
+        get_engine(spark),
+        get_engine(spark, cache_size=2),
+    ]
+    for eng in engines:
+        got = rows(eng, pts, strategy="cogroup")
         assert len(got) == len(ref), eng.cache_size
         assert got == ref, eng.cache_size
 
 
 def test_terrain_cogroup_path_never_shuffles_blobs(spark):
-    """blob_source='path' terrain cogroup: no Exchange in the plan may
+    """Terrain cogroup over a tile_dir catalog: no Exchange in the plan may
     carry the binary data column (same gate as the elevation path plan),
     whether the rows are salted and shuffled (cache_size 2, fewer slots
     than catalog tiles: one Exchange) or run map-side (cache_size 64: no
@@ -587,7 +609,7 @@ def test_terrain_cogroup_path_never_shuffles_blobs(spark):
     salted_eng = ElevationEngine(spark, catalog=path_eng.catalog, cache_size=2)
     for eng, n_exchanges in ((path_eng, 0), (salted_eng, 1)):
         out = terrain.terrain_join(
-            eng, pts, strategy="cogroup", id_col="event_id", n_salts=4, blob_source="path",
+            eng, pts, strategy="cogroup", id_col="event_id", n_salts=4,
         )
         buf = io.StringIO()
         with redirect_stdout(buf):
