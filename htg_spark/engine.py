@@ -30,10 +30,11 @@ every tile (``service.rs:546-576``). The blob getter
 reading seam, ``_read_blob_from_path``. A path-bearing catalog
 (``tile_dir``, ``catalog_from_dir``) indexes its own paths. A path-less
 one (``grids=``, ``catalog_from_grids``, a user ``catalog=`` frame) is
-spilled once per engine: its blobs stream to the driver into ``.hgt``
-files named by a hash of their bytes, in one per-process directory, and
-each file is shipped with ``SparkContext.addFile``; the index holds the
-bare file names, which the seam resolves with ``SparkFiles.get``.
+spilled into ``.hgt`` files named by the SHA-256 of their bytes, in one
+per-process directory: the hashes are computed JVM-side, only blobs
+whose file is missing stream to the driver, and each file is shipped with
+``SparkContext.addFile``; the index holds the bare file names, which the
+seam resolves with ``SparkFiles.get``.
 
 Two row layouts over that one getter:
 
@@ -76,7 +77,6 @@ from __future__ import annotations
 
 import atexit
 import functools
-import hashlib
 import numbers
 import os
 import shutil
@@ -175,28 +175,36 @@ def _read_blob_from_path(path: str) -> bytes:
 
 
 # The spilled tiles of every path-less catalog in this process: one
-# directory, removed at exit. A file is named by a hash of its bytes, so
-# engines over different grids never collide on a name (addFile refuses a
-# second file of the same name with other contents) and engines over the
+# directory, removed at exit. A file is named by the SHA-256 of its bytes,
+# so engines over different grids never collide on a name (addFile refuses
+# a second file of the same name with other contents) and engines over the
 # same grids write and ship each tile once.
 _SPILL_LOCK = threading.Lock()
 _SPILL_DIR: str | None = None
 
 
-def _spill_blob(sc, blob: bytes) -> str:
-    """Write ``blob`` to the spill directory (once per distinct content),
-    ship it with ``sc.addFile`` and return its bare file name."""
+def _spill_path(name: str) -> str:
+    """Where the spilled tile file ``name`` lives (the directory is made
+    on first use)."""
     global _SPILL_DIR
     with _SPILL_LOCK:
         if _SPILL_DIR is None:
             _SPILL_DIR = tempfile.mkdtemp(prefix="htg_spill_")
             atexit.register(shutil.rmtree, _SPILL_DIR, ignore_errors=True)
-        name = hashlib.blake2b(blob, digest_size=16).hexdigest() + ".hgt"
-        path = os.path.join(_SPILL_DIR, name)
-        if not os.path.exists(path):
-            with open(path + ".tmp", "wb") as f:
-                f.write(blob)
-            os.replace(path + ".tmp", path)
+    return os.path.join(_SPILL_DIR, name)
+
+
+def _spill_blob(sc, name: str, blob: bytes | None = None) -> str:
+    """Ship the spilled tile file ``name`` (``<sha256 hex of its
+    bytes>.hgt``) with ``sc.addFile`` and return the name, first writing
+    ``blob`` to it if given and the file is missing."""
+    path = _spill_path(name)
+    if blob is not None:
+        with _SPILL_LOCK:
+            if not os.path.exists(path):
+                with open(path + ".tmp", "wb") as f:
+                    f.write(blob)
+                os.replace(path + ".tmp", path)
     sc.addFile(path)  # a no-op for a path this context already ships
     return name
 
@@ -573,6 +581,18 @@ class ElevationEngine:
         # background thread — without it two threads can each stream the
         # whole catalog to the driver and leak one broadcast
         self._prep_lock = threading.Lock()
+        # the point API's decoded-grid cache (cache_stats reads its counters)
+        self._driver_cache = _GridCache(cache_size)
+        # preload(blocking=False): the background thread, and what it
+        # returned or raised, for wait_preload
+        self._preload_thread = None
+        self._preload_stats = None
+        self._preload_error: BaseException | None = None
+        # the persisted warm sets of recent preload() calls, unpersisted
+        # oldest first past 4
+        self._preload_frames: list[DataFrame] = []
+        # the Observation of the last elevation_join(observe=True)
+        self.last_observation = None
 
     # -- srtm_rs-parity point API (SURVEY.md §2.8; htg-python/src/lib.rs) ----
     #
@@ -581,13 +601,8 @@ class ElevationEngine:
     # point would be absurd); they share the exact same NumPy kernels as
     # the distributed path, so semantics are identical by construction.
 
-    def _local_cache(self) -> "_GridCache":
-        if not hasattr(self, "_driver_cache"):
-            self._driver_cache = _GridCache(self.cache_size)
-        return self._driver_cache
-
     def _local_get_grid(self, key):
-        return self._local_cache().get(key, _path_blob_getter(self._path_index()))
+        return self._driver_cache.get(key, _path_blob_getter(self._path_index()))
 
     def get_elevation(self, lat: float, lon: float, rounding: str = "nearest"):
         """Optional[int] — void/missing -> None; out-of-coverage raises
@@ -664,7 +679,7 @@ class ElevationEngine:
             # callers must not both pass the is_alive() check and spawn
             # racing threads (the exact race the guard exists to prevent)
             with self._prep_lock:
-                prev = getattr(self, "_preload_thread", None)
+                prev = self._preload_thread
                 if prev is not None and prev.is_alive():
                     raise RuntimeError(
                         "a background preload is already in flight; call "
@@ -708,9 +723,7 @@ class ElevationEngine:
             # a distinct filtered plan, and nothing downstream holds the
             # handle — keep the 4 most recent warm sets, LRU-unpersist the
             # rest (same policy as the executor cache-token LRU)
-            frames = getattr(self, "_preload_frames", None)
-            if frames is None:
-                frames = self._preload_frames = []
+            frames = self._preload_frames
             frames.append(warmed)
             while len(frames) > 4:
                 frames.pop(0).unpersist()
@@ -731,19 +744,19 @@ class ElevationEngine:
         exception raised inside the background thread re-raises HERE — the
         non-blocking variant must not silently lose the error signal its
         blocking twin would have delivered."""
-        t = getattr(self, "_preload_thread", None)
+        t = self._preload_thread
         if t is not None:
             t.join(timeout)
-        err = getattr(self, "_preload_error", None)
+        err = self._preload_error
         if err is not None and not (t is not None and t.is_alive()):
             self._preload_error = None
             raise err
-        return getattr(self, "_preload_stats", None)
+        return self._preload_stats
 
     def cache_stats(self):
         """Driver-side decoded-grid cache counters (CacheStats analog,
         service.rs:41-63)."""
-        c = self._local_cache()
+        c = self._driver_cache
         total = c.hits + c.misses
         return {
             "entry_count": len(c.data),
@@ -763,7 +776,7 @@ class ElevationEngine:
         consults the just-emptied moka cache)."""
         import uuid
 
-        self._local_cache().data.clear()
+        self._driver_cache.data.clear()
         self._cache_token = uuid.uuid4().hex
         with self._prep_lock:
             self._preloaded_keys.clear()
@@ -797,12 +810,15 @@ class ElevationEngine:
         """Broadcast {(tile_lat, tile_lon): path} over the catalog, built
         once per engine; its keys are the kNN centres. A path-bearing
         catalog gives its own paths: only paths are collected, so it
-        broadcasts at any catalog size. A path-less catalog is spilled:
-        its blobs stream to the driver at most two partitions at a time
-        (``toLocalIterator``, the next partition prefetched: 1.8 s against
-        3.2 s unprefetched for the 36-tile bench catalog on local[4]) into
-        content-named files (``_spill_blob``), and the index holds their
-        bare names."""
+        broadcasts at any catalog size. A path-less catalog is spilled to
+        files named by the SHA-256 of their bytes (``_spill_blob``), and
+        the index holds their bare names: one job collects each tile's
+        key and ``sha2(data, 256)``, and only the blobs whose file is not
+        yet in the spill directory stream to the driver, at most two
+        partitions at a time (``toLocalIterator``, the next partition
+        prefetched: 1.8 s against 3.2 s unprefetched for the 36-tile bench
+        catalog on local[4]). A second engine over the same grids streams
+        none."""
         if self._paths is None:
             with self._prep_lock:
                 if self._paths is None:
@@ -810,15 +826,34 @@ class ElevationEngine:
                         rows = self.catalog.select("tile_lat", "tile_lon", "path").collect()
                         paths = {(r.tile_lat, r.tile_lon): str(r.path) for r in rows}
                     else:
-                        sc = self.spark.sparkContext
-                        rows = self.catalog.select("tile_lat", "tile_lon", "data")
-                        paths = {
-                            (r.tile_lat, r.tile_lon): _spill_blob(sc, bytes(r.data))
-                            for r in rows.toLocalIterator(prefetchPartitions=True)
-                        }
+                        paths = self._spill_catalog()
                     self._centers = np.array(list(paths), dtype=np.int64).reshape(-1, 2)
                     self._paths = self.spark.sparkContext.broadcast(paths)
         return self._paths
+
+    def _spill_catalog(self) -> dict:
+        """{tile key: spilled file name} of a path-less catalog (see
+        ``_path_index``)."""
+        sc = self.spark.sparkContext
+        cat = self.catalog.select(
+            "tile_lat", "tile_lon", F.sha2("data", 256).alias("sha"), "data"
+        )
+        names = {
+            (r.tile_lat, r.tile_lon): r.sha + ".hgt"
+            for r in cat.select("tile_lat", "tile_lon", "sha").collect()
+        }
+        missing = sorted({n[:-4] for n in names.values() if not os.path.exists(_spill_path(n))})
+        written = set()
+        if missing:
+            rows = cat.where(F.col("sha").isin(missing))
+            for r in rows.toLocalIterator(prefetchPartitions=True):
+                _spill_blob(sc, r.sha + ".hgt", bytes(r.data))
+                written.add((r.tile_lat, r.tile_lon))
+        # ship every name; a name just written was shipped by its write
+        return {
+            key: name if key in written else _spill_blob(sc, name)
+            for key, name in names.items()
+        }
 
     def tile_centers(self) -> np.ndarray:
         """(n, 2) int64 catalog tile keys — the kNN centres, taken from the
@@ -877,9 +912,10 @@ class ElevationEngine:
         - the salted layout: the salt histogram (``_salt_table``), 2 jobs
           per call.
         - once per engine, then cached: the path index (``_path_index``):
-          1 job collecting a path-bearing catalog's paths, or 1 job per
-          catalog partition streaming a path-less catalog's blobs to its
-          spill files.
+          1 job collecting a path-bearing catalog's paths; for a path-less
+          catalog, 1 job collecting its tile keys and blob hashes, then,
+          only if some blob is not yet spilled in this process, 1 job per
+          catalog partition streaming the missing blobs to their files.
 
         The map-side layout launches none after the engine's first join.
         """

@@ -908,6 +908,41 @@ def test_spill_isolates_engines_sharing_a_tile_key(spark):
             assert eng.get_elevations_batch([(35.5, 138.5), (36.5, 138.5)]) == [want, 100]
 
 
+def test_second_engine_spills_nothing_new(spark, grids, points_pdf, monkeypatch):
+    """A spilled file is named by the SHA-256 of its bytes, hashed
+    JVM-side, so a second engine over the same grids streams no blob and
+    writes no file: it ships the existing names and joins the same rows."""
+    import hashlib
+
+    from htg_spark import engine as engine_mod
+
+    first = ElevationEngine(spark, grids=grids)
+    index = first._path_index().value
+    for name in set(index.values()):
+        with open(os.path.join(engine_mod._SPILL_DIR, name), "rb") as f:
+            assert name == hashlib.sha256(f.read()).hexdigest() + ".hgt"
+    spilled = sorted(os.listdir(engine_mod._SPILL_DIR))
+    blobs = []
+    orig_spill = engine_mod._spill_blob
+
+    def spy(sc, name, blob=None):
+        blobs.append(blob)
+        return orig_spill(sc, name, blob)
+
+    monkeypatch.setattr(engine_mod, "_spill_blob", spy)
+    second = ElevationEngine(spark, grids=grids)
+    assert second._path_index().value == index
+    assert len(blobs) == len(grids) and all(b is None for b in blobs)
+    assert sorted(os.listdir(engine_mod._SPILL_DIR)) == spilled
+    df = spark.createDataFrame(points_pdf.head(300))
+
+    def rows(eng):
+        out = eng.elevation_join(df, strategy="broadcast", default=-1)
+        return out.orderBy("image_id").collect()
+
+    assert rows(second) == rows(first)
+
+
 def test_nan_coordinate_casts_without_warning(spark, grids):
     """A NaN coordinate is out of coverage without a NumPy warning: the
     tile-key cast of NaN runs under np.errstate, in the NumPy reference and
