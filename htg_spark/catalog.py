@@ -20,11 +20,12 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.window import Window
 
 from . import cells, hgt
@@ -44,6 +45,62 @@ CATALOG_SCHEMA = T.StructType(
 # catalog has no path column, so the engine spills its blobs to files once
 # (ElevationEngine._path_index)
 PATH_FIELD = T.StructField("path", T.StringType(), True)
+
+
+# map_tiles flushes an output RecordBatch once its binary/string payload
+# reaches this many bytes: Arrow offsets are int32, so a batch past 2^31
+# payload bytes silently corrupts, and input batches can be huge because
+# maxBytesPerBatch is pinned to Int.MaxValue (see CLAUDE.md)
+_FLUSH_BYTES = 1 << 28
+
+
+def _tile_batches(
+    batches: Iterator[pa.RecordBatch], fn, schema: pa.Schema, flush_bytes: int
+) -> Iterator[pa.RecordBatch]:
+    """The body of ``map_tiles``' UDF: ``fn(row)`` over every row of the
+    input batches (``row`` a dict of the row's values), the tuples it yields
+    assembled into RecordBatches of ``schema``. A batch is emitted once its
+    binary/string payload reaches ``flush_bytes``, and at the end."""
+    sized = [
+        i for i, f in enumerate(schema)
+        if pa.types.is_binary(f.type) or pa.types.is_string(f.type)
+    ]
+    rows, payload = [], 0
+
+    def flush():
+        cols = zip(*rows)
+        arrays = [pa.array(c, type=f.type) for c, f in zip(cols, schema)]
+        return pa.RecordBatch.from_arrays(arrays, schema=schema)
+
+    for batch in batches:
+        for i in range(batch.num_rows):
+            for out in fn(batch.slice(i, 1).to_pylist()[0]):
+                rows.append(out)
+                payload += sum(len(out[j]) for j in sized if out[j] is not None)
+                if payload >= flush_bytes:
+                    yield flush()
+                    rows, payload = [], 0
+    if rows:
+        yield flush()
+
+
+def map_tiles(catalog: DataFrame, fn, schema: str, *cols: str) -> DataFrame:
+    """Run a per-tile NumPy function over every row of ``catalog``: the one
+    seam of every whole-tile raster product. Selects ``tile_lat, tile_lon,
+    *cols, data`` into one map-only ``mapInArrow`` stage; ``fn(row)`` gets
+    each tile row as a dict (``data`` as bytes) and yields output tuples in
+    the order of ``schema``, a DDL string. Output batches are flushed under
+    the int32-offset cap (``_FLUSH_BYTES``)."""
+    struct = T._parse_datatype_string(schema)
+    arrow_schema = to_arrow_schema(struct)
+    flush_bytes = _FLUSH_BYTES  # the driver's value, pickled with the UDF
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        yield from _tile_batches(batches, fn, arrow_schema, flush_bytes)
+
+    return catalog.select("tile_lat", "tile_lon", *cols, "data").mapInArrow(
+        run, schema=struct
+    )
 
 
 def catalog_from_grids(spark: SparkSession, grids: dict) -> DataFrame:
@@ -128,36 +185,29 @@ def catalog_from_dir(spark: SparkSession, path: str) -> DataFrame:
 
 def tile_info(catalog: DataFrame) -> DataFrame:
     """Per-tile stats: min/max over non-void samples, void count and void %
-    (info.rs:49-71). Full-grid NumPy reduce inside an Arrow UDF — one decode
-    per tile, no per-row Python."""
+    (info.rs:49-71). Full-grid NumPy reduce per tile (``map_tiles``) — one
+    decode per tile, no per-sample Python."""
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                grid = hgt.decode_tile(bytes(r.data))
-                flat = np.asarray(grid).ravel()
-                void_n = int((flat == hgt.VOID_VALUE).sum())
-                valid = flat[flat != hgt.VOID_VALUE]
-                rows.append(
-                    {
-                        "tile_lat": r.tile_lat,
-                        "tile_lon": r.tile_lon,
-                        "filename": r.filename,
-                        "samples": r.samples,
-                        "min_elev": int(valid.min()) if len(valid) else None,
-                        "max_elev": int(valid.max()) if len(valid) else None,
-                        "void_count": void_n,
-                        "void_pct": void_n / float(len(flat)) * 100.0,
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def stats(row):
+        flat = hgt.decode_tile(row["data"]).ravel()
+        void_n = int((flat == hgt.VOID_VALUE).sum())
+        valid = flat[flat != hgt.VOID_VALUE]
+        yield (
+            row["tile_lat"],
+            row["tile_lon"],
+            row["filename"],
+            row["samples"],
+            int(valid.min()) if len(valid) else None,
+            int(valid.max()) if len(valid) else None,
+            void_n,
+            void_n / float(len(flat)) * 100.0,
+        )
 
     schema = (
         "tile_lat int, tile_lon int, filename string, samples int, "
         "min_elev int, max_elev int, void_count bigint, void_pct double"
     )
-    return catalog.mapInPandas(stats, schema=schema)
+    return map_tiles(catalog, stats, schema, "filename", "samples")
 
 
 def tile_inventory(catalog: DataFrame) -> DataFrame:
@@ -179,17 +229,19 @@ def preload(
 ):
     """Warm the catalog like SrtmService::preload (service.rs:685-722):
     optional bbox pruning (strict-inequality overlap, service.rs:102-110),
-    then persist + a per-tile decode check in ONE distributed pass — the
-    warm job doubles as the per-tile error channel PreloadStats needs
-    (service.rs:707-711 Ok/Err per load_tile). Returns
-    (persisted_df, [(tile_lat, tile_lon, ok), ...]) where ok=False marks a
-    tile whose blob failed to decode (matched count = len of the list).
+    then a per-tile decode check in ONE distributed pass — the warm job
+    doubles as the per-tile error channel PreloadStats needs (service.rs:
+    707-711 Ok/Err per load_tile). An unbounded preload persists the
+    catalog first, so the check fills the cache that the engine's path
+    index (or the spill of a path-less catalog) reads next; a bbox preload
+    persists nothing, as nothing reads its filtered frame again. Returns
+    [(tile_lat, tile_lon, ok), ...] where ok=False marks a tile whose blob
+    failed to decode (matched count = len of the list).
 
     `skip_keys`: tiles the caller already knows are warm (the engine's
     preload ledger) — they still count as matched but their blobs are NOT
     re-decoded (the reference's moka-cache consult skips loads for cached
     tiles, service.rs:705-708); the check reports them ok=True."""
-    df = catalog
     if boxes:
         pred = None
         for (min_lat, min_lon, max_lat, max_lon) in boxes:
@@ -197,8 +249,9 @@ def preload(
                 F.col("tile_lat"), F.col("tile_lon"), min_lat, min_lon, max_lat, max_lon
             )
             pred = p if pred is None else (pred | p)
-        df = df.where(pred)
-    df = df.persist()
+        df = catalog.where(pred)
+    else:
+        df = catalog.persist()
     skip = frozenset(skip_keys or ())
 
     def check(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -221,4 +274,4 @@ def preload(
     rows = df.select("tile_lat", "tile_lon", "data").mapInPandas(
         check, schema="tile_lat int, tile_lon int, ok boolean"
     ).collect()
-    return df, [(r.tile_lat, r.tile_lon, bool(r.ok)) for r in rows]
+    return [(r.tile_lat, r.tile_lon, bool(r.ok)) for r in rows]

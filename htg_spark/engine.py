@@ -503,6 +503,17 @@ def _kernel_udf(get_blob, kernel: TileKernel, token: str, cache_cap: int):
     return F.arrow_udf(tile_kernel, kernel.struct())
 
 
+def _by_tile_key(items) -> dict:
+    """{tile key: value} over (tile key, value) pairs; ValueError naming
+    the first tile key seen twice."""
+    out = {}
+    for key, value in items:
+        if key in out:
+            raise ValueError(f"the catalog holds more than one row for tile key {key}")
+        out[key] = value
+    return out
+
+
 def _path_blob_getter(paths):
     """The blob getter of every plan and of the point API, over the
     broadcast {tile key: path} index (``ElevationEngine._path_index``):
@@ -588,9 +599,6 @@ class ElevationEngine:
         self._preload_thread = None
         self._preload_stats = None
         self._preload_error: BaseException | None = None
-        # the persisted warm sets of recent preload() calls, unpersisted
-        # oldest first past 4
-        self._preload_frames: list[DataFrame] = []
         # the Observation of the last elevation_join(observe=True)
         self.last_observation = None
 
@@ -646,8 +654,9 @@ class ElevationEngine:
         return [float(default) if np.isnan(v) else float(v) for v in res["elevation"]]
 
     def preload(self, bounds=None, blocking: bool = True):
-        """Warm the catalog (service.rs:685-722): persist + per-tile decode
-        check, optional bbox pruning. Returns the full PreloadStats dict
+        """Warm the catalog (service.rs:685-722): per-tile decode check,
+        optional bbox pruning; an unbounded preload also persists the
+        catalog (``catalog.preload``). Returns the full PreloadStats dict
         (service.rs:114-126): tiles_matched / tiles_loaded /
         tiles_already_cached / tiles_failed / elapsed_ms. A repeat preload
         reports already_cached=matched, loaded=0 (service.rs preload tests:
@@ -701,7 +710,7 @@ class ElevationEngine:
         # ledger already holds skip the decode re-check entirely.
         with self._prep_lock:
             known_warm = set(self._preloaded_keys)
-        warmed, tile_checks = cat_mod.preload(self.catalog, boxes, skip_keys=known_warm)
+        tile_checks = cat_mod.preload(self.catalog, boxes, skip_keys=known_warm)
         loaded = already = failed = 0
         with self._prep_lock:
             warmed_keys = self._preloaded_keys
@@ -719,14 +728,6 @@ class ElevationEngine:
             # already_cached approximates actual residency (see __init__)
             while len(warmed_keys) > self.cache_size:
                 warmed_keys.pop(next(iter(warmed_keys)))
-            # bound the persisted preload frames: each distinct bbox persists
-            # a distinct filtered plan, and nothing downstream holds the
-            # handle — keep the 4 most recent warm sets, LRU-unpersist the
-            # rest (same policy as the executor cache-token LRU)
-            frames = self._preload_frames
-            frames.append(warmed)
-            while len(frames) > 4:
-                frames.pop(0).unpersist()
         # the joins' one-time catalog prep: the path index (a path-less
         # catalog is spilled here)
         self._path_index()
@@ -813,18 +814,23 @@ class ElevationEngine:
         broadcasts at any catalog size. A path-less catalog is spilled to
         files named by the SHA-256 of their bytes (``_spill_blob``), and
         the index holds their bare names: one job collects each tile's
-        key and ``sha2(data, 256)``, and only the blobs whose file is not
-        yet in the spill directory stream to the driver, at most two
-        partitions at a time (``toLocalIterator``, the next partition
-        prefetched: 1.8 s against 3.2 s unprefetched for the 36-tile bench
-        catalog on local[4]). A second engine over the same grids streams
-        none."""
+        key and ``sha2(data, 256)``, and only the tiles whose file is not
+        yet in the spill directory stream to the driver, selected by key
+        and named from the collected hashes, at most two partitions at a
+        time (``toLocalIterator``, the next partition prefetched: 1.8 s
+        against 3.2 s unprefetched for the 36-tile bench catalog on
+        local[4]). A second engine over the same grids streams none.
+
+        The index names one file per tile, so a catalog with two rows for
+        one tile key raises ValueError naming the key."""
         if self._paths is None:
             with self._prep_lock:
                 if self._paths is None:
                     if "path" in self.catalog.columns:
                         rows = self.catalog.select("tile_lat", "tile_lon", "path").collect()
-                        paths = {(r.tile_lat, r.tile_lon): str(r.path) for r in rows}
+                        paths = _by_tile_key(
+                            ((r.tile_lat, r.tile_lon), str(r.path)) for r in rows
+                        )
                     else:
                         paths = self._spill_catalog()
                     self._centers = np.array(list(paths), dtype=np.int64).reshape(-1, 2)
@@ -835,20 +841,23 @@ class ElevationEngine:
         """{tile key: spilled file name} of a path-less catalog (see
         ``_path_index``)."""
         sc = self.spark.sparkContext
-        cat = self.catalog.select(
-            "tile_lat", "tile_lon", F.sha2("data", 256).alias("sha"), "data"
+        cat = self.catalog.select("tile_lat", "tile_lon", "data")
+        sha = F.sha2("data", 256).alias("sha")
+        names = _by_tile_key(
+            ((r.tile_lat, r.tile_lon), r.sha + ".hgt")
+            for r in cat.select("tile_lat", "tile_lon", sha).collect()
         )
-        names = {
-            (r.tile_lat, r.tile_lon): r.sha + ".hgt"
-            for r in cat.select("tile_lat", "tile_lon", "sha").collect()
-        }
-        missing = sorted({n[:-4] for n in names.values() if not os.path.exists(_spill_path(n))})
+        missing = [k for k, n in names.items() if not os.path.exists(_spill_path(n))]
         written = set()
         if missing:
-            rows = cat.where(F.col("sha").isin(missing))
+            # one long per tile key, distinct for distinct keys while
+            # |tile_lat| < 2^31 - 1 (a real tile has |tile_lat| <= 90)
+            packed = F.col("tile_lat").cast("long") * (1 << 32) + F.col("tile_lon")
+            rows = cat.where(packed.isin([lat * (1 << 32) + lon for lat, lon in missing]))
             for r in rows.toLocalIterator(prefetchPartitions=True):
-                _spill_blob(sc, r.sha + ".hgt", bytes(r.data))
-                written.add((r.tile_lat, r.tile_lon))
+                key = (r.tile_lat, r.tile_lon)
+                _spill_blob(sc, names[key], bytes(r.data))
+                written.add(key)
         # ship every name; a name just written was shipped by its write
         return {
             key: name if key in written else _spill_blob(sc, name)

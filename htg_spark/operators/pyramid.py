@@ -5,8 +5,9 @@ The classic map-tile/overview structure (GDAL overviews, COG reduced-
 resolution layers, web-map zoom levels) the reference's point-lookup
 engine stops short of: one decode of each HGT blob (tile.rs:299-318
 treats tiles as independent, same here) serves EVERY pyramid level in a
-single map-only ``mapInArrow`` pass — zero shuffle Exchanges, so the plan
-is the same one the broadcast joins already proved scales.
+single map-only ``mapInArrow`` pass (``catalog.map_tiles``) — zero
+shuffle Exchanges, so the plan is the same one the broadcast joins
+already proved scales.
 
 Pooling contract (all exact integer arithmetic, order-free):
 
@@ -35,17 +36,11 @@ arithmetic against the analytic gradient catalog without shipping pixels.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 from pyspark.sql import DataFrame
-from pyspark.sql import types as T
 
 from .. import hgt
-
-# flush output batches before int32 Arrow binary offsets get near overflow
-# (see CLAUDE.md); pyramid payloads are small but the guard is free
-_FLUSH_BYTES = 1 << 28
+from ..catalog import map_tiles
 
 DEFAULT_LEVELS = 3
 
@@ -72,6 +67,18 @@ def pool_level(base: np.ndarray, valid: np.ndarray, level: int):
     return np.where(cnt > 0, q, np.int64(hgt.VOID_VALUE)), cnt
 
 
+def _pool_base(row):
+    """The decoded tile's pooled base (see the module docstring): the
+    (n-1)x(n-1) core with void samples zeroed, its validity mask, and the
+    file-name stem the image ids start from."""
+    grid = hgt.decode_tile(row["data"])
+    n = grid.shape[0]
+    core = grid[: n - 1, : n - 1]
+    valid = core != hgt.VOID_VALUE
+    base = np.where(valid, core.astype(np.int64), np.int64(0))
+    return base, valid, row["filename"].rsplit(".", 1)[0]
+
+
 def tile_pyramid(catalog: DataFrame, levels: int = DEFAULT_LEVELS) -> DataFrame:
     """Render every catalog tile's overview pyramid: one image row per
     (tile, level) in the input_hint shape (image_id, bytes, w, h, fmt)
@@ -81,96 +88,38 @@ def tile_pyramid(catalog: DataFrame, levels: int = DEFAULT_LEVELS) -> DataFrame:
     `levels` poolings (each from the base grid, NOT mean-of-means — block
     means with nodata exclusion and rounding do not compose exactly).
     """
-    import pyarrow as pa
-
     if levels < 1:
         raise ValueError("levels must be >= 1")
 
-    out_schema = T.StructType(
-        [
-            T.StructField("image_id", T.StringType()),
-            T.StructField("tile_lat", T.IntegerType()),
-            T.StructField("tile_lon", T.IntegerType()),
-            T.StructField("level", T.IntegerType()),
-            T.StructField("w", T.IntegerType()),
-            T.StructField("h", T.IntegerType()),
-            T.StructField("fmt", T.StringType()),
-            T.StructField("bytes", T.BinaryType()),
-            T.StructField("n_valid", T.LongType()),
-            T.StructField("n_void", T.LongType()),
-            T.StructField("sum_val", T.LongType()),
-            T.StructField("min_val", T.IntegerType()),
-            T.StructField("max_val", T.IntegerType()),
-        ]
+    def pyramid(row):
+        base, valid, stem = _pool_base(row)
+        for lvl in range(1, levels + 1):
+            q, cnt = pool_level(base, valid, lvl)
+            ok = cnt > 0
+            vq = q[ok]
+            m = q.shape[0]
+            yield (
+                f"pyr_{stem}_L{lvl}",
+                row["tile_lat"],
+                row["tile_lon"],
+                lvl,
+                m,
+                m,
+                "gray16be",
+                q.astype(">i2").tobytes(),
+                int(ok.sum()),
+                int((~ok).sum()),
+                int(vq.sum()),
+                int(vq.min()) if len(vq) else None,
+                int(vq.max()) if len(vq) else None,
+            )
+
+    schema = (
+        "image_id string, tile_lat int, tile_lon int, level int, w int, "
+        "h int, fmt string, bytes binary, n_valid bigint, n_void bigint, "
+        "sum_val bigint, min_val int, max_val int"
     )
-    names = [f.name for f in out_schema.fields]
-
-    def run(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
-        def flush(rows):
-            cols = list(zip(*rows))
-            arrays = [
-                pa.array(cols[0], type=pa.string()),
-                pa.array(cols[1], type=pa.int32()),
-                pa.array(cols[2], type=pa.int32()),
-                pa.array(cols[3], type=pa.int32()),
-                pa.array(cols[4], type=pa.int32()),
-                pa.array(cols[5], type=pa.int32()),
-                pa.array(cols[6], type=pa.string()),
-                pa.array(cols[7], type=pa.binary()),
-                pa.array(cols[8], type=pa.int64()),
-                pa.array(cols[9], type=pa.int64()),
-                pa.array(cols[10], type=pa.int64()),
-                pa.array(cols[11], type=pa.int32()),
-                pa.array(cols[12], type=pa.int32()),
-            ]
-            return pa.RecordBatch.from_arrays(arrays, names=names)
-
-        for batch in batches:
-            tl_a = batch.column(batch.schema.get_field_index("tile_lat"))
-            tn_a = batch.column(batch.schema.get_field_index("tile_lon"))
-            fn_a = batch.column(batch.schema.get_field_index("filename"))
-            data_a = batch.column(batch.schema.get_field_index("data"))
-            rows, payload = [], 0
-            for i in range(batch.num_rows):
-                grid = hgt.decode_tile(data_a[i].as_py())
-                n = grid.shape[0]
-                core = grid[: n - 1, : n - 1]
-                valid = core != hgt.VOID_VALUE
-                base = np.where(valid, core.astype(np.int64), np.int64(0))
-                stem = fn_a[i].as_py().rsplit(".", 1)[0]
-                tl, tn = int(tl_a[i].as_py()), int(tn_a[i].as_py())
-                for lvl in range(1, levels + 1):
-                    q, cnt = pool_level(base, valid, lvl)
-                    ok = cnt > 0
-                    vq = q[ok]
-                    m = q.shape[0]
-                    rows.append(
-                        (
-                            f"pyr_{stem}_L{lvl}",
-                            tl,
-                            tn,
-                            lvl,
-                            m,
-                            m,
-                            "gray16be",
-                            q.astype(">i2").tobytes(),
-                            int(ok.sum()),
-                            int((~ok).sum()),
-                            int(vq.sum()) if len(vq) else 0,
-                            int(vq.min()) if len(vq) else None,
-                            int(vq.max()) if len(vq) else None,
-                        )
-                    )
-                    payload += 2 * m * m
-                if payload >= _FLUSH_BYTES:
-                    yield flush(rows)
-                    rows, payload = [], 0
-            if rows:
-                yield flush(rows)
-
-    return catalog.select("tile_lat", "tile_lon", "filename", "data").mapInArrow(
-        run, schema=out_schema
-    )
+    return map_tiles(catalog, pyramid, schema, "filename")
 
 
 def pyramid_hillshade(
@@ -192,98 +141,40 @@ def pyramid_hillshade(
     Still one map-only pass: one decode per tile feeds every level; zero
     shuffle Exchanges.
     """
-    import pyarrow as pa
-
     from . import terrain
 
     if levels < 1:
         raise ValueError("levels must be >= 1")
 
-    out_schema = T.StructType(
-        [
-            T.StructField("image_id", T.StringType()),
-            T.StructField("tile_lat", T.IntegerType()),
-            T.StructField("tile_lon", T.IntegerType()),
-            T.StructField("level", T.IntegerType()),
-            T.StructField("w", T.IntegerType()),
-            T.StructField("h", T.IntegerType()),
-            T.StructField("fmt", T.StringType()),
-            T.StructField("bytes", T.BinaryType()),
-            T.StructField("n_valid", T.LongType()),
-            T.StructField("sum_byte", T.LongType()),
-            T.StructField("min_byte", T.IntegerType()),
-            T.StructField("max_byte", T.IntegerType()),
-        ]
+    def zoom_stack(row):
+        base, valid, stem = _pool_base(row)
+        for lvl in range(1, levels + 1):
+            q, _cnt = pool_level(base, valid, lvl)
+            gxs, gys, ok = terrain.tile_horn_grids(q.astype(np.int16))
+            img, byte = terrain.hillshade_bytes(gxs, gys, ok)
+            vb = byte[byte >= 0]
+            m = img.shape[0]
+            yield (
+                f"hillshade_{stem}_L{lvl}",
+                row["tile_lat"],
+                row["tile_lon"],
+                lvl,
+                m,
+                m,
+                "gray8",
+                img.tobytes(),
+                vb.size,
+                int(vb.sum()),
+                int(vb.min()) if vb.size else None,
+                int(vb.max()) if vb.size else None,
+            )
+
+    schema = (
+        "image_id string, tile_lat int, tile_lon int, level int, w int, "
+        "h int, fmt string, bytes binary, n_valid bigint, sum_byte bigint, "
+        "min_byte int, max_byte int"
     )
-    names = [f.name for f in out_schema.fields]
-
-    def run(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
-        def flush(rows):
-            cols = list(zip(*rows))
-            arrays = [
-                pa.array(cols[0], type=pa.string()),
-                pa.array(cols[1], type=pa.int32()),
-                pa.array(cols[2], type=pa.int32()),
-                pa.array(cols[3], type=pa.int32()),
-                pa.array(cols[4], type=pa.int32()),
-                pa.array(cols[5], type=pa.int32()),
-                pa.array(cols[6], type=pa.string()),
-                pa.array(cols[7], type=pa.binary()),
-                pa.array(cols[8], type=pa.int64()),
-                pa.array(cols[9], type=pa.int64()),
-                pa.array(cols[10], type=pa.int32()),
-                pa.array(cols[11], type=pa.int32()),
-            ]
-            return pa.RecordBatch.from_arrays(arrays, names=names)
-
-        for batch in batches:
-            tl_a = batch.column(batch.schema.get_field_index("tile_lat"))
-            tn_a = batch.column(batch.schema.get_field_index("tile_lon"))
-            fn_a = batch.column(batch.schema.get_field_index("filename"))
-            data_a = batch.column(batch.schema.get_field_index("data"))
-            rows, payload = [], 0
-            for i in range(batch.num_rows):
-                grid = hgt.decode_tile(data_a[i].as_py())
-                n = grid.shape[0]
-                core = grid[: n - 1, : n - 1]
-                valid = core != hgt.VOID_VALUE
-                base = np.where(valid, core.astype(np.int64), np.int64(0))
-                stem = fn_a[i].as_py().rsplit(".", 1)[0]
-                tl, tn = int(tl_a[i].as_py()), int(tn_a[i].as_py())
-                for lvl in range(1, levels + 1):
-                    q, _cnt = pool_level(base, valid, lvl)
-                    gxs, gys, ok = terrain.tile_horn_grids(q.astype(np.int16))
-                    img, byte = terrain.hillshade_bytes(gxs, gys, ok)
-                    vmask = byte >= 0
-                    n_valid = int(vmask.sum())
-                    vb = byte[vmask]
-                    m = img.shape[0]
-                    rows.append(
-                        (
-                            f"hillshade_{stem}_L{lvl}",
-                            tl,
-                            tn,
-                            lvl,
-                            m,
-                            m,
-                            "gray8",
-                            img.tobytes(),
-                            n_valid,
-                            int(vb.sum()) if n_valid else 0,
-                            int(vb.min()) if n_valid else None,
-                            int(vb.max()) if n_valid else None,
-                        )
-                    )
-                    payload += m * m
-                if payload >= _FLUSH_BYTES:
-                    yield flush(rows)
-                    rows, payload = [], 0
-            if rows:
-                yield flush(rows)
-
-    return catalog.select("tile_lat", "tile_lon", "filename", "data").mapInArrow(
-        run, schema=out_schema
-    )
+    return map_tiles(catalog, zoom_stack, schema, "filename")
 
 
 def pyramid_reference(grid: np.ndarray, level: int):

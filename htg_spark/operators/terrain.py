@@ -61,15 +61,13 @@ cache the rows take the salted layout, exactly as in ``elevation_join``.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import hgt
+from ..catalog import map_tiles
 from ..engine import TileKernel, check_n_salts
 
 # default sun: azimuth 315 (NW), altitude 45. Exact-double literals shared
@@ -319,100 +317,43 @@ def hillshade_bytes(gxs: np.ndarray, gys: np.ndarray, ok: np.ndarray):
     return img, byte
 
 
-# flush an output RecordBatch before its payload exceeds this (Arrow binary
-# offsets are int32 — a batch past 2^31 payload bytes silently corrupts;
-# see CLAUDE.md)
-_RENDER_FLUSH_BYTES = 1 << 28
-
-
 def render_hillshade(catalog: DataFrame) -> DataFrame:
     """Render every catalog tile's hillshade as a REAL grayscale image row
     (input_hint shape: image_id, bytes, w, h, fmt — plus the tile key and
     exact aggregate stats): the raster-wide terrain product, one mapInArrow
-    pass over the tile blobs, zero shuffles.
+    pass over the tile blobs (``map_tiles``), zero shuffles.
 
     The image is the (n-2)x(n-2) interior, row-major uint8, fmt='gray8'
     (invalid cells — void-adjacent stencils — render 0 and are excluded
     from the stats). n_valid / sum_byte / min_byte / max_byte are exact
     integers, so a closed-form SQL oracle can value-check the full render
     arithmetic without shipping the pixels."""
-    import pyarrow as pa
 
-    out_schema = T.StructType(
-        [
-            T.StructField("image_id", T.StringType()),
-            T.StructField("tile_lat", T.IntegerType()),
-            T.StructField("tile_lon", T.IntegerType()),
-            T.StructField("w", T.IntegerType()),
-            T.StructField("h", T.IntegerType()),
-            T.StructField("fmt", T.StringType()),
-            T.StructField("bytes", T.BinaryType()),
-            T.StructField("n_valid", T.LongType()),
-            T.StructField("sum_byte", T.LongType()),
-            T.StructField("min_byte", T.IntegerType()),
-            T.StructField("max_byte", T.IntegerType()),
-        ]
+    def render(row):
+        grid = hgt.decode_tile(row["data"])
+        img, byte = hillshade_bytes(*tile_horn_grids(grid))
+        vb = byte[byte >= 0]
+        m = grid.shape[0] - 2
+        yield (
+            "hillshade_" + row["filename"].rsplit(".", 1)[0],
+            row["tile_lat"],
+            row["tile_lon"],
+            m,
+            m,
+            "gray8",
+            img.tobytes(),
+            vb.size,
+            int(vb.sum()),
+            int(vb.min()) if vb.size else None,
+            int(vb.max()) if vb.size else None,
+        )
+
+    schema = (
+        "image_id string, tile_lat int, tile_lon int, w int, h int, "
+        "fmt string, bytes binary, n_valid bigint, sum_byte bigint, "
+        "min_byte int, max_byte int"
     )
-    names = [f.name for f in out_schema.fields]
-
-    def run(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
-        def flush(rows):
-            cols = list(zip(*rows))
-            arrays = [
-                pa.array(cols[0], type=pa.string()),
-                pa.array(cols[1], type=pa.int32()),
-                pa.array(cols[2], type=pa.int32()),
-                pa.array(cols[3], type=pa.int32()),
-                pa.array(cols[4], type=pa.int32()),
-                pa.array(cols[5], type=pa.string()),
-                pa.array(cols[6], type=pa.binary()),
-                pa.array(cols[7], type=pa.int64()),
-                pa.array(cols[8], type=pa.int64()),
-                pa.array(cols[9], type=pa.int32()),
-                pa.array(cols[10], type=pa.int32()),
-            ]
-            return pa.RecordBatch.from_arrays(arrays, names=names)
-
-        for batch in batches:
-            tl_a = batch.column(batch.schema.get_field_index("tile_lat"))
-            tn_a = batch.column(batch.schema.get_field_index("tile_lon"))
-            fn_a = batch.column(batch.schema.get_field_index("filename"))
-            data_a = batch.column(batch.schema.get_field_index("data"))
-            rows, payload = [], 0
-            for i in range(batch.num_rows):
-                grid = hgt.decode_tile(data_a[i].as_py())
-                gxs, gys, ok = tile_horn_grids(grid)
-                img, byte = hillshade_bytes(gxs, gys, ok)
-                valid = byte >= 0
-                n_valid = int(valid.sum())
-                vb = byte[valid]
-                m = int(grid.shape[0]) - 2
-                tl, tn = int(tl_a[i].as_py()), int(tn_a[i].as_py())
-                rows.append(
-                    (
-                        "hillshade_" + fn_a[i].as_py().rsplit(".", 1)[0],
-                        tl,
-                        tn,
-                        m,
-                        m,
-                        "gray8",
-                        img.tobytes(),
-                        n_valid,
-                        int(vb.sum()) if n_valid else 0,
-                        int(vb.min()) if n_valid else None,
-                        int(vb.max()) if n_valid else None,
-                    )
-                )
-                payload += m * m
-                if payload >= _RENDER_FLUSH_BYTES:
-                    yield flush(rows)
-                    rows, payload = [], 0
-            if rows:
-                yield flush(rows)
-
-    return catalog.select("tile_lat", "tile_lon", "filename", "data").mapInArrow(
-        run, schema=out_schema
-    )
+    return map_tiles(catalog, render, schema, "filename")
 
 
 def terrain_rgb(catalog: DataFrame) -> DataFrame:
@@ -431,93 +372,47 @@ def terrain_rgb(catalog: DataFrame) -> DataFrame:
     (0, 0, 0) and are excluded from the stats (the webmap nodata
     convention).
 
-    One map-only mapInArrow pass over the tile blobs — zero shuffle
-    Exchanges, the same proven scale shape as ``render_hillshade``.
+    One map-only mapInArrow pass over the tile blobs (``map_tiles``) —
+    zero shuffle Exchanges, the same proven scale shape as
+    ``render_hillshade``.
     """
-    import pyarrow as pa
 
-    out_schema = T.StructType(
-        [
-            T.StructField("image_id", T.StringType()),
-            T.StructField("tile_lat", T.IntegerType()),
-            T.StructField("tile_lon", T.IntegerType()),
-            T.StructField("w", T.IntegerType()),
-            T.StructField("h", T.IntegerType()),
-            T.StructField("fmt", T.StringType()),
-            T.StructField("bytes", T.BinaryType()),
-            T.StructField("n_valid", T.LongType()),
-            T.StructField("sum_r", T.LongType()),
-            T.StructField("sum_g", T.LongType()),
-            T.StructField("sum_b", T.LongType()),
-            T.StructField("sum_v", T.LongType()),
-            T.StructField("min_v", T.LongType()),
-            T.StructField("max_v", T.LongType()),
-        ]
+    def encode(row):
+        grid = hgt.decode_tile(row["data"])
+        n = int(grid.shape[0])
+        # the encode domain is elev >= -10000 (v >= 0); any sample below
+        # the floor (only VOID_VALUE in real SRTM, but be total over
+        # int16) renders nodata like void does
+        valid = grid >= -10000
+        v = np.where(valid, (grid.astype(np.int64) + 10000) * 10, 0)
+        img = np.empty((n, n, 3), dtype=np.uint8)
+        img[..., 0] = v >> 16
+        img[..., 1] = (v >> 8) & 255
+        img[..., 2] = v & 255
+        vv = v[valid]
+        yield (
+            "rgb_" + row["filename"].rsplit(".", 1)[0],
+            row["tile_lat"],
+            row["tile_lon"],
+            n,
+            n,
+            "rgb24",
+            img.tobytes(),
+            vv.size,
+            int((vv >> 16).sum()),
+            int(((vv >> 8) & 255).sum()),
+            int((vv & 255).sum()),
+            int(vv.sum()),
+            int(vv.min()) if vv.size else None,
+            int(vv.max()) if vv.size else None,
+        )
+
+    schema = (
+        "image_id string, tile_lat int, tile_lon int, w int, h int, "
+        "fmt string, bytes binary, n_valid bigint, sum_r bigint, "
+        "sum_g bigint, sum_b bigint, sum_v bigint, min_v bigint, max_v bigint"
     )
-    names = [f.name for f in out_schema.fields]
-
-    def run(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
-        def flush(rows):
-            cols = list(zip(*rows))
-            arrays = [
-                pa.array(cols[0], type=pa.string()),
-                pa.array(cols[1], type=pa.int32()),
-                pa.array(cols[2], type=pa.int32()),
-                pa.array(cols[3], type=pa.int32()),
-                pa.array(cols[4], type=pa.int32()),
-                pa.array(cols[5], type=pa.string()),
-                pa.array(cols[6], type=pa.binary()),
-            ] + [pa.array(cols[j], type=pa.int64()) for j in range(7, 14)]
-            return pa.RecordBatch.from_arrays(arrays, names=names)
-
-        for batch in batches:
-            tl_a = batch.column(batch.schema.get_field_index("tile_lat"))
-            tn_a = batch.column(batch.schema.get_field_index("tile_lon"))
-            fn_a = batch.column(batch.schema.get_field_index("filename"))
-            data_a = batch.column(batch.schema.get_field_index("data"))
-            rows, payload = [], 0
-            for i in range(batch.num_rows):
-                grid = hgt.decode_tile(data_a[i].as_py())
-                n = int(grid.shape[0])
-                # the encode domain is elev >= -10000 (v >= 0); any sample
-                # below the floor (only VOID_VALUE in real SRTM, but be
-                # total over int16) renders nodata like void does
-                valid = grid >= -10000
-                v = np.where(valid, (grid.astype(np.int64) + 10000) * 10, 0)
-                img = np.empty((n, n, 3), dtype=np.uint8)
-                img[..., 0] = v >> 16
-                img[..., 1] = (v >> 8) & 255
-                img[..., 2] = v & 255
-                vv = v[valid]
-                n_valid = int(valid.sum())
-                rows.append(
-                    (
-                        "rgb_" + fn_a[i].as_py().rsplit(".", 1)[0],
-                        int(tl_a[i].as_py()),
-                        int(tn_a[i].as_py()),
-                        n,
-                        n,
-                        "rgb24",
-                        img.tobytes(),
-                        n_valid,
-                        int((vv >> 16).sum()) if n_valid else 0,
-                        int(((vv >> 8) & 255).sum()) if n_valid else 0,
-                        int((vv & 255).sum()) if n_valid else 0,
-                        int(vv.sum()) if n_valid else 0,
-                        int(vv.min()) if n_valid else None,
-                        int(vv.max()) if n_valid else None,
-                    )
-                )
-                payload += 3 * n * n
-                if payload >= _RENDER_FLUSH_BYTES:
-                    yield flush(rows)
-                    rows, payload = [], 0
-            if rows:
-                yield flush(rows)
-
-    return catalog.select("tile_lat", "tile_lon", "filename", "data").mapInArrow(
-        run, schema=out_schema
-    )
+    return map_tiles(catalog, encode, schema, "filename")
 
 
 # ESRI D8 direction codes (powers of two, clockwise from East); 0 = flat
@@ -582,51 +477,20 @@ def tile_d8_grids(grid: np.ndarray):
 def d8_histogram(catalog: DataFrame) -> DataFrame:
     """Per-tile D8 flow-direction histogram: 9 rows per tile (the 8
     direction codes + 0 for flat/pit), counting interior cells whose full
-    3x3 neighborhood is valid. One map-only mapInArrow pass — the
-    histogram is computed in-map per tile (tiles are distinct rows), so
-    the plan has zero shuffle Exchanges, same as every raster product
-    here."""
-    import pyarrow as pa
+    3x3 neighborhood is valid. One map-only mapInArrow pass
+    (``map_tiles``) — the histogram is computed in-map per tile (tiles are
+    distinct rows), so the plan has zero shuffle Exchanges, same as every
+    raster product here."""
+    all_codes = [0] + [c for _, _, c in _D8_DIRS]
 
-    out_schema = T.StructType(
-        [
-            T.StructField("tile_lat", T.IntegerType()),
-            T.StructField("tile_lon", T.IntegerType()),
-            T.StructField("code", T.IntegerType()),
-            T.StructField("n_cells", T.LongType()),
-        ]
-    )
-    all_codes = np.array([0] + [c for _, _, c in _D8_DIRS], dtype=np.int32)
+    def histogram(row):
+        codes, ok = tile_d8_grids(hgt.decode_tile(row["data"]))
+        vals = codes[ok]
+        for c in all_codes:
+            yield row["tile_lat"], row["tile_lon"], c, int((vals == c).sum())
 
-    def run(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
-        for batch in batches:
-            tl_a = batch.column(batch.schema.get_field_index("tile_lat"))
-            tn_a = batch.column(batch.schema.get_field_index("tile_lon"))
-            data_a = batch.column(batch.schema.get_field_index("data"))
-            tls, tns, cds, cnts = [], [], [], []
-            for i in range(batch.num_rows):
-                grid = hgt.decode_tile(data_a[i].as_py())
-                codes, ok = tile_d8_grids(grid)
-                vals = codes[ok]
-                tl, tn = int(tl_a[i].as_py()), int(tn_a[i].as_py())
-                for c in all_codes:
-                    tls.append(tl)
-                    tns.append(tn)
-                    cds.append(int(c))
-                    cnts.append(int((vals == c).sum()))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(tls, type=pa.int32()),
-                    pa.array(tns, type=pa.int32()),
-                    pa.array(cds, type=pa.int32()),
-                    pa.array(cnts, type=pa.int64()),
-                ],
-                names=["tile_lat", "tile_lon", "code", "n_cells"],
-            )
-
-    return catalog.select("tile_lat", "tile_lon", "data").mapInArrow(
-        run, schema=out_schema
-    )
+    schema = "tile_lat int, tile_lon int, code int, n_cells bigint"
+    return map_tiles(catalog, histogram, schema)
 
 
 def d8_reference(grid: np.ndarray, row: int, col: int):
@@ -745,51 +609,26 @@ def flow_accumulation_stats(catalog: DataFrame) -> DataFrame:
     """Per-tile drainage summary of the D8 flow-accumulation raster: ok
     cell count, total and maximum accumulation, and the number of
     'channel' cells (accumulation >= CHANNEL_THRESHOLD). One map-only
-    mapInArrow pass — same zero-Exchange shape as every raster product."""
-    import pyarrow as pa
+    mapInArrow pass (``map_tiles``) — same zero-Exchange shape as every
+    raster product."""
 
-    out_schema = T.StructType(
-        [
-            T.StructField("tile_lat", T.IntegerType()),
-            T.StructField("tile_lon", T.IntegerType()),
-            T.StructField("n_cells", T.LongType()),
-            T.StructField("sum_acc", T.LongType()),
-            T.StructField("max_acc", T.LongType()),
-            T.StructField("n_channel", T.LongType()),
-        ]
+    def drainage(row):
+        acc = tile_flow_accumulation(hgt.decode_tile(row["data"]))
+        pos = acc[acc > 0]
+        yield (
+            row["tile_lat"],
+            row["tile_lon"],
+            pos.size,
+            int(pos.sum()),
+            int(pos.max()) if pos.size else 0,
+            int((acc >= CHANNEL_THRESHOLD).sum()),
+        )
+
+    schema = (
+        "tile_lat int, tile_lon int, n_cells bigint, sum_acc bigint, "
+        "max_acc bigint, n_channel bigint"
     )
-
-    def run(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
-        for batch in batches:
-            tl_a = batch.column(batch.schema.get_field_index("tile_lat"))
-            tn_a = batch.column(batch.schema.get_field_index("tile_lon"))
-            data_a = batch.column(batch.schema.get_field_index("data"))
-            out = {k: [] for k in out_schema.fieldNames()}
-            for i in range(batch.num_rows):
-                grid = hgt.decode_tile(data_a[i].as_py())
-                acc = tile_flow_accumulation(grid)
-                pos = acc[acc > 0]
-                out["tile_lat"].append(int(tl_a[i].as_py()))
-                out["tile_lon"].append(int(tn_a[i].as_py()))
-                out["n_cells"].append(int(pos.size))
-                out["sum_acc"].append(int(pos.sum()) if pos.size else 0)
-                out["max_acc"].append(int(pos.max()) if pos.size else 0)
-                out["n_channel"].append(int((acc >= CHANNEL_THRESHOLD).sum()))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out["tile_lat"], type=pa.int32()),
-                    pa.array(out["tile_lon"], type=pa.int32()),
-                    pa.array(out["n_cells"], type=pa.int64()),
-                    pa.array(out["sum_acc"], type=pa.int64()),
-                    pa.array(out["max_acc"], type=pa.int64()),
-                    pa.array(out["n_channel"], type=pa.int64()),
-                ],
-                names=out_schema.fieldNames(),
-            )
-
-    return catalog.select("tile_lat", "tile_lon", "data").mapInArrow(
-        run, schema=out_schema
-    )
+    return map_tiles(catalog, drainage, schema)
 
 
 # default contour levels for the per-tile stats (SRTM elevations). The
@@ -856,57 +695,29 @@ def contour_stats(catalog: DataFrame, levels=CONTOUR_LEVELS) -> DataFrame:
     """Per-(tile, level) marching-squares contour summary: valid cell
     count, total contour segment count, and saddle-cell count over the
     full (n-1)x(n-1) cell lattice. One decode per tile serves every level
-    in a single map-only mapInArrow pass — zero shuffle Exchanges, the
-    standard raster-product shape here."""
-    import pyarrow as pa
-
-    out_schema = T.StructType(
-        [
-            T.StructField("tile_lat", T.IntegerType()),
-            T.StructField("tile_lon", T.IntegerType()),
-            T.StructField("level", T.IntegerType()),
-            T.StructField("n_cells", T.LongType()),
-            T.StructField("n_segments", T.LongType()),
-            T.StructField("n_saddles", T.LongType()),
-        ]
-    )
+    in a single map-only mapInArrow pass (``map_tiles``) — zero shuffle
+    Exchanges, the standard raster-product shape here."""
     lvls = tuple(int(v) for v in levels)
 
-    def run(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
-        for batch in batches:
-            tl_a = batch.column(batch.schema.get_field_index("tile_lat"))
-            tn_a = batch.column(batch.schema.get_field_index("tile_lon"))
-            data_a = batch.column(batch.schema.get_field_index("data"))
-            out = {k: [] for k in out_schema.fieldNames()}
-            for i in range(batch.num_rows):
-                grid = hgt.decode_tile(data_a[i].as_py())
-                tl, tn = int(tl_a[i].as_py()), int(tn_a[i].as_py())
-                for lv in lvls:
-                    idx, valid = tile_contour_grids(grid, lv)
-                    vi = idx[valid]
-                    out["tile_lat"].append(tl)
-                    out["tile_lon"].append(tn)
-                    out["level"].append(lv)
-                    out["n_cells"].append(int(valid.sum()))
-                    out["n_segments"].append(int(_MS_SEGMENTS[vi].sum()))
-                    out["n_saddles"].append(
-                        int(np.isin(vi, _MS_SADDLES).sum())
-                    )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out["tile_lat"], type=pa.int32()),
-                    pa.array(out["tile_lon"], type=pa.int32()),
-                    pa.array(out["level"], type=pa.int32()),
-                    pa.array(out["n_cells"], type=pa.int64()),
-                    pa.array(out["n_segments"], type=pa.int64()),
-                    pa.array(out["n_saddles"], type=pa.int64()),
-                ],
-                names=out_schema.fieldNames(),
+    def contours(row):
+        grid = hgt.decode_tile(row["data"])
+        for lv in lvls:
+            idx, valid = tile_contour_grids(grid, lv)
+            vi = idx[valid]
+            yield (
+                row["tile_lat"],
+                row["tile_lon"],
+                lv,
+                int(valid.sum()),
+                int(_MS_SEGMENTS[vi].sum()),
+                int(np.isin(vi, _MS_SADDLES).sum()),
             )
 
-    return catalog.select("tile_lat", "tile_lon", "data").mapInArrow(
-        run, schema=out_schema
+    schema = (
+        "tile_lat int, tile_lon int, level int, n_cells bigint, "
+        "n_segments bigint, n_saddles bigint"
     )
+    return map_tiles(catalog, contours, schema)
 
 
 # quantile probes as integer ratios so the selected index is exact integer
@@ -937,52 +748,17 @@ def tile_quantiles(grid: np.ndarray):
 def elevation_quantiles(catalog: DataFrame) -> DataFrame:
     """Per-tile exact elevation quantiles (tile_quantiles) — the
     order-statistics extension of the tile min/max stats: one map-only
-    mapInArrow pass, zero shuffle Exchanges."""
-    import pyarrow as pa
+    mapInArrow pass (``map_tiles``), zero shuffle Exchanges."""
 
-    names = ["q25", "q50", "q75", "q90", "q99"]
-    out_schema = T.StructType(
-        [
-            T.StructField("tile_lat", T.IntegerType()),
-            T.StructField("tile_lon", T.IntegerType()),
-            T.StructField("n_valid", T.LongType()),
-            T.StructField("min_elev", T.IntegerType()),
-            T.StructField("max_elev", T.IntegerType()),
-        ]
-        + [T.StructField(nm, T.IntegerType()) for nm in names]
+    def quantiles(row):
+        n, mn, mx, qs = tile_quantiles(hgt.decode_tile(row["data"]))
+        yield (row["tile_lat"], row["tile_lon"], n, mn, mx, *qs)
+
+    schema = (
+        "tile_lat int, tile_lon int, n_valid bigint, min_elev int, "
+        "max_elev int, q25 int, q50 int, q75 int, q90 int, q99 int"
     )
-
-    def run(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
-        for batch in batches:
-            tl_a = batch.column(batch.schema.get_field_index("tile_lat"))
-            tn_a = batch.column(batch.schema.get_field_index("tile_lon"))
-            data_a = batch.column(batch.schema.get_field_index("data"))
-            out = {k: [] for k in out_schema.fieldNames()}
-            for i in range(batch.num_rows):
-                grid = hgt.decode_tile(data_a[i].as_py())
-                n, mn, mx, qs = tile_quantiles(grid)
-                out["tile_lat"].append(int(tl_a[i].as_py()))
-                out["tile_lon"].append(int(tn_a[i].as_py()))
-                out["n_valid"].append(n)
-                out["min_elev"].append(mn)
-                out["max_elev"].append(mx)
-                for nm, q in zip(names, qs):
-                    out[nm].append(q)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out["tile_lat"], type=pa.int32()),
-                    pa.array(out["tile_lon"], type=pa.int32()),
-                    pa.array(out["n_valid"], type=pa.int64()),
-                    pa.array(out["min_elev"], type=pa.int32()),
-                    pa.array(out["max_elev"], type=pa.int32()),
-                ]
-                + [pa.array(out[nm], type=pa.int32()) for nm in names],
-                names=out_schema.fieldNames(),
-            )
-
-    return catalog.select("tile_lat", "tile_lon", "data").mapInArrow(
-        run, schema=out_schema
-    )
+    return map_tiles(catalog, quantiles, schema)
 
 
 def terrain_rgb_decode(payload: bytes, w: int, h: int) -> np.ndarray:
@@ -1016,19 +792,20 @@ def horn_reference(grid: np.ndarray, row: int, col: int):
 # Every per-tile stencil above deliberately skips the outermost ring
 # (reference parity: tile.rs treats tiles as independent). At mosaic scale
 # that discards ~0.33% of every tile — and 100% of one-cell-wide features
-# crossing tile seams. SRTM neighbors share their boundary row/col (our
-# row 0 IS the north tile's row 1200), so the stencil at our edge needs
-# exactly ONE ring from each neighbor: padded row -1 = north tile's row
-# 1199, padded row 1201 = south tile's row 1, padded col -1 = west tile's
-# col 1199, padded col 1201 = east tile's col 1, and the 4 corner pixels
+# crossing tile seams. SRTM neighbors share their boundary row/col (on an
+# n x n tile our row 0 IS the north tile's row n-1), so the stencil at our
+# edge needs exactly ONE ring from each neighbor: padded row -1 = north
+# tile's row n-2, padded row n = south tile's row 1, padded col -1 = west
+# tile's col n-2, padded col n = east tile's col 1, and the 4 corner pixels
 # from the diagonal tiles.
 #
-# Scale shape: halos are exchanged as 2,402-byte strips (0.08% of the
-# 2.9 MB blob), extracted in one map-only pass, shuffled by RECEIVER key,
-# and joined back broadcast (default; strips are ~20 KB/tile) or shuffled
-# (the >broadcast-threshold path). The tile blobs themselves NEVER cross
-# an Exchange on the broadcast path — two map passes over the catalog
-# beat one full-data shuffle by orders of magnitude at raster scale.
+# Scale shape: halos are exchanged as 2n-byte strips (2,402 bytes on
+# SRTM3, 0.08% of the 2.9 MB blob), extracted in one map-only pass,
+# shuffled by RECEIVER key, and joined back broadcast (strips are ~20
+# KB/tile on SRTM3, ~58 KB on SRTM1, so the strip map fits a broadcast at
+# any real catalog size). The tile blobs themselves NEVER cross an
+# Exchange — two map passes over the catalog beat one full-data shuffle
+# by orders of magnitude at raster scale.
 
 HALO_SIDES = ("N", "S", "W", "E", "NW", "NE", "SW", "SE")
 
@@ -1038,40 +815,28 @@ def halo_strips(catalog: DataFrame) -> DataFrame:
     RECEIVING tile: (tile_lat, tile_lon, side, strip). `side` names the
     receiver's padded edge the strip fills. Strips are little-endian
     int16 ('<i2'); receivers for tiles absent from the catalog are
-    dropped by the downstream join. Map-only, ~9.6 KB out per tile."""
+    dropped by the downstream join. Map-only (``map_tiles``), ~9.6 KB out
+    per SRTM3 tile."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "tile_lat": [],
-                "tile_lon": [],
-                "side": [],
-                "strip": [],
-            }
-            for _, r in pdf.iterrows():
-                g = hgt.decode_tile(bytes(r["data"])).astype("<i2")
-                lat, lon = int(r["tile_lat"]), int(r["tile_lon"])
-                # (receiver_dlat, receiver_dlon, side_filled, source slice)
-                out = (
-                    (-1, 0, "N", g[1199, :]),   # south tile's padded row -1
-                    (+1, 0, "S", g[1, :]),      # north tile's padded row 1201
-                    (0, +1, "W", g[:, 1199]),   # east tile's padded col -1
-                    (0, -1, "E", g[:, 1]),      # west tile's padded col 1201
-                    (-1, +1, "NW", g[1199:1200, 1199]),
-                    (-1, -1, "NE", g[1199:1200, 1]),
-                    (+1, +1, "SW", g[1:2, 1199]),
-                    (+1, -1, "SE", g[1:2, 1]),
-                )
-                for dlat, dlon, side, src in out:
-                    rows["tile_lat"].append(lat + dlat)
-                    rows["tile_lon"].append(lon + dlon)
-                    rows["side"].append(side)
-                    rows["strip"].append(np.ascontiguousarray(src).tobytes())
-            yield pd.DataFrame(rows)
+    def strips(row):
+        g = hgt.decode_tile(row["data"]).astype("<i2")
+        n = g.shape[0]
+        lat, lon = row["tile_lat"], row["tile_lon"]
+        # (receiver_dlat, receiver_dlon, side_filled, source slice)
+        for dlat, dlon, side, src in (
+            (-1, 0, "N", g[n - 2, :]),   # south tile's padded row -1
+            (+1, 0, "S", g[1, :]),       # north tile's padded row n
+            (0, +1, "W", g[:, n - 2]),   # east tile's padded col -1
+            (0, -1, "E", g[:, 1]),       # west tile's padded col n
+            (-1, +1, "NW", g[n - 2 : n - 1, n - 2]),
+            (-1, -1, "NE", g[n - 2 : n - 1, 1]),
+            (+1, +1, "SW", g[1:2, n - 2]),
+            (+1, -1, "SE", g[1:2, 1]),
+        ):
+            yield lat + dlat, lon + dlon, side, np.ascontiguousarray(src).tobytes()
 
-    return catalog.select("tile_lat", "tile_lon", "data").mapInPandas(
-        run, schema="tile_lat int, tile_lon int, side string, strip binary"
-    )
+    schema = "tile_lat int, tile_lon int, side string, strip binary"
+    return map_tiles(catalog, strips, schema)
 
 
 def pad_with_halos(grid: np.ndarray, halos: dict[str, bytes]) -> np.ndarray:
@@ -1105,8 +870,8 @@ def pad_with_halos(grid: np.ndarray, halos: dict[str, bytes]) -> np.ndarray:
     return p
 
 
-def mosaic_horn_stats(catalog: DataFrame, strategy: str = "broadcast") -> DataFrame:
-    """Boundary-correct Horn hillshade stats over the FULL 1201^2 tile —
+def mosaic_horn_stats(catalog: DataFrame) -> DataFrame:
+    """Boundary-correct Horn hillshade stats over the full n x n tile —
     the halo-exchange mosaic stencil. Edge cells whose 9-sample stencil
     reaches into a PRESENT neighbor become valid (n_edge_valid counts
     them); edges without a neighbor stay invalid, bit-compatible with the
@@ -1114,13 +879,8 @@ def mosaic_horn_stats(catalog: DataFrame, strategy: str = "broadcast") -> DataFr
     render_hillshade: tile_horn_grids on the padded grid + the exact
     hillshade_bytes quantization.
 
-    strategy='broadcast' (default): the aggregated strip map broadcasts
-    and the blob side stays map-only — zero blob Exchanges (PLANS.md
-    gate). strategy='shuffle': both sides hash-partition on the tile key
-    — the path when the strip map outgrows the broadcast threshold
-    (strips are ~20 KB/tile, so that takes ~10^7 tiles)."""
-    if strategy not in ("broadcast", "shuffle"):
-        raise ValueError(f"unknown strategy {strategy!r}")
+    The aggregated strip map broadcasts and the blob side stays map-only —
+    zero blob Exchanges (PLANS.md gate)."""
     strips = (
         halo_strips(catalog)
         .groupBy("tile_lat", "tile_lon")
@@ -1130,44 +890,33 @@ def mosaic_horn_stats(catalog: DataFrame, strategy: str = "broadcast") -> DataFr
             ).alias("halos")
         )
     )
-    if strategy == "broadcast":
-        strips = F.broadcast(strips)
     joined = catalog.select("tile_lat", "tile_lon", "data").join(
-        strips, ["tile_lat", "tile_lon"], "left"
+        F.broadcast(strips), ["tile_lat", "tile_lon"], "left"
     )
 
-    out_schema = (
+    def stats(row):
+        grid = hgt.decode_tile(row["data"])
+        padded = pad_with_halos(grid, dict(row["halos"] or ()))
+        gxs, gys, ok = tile_horn_grids(padded)
+        _, byte = hillshade_bytes(gxs, gys, ok)
+        edge = np.zeros_like(ok)
+        edge[0, :] = edge[-1, :] = True
+        edge[:, 0] = edge[:, -1] = True
+        yield (
+            row["tile_lat"],
+            row["tile_lon"],
+            int(ok.sum()),
+            int((ok & edge).sum()),
+            int(gxs[ok].sum()),
+            int(gys[ok].sum()),
+            int(byte[ok].sum()),
+            int(byte[ok].min()) if ok.any() else -1,
+            int(byte[ok].max()) if ok.any() else -1,
+        )
+
+    schema = (
         "tile_lat int, tile_lon int, n_valid bigint, n_edge_valid bigint, "
         "sum_gxs bigint, sum_gys bigint, sum_byte bigint, min_byte int, "
         "max_byte int"
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                k: [] for k in (
-                    "tile_lat", "tile_lon", "n_valid", "n_edge_valid",
-                    "sum_gxs", "sum_gys", "sum_byte", "min_byte", "max_byte",
-                )
-            }
-            for _, r in pdf.iterrows():
-                grid = hgt.decode_tile(bytes(r["data"]))
-                halos = r["halos"] if r["halos"] is not None else {}
-                padded = pad_with_halos(grid, dict(halos))
-                gxs, gys, ok = tile_horn_grids(padded)
-                _, byte = hillshade_bytes(gxs, gys, ok)
-                edge = np.zeros_like(ok)
-                edge[0, :] = edge[-1, :] = True
-                edge[:, 0] = edge[:, -1] = True
-                out["tile_lat"].append(int(r["tile_lat"]))
-                out["tile_lon"].append(int(r["tile_lon"]))
-                out["n_valid"].append(int(ok.sum()))
-                out["n_edge_valid"].append(int((ok & edge).sum()))
-                out["sum_gxs"].append(int(gxs[ok].sum()))
-                out["sum_gys"].append(int(gys[ok].sum()))
-                out["sum_byte"].append(int(byte[ok].sum()))
-                out["min_byte"].append(int(byte[ok].min()) if ok.any() else -1)
-                out["max_byte"].append(int(byte[ok].max()) if ok.any() else -1)
-            yield pd.DataFrame(out)
-
-    return joined.mapInPandas(run, schema=out_schema)
+    return map_tiles(joined, stats, schema, "halos")

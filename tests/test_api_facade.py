@@ -117,6 +117,17 @@ def test_preload_all_and_bbox(spark):
     assert eng4.preload(bounds=(-10.0, -10.0, -9.0, -9.0))["tiles_matched"] == 0
 
 
+def test_repeated_preload_keeps_the_catalog_cached(spark):
+    """Only an unbounded preload persists, and what it persists is the
+    engine's own catalog, which the path index reads next: five preloads,
+    with a bbox preload among them, leave it cached."""
+    eng = ElevationEngine(spark, grids=fixtures.default_catalog_grids())
+    for bounds in (None, None, (35.2, 138.2, 35.8, 138.8), None, None):
+        eng.preload(bounds)
+    assert eng.catalog.is_cached
+    eng.catalog.unpersist()
+
+
 def test_preload_stats_progression(spark):
     """Full PreloadStats field parity (service.rs:114-126; populated
     685-722): first preload loads every matched tile; a repeat reports

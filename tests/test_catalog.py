@@ -72,6 +72,36 @@ def test_tile_info(spark):
     assert g.void_count == 0 and g.min_elev == 0 and g.max_elev == 2400
 
 
+def test_tile_batches_flushes_under_the_payload_cap():
+    """map_tiles' body, without Spark: a RecordBatch is flushed once its
+    binary/string payload (NULLs count 0) reaches flush_bytes, rows carry
+    across input batches, and the flushed batches hold exactly the rows
+    of the one unflushed batch, in order."""
+    import pyarrow as pa
+
+    inp = [
+        pa.RecordBatch.from_pydict(
+            {"tile_lat": [k, k + 1], "tile_lon": [0, 0], "data": [b"x" * 40] * 2}
+        )
+        for k in (0, 2)
+    ]
+    schema = pa.schema(
+        [("tile_lat", pa.int32()), ("name", pa.string()), ("strip", pa.binary())]
+    )
+
+    def fn(row):
+        # payloads 42 then 40 per tile row: 42, 82, 124 -> flush, ...
+        yield row["tile_lat"], "ab", row["data"]
+        yield row["tile_lat"], None, row["data"]
+
+    whole = list(catalog._tile_batches(iter(inp), fn, schema, 1 << 40))
+    flushed = list(catalog._tile_batches(iter(inp), fn, schema, 100))
+    assert [b.num_rows for b in whole] == [8]
+    assert [b.num_rows for b in flushed] == [3, 3, 2]
+    assert all(b.schema == schema for b in flushed)
+    assert pa.Table.from_batches(flushed).equals(pa.Table.from_batches(whole))
+
+
 def test_srtm1_size_detection(spark, tmp_path):
     big = np.zeros((3601, 3601), dtype=np.int16)
     big[1800, 1800] = 1234

@@ -958,3 +958,45 @@ def test_nan_coordinate_casts_without_warning(spark, grids):
         warnings.simplefilter("error")
         assert list(hgt.get_elevations_batch(coords, grids, default=-1)) == [-1, 500, -1]
         assert eng.get_elevations_batch(coords, default=-1) == [-1, 500, -1]
+
+
+def test_spill_streams_only_missing_tiles_by_key(spark, grids, monkeypatch):
+    """When some spill files already exist, only the tiles whose file is
+    missing stream to the driver, selected by tile key and named from the
+    collected SHA-256 hashes; the tiles already on disk keep their names."""
+    import hashlib
+
+    from htg_spark import engine as engine_mod
+
+    index = ElevationEngine(spark, grids=grids)._path_index().value
+    extra = np.random.default_rng(2024).integers(0, 3000, size=(1201, 1201)).astype(np.int16)
+    blob = hgt.encode_tile(extra)
+    written = []
+    orig_spill = engine_mod._spill_blob
+
+    def spy(sc, name, blob=None):
+        if blob is not None:
+            written.append((name, blob))
+        return orig_spill(sc, name, blob)
+
+    monkeypatch.setattr(engine_mod, "_spill_blob", spy)
+    eng = ElevationEngine(spark, grids={**grids, (50, 50): extra})
+    name = hashlib.sha256(blob).hexdigest() + ".hgt"
+    assert eng._path_index().value == {**index, (50, 50): name}
+    assert written == [(name, blob)]
+    assert eng.get_elevation(50.5, 50.5) == int(extra[600, 600])
+
+
+def test_path_index_refuses_a_duplicated_tile_key(spark, grids, tile_dir):
+    """The path index names one file per tile key, so a catalog with two
+    rows for one key raises ValueError naming the key, whether it carries
+    its own paths or is spilled; no row silently wins."""
+    from htg_spark.catalog import catalog_from_grids
+
+    for cat in (
+        catalog_from_grids(spark, grids),
+        ElevationEngine(spark, tile_dir=tile_dir).catalog,
+    ):
+        dup = cat.unionByName(cat.where((F.col("tile_lat") == 35) & (F.col("tile_lon") == 138)))
+        with pytest.raises(ValueError, match=r"tile key \(35, 138\)"):
+            ElevationEngine(spark, catalog=dup).n_tiles()

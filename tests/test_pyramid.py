@@ -98,7 +98,7 @@ def test_tile_pyramid_flushes_large_batches(monkeypatch, spark):
     from htg_spark import catalog as cat_mod
     from htg_spark.operators import pyramid as pyr
 
-    monkeypatch.setattr(pyr, "_FLUSH_BYTES", 500_000)
+    monkeypatch.setattr(cat_mod, "_FLUSH_BYTES", 500_000)
     rng = np.random.default_rng(13)
     grid = rng.integers(0, 4000, size=(1201, 1201)).astype(np.int16)
     grids = {(10, k): grid for k in range(4)}

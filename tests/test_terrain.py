@@ -529,7 +529,7 @@ def test_render_hillshade_flushes_large_batches(monkeypatch, spark):
     from htg_spark import catalog as cat_mod
     from htg_spark.operators import terrain as terr
 
-    monkeypatch.setattr(terr, "_RENDER_FLUSH_BYTES", 3_000_000)
+    monkeypatch.setattr(cat_mod, "_FLUSH_BYTES", 3_000_000)
     rng = np.random.default_rng(9)
     base = rng.integers(0, 4000, size=(1201, 1201)).astype(np.int16)
     grids = {(10, k): base for k in range(6)}  # ~8.6 MB of rendered payload
@@ -698,6 +698,38 @@ def test_terrain_rgb_extremes_fit_24_bits():
     assert not (below >= -10000).any()
 
 
+def test_halo_strips_take_the_neighbour_ring_on_srtm1(spark):
+    """Each halo strip is the ring next to the edge a neighbour shares, by
+    the tile's own size n: rows/cols n-2 and 1, here on SRTM1 (n = 3601),
+    where a strip cut at SRTM3's 1199 would be interior samples."""
+    from htg_spark import catalog as cat_mod
+
+    rng = np.random.default_rng(11)
+    n = hgt.SRTM1_SAMPLES
+    grids = {
+        (10, 20): rng.integers(-500, 4000, size=(n, n)).astype(np.int16),
+        (10, 21): rng.integers(-500, 4000, size=(n, n)).astype(np.int16),
+    }
+    cat = cat_mod.catalog_from_grids(spark, grids)
+    got = {
+        (r.tile_lat, r.tile_lon, r.side): np.frombuffer(r.strip, dtype="<i2")
+        for r in terrain.halo_strips(cat).collect()
+    }
+    want = {}
+    for (la, lo), g in grids.items():
+        want[(la - 1, lo, "N")] = g[n - 2, :]
+        want[(la + 1, lo, "S")] = g[1, :]
+        want[(la, lo + 1, "W")] = g[:, n - 2]
+        want[(la, lo - 1, "E")] = g[:, 1]
+        want[(la - 1, lo + 1, "NW")] = [g[n - 2, n - 2]]
+        want[(la - 1, lo - 1, "NE")] = [g[n - 2, 1]]
+        want[(la + 1, lo + 1, "SW")] = [g[1, n - 2]]
+        want[(la + 1, lo - 1, "SE")] = [g[1, 1]]
+    assert got.keys() == want.keys()
+    for key, strip in want.items():
+        assert np.array_equal(got[key], strip), key
+
+
 def test_mosaic_horn_distinct_content_2x2(spark):
     """Halo exchange with FOUR DISTINCT random grids in a 2x2 mosaic —
     distinct content is what catches strip direction/orientation mix-ups
@@ -705,8 +737,7 @@ def test_mosaic_horn_distinct_content_2x2(spark):
     between identical tiles is invisible). The expected padded grid per
     tile is assembled INDEPENDENTLY by literal slicing of the neighbor
     arrays (SRTM shared-boundary convention), then pushed through the
-    same stencil+quantization math; the shuffle strategy must return
-    identical rows; the broadcast plan must shuffle only strips."""
+    same stencil+quantization math; the plan must shuffle only strips."""
     import io
     import re
     from contextlib import redirect_stdout
@@ -786,11 +817,3 @@ def test_mosaic_horn_distinct_content_2x2(spark):
         block = p[pr - 1 : pr + 2, pc - 1 : pc + 2]
         assert bool(ok[interior_corner]) == bool((block != hgt.VOID_VALUE).all())
 
-    shuf = {
-        (r.tile_lat, r.tile_lon): r
-        for r in terrain.mosaic_horn_stats(cat, strategy="shuffle").collect()
-    }
-    assert shuf == rows
-
-    with pytest.raises(ValueError):
-        terrain.mosaic_horn_stats(cat, strategy="nope")
