@@ -5,10 +5,12 @@ re-timed, and their plans captured without touching the driver contract).
 Usage:
   python bench_extra.py [--plans DIR] [--trials N] [--suffix before] [query ...]
 
-With no query names, runs every entry. For each selected query it times
-`materialize(fn(spark, sf_dir))` with the same xxhash64-materialization as
-bench.py (min of N trials) and, when --plans is given, writes
-DIR/<query>_<suffix>.txt with the `.explain("formatted")` output.
+The leaves are bench.py's, in its order, from the query registry
+(``htg_spark.registry.bench_entries``). With no query names, runs every
+entry. For each selected query it times `materialize(fn(spark, sf_dir))`
+with the same xxhash64-materialization as bench.py (min of N trials) and,
+when --plans is given, writes DIR/<query>_<suffix>.txt with the
+`.explain("formatted")` output.
 """
 
 import argparse
@@ -21,136 +23,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F
 
+from htg_spark.registry import bench_entries
 from htg_spark.session import get_spark
-
-
-def build_entries(spark, sf_dir):
-    """Mirror of bench.py's pipeline_entries (same callables, same args)."""
-    from htg_spark import curation_queries as _cq
-    from htg_spark import driver_queries as _dq
-    from htg_spark import pipeline_queries as pq
-    from htg_spark import polygon_queries as _polyq
-    from htg_spark import spatial_queries as _sq
-    from htg_spark import terrain_queries as _tq
-    from htg_spark.driver_queries import (
-        derive_audio_table,
-        derive_images_table,
-        derive_video_table,
-    )
-    from htg_spark.operators import multimodal
-
-    ev_ids = spark.read.parquet(f"{sf_dir}/events.parquet").select("event_id")
-    imgs = derive_images_table(ev_ids).persist()
-    imgs.count()
-    auds = derive_audio_table(ev_ids).persist()
-    auds.count()
-    vids = derive_video_table(ev_ids).persist()
-    vids.count()
-
-    entries = [
-        ("dedup_exact", pq.q_dedup_exact),
-        ("minhash_signatures", pq.q_minhash_signatures),
-        ("lsh_dedup_pairs", pq.q_lsh_dedup_pairs),
-        ("ngram_jaccard_join", pq.q_ngram_jaccard_join),
-        ("incremental_dedup", pq.q_incremental_dedup),
-        ("neardup_groups", pq.q_neardup_groups),
-        ("simhash", pq.q_simhash),
-        ("simhash_near_dup", pq.q_simhash_near_dup),
-        ("ann_topk", pq.q_ann_topk),
-        ("ann_ivf_topk", pq.q_ann_ivf_topk),
-        ("ann_lsh_topk_multi", pq.q_ann_lsh_topk_multi),
-        ("ann_pq_topk", pq.q_ann_pq_topk),
-        ("embedding_near_dup", pq.q_embedding_near_dup),
-        ("semdedup", pq.q_semdedup),
-        ("text_quality", pq.q_text_quality),
-        ("text_stats", pq.q_text_stats),
-        ("bpe_token_stats", pq.q_bpe_token_stats),
-        ("lang_id", pq.q_lang_id),
-        ("repetition_stats", pq.q_repetition_stats),
-        ("top_terms", pq.q_top_terms),
-        ("pii_redact", pq.q_pii_redact),
-        ("line_filter", pq.q_line_filter),
-        ("doc_fingerprint", pq.q_doc_fingerprint),
-        ("rolling_fingerprint", pq.q_rolling_fingerprint),
-        ("line_dedup", pq.q_line_dedup),
-        ("props_stats", pq.q_props_stats),
-        ("user_sessions", pq.q_user_sessions),
-        ("funnel_stages", pq.q_funnel_stages),
-        ("event_asof_join", pq.q_event_asof_join),
-        ("interval_attribution", pq.q_interval_attribution),
-        ("phash_near_dup", pq.q_phash_near_dup),
-        ("frame_near_dup", pq.q_frame_near_dup),
-        ("audio_near_dup", pq.q_audio_near_dup),
-        ("decontamination", _cq.q_decontamination),
-        ("stratified_sample", _cq.q_stratified_sample),
-        ("mixture_weights", _cq.q_mixture_weights),
-        ("sequence_pack", _cq.q_sequence_pack),
-        ("sequence_fill", _cq.q_sequence_fill),
-        ("length_percentiles", _cq.q_length_percentiles),
-        ("cell_heatmap", _dq.q_cell_heatmap),
-        ("knn_poi_join", _dq.q_knn_poi_join),
-        ("geohash_cells", _sq.q_geohash_cells),
-        ("mercator_tiles", _sq.q_mercator_tiles),
-        ("density_tiles", _sq.q_density_tiles),
-        ("segment_snap", _sq.q_segment_snap),
-        ("mercator_warp", _dq.q_mercator_warp),
-        ("radius_neighbors", _sq.q_radius_neighbors),
-        ("idw_grid", _sq.q_idw_grid),
-        ("trajectory_segments", _sq.q_trajectory_segments),
-        ("simplify_track", _sq.q_simplify_track),
-        ("resample_track", _sq.q_resample_track),
-        ("convex_hull", _sq.q_convex_hull),
-        ("colocation", _sq.q_colocation),
-        ("od_flows", _sq.q_od_flows),
-        ("track_kinematics", _sq.q_track_kinematics),
-        ("trip_shape", _sq.q_trip_shape),
-        ("od_top_destinations", _sq.q_od_top_destinations),
-        ("cell_smooth", _sq.q_cell_smooth),
-        ("dbscan_clusters", _sq.q_dbscan_clusters),
-        ("point_in_polygon", _polyq.q_point_in_polygon),
-        ("polygon_metrics", _polyq.q_polygon_metrics),
-        ("polygon_zonal_stats", _polyq.q_polygon_zonal_stats),
-        ("images_in_polygon", _polyq.q_images_in_polygon),
-        ("geojson_containment", _polyq.q_geojson_containment),
-        ("geofence_dwell", _polyq.q_geofence_dwell),
-        ("terrain_horn", _tq.q_terrain_horn),
-        ("terrain_cogroup", _tq.q_terrain_cogroup),
-        ("tile_hillshade_stats", _tq.q_tile_hillshade_stats),
-        ("tile_pyramid_stats", _tq.q_tile_pyramid_stats),
-        ("pyramid_hillshade_stats", _tq.q_pyramid_hillshade_stats),
-        ("terrain_rgb_stats", _tq.q_terrain_rgb_stats),
-        ("d8_flow_histogram", _tq.q_d8_histogram),
-        ("flow_accumulation", _tq.q_flow_accumulation),
-        ("mosaic_hillshade", _tq.q_mosaic_hillshade),
-        ("contour_stats", _tq.q_contour_stats),
-        ("elevation_quantiles", _tq.q_elevation_quantiles),
-        ("image_chips", lambda s, d: multimodal.chip_images(imgs, chip=4).select(
-            "image_id", "chip_row", "chip_col", "w", "h", "sum_r", "sum_g", "sum_b"
-        )),
-        ("audio_features", lambda s, d: multimodal.audio_features(auds)),
-        ("video_frames", lambda s, d: multimodal.video_frame_sample(
-            vids, every_n=3
-        ).select("image_id", "frame_idx", "w", "h", "sum_r", "sum_g", "sum_b")),
-        ("path_profile", _tq.q_path_profile),
-        ("pipeline_e2e", pq.q_pipeline_e2e),
-        ("vision_pipeline_e2e", _dq.q_vision_pipeline_e2e),
-        ("image_stats", lambda s, d: multimodal.image_stats(imgs)),
-        ("image_quality", lambda s, d: multimodal.image_quality(imgs, edge_thresh=64)),
-        ("image_histogram", lambda s, d: multimodal.image_histogram(imgs, bins=8)),
-        ("image_resize", lambda s, d: multimodal.resize_images(imgs, 8, 8)),
-        ("image_embedding", lambda s, d: multimodal.image_embedding(imgs, dim=16)),
-        ("image_augment", lambda s, d: multimodal.augment_images(
-            imgs.withColumn(
-                "aug_delta",
-                ((F.split(F.col("image_id"), "_").getItem(1).cast("long") % 96) - 48
-                 ).cast("int"),
-            ).withColumn(
-                "aug_flip",
-                (F.split(F.col("image_id"), "_").getItem(1).cast("long") % 2) == 0,
-            )
-        )),
-    ]
-    return entries
 
 
 def materialize(df):
@@ -177,7 +51,7 @@ def main():
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    entries = build_entries(spark, sf_dir)
+    entries = bench_entries(spark, sf_dir)
     sel = {n for n in args.queries}
     if sel:
         missing = sel - {n for n, _ in entries}

@@ -812,11 +812,12 @@ HALO_SIDES = ("N", "S", "W", "E", "NW", "NE", "SW", "SE")
 
 def halo_strips(catalog: DataFrame) -> DataFrame:
     """Extract the 8 outbound halo strips of every tile, keyed by the
-    RECEIVING tile: (tile_lat, tile_lon, side, strip). `side` names the
-    receiver's padded edge the strip fills. Strips are little-endian
-    int16 ('<i2'); receivers for tiles absent from the catalog are
-    dropped by the downstream join. Map-only (``map_tiles``), ~9.6 KB out
-    per SRTM3 tile."""
+    RECEIVING tile: (tile_lat, tile_lon, side, n, strip). `side` names the
+    receiver's padded edge the strip fills; `n` is the sending tile's size,
+    which a receiver of another size must not use (``pad_with_halos``).
+    Strips are little-endian int16 ('<i2'); receivers for tiles absent
+    from the catalog are dropped by the downstream join. Map-only
+    (``map_tiles``), ~9.6 KB out per SRTM3 tile."""
 
     def strips(row):
         g = hgt.decode_tile(row["data"]).astype("<i2")
@@ -833,40 +834,44 @@ def halo_strips(catalog: DataFrame) -> DataFrame:
             (+1, +1, "SW", g[1:2, n - 2]),
             (+1, -1, "SE", g[1:2, 1]),
         ):
-            yield lat + dlat, lon + dlon, side, np.ascontiguousarray(src).tobytes()
+            yield lat + dlat, lon + dlon, side, n, np.ascontiguousarray(src).tobytes()
 
-    schema = "tile_lat int, tile_lon int, side string, strip binary"
+    schema = "tile_lat int, tile_lon int, side string, n int, strip binary"
     return map_tiles(catalog, strips, schema)
 
 
-def pad_with_halos(grid: np.ndarray, halos: dict[str, bytes]) -> np.ndarray:
+def pad_with_halos(grid: np.ndarray, halos: dict[str, tuple[int, bytes]]) -> np.ndarray:
     """Assemble the (n+2)x(n+2) padded grid: center = tile, received
     strips fill the outer ring, everything else stays VOID (so edges
     without a neighbor are invalid under the stencil's void rule —
-    exactly the per-tile behavior)."""
+    exactly the per-tile behavior). ``halos`` maps a side to the sending
+    tile's size and its strip; a strip from a tile of another size (SRTM1
+    next to SRTM3) does not line up with this tile's samples, so its edge
+    or corner stays VOID like a missing neighbor's."""
     n = grid.shape[0]
     p = np.full((n + 2, n + 2), hgt.VOID_VALUE, dtype=np.int64)
     p[1 : n + 1, 1 : n + 1] = grid.astype(np.int64, copy=False)
-
-    def strip(side: str, count: int) -> np.ndarray:
-        return np.frombuffer(halos[side], dtype="<i2").astype(np.int64)[:count]
-
-    if "N" in halos:
-        p[0, 1 : n + 1] = strip("N", n)
-    if "S" in halos:
-        p[n + 1, 1 : n + 1] = strip("S", n)
-    if "W" in halos:
-        p[1 : n + 1, 0] = strip("W", n)
-    if "E" in halos:
-        p[1 : n + 1, n + 1] = strip("E", n)
+    got = {
+        side: np.frombuffer(strip, dtype="<i2").astype(np.int64)
+        for side, (size, strip) in halos.items()
+        if size == n
+    }
+    if "N" in got:
+        p[0, 1 : n + 1] = got["N"]
+    if "S" in got:
+        p[n + 1, 1 : n + 1] = got["S"]
+    if "W" in got:
+        p[1 : n + 1, 0] = got["W"]
+    if "E" in got:
+        p[1 : n + 1, n + 1] = got["E"]
     for side, (rr, cc) in (
         ("NW", (0, 0)),
         ("NE", (0, n + 1)),
         ("SW", (n + 1, 0)),
         ("SE", (n + 1, n + 1)),
     ):
-        if side in halos:
-            p[rr, cc] = strip(side, 1)[0]
+        if side in got:
+            p[rr, cc] = got[side][0]
     return p
 
 
@@ -886,7 +891,7 @@ def mosaic_horn_stats(catalog: DataFrame) -> DataFrame:
         .groupBy("tile_lat", "tile_lon")
         .agg(
             F.map_from_entries(
-                F.collect_list(F.struct("side", "strip"))
+                F.collect_list(F.struct("side", F.struct("n", "strip")))
             ).alias("halos")
         )
     )
@@ -896,7 +901,8 @@ def mosaic_horn_stats(catalog: DataFrame) -> DataFrame:
 
     def stats(row):
         grid = hgt.decode_tile(row["data"])
-        padded = pad_with_halos(grid, dict(row["halos"] or ()))
+        halos = {side: (h["n"], h["strip"]) for side, h in row["halos"] or ()}
+        padded = pad_with_halos(grid, halos)
         gxs, gys, ok = tile_horn_grids(padded)
         _, byte = hillshade_bytes(gxs, gys, ok)
         edge = np.zeros_like(ok)

@@ -7,8 +7,9 @@ columns carry no expression ids, so the outline ``render`` prints is the
 same text on every run of an unchanged plan.
 
 A ``Gate`` is a predicate over those nodes that returns its faults (an
-empty list when the plan holds). ``scripts/explain_audit.py`` declares the
-engine's plan shapes as lists of gates; the gate kinds are:
+empty list when the plan holds); ``faults(nodes, gates)`` collects them.
+``scripts/explain_audit.py`` declares the engine's plan shapes as lists of
+gates; the gate kinds are:
 
 - ``shuffles(n)``: exactly n shuffle Exchanges, the round-robin scan
   spread not counted;
@@ -110,6 +111,11 @@ def render(nodes: list[Node]) -> str:
 class Gate(NamedTuple):
     desc: str
     faults: Callable[[list[Node]], list[str]]
+
+
+def faults(nodes: list[Node], gates: list[Gate]) -> list[str]:
+    """Every fault of every gate on ``nodes``, in gate order."""
+    return [f for g in gates for f in g.faults(nodes)]
 
 
 def _tally(desc: str, pred: Callable[[Node], bool], lo: int, hi: int | None) -> Gate:

@@ -12,6 +12,8 @@ join (warm-up excluded; identical input both runs).
 
 import argparse
 import json
+import shutil
+import tempfile
 import time
 
 from pyspark.sql import SparkSession
@@ -52,36 +54,18 @@ def main():
     spark.sparkContext.setLogLevel("ERROR")
     cores = spark.sparkContext.defaultParallelism
 
+    # each mode sets up its input out of the timed region and names a
+    # `timed()` that returns (found, checksum); `n` is its input rows
+    tmp = None
     if args.mode == "dedup":
         corpus = dedup_workload(spark, args.sf_dir, replicate=args.replicate).persist()
         n = corpus.count()
-        run_dedup(spark, corpus)  # warm-up
-        times = []
-        for _ in range(args.repeats):
-            t0 = time.perf_counter()
-            rows, chk = run_dedup(spark, corpus)
-            times.append(time.perf_counter() - t0)
-        best = min(times)
-        print(
-            json.dumps(
-                {
-                    "job": "minhash_dedup",
-                    "mode": "dedup",
-                    "strategy": "jvm-md5",
-                    "cores": cores,
-                    "rows": n,
-                    "times_sec": [round(t, 3) for t in times],
-                    "best_sec": round(best, 3),
-                    "rows_per_sec": round(n / best),
-                    "checksum": chk,
-                    "found": rows,
-                }
-            )
-        )
-        spark.stop()
-        return
+        job, strategy = "minhash_dedup", "jvm-md5"
 
-    if args.mode == "pip":
+        def timed():
+            return run_dedup(spark, corpus)
+
+    elif args.mode == "pip":
         from htg_spark.bench_queries import pip_workload, run_pip
         from htg_spark.polygon_queries import derive_polygons
 
@@ -90,33 +74,12 @@ def main():
         polys = derive_polygons(
             spark.read.parquet(f"{args.sf_dir}/nation.parquet")
         )
-        run_pip(pts, polys)  # warm-up
-        times = []
-        for _ in range(args.repeats):
-            t0 = time.perf_counter()
-            rows, chk = run_pip(pts, polys)
-            times.append(time.perf_counter() - t0)
-        best = min(times)
-        print(
-            json.dumps(
-                {
-                    "job": "point_in_polygon",
-                    "mode": "pip",
-                    "strategy": "broadcast-fold",
-                    "cores": cores,
-                    "rows": n,
-                    "times_sec": [round(t, 3) for t in times],
-                    "best_sec": round(best, 3),
-                    "rows_per_sec": round(n / best),
-                    "checksum": chk,
-                    "found": rows,
-                }
-            )
-        )
-        spark.stop()
-        return
+        job, strategy = "point_in_polygon", "broadcast-fold"
 
-    if args.mode == "raster":
+        def timed():
+            return run_pip(pts, polys)
+
+    elif args.mode == "raster":
         # whole-raster product scaling: D8 flow accumulation over a
         # directory of replicated HGT tiles (gen'd by run_scaling.py).
         # Lean shape on purpose: binaryFile scan -> JVM filename parse ->
@@ -156,8 +119,10 @@ def main():
             tile_lon.alias("tile_lon"),
             F.col("content").alias("data"),
         )
+        n = None  # one output row per tile: the warm-up's row count
+        job, strategy = "flow_accumulation", "map-only"
 
-        def run_raster():
+        def timed():
             out = terr.flow_accumulation_stats(cat)
             row = out.agg(
                 F.count(F.lit(1)).alias("n"),
@@ -170,75 +135,50 @@ def main():
             ).collect()[0]
             return int(row["n"]), int(row["chk"])
 
-        n, _ = run_raster()  # warm-up
-        times = []
-        for _ in range(args.repeats):
-            t0 = time.perf_counter()
-            rows, chk = run_raster()
-            times.append(time.perf_counter() - t0)
-        best = min(times)
-        print(
-            json.dumps(
-                {
-                    "job": "flow_accumulation",
-                    "mode": "raster",
-                    "strategy": "map-only",
-                    "cores": cores,
-                    "rows": n,
-                    "times_sec": [round(t, 3) for t in times],
-                    "best_sec": round(best, 3),
-                    "rows_per_sec": round(n / best),
-                    "checksum": chk,
-                    "found": rows,
-                }
-            )
-        )
-        spark.stop()
-        return
-
-    eng = bench_engine(spark)
-    eng._path_index()
-    # materialize the generated points to parquet once (setup, untimed): the
-    # timed joins then run over a vectorized parquet scan — the realistic
-    # cluster shape (reading columnar storage), and cheaper per-repeat than
-    # decompressing Spark's lz4 in-memory columnar cache.
-    import shutil
-    import tempfile
-
-    tmp = None
-    if args.points_path:
-        pts = spark.read.parquet(args.points_path)
     else:
-        tmp = tempfile.mkdtemp(prefix="bench_pts_")
-        bench_points(spark, args.sf_dir, replicate=args.replicate).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        pts = spark.read.parquet(tmp)
-    n = pts.count()
+        eng = bench_engine(spark)
+        eng._path_index()
+        # materialize the generated points to parquet once (setup, untimed):
+        # the timed joins then run over a vectorized parquet scan — the
+        # realistic cluster shape (reading columnar storage), and cheaper
+        # per-repeat than decompressing Spark's lz4 in-memory columnar cache.
+        if args.points_path:
+            pts = spark.read.parquet(args.points_path)
+        else:
+            tmp = tempfile.mkdtemp(prefix="bench_pts_")
+            bench_points(spark, args.sf_dir, replicate=args.replicate).write.mode(
+                "overwrite"
+            ).parquet(tmp)
+            pts = spark.read.parquet(tmp)
+        n = pts.count()
+        job = "terrain_join" if args.mode == "terrain" else "elevation_join"
+        strategy = args.strategy
+        if args.mode == "terrain":
+            from htg_spark.bench_queries import run_terrain
 
-    if args.mode == "terrain":
-        from htg_spark.bench_queries import run_terrain
+            def timed():
+                _, chk, found = run_terrain(eng, pts, strategy=args.strategy)
+                return found, chk
+        else:
 
-        def timed():
-            return run_terrain(eng, pts, strategy=args.strategy)
-    else:
+            def timed():
+                _, chk, found = run_join(eng, pts, mode=args.mode, strategy=args.strategy)
+                return found, chk
 
-        def timed():
-            return run_join(eng, pts, mode=args.mode, strategy=args.strategy)
-
-    timed()  # warm-up
+    warm, _ = timed()  # warm-up
+    n = warm if n is None else n
     times = []
     for _ in range(args.repeats):
         t0 = time.perf_counter()
-        rows, chk, found = timed()
+        found, chk = timed()
         times.append(time.perf_counter() - t0)
     best = min(times)
     print(
         json.dumps(
             {
-                "job": "terrain_join" if args.mode == "terrain" else "elevation_join",
+                "job": job,
                 "mode": args.mode,
-                "strategy": args.strategy,
+                "strategy": strategy,
                 "cores": cores,
                 "rows": n,
                 "times_sec": [round(t, 3) for t in times],
@@ -252,7 +192,6 @@ def main():
     if tmp:
         shutil.rmtree(tmp, ignore_errors=True)
     spark.stop()
-
 
 if __name__ == "__main__":
     main()

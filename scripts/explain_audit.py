@@ -37,6 +37,7 @@ from htg_spark.profile import (
     JOINS,
     absent,
     count,
+    faults,
     no_column,
     partial_agg,
     partitioned,
@@ -318,10 +319,9 @@ def main():
     n_faults = 0
     for title, expected, build, gates in sections(spark, sf_dir):
         nodes = plan_nodes(build(spark, sf_dir))
-        for gate in gates:
-            for fault in gate.faults(nodes):
-                print(f"FAULT [{title}]: {fault}", file=sys.stderr)
-                n_faults += 1
+        for fault in faults(nodes, gates):
+            print(f"FAULT [{title}]: {fault}", file=sys.stderr)
+            n_faults += 1
         listed = "".join(f"- {g.desc}\n" for g in gates) or "- none\n"
         out.append(
             f"\n## {title}\n\nExpected: {expected}\n\nGates:\n{listed}"

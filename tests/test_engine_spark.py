@@ -12,6 +12,9 @@ from pyspark.sql import functions as F
 
 from htg_spark import cells, fixtures, hgt
 from htg_spark.engine import ElevationEngine
+from htg_spark.profile import absent, count, faults, no_column, plan_nodes, present, render
+
+COGROUPS = ("FlatMapCoGroupsInArrow", "FlatMapCoGroupsInPandas")
 
 
 @pytest.fixture(scope="module")
@@ -347,22 +350,25 @@ def test_auto_blob_source_picks_path(spark, grids, points_pdf, tmp_path):
         (tiles / hgt_mod.coords_to_filename(tl, tn)).write_bytes(hgt_mod.encode_tile(grid))
     df = spark.createDataFrame(points_pdf.head(50))
 
-    import re
-
     # cache_size below the tile count: the salted layout
     for eng in (
         ElevationEngine(spark, tile_dir=str(tiles), cache_size=2),
         ElevationEngine(spark, grids=grids, cache_size=2),
     ):
-        plan = _plan_text(eng.elevation_join(df, strategy="auto"))
-        assert "ArrowEvalPython" in plan and "FlatMapCoGroupsIn" not in plan
+        nodes = plan_nodes(eng.elevation_join(df, strategy="auto"))
         # same invariant the plan audit hard-gates for every engine section:
-        # no Exchange block may carry the binary data column
-        ex_blocks = re.findall(r"\(\d+\) Exchange\nInput \[\d+\]: \[[^\]]*\]", plan)
-        assert len(ex_blocks) == 1 and not re.search(r"\bdata#", ex_blocks[0])
+        # no Exchange may carry the binary data column
+        gates = [
+            present("ArrowEvalPython"),
+            absent(*COGROUPS),
+            count("Exchange", 1, 1),
+            no_column("data", "Exchange"),
+        ]
+        assert not faults(nodes, gates), render(nodes)
 
-    plan = _plan_text(ElevationEngine(spark, grids=grids).elevation_join(df, strategy="auto"))
-    assert "ArrowEvalPython" in plan and "Exchange" not in plan
+    nodes = plan_nodes(ElevationEngine(spark, grids=grids).elevation_join(df, strategy="auto"))
+    gates = [present("ArrowEvalPython"), absent("Exchange", "BroadcastExchange", "ReusedExchange")]
+    assert not faults(nodes, gates), render(nodes)
 
 
 def test_cogroup_knn_in_memory_builds_without_jobs(spark, grids, points_pdf):
@@ -575,16 +581,6 @@ def test_filename_expressions_match_python(spark):
             assert (back["a"][i], back["b"][i]) == e
 
 
-def _plan_text(df) -> str:
-    import io
-    from contextlib import redirect_stdout
-
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
-
-
 def test_path_plan_moves_input_rows_once(spark, tile_dir, points_pdf):
     """The salted layout reads tiles by path, so only the input rows move:
     ONE shuffle Exchange (the salted-key repartition; the histogram
@@ -595,8 +591,6 @@ def test_path_plan_moves_input_rows_once(spark, tile_dir, points_pdf):
     task then starts a fresh worker with an empty cache). The setting is
     read from the live context conf, as the Python runners read it, and
     restored before anything runs."""
-    import re
-
     df = spark.createDataFrame(points_pdf.assign(caption="c"))
     conf = spark.sparkContext._conf
     shapes = [(2, "true"), (64, "false"), (64, "False ")]  # (cache_size, reuse)
@@ -604,17 +598,20 @@ def test_path_plan_moves_input_rows_once(spark, tile_dir, points_pdf):
         eng = ElevationEngine(spark, tile_dir=tile_dir, cache_size=cache_size)
         conf.set("spark.python.worker.reuse", reuse)
         try:
-            plan = _plan_text(
+            nodes = plan_nodes(
                 eng.elevation_join(df, strategy="cogroup", knn_fallback=knn, n_salts=4)
             )
         finally:
             conf.set("spark.python.worker.reuse", "true")
-        ex_blocks = re.findall(r"\(\d+\) Exchange\nInput \[\d+\]: \[[^\]]*\]", plan)
-        assert len(ex_blocks) == 1, plan
-        assert "caption#" in ex_blocks[0] and not re.search(r"\bdata#", ex_blocks[0])
-        assert "ArrowEvalPython" in plan
-        for node in ("SortMergeJoin", "FlatMapCoGroups", "MapInArrow", "ExistingRDD"):
-            assert node not in plan, node
+        gates = [
+            count("Exchange", 1, 1),
+            no_column("data", "Exchange"),
+            present("ArrowEvalPython"),
+            absent("SortMergeJoin", *COGROUPS, "MapInArrow", "Scan ExistingRDD"),
+        ]
+        assert not faults(nodes, gates), render(nodes)
+        (exchange,) = [n for n in nodes if n.name == "Exchange"]
+        assert "caption" in exchange.output, render(nodes)
 
 
 def test_kernel_buffer_reads_each_tile_once():
@@ -791,18 +788,19 @@ def test_path_plan_runs_map_side_when_catalog_fits_cache(spark, grids, tile_dir,
     UDF map-side on the input partitions: no histogram job, no salting, no
     shuffle Exchange, and a repeated join builds without a Spark job
     (test_cogroup_blob_source_path checks its rows)."""
-    import re
-
     eng = ElevationEngine(spark, tile_dir=tile_dir)
     assert len(grids) <= eng.cache_size
     df = spark.createDataFrame(points_pdf.assign(caption="c"))
     path_kw = dict(strategy="cogroup", n_salts=4)
     for knn in (False, True):
-        plan = _plan_text(eng.elevation_join(df, knn_fallback=knn, **path_kw))
-        assert not re.findall(r"\(\d+\) Exchange", plan), plan
-        assert "ArrowEvalPython" in plan and not re.search(r"\bdata#", plan)
-        for node in ("SortMergeJoin", "BroadcastHashJoin", "FlatMapCoGroups", "MapInArrow"):
-            assert node not in plan, node
+        nodes = plan_nodes(eng.elevation_join(df, knn_fallback=knn, **path_kw))
+        gates = [
+            count("Exchange", 0, 0),
+            present("ArrowEvalPython"),
+            no_column("data"),
+            absent("SortMergeJoin", "BroadcastHashJoin", *COGROUPS, "MapInArrow"),
+        ]
+        assert not faults(nodes, gates), render(nodes)
 
     sc = spark.sparkContext
     sc.setJobGroup("repeated-path-build", "plan build only")

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from htg_spark import hgt
 from htg_spark.driver_queries import derive_points
 from htg_spark.operators import terrain
+from htg_spark.profile import absent, count, faults, no_column, plan_nodes, present, render
 
 
 def _rand_grid(rng, n=32, voids=True):
@@ -140,10 +141,6 @@ def test_terrain_join_matches_pure_python(spark):
 
 
 def test_terrain_join_plan_is_map_only(spark):
-    import io
-    import re
-    from contextlib import redirect_stdout
-
     from htg_spark.driver_queries import get_engine
 
     eng = get_engine(spark)
@@ -151,13 +148,10 @@ def test_terrain_join_plan_is_map_only(spark):
     out = terrain.terrain_join(eng, pts)
     d = terrain.terrain_cols(F.col("gxs"), F.col("gys"))
     final = out.select("event_id", d["slope"].alias("slope"))
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        final.explain("formatted")
-    plan = buf.getvalue()
-    assert len(re.findall(r"\(\d+\) Exchange\b", plan)) == 0, plan
+    nodes = plan_nodes(final)
     # the kernel UDF over (lat, lon) only: the payload stays in the JVM
-    assert "ArrowEvalPython" in plan and "MapInArrow" not in plan, plan
+    gates = [count("Exchange", 0, 0), present("ArrowEvalPython"), absent("MapInArrow")]
+    assert not faults(nodes, gates), render(nodes)
 
 
 def test_terrain_join_default_strategy_is_auto(spark):
@@ -165,21 +159,14 @@ def test_terrain_join_default_strategy_is_auto(spark):
     (strategy='auto'): over a catalog with more tiles than the grid cache
     the rows take the salted layout, one shuffle Exchange. (The old
     default, 'broadcast', ran map-side at any catalog size.)"""
-    import io
-    import re
-    from contextlib import redirect_stdout
-
     from htg_spark.driver_queries import CATALOG_KEYS, get_engine
 
     eng = get_engine(spark, cache_size=2)
     assert len(CATALOG_KEYS) > eng.cache_size
     pts = derive_points(spark.read.parquet("/root/testdata/sf0.001/events.parquet"))
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        terrain.terrain_join(eng, pts).explain("formatted")
-    plan = buf.getvalue()
-    assert len(re.findall(r"\(\d+\) Exchange\b", plan)) == 1, plan
-    assert "ArrowEvalPython" in plan
+    nodes = plan_nodes(terrain.terrain_join(eng, pts))
+    gates = [count("Exchange", 1, 1), present("ArrowEvalPython")]
+    assert not faults(nodes, gates), render(nodes)
 
 
 def test_line_of_sight_semantics(spark):
@@ -278,18 +265,12 @@ def test_d8_histogram_query(spark):
     """The per-tile map-side reduction: 9 rows per catalog tile whose
     counts equal the NumPy histogram of the whole-tile D8 raster, in a
     zero-Exchange plan."""
-    import io
-    import re
-    from contextlib import redirect_stdout
-
     from htg_spark.driver_queries import get_engine, gradient_void_grid
 
     eng = get_engine(spark)
     out = terrain.d8_histogram(eng.catalog)
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        out.explain("formatted")
-    assert len(re.findall(r"\(\d+\) Exchange\b", buf.getvalue())) == 0
+    nodes = plan_nodes(out)
+    assert not faults(nodes, [count("Exchange", 0, 0)]), render(nodes)
 
     rows = out.collect()
     assert len(rows) == 27  # 3 tiles x 9 code rows (zero counts included)
@@ -344,18 +325,12 @@ def test_flow_accumulation_semantics():
 def test_flow_accumulation_stats_query(spark):
     """Per-tile drainage stats equal the NumPy aggregates of the
     whole-tile accumulation raster, in a zero-Exchange plan."""
-    import io
-    import re
-    from contextlib import redirect_stdout
-
     from htg_spark.driver_queries import get_engine, gradient_void_grid
 
     eng = get_engine(spark)
     out = terrain.flow_accumulation_stats(eng.catalog)
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        out.explain("formatted")
-    assert len(re.findall(r"\(\d+\) Exchange\b", buf.getvalue())) == 0
+    nodes = plan_nodes(out)
+    assert not faults(nodes, [count("Exchange", 0, 0)]), render(nodes)
 
     rows = out.collect()
     assert len(rows) == 3
@@ -406,18 +381,12 @@ def test_contour_case_table():
 def test_contour_stats_query(spark):
     """Per-(tile, level) stats equal the NumPy aggregates of the
     whole-tile case raster, in a zero-Exchange plan."""
-    import io
-    import re
-    from contextlib import redirect_stdout
-
     from htg_spark.driver_queries import get_engine, gradient_void_grid
 
     eng = get_engine(spark)
     out = terrain.contour_stats(eng.catalog)
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        out.explain("formatted")
-    assert len(re.findall(r"\(\d+\) Exchange\b", buf.getvalue())) == 0
+    nodes = plan_nodes(out)
+    assert not faults(nodes, [count("Exchange", 0, 0)]), render(nodes)
 
     rows = out.collect()
     assert len(rows) == 3 * len(terrain.CONTOUR_LEVELS)
@@ -452,18 +421,12 @@ def test_tile_quantiles_matches_sort():
 def test_elevation_quantiles_query(spark):
     """Per-tile quantile rows equal the NumPy kernel on the fixture grid,
     in a zero-Exchange plan."""
-    import io
-    import re
-    from contextlib import redirect_stdout
-
     from htg_spark.driver_queries import get_engine, gradient_void_grid
 
     eng = get_engine(spark)
     out = terrain.elevation_quantiles(eng.catalog)
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        out.explain("formatted")
-    assert len(re.findall(r"\(\d+\) Exchange\b", buf.getvalue())) == 0
+    nodes = plan_nodes(out)
+    assert not faults(nodes, [count("Exchange", 0, 0)]), render(nodes)
 
     rows = out.collect()
     assert len(rows) == 3
@@ -477,18 +440,12 @@ def test_render_hillshade_bytes_and_stats(spark):
     """Rendered image rows: pixel bytes equal an independent per-cell
     scalar recomputation on a sample; stats are exact aggregates of the
     rendered bytes; the plan is map-only."""
-    import io
-    import re
-    from contextlib import redirect_stdout
-
     from htg_spark.driver_queries import get_engine, gradient_void_grid
 
     eng = get_engine(spark)
     out = terrain.render_hillshade(eng.catalog)
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        out.explain("formatted")
-    assert len(re.findall(r"\(\d+\) Exchange\b", buf.getvalue())) == 0
+    nodes = plan_nodes(out)
+    assert not faults(nodes, [count("Exchange", 0, 0)]), render(nodes)
 
     rows = out.collect()
     assert len(rows) == 3
@@ -597,10 +554,6 @@ def test_terrain_cogroup_path_never_shuffles_blobs(spark):
     whether the rows are salted and shuffled (cache_size 2, fewer slots
     than catalog tiles: one Exchange) or run map-side (cache_size 64: no
     Exchange)."""
-    import io
-    import re
-    from contextlib import redirect_stdout
-
     from htg_spark.driver_queries import get_path_engine
     from htg_spark.engine import ElevationEngine
 
@@ -611,14 +564,9 @@ def test_terrain_cogroup_path_never_shuffles_blobs(spark):
         out = terrain.terrain_join(
             eng, pts, strategy="cogroup", id_col="event_id", n_salts=4,
         )
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            out.explain("formatted")
-        plan = buf.getvalue()
-        exchanges = re.findall(r"\(\d+\) Exchange\nInput \[\d+\]: \[([^\]]*)\]", plan)
-        for m in exchanges:
-            assert "data#" not in m, m
-        assert len(exchanges) == n_exchanges, plan
+        nodes = plan_nodes(out)
+        gates = [count("Exchange", n_exchanges, n_exchanges), no_column("data", "Exchange")]
+        assert not faults(nodes, gates), render(nodes)
 
 
 def test_path_profile_cum_gain(spark):
@@ -642,10 +590,6 @@ def test_terrain_rgb_roundtrip_bit_exact(spark):
     on valid samples (PSNR = inf) with nodata rendered (0,0,0); the
     aggregate stats equal exact recomputations from the payload; the plan
     is map-only (zero Exchanges)."""
-    import io
-    import re
-    from contextlib import redirect_stdout
-
     from htg_spark import catalog as cat_mod
     from htg_spark.operators import terrain
 
@@ -654,10 +598,8 @@ def test_terrain_rgb_roundtrip_bit_exact(spark):
     grid[rng.random((1201, 1201)) < 0.03] = hgt.VOID_VALUE
     cat = cat_mod.catalog_from_grids(spark, {(-7, -34): grid})
     out = terrain.terrain_rgb(cat)
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        out.explain("formatted")
-    assert len(re.findall(r"\(\d+\) Exchange\b", buf.getvalue())) == 0
+    nodes = plan_nodes(out)
+    assert not faults(nodes, [count("Exchange", 0, 0)]), render(nodes)
 
     rows = out.collect()
     assert len(rows) == 1
@@ -730,6 +672,32 @@ def test_halo_strips_take_the_neighbour_ring_on_srtm1(spark):
         assert np.array_equal(got[key], strip), key
 
 
+def test_mosaic_horn_ignores_neighbours_of_another_size(spark):
+    """A halo strip lines up only with a tile of its own size: next to a
+    neighbour of the other resolution (SRTM3 beside SRTM1) the edge and
+    corner stay VOID, as for a missing neighbour. In a 2x2 block with an
+    SRTM3 column west of an SRTM1 column, every tile gets the stats of a
+    catalog holding only its same-sized north/south partner."""
+    from htg_spark import catalog as cat_mod
+
+    rng = np.random.default_rng(5)
+    grids = {
+        (la, lo): rng.integers(0, 4000, size=(n, n)).astype(np.int16)
+        for lo, n in ((20, hgt.SRTM3_SAMPLES), (21, hgt.SRTM1_SAMPLES))
+        for la in (10, 11)
+    }
+
+    def stats(keys):
+        cat = cat_mod.catalog_from_grids(spark, {k: grids[k] for k in keys})
+        return {(r.tile_lat, r.tile_lon): r for r in terrain.mosaic_horn_stats(cat).collect()}
+
+    mixed = stats(grids)
+    alone = {**stats([(10, 20), (11, 20)]), **stats([(10, 21), (11, 21)])}
+    assert mixed == alone
+    # the same-sized partner's halo is still used
+    assert all(r.n_edge_valid > 0 for r in mixed.values())
+
+
 def test_mosaic_horn_distinct_content_2x2(spark):
     """Halo exchange with FOUR DISTINCT random grids in a 2x2 mosaic —
     distinct content is what catches strip direction/orientation mix-ups
@@ -739,7 +707,6 @@ def test_mosaic_horn_distinct_content_2x2(spark):
     arrays (SRTM shared-boundary convention), then pushed through the
     same stencil+quantization math; the plan must shuffle only strips."""
     import io
-    import re
     from contextlib import redirect_stdout
 
     from htg_spark import catalog as cat_mod
