@@ -6,7 +6,8 @@ Usage:
   python bench_extra.py [--plans DIR] [--trials N] [--suffix before] [query ...]
 
 The leaves are bench.py's, in its order, from the query registry
-(``htg_spark.registry.bench_entries``). With no query names, runs every
+(``htg_spark.registry.bench_entries``, which derives only the multimodal
+tables the selected leaves read). With no query names, runs every
 entry. For each selected query it times `materialize(fn(spark, sf_dir))`
 with the same xxhash64-materialization as bench.py (min of N trials) and,
 when --plans is given, writes DIR/<query>_<suffix>.txt with the
@@ -51,13 +52,10 @@ def main():
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    entries = bench_entries(spark, sf_dir)
-    sel = {n for n in args.queries}
-    if sel:
-        missing = sel - {n for n, _ in entries}
-        if missing:
-            raise SystemExit(f"unknown queries: {sorted(missing)}")
-        entries = [(n, f) for n, f in entries if n in sel]
+    try:
+        entries = bench_entries(spark, sf_dir, args.queries)
+    except ValueError as e:
+        raise SystemExit(str(e)) from None
 
     # one warmup query to pay python-worker startup outside the timings
     t0 = time.perf_counter()

@@ -10,7 +10,7 @@
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -85,20 +85,20 @@ BENCH = (
 )
 
 
-def bench_entries(spark: SparkSession, sf_dir: str) -> list[tuple[str, Query]]:
-    """``(name, fn(spark, sf_dir))`` for every ``BENCH`` leaf, in order.
+def bench_entries(
+    spark: SparkSession, sf_dir: str, names: Iterable[str] = ()
+) -> list[tuple[str, Query]]:
+    """``(name, fn(spark, sf_dir))`` for the ``BENCH`` leaves in ``names``
+    (all when empty), in ``BENCH`` order; ValueError on an unknown name.
     A leaf is its ``queries()`` entry, except the nine multimodal leaves
-    over the image, audio and video tables: those tables are derived from
-    the events' ids and persisted here once, so the leaves time the
-    operators, not the payload generators."""
-    ev_ids = spark.read.parquet(f"{sf_dir}/events.parquet").select("event_id")
-    imgs = derive_images_table(ev_ids).persist()
-    imgs.count()
-    auds = derive_audio_table(ev_ids).persist()
-    auds.count()
-    vids = derive_video_table(ev_ids).persist()
-    vids.count()
-
+    over the image, audio and video tables: the tables the selected leaves
+    read are derived from the events' ids and persisted here once, so the
+    leaves time the operators, not the payload generators."""
+    names = set(names) or set(BENCH)
+    unknown = names - set(BENCH)
+    if unknown:
+        raise ValueError(f"unknown queries: {sorted(unknown)}")
+    imgs = auds = vids = None  # bound below, for the selected leaves only
     table_bound = {
         "image_chips": lambda s, d: multimodal.chip_images(imgs, chip=4).select(
             "image_id", "chip_row", "chip_col", "w", "h", "sum_r", "sum_g", "sum_b"
@@ -123,5 +123,20 @@ def bench_entries(spark: SparkSession, sf_dir: str) -> list[tuple[str, Query]]:
             )
         ),
     }
+    # each lambda's free variables name the tables it reads
+    used = {
+        v for n in names & table_bound.keys() for v in table_bound[n].__code__.co_freevars
+    }
+    if used:
+        ev_ids = spark.read.parquet(f"{sf_dir}/events.parquet").select("event_id")
+    if "imgs" in used:
+        imgs = derive_images_table(ev_ids).persist()
+        imgs.count()
+    if "auds" in used:
+        auds = derive_audio_table(ev_ids).persist()
+        auds.count()
+    if "vids" in used:
+        vids = derive_video_table(ev_ids).persist()
+        vids.count()
     fns = {**queries(), **table_bound}
-    return [(name, fns[name]) for name in BENCH]
+    return [(name, fns[name]) for name in BENCH if name in names]

@@ -10,6 +10,7 @@ import numpy as np
 
 from htg_spark import hgt
 from htg_spark.operators import pyramid
+from htg_spark.profile import count, faults, plan_nodes, render
 
 
 def _rand_grid(rng, n=17):
@@ -58,18 +59,12 @@ def test_tile_pyramid_end_to_end(spark):
     """Rendered rows: payload decodes to exactly the pooled grid of the
     closed-form gradient fixture; stats are exact aggregates of the
     payload; dims/format/ids correct; the plan is map-only."""
-    import io
-    import re
-    from contextlib import redirect_stdout
-
     from htg_spark.driver_queries import get_engine, gradient_void_grid
 
     eng = get_engine(spark)
     out = pyramid.tile_pyramid(eng.catalog, levels=3)
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        out.explain("formatted")
-    assert len(re.findall(r"\(\d+\) Exchange\b", buf.getvalue())) == 0
+    nodes = plan_nodes(out)
+    assert not faults(nodes, [count("Exchange", 0, 0)]), render(nodes)
 
     rows = out.collect()
     assert len(rows) == 9  # 3 tiles x 3 levels
@@ -116,19 +111,13 @@ def test_pyramid_hillshade_end_to_end(spark):
     independent pool -> Horn stencil -> quantize recomputation of the
     gradient fixture; stats are exact aggregates of the payload; the plan
     stays map-only (zero Exchanges)."""
-    import io
-    import re
-    from contextlib import redirect_stdout
-
     from htg_spark.driver_queries import get_engine, gradient_void_grid
     from htg_spark.operators import terrain
 
     eng = get_engine(spark)
     out = pyramid.pyramid_hillshade(eng.catalog, levels=3)
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        out.explain("formatted")
-    assert len(re.findall(r"\(\d+\) Exchange\b", buf.getvalue())) == 0
+    nodes = plan_nodes(out)
+    assert not faults(nodes, [count("Exchange", 0, 0)]), render(nodes)
 
     rows = out.collect()
     assert len(rows) == 9  # 3 tiles x 3 levels

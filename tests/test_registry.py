@@ -81,3 +81,13 @@ def test_bench_lambdas_are_the_registry_lambdas(bench_leaves):
 
 def test_every_query_has_an_oracle():
     assert set(registry.queries()) == set(registry.oracle_sql())
+
+
+def test_bench_entries_checks_names_before_any_spark_work():
+    """An unknown name fails, and leaves over no multimodal table derive
+    none: ``spark=None`` would raise on any Spark call."""
+    with pytest.raises(ValueError, match="nope"):
+        registry.bench_entries(None, "/nonexistent", ["simhash", "nope"])
+    entries = registry.bench_entries(None, "/nonexistent", ["simhash", "dedup_exact"])
+    queries = registry.queries()
+    assert entries == [("dedup_exact", queries["dedup_exact"]), ("simhash", queries["simhash"])]

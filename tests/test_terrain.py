@@ -13,7 +13,16 @@ from pyspark.sql import functions as F
 from htg_spark import hgt
 from htg_spark.driver_queries import derive_points
 from htg_spark.operators import terrain
-from htg_spark.profile import absent, count, faults, no_column, plan_nodes, present, render
+from htg_spark.profile import (
+    absent,
+    count,
+    faults,
+    no_column,
+    partitioned,
+    plan_nodes,
+    present,
+    render,
+)
 
 
 def _rand_grid(rng, n=32, voids=True):
@@ -706,9 +715,6 @@ def test_mosaic_horn_distinct_content_2x2(spark):
     tile is assembled INDEPENDENTLY by literal slicing of the neighbor
     arrays (SRTM shared-boundary convention), then pushed through the
     same stencil+quantization math; the plan must shuffle only strips."""
-    import io
-    from contextlib import redirect_stdout
-
     from htg_spark import catalog as cat_mod
 
     rng = np.random.default_rng(42)
@@ -721,16 +727,15 @@ def test_mosaic_horn_distinct_content_2x2(spark):
     cat = cat_mod.catalog_from_grids(spark, grids).repartition(4)
 
     out = terrain.mosaic_horn_stats(cat)
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        out.explain("formatted")
-    plan = buf.getvalue()
-    assert "BroadcastHashJoin" in plan
-    # exactly one hash-partitioned shuffle: the strip groupBy — blobs never
-    # shuffle (the only other Exchanges are this test's own repartition(4)
-    # round-robins, one per catalog branch)
-    assert plan.count("Arguments: hashpartitioning(tile_lat") == 1
-    assert plan.count("hashpartitioning") == 1
+    nodes = plan_nodes(out)
+    # exactly one hash-partitioned shuffle: the strip groupBy on tile_lat —
+    # blobs never shuffle (the only other Exchanges are this test's own
+    # repartition(4) round-robins, one per catalog branch)
+    gates = [present("BroadcastHashJoin"), partitioned("HashPartitioning", 1)]
+    assert not faults(nodes, gates), render(nodes)
+    assert [n.keys[0] for n in nodes if n.partitioning == "HashPartitioning"] == [
+        "tile_lat"
+    ], render(nodes)
 
     rows = {(r.tile_lat, r.tile_lon): r for r in out.collect()}
     assert len(rows) == 4
