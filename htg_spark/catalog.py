@@ -1,15 +1,17 @@
-"""Tile catalog — ingest, dedupe, and catalog-level aggregations.
+"""Tile catalog — the tile file format, ingest, dedupe, and catalog-level
+aggregations.
 
-The catalog is a DataFrame with schema
-``(tile_lat:int, tile_lon:int, samples:int, filename:string, data:binary)``
-— one row per 1-degree tile, grid stored as the raw HGT blob (big-endian
-int16, row-major, row 0 = north). Sources:
-
-- in-memory grids (tests / synthetic corpora)
-- a directory of ``*.hgt`` / ``*.hgt.zip`` files via ``binaryFile``
-  (reference scan: ``htg/src/tile.rs:93-138``; zip fallback
-  ``htg/src/service.rs:546-576``; directory scan + dedupe where the plain
-  ``.hgt`` wins over the zip: ``service.rs:626-650``)
+A catalog is a DataFrame of ``CATALOG_SCHEMA``, ``(tile_lat, tile_lon,
+samples, filename, path)``: one row per 1-degree tile, metadata only, a
+JVM ``LocalRelation`` built on the driver with no Spark job. Every reader
+opens ``path`` (raw HGT: big-endian int16, row-major, row 0 = north; or a
+``.hgt.zip`` holding one) through the one reading seam,
+``_read_blob_from_path``, as the reference opens a tile's file when a
+query first needs it (``htg/src/service.rs:546-576``, ``tile.rs:93-138``).
+Sources: in-memory grids (``catalog_from_grids``), each written once to a
+file named by the SHA-256 of its bytes; or a directory of ``*.hgt`` /
+``*.hgt.zip`` files (``catalog_from_dir``), listed and never read, the
+plain ``.hgt`` winning over the zip (``service.rs:626-650``).
 
 Aggregations mirror the CLI's ``info`` (per-tile min/max/void stats,
 ``htg-cli/src/commands/info.rs:49-71``) and ``list`` (inventory by
@@ -18,7 +20,15 @@ resolution, ``htg-cli/src/commands/list.rs:40-114``).
 
 from __future__ import annotations
 
+import atexit
+import hashlib
+import os
+import shutil
+import tempfile
+import threading
+import zipfile
 from collections.abc import Iterator
+from urllib.parse import unquote, urlparse
 
 import pandas as pd
 import pyarrow as pa
@@ -26,7 +36,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.window import Window
 
 from . import cells, hgt
 
@@ -36,15 +45,86 @@ CATALOG_SCHEMA = T.StructType(
         T.StructField("tile_lon", T.IntegerType(), False),
         T.StructField("samples", T.IntegerType(), False),
         T.StructField("filename", T.StringType(), False),
-        T.StructField("data", T.BinaryType(), False),
+        T.StructField("path", T.StringType(), False),
     ]
 )
 
-# directory-scanned catalogs additionally carry the source URI (binaryFile
-# `path`), which the engine's path index reads tiles by; an in-memory
-# catalog has no path column, so the engine spills its blobs to files once
-# (ElevationEngine._path_index)
-PATH_FIELD = T.StructField("path", T.StringType(), True)
+
+def _local_path(path: str) -> str:
+    """The local filesystem path of a plain path or a ``file:`` URI (a
+    binaryFile ``path`` or an ``inputFiles()`` entry, percent-decoded).
+    Any other filesystem (hdfs://, s3a://, file://host, ...) raises a clear
+    error rather than failing inside open(): on a real cluster plug an
+    fsspec/Hadoop reader in here."""
+    u = urlparse(path)
+    if u.scheme == "":
+        return path
+    if u.scheme == "file" and u.netloc in ("", "localhost"):
+        return unquote(u.path)
+    raise NotImplementedError(
+        f"tiles are read from a locally-mounted filesystem in this build, not "
+        f"{path!r}: mount the store or plug an fsspec/Hadoop reader into "
+        "catalog._local_path"
+    )
+
+
+def _read_blob_from_path(path: str) -> bytes:
+    """The raw HGT bytes of the tile file ``path``: the one reading seam of
+    every plan, raster product and the point API (rasters live in shared
+    storage and only their paths ride a plan). Unwraps a ``.hgt.zip``
+    (first .hgt entry, service.rs:546-576). A bare file name is a spilled
+    tile (``_spill_blob``), resolved with ``SparkFiles.get``."""
+    if os.path.basename(path) == path:
+        from pyspark import SparkFiles
+
+        with open(SparkFiles.get(path), "rb") as f:
+            return f.read()
+    p = _local_path(path)
+    with open(p, "rb") as f:
+        raw = f.read()
+    if p.endswith(".hgt.zip"):
+        raw = hgt.extract_hgt_from_zip(raw)
+    return raw
+
+
+# The spilled tiles of every in-memory catalog in this process: one
+# directory, removed at exit. A file is named by the SHA-256 of its bytes,
+# so catalogs of different grids never collide on a name (addFile refuses
+# a second file of the same name with other contents) and catalogs of the
+# same grids write and ship each tile once.
+_SPILL_LOCK = threading.Lock()
+_SPILL_DIR: str | None = None
+
+
+def _spill_blob(sc, blob: bytes) -> str:
+    """Spill one tile: write ``blob`` to ``<sha256 hex of its bytes>.hgt``
+    in ``_SPILL_DIR`` (made on first use) unless that file exists, ship it
+    with ``sc.addFile`` and return the name."""
+    global _SPILL_DIR
+    name = hashlib.sha256(blob).hexdigest() + ".hgt"
+    with _SPILL_LOCK:
+        if _SPILL_DIR is None:
+            _SPILL_DIR = tempfile.mkdtemp(prefix="htg_spill_")
+            atexit.register(shutil.rmtree, _SPILL_DIR, ignore_errors=True)
+        path = os.path.join(_SPILL_DIR, name)
+        if not os.path.exists(path):
+            with open(path + ".tmp", "wb") as f:
+                f.write(blob)
+            os.replace(path + ".tmp", path)
+    sc.addFile(path)  # a no-op for a path this context already ships
+    return name
+
+
+def _catalog_frame(spark: SparkSession, rows: list) -> DataFrame:
+    """A catalog of ``rows`` (tuples in ``CATALOG_SCHEMA`` order) as a JVM
+    LocalRelation: built from an Arrow table, so no Python RDD, and scanned
+    as min(rows, parallelism) partitions."""
+    schema = to_arrow_schema(CATALOG_SCHEMA)
+    cols = list(zip(*rows)) or [()] * len(schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, schema)], schema=schema
+    )
+    return spark.createDataFrame(table)
 
 
 # map_tiles flushes an output RecordBatch once its binary/string payload
@@ -87,100 +167,100 @@ def _tile_batches(
 def map_tiles(catalog: DataFrame, fn, schema: str, *cols: str) -> DataFrame:
     """Run a per-tile NumPy function over every row of ``catalog``: the one
     seam of every whole-tile raster product. Selects ``tile_lat, tile_lon,
-    *cols, data`` into one map-only ``mapInArrow`` stage; ``fn(row)`` gets
-    each tile row as a dict (``data`` as bytes) and yields output tuples in
-    the order of ``schema``, a DDL string. Output batches are flushed under
-    the int32-offset cap (``_FLUSH_BYTES``)."""
+    *cols, path`` into one map-only ``mapInArrow`` stage that reads and
+    decodes each row's tile (``_read_blob_from_path``); ``fn(row, grid)``
+    gets the row as a dict and the decoded grid, and yields output tuples
+    in the order of ``schema``, a DDL string. Output batches are flushed
+    under the int32-offset cap (``_FLUSH_BYTES``)."""
     struct = T._parse_datatype_string(schema)
     arrow_schema = to_arrow_schema(struct)
     flush_bytes = _FLUSH_BYTES  # the driver's value, pickled with the UDF
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        yield from _tile_batches(batches, fn, arrow_schema, flush_bytes)
+    def per_tile(row):
+        return fn(row, hgt.decode_tile(_read_blob_from_path(row["path"])))
 
-    return catalog.select("tile_lat", "tile_lon", *cols, "data").mapInArrow(
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        yield from _tile_batches(batches, per_tile, arrow_schema, flush_bytes)
+
+    return catalog.select("tile_lat", "tile_lon", *cols, "path").mapInArrow(
         run, schema=struct
     )
 
 
 def catalog_from_grids(spark: SparkSession, grids: dict) -> DataFrame:
-    """Build a catalog DataFrame from {(tile_lat, tile_lon): int16 grid}."""
-    rows = []
-    for (tl, tn), grid in sorted(grids.items()):
-        rows.append(
-            (
-                int(tl),
-                int(tn),
-                int(grid.shape[0]),
-                hgt.coords_to_filename(int(tl), int(tn)),
-                bytearray(hgt.encode_tile(grid)),
-            )
+    """Build a catalog from {(tile_lat, tile_lon): int16 grid}: each grid is
+    encoded and spilled on the driver, where the grids already are
+    (``_spill_blob``: a file that already exists is not rewritten), and
+    ``path`` holds the spilled file's name. Keys ascending."""
+    sc = spark.sparkContext
+    rows = [
+        (
+            int(tl),
+            int(tn),
+            int(grid.shape[0]),
+            hgt.coords_to_filename(int(tl), int(tn)),
+            _spill_blob(sc, hgt.encode_tile(grid)),
         )
-    return spark.createDataFrame(rows, CATALOG_SCHEMA)
+        for (tl, tn), grid in sorted(grids.items())
+    ]
+    return _catalog_frame(spark, rows)
+
+
+def _dir_entry(uri: str):
+    """(tile_lat, tile_lon, samples, filename, from_zip, uri) of one file,
+    or None for a file the catalog skips: a bad name, a size that is no
+    HGT resolution, or a zip that cannot be read or holds no .hgt entry.
+    A zip's size is its first .hgt entry's, read from the central
+    directory without decompressing (service.rs:546-576)."""
+    name = unquote(uri.rsplit("/", 1)[-1])
+    from_zip = name.endswith(".hgt.zip")
+    if from_zip:
+        name = name[: -len(".zip")]
+    elif not name.endswith(".hgt"):
+        return None
+    key = hgt.filename_to_lat_lon(name)
+    if key is None:
+        return None
+    try:
+        local = _local_path(uri)
+        if from_zip:
+            with zipfile.ZipFile(local) as zf:
+                hgts = [n for n in zf.namelist() if n.endswith(".hgt")]
+                if not hgts:
+                    return None
+                size = zf.getinfo(hgts[0]).file_size
+        else:
+            size = os.path.getsize(local)
+        samples = hgt.samples_for_size(size)
+    except (OSError, ValueError, zipfile.BadZipFile):
+        return None
+    return key[0], key[1], samples, name, from_zip, uri
 
 
 def catalog_from_dir(spark: SparkSession, path: str) -> DataFrame:
-    """Scan a directory of .hgt / .hgt.zip files into a catalog.
+    """Catalog a directory of .hgt / .hgt.zip files without reading a tile.
 
-    binaryFile scan -> filename parse -> zip extraction (first .hgt entry,
-    service.rs:546-576) -> size validation -> dedupe with .hgt preferred
-    over .hgt.zip (service.rs:626-650) -> sorted by filename.
+    The ``binaryFile`` listing (``inputFiles()``, no Spark job) -> filename
+    parse and size check per file (``_dir_entry``) -> dedupe with .hgt
+    preferred over .hgt.zip, then filename ascending (service.rs:626-650)
+    -> sorted by filename. A corrupt tile that passes the size check
+    surfaces when it is read, as in the reference. Files are sized on the
+    driver, so a directory on a non-local filesystem raises
+    NotImplementedError (``_local_path``).
     """
-    raw = (
+    uris = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.hgt*")
         .load(path)
-        .select(F.col("path"), F.col("content"))
+        .inputFiles()
     )
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"tile_lat": [], "tile_lon": [], "samples": [], "filename": [], "data": [], "path": [], "from_zip": []}
-            for p, content in zip(pdf["path"], pdf["content"]):
-                name = p.rsplit("/", 1)[-1]
-                from_zip = name.endswith(".hgt.zip")
-                if from_zip:
-                    try:
-                        content = hgt.extract_hgt_from_zip(content)
-                    except ValueError:
-                        continue
-                    name = name[: -len(".zip")]
-                elif not name.endswith(".hgt"):
-                    continue
-                key = hgt.filename_to_lat_lon(name)
-                if key is None:
-                    continue
-                try:
-                    samples = hgt.samples_for_size(len(content))
-                except ValueError:
-                    continue
-                out["tile_lat"].append(key[0])
-                out["tile_lon"].append(key[1])
-                out["samples"].append(samples)
-                out["filename"].append(name)
-                out["data"].append(bytes(content))
-                out["path"].append(p)
-                out["from_zip"].append(from_zip)
-            yield pd.DataFrame(out)
-
-    # StructType.add mutates in place — build a fresh copy each call
-    schema = T.StructType(
-        list(CATALOG_SCHEMA.fields) + [PATH_FIELD, T.StructField("from_zip", T.BooleanType())]
-    )
-    cat = raw.mapInPandas(extract, schema=schema)
-    # dedupe: plain .hgt wins over zip (service.rs:634-645 HashSet ordering)
-    w_cols = ["tile_lat", "tile_lon"]
-    cat = (
-        cat.withColumn(
-            "rank",
-            F.row_number().over(
-                Window.partitionBy(*w_cols).orderBy(F.col("from_zip").asc(), F.col("filename").asc())
-            ),
-        )
-        .where(F.col("rank") == 1)
-        .drop("rank", "from_zip")
-    )
-    return cat.orderBy("filename")
+    best = {}
+    for tl, tn, samples, name, from_zip, uri in filter(None, map(_dir_entry, uris)):
+        rank = (from_zip, name, uri)
+        if (tl, tn) not in best or rank < best[(tl, tn)][0]:
+            best[(tl, tn)] = (rank, (tl, tn, samples, name, uri))
+    rows = sorted((row for _, row in best.values()), key=lambda r: (r[3], r[4]))
+    return _catalog_frame(spark, rows)
 
 
 def tile_info(catalog: DataFrame) -> DataFrame:
@@ -188,8 +268,8 @@ def tile_info(catalog: DataFrame) -> DataFrame:
     (info.rs:49-71). Full-grid NumPy reduce per tile (``map_tiles``) — one
     decode per tile, no per-sample Python."""
 
-    def stats(row):
-        flat = hgt.decode_tile(row["data"]).ravel()
+    def stats(row, grid):
+        flat = grid.ravel()
         void_n = int((flat == hgt.VOID_VALUE).sum())
         valid = flat[flat != hgt.VOID_VALUE]
         yield (
@@ -212,11 +292,13 @@ def tile_info(catalog: DataFrame) -> DataFrame:
 
 def tile_inventory(catalog: DataFrame) -> DataFrame:
     """Inventory by resolution: tile count + total bytes, like the CLI `list`
-    command (list.rs:40-114). resolution name from samples."""
+    command (list.rs:40-114). Resolution name and byte count (samples² × 2,
+    the raw HGT size) from ``samples``: no tile is read."""
+    samples = F.col("samples").cast("long")
     return (
         catalog.select(
             F.when(F.col("samples") == 3601, "SRTM1").otherwise("SRTM3").alias("resolution"),
-            F.length("data").alias("nbytes"),
+            (samples * samples * 2).alias("nbytes"),
         )
         .groupBy("resolution")
         .agg(F.count("*").alias("tile_count"), F.sum("nbytes").alias("total_bytes"))
@@ -229,19 +311,18 @@ def preload(
 ):
     """Warm the catalog like SrtmService::preload (service.rs:685-722):
     optional bbox pruning (strict-inequality overlap, service.rs:102-110),
-    then a per-tile decode check in ONE distributed pass — the warm job
-    doubles as the per-tile error channel PreloadStats needs (service.rs:
-    707-711 Ok/Err per load_tile). An unbounded preload persists the
-    catalog first, so the check fills the cache that the engine's path
-    index (or the spill of a path-less catalog) reads next; a bbox preload
-    persists nothing, as nothing reads its filtered frame again. Returns
-    [(tile_lat, tile_lon, ok), ...] where ok=False marks a tile whose blob
-    failed to decode (matched count = len of the list).
+    then a per-tile decode check in ONE distributed pass, each tile read by
+    path (``_read_blob_from_path``) — the job doubles as the per-tile error
+    channel PreloadStats needs (service.rs:707-711 Ok/Err per load_tile).
+    Persists nothing. Returns [(tile_lat, tile_lon, ok), ...] where
+    ok=False marks a tile whose file failed to read or decode (matched
+    count = len of the list).
 
     `skip_keys`: tiles the caller already knows are warm (the engine's
-    preload ledger) — they still count as matched but their blobs are NOT
-    re-decoded (the reference's moka-cache consult skips loads for cached
-    tiles, service.rs:705-708); the check reports them ok=True."""
+    preload ledger) — they still count as matched but are NOT re-read (the
+    reference's moka-cache consult skips loads for cached tiles,
+    service.rs:705-708); the check reports them ok=True."""
+    df = catalog
     if boxes:
         pred = None
         for (min_lat, min_lon, max_lat, max_lon) in boxes:
@@ -250,19 +331,17 @@ def preload(
             )
             pred = p if pred is None else (pred | p)
         df = catalog.where(pred)
-    else:
-        df = catalog.persist()
     skip = frozenset(skip_keys or ())
 
     def check(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ok = []
-            for tl, tn, d in zip(pdf["tile_lat"], pdf["tile_lon"], pdf["data"]):
+            for tl, tn, p in zip(pdf["tile_lat"], pdf["tile_lon"], pdf["path"]):
                 if (int(tl), int(tn)) in skip:
                     ok.append(True)
                     continue
                 try:
-                    hgt.decode_tile(bytes(d))
+                    hgt.decode_tile(_read_blob_from_path(p))
                     ok.append(True)
                 except Exception:
                     ok.append(False)
@@ -271,7 +350,7 @@ def preload(
             )
 
     # keys + a bool per tile — bounded by the 64,800-cell world, collect-safe
-    rows = df.select("tile_lat", "tile_lon", "data").mapInPandas(
+    rows = df.select("tile_lat", "tile_lon", "path").mapInPandas(
         check, schema="tile_lat int, tile_lon int, ok boolean"
     ).collect()
     return [(r.tile_lat, r.tile_lon, bool(r.ok)) for r in rows]

@@ -24,17 +24,14 @@ reads each of its tiles about once even when its rows arrive interleaved
 and it holds more tiles than the cache.
 
 One blob source: every tile is read by path, as the reference reads
-every tile (``service.rs:546-576``). The blob getter
+every tile (``service.rs:546-576``). The catalog is metadata only,
+``(tile_lat, tile_lon, samples, filename, path)`` (``catalog``): a
+``tile_dir`` catalog names its own files, a ``grids`` one the
+content-named files it was spilled to on the driver. The blob getter
 (``_path_blob_getter``) looks a tile key up in a per-engine broadcast
 {tile key: path} index (``_path_index``) and reads the file at the one
-reading seam, ``_read_blob_from_path``. A path-bearing catalog
-(``tile_dir``, ``catalog_from_dir``) indexes its own paths. A path-less
-one (``grids=``, ``catalog_from_grids``, a user ``catalog=`` frame) is
-spilled into ``.hgt`` files named by the SHA-256 of their bytes, in one
-per-process directory: the hashes are computed JVM-side, only blobs
-whose file is missing stream to the driver, and each file is shipped with
-``SparkContext.addFile``; the index holds the bare file names, which the
-seam resolves with ``SparkFiles.get``.
+reading seam, ``catalog._read_blob_from_path``. A user ``catalog=`` frame
+must carry ``path`` too.
 
 Two row layouts over that one getter:
 
@@ -75,12 +72,8 @@ kernel's values are NULL (elevation NULL/default; terrain_ok false).
 
 from __future__ import annotations
 
-import atexit
 import functools
 import numbers
-import os
-import shutil
-import tempfile
 import threading
 from collections import OrderedDict
 from collections.abc import Callable, Iterator
@@ -92,6 +85,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import catalog as cat_mod
 from . import cells, hgt
 
 # columns the kernel appends after lat/lon, before elevation (in order)
@@ -128,85 +122,6 @@ def _python_workers_reused(spark) -> bool:
     would copy every entry over Py4J on each join."""
     reuse = spark.sparkContext._conf.get("spark.python.worker.reuse", "true")
     return reuse.strip().lower() == "true"
-
-
-def _read_blob_from_path(path: str) -> bytes:
-    """Executor-side tile fetch, the one reading seam of every plan and of
-    the point API: the real-cluster pattern where rasters live in an
-    object store and only their PATHS ride a plan. Handles the .hgt.zip
-    wrapping the directory scan accepts (service.rs:546-576).
-
-    A bare file name (no directory) is a spilled tile of a path-less
-    catalog (``_spill_blob``), shipped with ``SparkContext.addFile`` and
-    resolved with ``SparkFiles.get``. Any other path is a binaryFile
-    ``path`` URI: percent-decoded here, and non-local schemes (hdfs://,
-    s3a://, ...) raise a clear error rather than failing inside open() —
-    on a real cluster plug an fsspec/Hadoop filesystem in at this single
-    seam. file://host paths (non-local host) are rejected for the same
-    reason."""
-    from urllib.parse import unquote, urlparse
-
-    if os.path.basename(path) == path:
-        from pyspark import SparkFiles
-
-        with open(SparkFiles.get(path), "rb") as f:
-            return f.read()
-    u = urlparse(path)
-    if u.scheme in ("", "file"):
-        if u.scheme == "file" and u.netloc not in ("", "localhost"):
-            raise NotImplementedError(
-                f"non-local file URI {path!r}: tiles are read via the local "
-                "filesystem in this build (mount the store or swap "
-                "_read_blob_from_path for an fsspec-backed reader)"
-            )
-        p = unquote(u.path) if u.scheme == "file" else path
-    else:
-        raise NotImplementedError(
-            f"unsupported filesystem scheme {u.scheme!r} in {path!r}: this "
-            "build reads tiles from a locally-mounted filesystem; swap "
-            "_read_blob_from_path for an fsspec/Hadoop FS reader for "
-            "hdfs:// or s3a:// catalogs"
-        )
-    with open(p, "rb") as f:
-        raw = f.read()
-    if p.endswith(".hgt.zip"):
-        raw = hgt.extract_hgt_from_zip(raw)
-    return raw
-
-
-# The spilled tiles of every path-less catalog in this process: one
-# directory, removed at exit. A file is named by the SHA-256 of its bytes,
-# so engines over different grids never collide on a name (addFile refuses
-# a second file of the same name with other contents) and engines over the
-# same grids write and ship each tile once.
-_SPILL_LOCK = threading.Lock()
-_SPILL_DIR: str | None = None
-
-
-def _spill_path(name: str) -> str:
-    """Where the spilled tile file ``name`` lives (the directory is made
-    on first use)."""
-    global _SPILL_DIR
-    with _SPILL_LOCK:
-        if _SPILL_DIR is None:
-            _SPILL_DIR = tempfile.mkdtemp(prefix="htg_spill_")
-            atexit.register(shutil.rmtree, _SPILL_DIR, ignore_errors=True)
-    return os.path.join(_SPILL_DIR, name)
-
-
-def _spill_blob(sc, name: str, blob: bytes | None = None) -> str:
-    """Ship the spilled tile file ``name`` (``<sha256 hex of its
-    bytes>.hgt``) with ``sc.addFile`` and return the name, first writing
-    ``blob`` to it if given and the file is missing."""
-    path = _spill_path(name)
-    if blob is not None:
-        with _SPILL_LOCK:
-            if not os.path.exists(path):
-                with open(path + ".tmp", "wb") as f:
-                    f.write(blob)
-                os.replace(path + ".tmp", path)
-    sc.addFile(path)  # a no-op for a path this context already ships
-    return name
 
 
 class _GridCache:
@@ -517,11 +432,11 @@ def _by_tile_key(items) -> dict:
 def _path_blob_getter(paths):
     """The blob getter of every plan and of the point API, over the
     broadcast {tile key: path} index (``ElevationEngine._path_index``):
-    reads the tile at the one seam, ``_read_blob_from_path``."""
+    reads the tile at the one seam, ``catalog._read_blob_from_path``."""
 
     def get_blob(key):
         path = paths.value.get(key)
-        return None if path is None else _read_blob_from_path(path)
+        return None if path is None else cat_mod._read_blob_from_path(path)
 
     return get_blob
 
@@ -553,8 +468,6 @@ class ElevationEngine:
         tile_dir: str | None = None,
         cache_size: int = 64,
     ):
-        from . import catalog as cat_mod
-
         import uuid
 
         self.spark = spark
@@ -564,6 +477,11 @@ class ElevationEngine:
         # so an id-keyed cache could serve another catalog's grids
         self._cache_token = uuid.uuid4().hex
         if catalog is not None:
+            if "path" not in catalog.columns:
+                raise ValueError(
+                    "a catalog= frame needs a `path` column naming each tile's "
+                    "file; build one with catalog_from_grids or catalog_from_dir"
+                )
             self.catalog = catalog
         elif grids is not None:
             self.catalog = cat_mod.catalog_from_grids(spark, grids)
@@ -571,7 +489,7 @@ class ElevationEngine:
             self.catalog = cat_mod.catalog_from_dir(spark, tile_dir)
         else:
             raise ValueError("one of catalog / grids / tile_dir is required")
-        # broadcast {tile key: path or spilled file name} (_path_index)
+        # broadcast {tile key: path} (_path_index)
         self._paths = None
         # (n, 2) int64 catalog tile keys, the kNN centres (tile_centers)
         self._centers: np.ndarray | None = None
@@ -587,10 +505,9 @@ class ElevationEngine:
         # re-checked/re-warmed by the next preload — exactly what the
         # reference does after a capacity eviction.
         self._preloaded_keys: dict[tuple[int, int], None] = {}
-        # serializes the lazy one-time catalog work (the path index, and the
-        # spill of a path-less catalog) against preload(blocking=False)'s
-        # background thread — without it two threads can each stream the
-        # whole catalog to the driver and leak one broadcast
+        # serializes the lazy one-time catalog work (the path index) against
+        # preload(blocking=False)'s background thread — without it two
+        # threads can each collect the catalog and leak one broadcast
         self._prep_lock = threading.Lock()
         # the point API's decoded-grid cache (cache_stats reads its counters)
         self._driver_cache = _GridCache(cache_size)
@@ -654,14 +571,16 @@ class ElevationEngine:
         return [float(default) if np.isnan(v) else float(v) for v in res["elevation"]]
 
     def preload(self, bounds=None, blocking: bool = True):
-        """Warm the catalog (service.rs:685-722): per-tile decode check,
-        optional bbox pruning; an unbounded preload also persists the
-        catalog (``catalog.preload``). Returns the full PreloadStats dict
+        """Warm the catalog (service.rs:685-722): a per-tile decode check by
+        path, optional bbox pruning (``catalog.preload``, one Spark job),
+        then the path index (no job on a ``tile_dir`` or ``grids``
+        catalog). Returns the full PreloadStats dict
         (service.rs:114-126): tiles_matched / tiles_loaded /
         tiles_already_cached / tiles_failed / elapsed_ms. A repeat preload
         reports already_cached=matched, loaded=0 (service.rs preload tests:
-        test_preload_already_cached); a tile whose blob fails to decode
-        counts in tiles_failed and will be retried by the next preload.
+        test_preload_already_cached); a tile whose file fails to read or
+        decode counts in tiles_failed and will be retried by the next
+        preload.
 
         blocking=False reproduces the reference's background-thread variant
         (htg-python/src/lib.rs:297-300): the warm-up runs on a daemon
@@ -670,8 +589,6 @@ class ElevationEngine:
         may be in flight at a time — a second call while one is running
         raises (two unguarded threads would race each other's stats)."""
         import time as _time
-
-        from . import catalog as cat_mod
 
         if not blocking:
             # InheritableThread propagates the py4j auth/session context
@@ -728,8 +645,7 @@ class ElevationEngine:
             # already_cached approximates actual residency (see __init__)
             while len(warmed_keys) > self.cache_size:
                 warmed_keys.pop(next(iter(warmed_keys)))
-        # the joins' one-time catalog prep: the path index (a path-less
-        # catalog is spilled here)
+        # the joins' one-time catalog prep
         self._path_index()
         return {
             "tiles_matched": len(tile_checks),
@@ -809,60 +725,22 @@ class ElevationEngine:
 
     def _path_index(self):
         """Broadcast {(tile_lat, tile_lon): path} over the catalog, built
-        once per engine; its keys are the kNN centres. A path-bearing
-        catalog gives its own paths: only paths are collected, so it
-        broadcasts at any catalog size. A path-less catalog is spilled to
-        files named by the SHA-256 of their bytes (``_spill_blob``), and
-        the index holds their bare names: one job collects each tile's
-        key and ``sha2(data, 256)``, and only the tiles whose file is not
-        yet in the spill directory stream to the driver, selected by key
-        and named from the collected hashes, at most two partitions at a
-        time (``toLocalIterator``, the next partition prefetched: 1.8 s
-        against 3.2 s unprefetched for the 36-tile bench catalog on
-        local[4]). A second engine over the same grids streams none.
+        once per engine; its keys are the kNN centres. Only keys and paths
+        are collected, so it broadcasts at any catalog size; a ``tile_dir``
+        or ``grids`` catalog is a LocalRelation, collected with no job.
 
         The index names one file per tile, so a catalog with two rows for
         one tile key raises ValueError naming the key."""
         if self._paths is None:
             with self._prep_lock:
                 if self._paths is None:
-                    if "path" in self.catalog.columns:
-                        rows = self.catalog.select("tile_lat", "tile_lon", "path").collect()
-                        paths = _by_tile_key(
-                            ((r.tile_lat, r.tile_lon), str(r.path)) for r in rows
-                        )
-                    else:
-                        paths = self._spill_catalog()
+                    rows = self.catalog.select("tile_lat", "tile_lon", "path").collect()
+                    paths = _by_tile_key(
+                        ((r.tile_lat, r.tile_lon), str(r.path)) for r in rows
+                    )
                     self._centers = np.array(list(paths), dtype=np.int64).reshape(-1, 2)
                     self._paths = self.spark.sparkContext.broadcast(paths)
         return self._paths
-
-    def _spill_catalog(self) -> dict:
-        """{tile key: spilled file name} of a path-less catalog (see
-        ``_path_index``)."""
-        sc = self.spark.sparkContext
-        cat = self.catalog.select("tile_lat", "tile_lon", "data")
-        sha = F.sha2("data", 256).alias("sha")
-        names = _by_tile_key(
-            ((r.tile_lat, r.tile_lon), r.sha + ".hgt")
-            for r in cat.select("tile_lat", "tile_lon", sha).collect()
-        )
-        missing = [k for k, n in names.items() if not os.path.exists(_spill_path(n))]
-        written = set()
-        if missing:
-            # one long per tile key, distinct for distinct keys while
-            # |tile_lat| < 2^31 - 1 (a real tile has |tile_lat| <= 90)
-            packed = F.col("tile_lat").cast("long") * (1 << 32) + F.col("tile_lon")
-            rows = cat.where(packed.isin([lat * (1 << 32) + lon for lat, lon in missing]))
-            for r in rows.toLocalIterator(prefetchPartitions=True):
-                key = (r.tile_lat, r.tile_lon)
-                _spill_blob(sc, names[key], bytes(r.data))
-                written.add(key)
-        # ship every name; a name just written was shipped by its write
-        return {
-            key: name if key in written else _spill_blob(sc, name)
-            for key, name in names.items()
-        }
 
     def tile_centers(self) -> np.ndarray:
         """(n, 2) int64 catalog tile keys — the kNN centres, taken from the
@@ -920,11 +798,10 @@ class ElevationEngine:
         - strict=True: 1 job per call (the out-of-coverage check).
         - the salted layout: the salt histogram (``_salt_table``), 2 jobs
           per call.
-        - once per engine, then cached: the path index (``_path_index``):
-          1 job collecting a path-bearing catalog's paths; for a path-less
-          catalog, 1 job collecting its tile keys and blob hashes, then,
-          only if some blob is not yet spilled in this process, 1 job per
-          catalog partition streaming the missing blobs to their files.
+        - once per engine, then cached: the path index (``_path_index``),
+          which collects the catalog's keys and paths: no job for a
+          ``tile_dir`` or ``grids`` catalog (a LocalRelation), whatever a
+          user ``catalog=`` frame's plan takes otherwise.
 
         The map-side layout launches none after the engine's first join.
         """

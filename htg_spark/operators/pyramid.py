@@ -67,11 +67,10 @@ def pool_level(base: np.ndarray, valid: np.ndarray, level: int):
     return np.where(cnt > 0, q, np.int64(hgt.VOID_VALUE)), cnt
 
 
-def _pool_base(row):
+def _pool_base(row, grid):
     """The decoded tile's pooled base (see the module docstring): the
     (n-1)x(n-1) core with void samples zeroed, its validity mask, and the
     file-name stem the image ids start from."""
-    grid = hgt.decode_tile(row["data"])
     n = grid.shape[0]
     core = grid[: n - 1, : n - 1]
     valid = core != hgt.VOID_VALUE
@@ -91,8 +90,8 @@ def tile_pyramid(catalog: DataFrame, levels: int = DEFAULT_LEVELS) -> DataFrame:
     if levels < 1:
         raise ValueError("levels must be >= 1")
 
-    def pyramid(row):
-        base, valid, stem = _pool_base(row)
+    def pyramid(row, grid):
+        base, valid, stem = _pool_base(row, grid)
         for lvl in range(1, levels + 1):
             q, cnt = pool_level(base, valid, lvl)
             ok = cnt > 0
@@ -146,8 +145,8 @@ def pyramid_hillshade(
     if levels < 1:
         raise ValueError("levels must be >= 1")
 
-    def zoom_stack(row):
-        base, valid, stem = _pool_base(row)
+    def zoom_stack(row, grid):
+        base, valid, stem = _pool_base(row, grid)
         for lvl in range(1, levels + 1):
             q, _cnt = pool_level(base, valid, lvl)
             gxs, gys, ok = terrain.tile_horn_grids(q.astype(np.int16))

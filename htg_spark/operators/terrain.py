@@ -321,7 +321,8 @@ def render_hillshade(catalog: DataFrame) -> DataFrame:
     """Render every catalog tile's hillshade as a REAL grayscale image row
     (input_hint shape: image_id, bytes, w, h, fmt — plus the tile key and
     exact aggregate stats): the raster-wide terrain product, one mapInArrow
-    pass over the tile blobs (``map_tiles``), zero shuffles.
+    pass over the catalog (``map_tiles``, tiles read by path), zero
+    shuffles.
 
     The image is the (n-2)x(n-2) interior, row-major uint8, fmt='gray8'
     (invalid cells — void-adjacent stencils — render 0 and are excluded
@@ -329,8 +330,7 @@ def render_hillshade(catalog: DataFrame) -> DataFrame:
     integers, so a closed-form SQL oracle can value-check the full render
     arithmetic without shipping the pixels."""
 
-    def render(row):
-        grid = hgt.decode_tile(row["data"])
+    def render(row, grid):
         img, byte = hillshade_bytes(*tile_horn_grids(grid))
         vb = byte[byte >= 0]
         m = grid.shape[0] - 2
@@ -372,13 +372,12 @@ def terrain_rgb(catalog: DataFrame) -> DataFrame:
     (0, 0, 0) and are excluded from the stats (the webmap nodata
     convention).
 
-    One map-only mapInArrow pass over the tile blobs (``map_tiles``) —
+    One map-only mapInArrow pass over the catalog (``map_tiles``) —
     zero shuffle Exchanges, the same proven scale shape as
     ``render_hillshade``.
     """
 
-    def encode(row):
-        grid = hgt.decode_tile(row["data"])
+    def encode(row, grid):
         n = int(grid.shape[0])
         # the encode domain is elev >= -10000 (v >= 0); any sample below
         # the floor (only VOID_VALUE in real SRTM, but be total over
@@ -483,8 +482,8 @@ def d8_histogram(catalog: DataFrame) -> DataFrame:
     raster product here."""
     all_codes = [0] + [c for _, _, c in _D8_DIRS]
 
-    def histogram(row):
-        codes, ok = tile_d8_grids(hgt.decode_tile(row["data"]))
+    def histogram(row, grid):
+        codes, ok = tile_d8_grids(grid)
         vals = codes[ok]
         for c in all_codes:
             yield row["tile_lat"], row["tile_lon"], c, int((vals == c).sum())
@@ -612,8 +611,8 @@ def flow_accumulation_stats(catalog: DataFrame) -> DataFrame:
     mapInArrow pass (``map_tiles``) — same zero-Exchange shape as every
     raster product."""
 
-    def drainage(row):
-        acc = tile_flow_accumulation(hgt.decode_tile(row["data"]))
+    def drainage(row, grid):
+        acc = tile_flow_accumulation(grid)
         pos = acc[acc > 0]
         yield (
             row["tile_lat"],
@@ -699,8 +698,7 @@ def contour_stats(catalog: DataFrame, levels=CONTOUR_LEVELS) -> DataFrame:
     Exchanges, the standard raster-product shape here."""
     lvls = tuple(int(v) for v in levels)
 
-    def contours(row):
-        grid = hgt.decode_tile(row["data"])
+    def contours(row, grid):
         for lv in lvls:
             idx, valid = tile_contour_grids(grid, lv)
             vi = idx[valid]
@@ -750,8 +748,8 @@ def elevation_quantiles(catalog: DataFrame) -> DataFrame:
     order-statistics extension of the tile min/max stats: one map-only
     mapInArrow pass (``map_tiles``), zero shuffle Exchanges."""
 
-    def quantiles(row):
-        n, mn, mx, qs = tile_quantiles(hgt.decode_tile(row["data"]))
+    def quantiles(row, grid):
+        n, mn, mx, qs = tile_quantiles(grid)
         yield (row["tile_lat"], row["tile_lon"], n, mn, mx, *qs)
 
     schema = (
@@ -819,8 +817,8 @@ def halo_strips(catalog: DataFrame) -> DataFrame:
     from the catalog are dropped by the downstream join. Map-only
     (``map_tiles``), ~9.6 KB out per SRTM3 tile."""
 
-    def strips(row):
-        g = hgt.decode_tile(row["data"]).astype("<i2")
+    def strips(row, grid):
+        g = grid.astype("<i2")
         n = g.shape[0]
         lat, lon = row["tile_lat"], row["tile_lon"]
         # (receiver_dlat, receiver_dlon, side_filled, source slice)
@@ -884,8 +882,9 @@ def mosaic_horn_stats(catalog: DataFrame) -> DataFrame:
     render_hillshade: tile_horn_grids on the padded grid + the exact
     hillshade_bytes quantization.
 
-    The aggregated strip map broadcasts and the blob side stays map-only —
-    zero blob Exchanges (PLANS.md gate)."""
+    The aggregated strip map broadcasts onto the catalog's paths, and the
+    tiles are read by path in the map-only pass — zero blob Exchanges
+    (PLANS.md gate)."""
     strips = (
         halo_strips(catalog)
         .groupBy("tile_lat", "tile_lon")
@@ -895,12 +894,11 @@ def mosaic_horn_stats(catalog: DataFrame) -> DataFrame:
             ).alias("halos")
         )
     )
-    joined = catalog.select("tile_lat", "tile_lon", "data").join(
+    joined = catalog.select("tile_lat", "tile_lon", "path").join(
         F.broadcast(strips), ["tile_lat", "tile_lon"], "left"
     )
 
-    def stats(row):
-        grid = hgt.decode_tile(row["data"])
+    def stats(row, grid):
         halos = {side: (h["n"], h["strip"]) for side, h in row["halos"] or ()}
         padded = pad_with_halos(grid, halos)
         gxs, gys, ok = tile_horn_grids(padded)

@@ -18,7 +18,9 @@ gates; the gate kinds are:
 - ``no_column(col, *names)``: no node (or no node of the given names)
   outputs column ``col``;
 - ``partial_agg()``: an aggregate with a partial (map-side) step;
-- ``partitioned(kind, n)``: n Exchanges with the given partitioning.
+- ``partitioned(kind, lo, hi)``: how many Exchanges have the given
+  partitioning;
+- ``partition_filter(col)``: a file scan prunes partitions on ``col``.
 """
 
 from __future__ import annotations
@@ -48,6 +50,7 @@ class Node(NamedTuple):
     partitioning: str = ""  # an Exchange's, e.g. "HashPartitioning"
     keys: tuple[str, ...] = ()  # its partitioning keys, as SQL
     partial: bool = False  # an aggregate running a Partial-mode step
+    pruned_on: tuple[str, ...] = ()  # columns a file scan's partition filters read
 
 
 def _seq(s) -> list:
@@ -83,6 +86,9 @@ def _node(depth: int, j) -> Node:
     if name in _AGGREGATES:
         modes = {a.mode().toString() for a in _seq(j.aggregateExpressions())}
         return Node(depth, name, out, partial="Partial" in modes)
+    if j.getClass().getSimpleName() == "FileSourceScanExec":
+        cols = {a.name() for f in _seq(j.partitionFilters()) for a in _seq(f.references().toSeq())}
+        return Node(depth, name, out, pruned_on=tuple(sorted(cols)))
     return Node(depth, name, out)
 
 
@@ -162,11 +168,23 @@ def shuffles(n: int) -> Gate:
     )
 
 
-def partitioned(kind: str, n: int) -> Gate:
-    """Exactly ``n`` Exchanges partitioned by ``kind``, e.g.
-    ``"SinglePartition"`` (a global window or sort)."""
+def partitioned(kind: str, lo: int, hi: int | None = None) -> Gate:
+    """Between ``lo`` and ``hi`` (default: exactly ``lo``) Exchanges
+    partitioned by ``kind``, e.g. ``"SinglePartition"`` (a global window
+    or sort)."""
     return _tally(
-        f"Exchange {kind}", lambda x: x.name == "Exchange" and x.partitioning == kind, n, n
+        f"Exchange {kind}",
+        lambda x: x.name == "Exchange" and x.partitioning == kind,
+        lo,
+        lo if hi is None else hi,
+    )
+
+
+def partition_filter(col: str) -> Gate:
+    """A file scan whose partition filters read column ``col``: its
+    partitions are pruned at planning."""
+    return _tally(
+        f"file scan pruning partitions on `{col}`", lambda x: col in x.pruned_on, 1, None
     )
 
 

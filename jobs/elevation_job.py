@@ -82,10 +82,10 @@ def main():
     elif args.mode == "raster":
         # whole-raster product scaling: D8 flow accumulation over a
         # directory of replicated HGT tiles (gen'd by run_scaling.py).
-        # Lean shape on purpose: binaryFile scan -> JVM filename parse ->
-        # ONE mapInArrow kernel pass — no dedupe window / sort (the
-        # catalog_from_dir conveniences would shuffle every blob), so the
-        # whole job is map-only and scales with tile count.
+        # Lean shape on purpose: binaryFile listing (paths only, the
+        # content column pruned) -> JVM filename parse -> ONE mapInArrow
+        # kernel pass that reads each tile by path, so the whole job is
+        # map-only and scales with tile count.
         from pyspark.sql import functions as F
 
         from htg_spark.operators import terrain as terr
@@ -95,15 +95,15 @@ def main():
         # of these 2.9 MB tiles per partition, capping a 32-core run at a
         # handful of tasks (measured eff 0.46). Each tile is minutes of
         # kernel work per MB of input, so bin ONE file per partition —
-        # openCostInBytes above the tile size guarantees it without
-        # shuffling blobs through a repartition.
+        # openCostInBytes above the tile size guarantees it without a
+        # repartition.
         spark.conf.set("spark.sql.files.maxPartitionBytes", str(4 << 20))
         spark.conf.set("spark.sql.files.openCostInBytes", str(8 << 20))
         raw = (
             spark.read.format("binaryFile")
             .option("pathGlobFilter", "*.hgt")
             .load(args.points_path)
-            .select("path", "content")
+            .select("path")
         )
         name = F.element_at(F.split(F.col("path"), "/"), -1)
         tile_lat = (
@@ -117,7 +117,7 @@ def main():
         cat = raw.select(
             tile_lat.alias("tile_lat"),
             tile_lon.alias("tile_lon"),
-            F.col("content").alias("data"),
+            "path",
         )
         n = None  # one output row per tile: the warm-up's row count
         job, strategy = "flow_accumulation", "map-only"

@@ -126,7 +126,7 @@ def sections(spark, sf_dir):
          []),
         ("Catalog inventory aggregation",
          "partial count/sum before the resolution Exchange (map-side "
-         "combine); the binary `data` column is read only for its length.",
+         "combine); the byte count comes from `samples`, so no tile is read.",
          lambda spark, sf_dir: tile_inventory(eng.catalog), [partial_agg()]),
         ("Cogroup join, tile_dir catalog fits the grid cache (map-side)",
          "The catalog holds no more tiles than the engine's cache_size, so "

@@ -117,18 +117,7 @@ def test_preload_all_and_bbox(spark):
     assert eng4.preload(bounds=(-10.0, -10.0, -9.0, -9.0))["tiles_matched"] == 0
 
 
-def test_repeated_preload_keeps_the_catalog_cached(spark):
-    """Only an unbounded preload persists, and what it persists is the
-    engine's own catalog, which the path index reads next: five preloads,
-    with a bbox preload among them, leave it cached."""
-    eng = ElevationEngine(spark, grids=fixtures.default_catalog_grids())
-    for bounds in (None, None, (35.2, 138.2, 35.8, 138.8), None, None):
-        eng.preload(bounds)
-    assert eng.catalog.is_cached
-    eng.catalog.unpersist()
-
-
-def test_preload_stats_progression(spark):
+def test_preload_stats_progression(spark, tmp_path):
     """Full PreloadStats field parity (service.rs:114-126; populated
     685-722): first preload loads every matched tile; a repeat reports
     already_cached=matched, loaded=0 (test_preload_already_cached,
@@ -160,28 +149,13 @@ def test_preload_stats_progression(spark):
     assert s4["tiles_already_cached"] == 0
 
     # corrupt tile -> tiles_failed, and failures are retried, never cached
-    import pandas as pd
-    from pyspark.sql import functions as F
+    from htg_spark.catalog import CATALOG_SCHEMA
 
     good = ElevationEngine(spark, grids={(35, 138): fixtures.tile_center(500)})
-    bad_row = (
-        spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "tile_lat": [36],
-                    "tile_lon": [139],
-                    "samples": [1201],
-                    "filename": ["N36E139.hgt"],
-                }
-            )
-        )
-        .select(
-            F.col("tile_lat").cast("int"),
-            F.col("tile_lon").cast("int"),
-            F.col("samples").cast("int"),
-            "filename",
-        )
-        .withColumn("data", F.lit(b"\x00\x01\x02"))  # not a valid HGT size
+    bad = tmp_path / "N36E139.hgt"
+    bad.write_bytes(b"\x00\x01\x02")  # not a valid HGT size
+    bad_row = spark.createDataFrame(
+        [(36, 139, 1201, "N36E139.hgt", str(bad))], CATALOG_SCHEMA
     )
     cat = good.catalog.unionByName(bad_row)
     eng_bad = ElevationEngine(spark, catalog=cat)
@@ -194,36 +168,29 @@ def test_preload_stats_progression(spark):
     assert b2["tiles_failed"] == 1  # still failing, still reported
 
 
-def test_preload_corrupt_tile_in_cogroup_size_catalog(spark):
+def test_preload_corrupt_tile_in_cogroup_size_catalog(spark, tmp_path):
     """VERDICT r4 #8: on a 260-tile catalog of full-size tiles (once past
     the deleted broadcast gate) a corrupt tile must land in tiles_failed via the
-    distributed decode check WITHOUT failing the preload — nor the spill of
-    the catalog that preload builds — and stay retried, never remembered as
+    distributed decode check WITHOUT failing the preload — nor the path
+    index that preload builds — and stay retried, never remembered as
     cached."""
-    import pandas as pd
+    import numpy as np
+
+    from htg_spark.catalog import CATALOG_SCHEMA
 
     n = 260  # full-size tiles
-
-    def gen(batches):
-        import numpy as np
-
-        base = (
-            (np.arange(1201)[:, None] + np.arange(1201)[None, :]) % 4000
-        ).astype(">i2").tobytes()
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                i = int(i)
-                data = b"\x00\x01\x02" if i == 7 else base  # i=7: bad size
-                rows.append((i % 50, 100 + i // 50, 1201, f"T{i}.hgt", data))
-            yield pd.DataFrame(
-                rows, columns=["tile_lat", "tile_lon", "samples", "filename", "data"]
-            )
-
-    # blobs generated executor-side, the shape a real large catalog scan has
-    cat = spark.range(n).mapInPandas(
-        gen, schema="tile_lat int, tile_lon int, samples int, filename string, data binary"
+    base = tmp_path / "base.hgt"
+    base.write_bytes(
+        ((np.arange(1201)[:, None] + np.arange(1201)[None, :]) % 4000).astype(">i2").tobytes()
     )
+    bad = tmp_path / "bad.hgt"
+    bad.write_bytes(b"\x00\x01\x02")  # bad size
+    # every good row names the one full-size file; row 7 the bad one
+    rows = [
+        (i % 50, 100 + i // 50, 1201, f"T{i}.hgt", str(bad if i == 7 else base))
+        for i in range(n)
+    ]
+    cat = spark.createDataFrame(rows, CATALOG_SCHEMA)
     eng = ElevationEngine(spark, catalog=cat, cache_size=512)
     s1 = eng.preload()
     assert s1["tiles_matched"] == n

@@ -1,7 +1,8 @@
-"""Tile catalog ingest tests: binaryFile scan, size-based resolution
-detection, zip extraction, .hgt-over-zip dedupe, inventory and info
-aggregations (reference: service.rs:626-650, tile.rs:125-129,
-info.rs:49-71, list.rs:40-114)."""
+"""Tile catalog ingest tests: binaryFile listing, size-based resolution
+detection (a zip's from its central directory), zip extraction at read
+time, .hgt-over-zip dedupe, inventory and info aggregations, and the
+jobs each catalog source launches (reference: service.rs:626-650,
+tile.rs:125-129, info.rs:49-71, list.rs:40-114)."""
 
 import numpy as np
 import pytest
@@ -27,21 +28,69 @@ def tile_dir(tmp_path_factory):
     (d / "invalid.hgt").write_bytes(b"x" * 100)  # bad size
     (d / "notatile.txt").write_text("nope")
     (d / "X99Q999.hgt").write_bytes(hgt.encode_tile(fixtures.tile_center(1)))  # bad name
+    # a truncated zip: unreadable, skipped like any other junk
+    zcut = fixtures.zip_tile_bytes("N37E138.hgt", hgt.encode_tile(fixtures.tile_center(5)))
+    (d / "N37E138.hgt.zip").write_bytes(zcut[: len(zcut) // 2])
+    # a zip whose .hgt entry has a bad size
+    (d / "N37E139.hgt.zip").write_bytes(fixtures.zip_tile_bytes("N37E139.hgt", b"x" * 100))
     return str(d)
 
 
 def test_catalog_from_dir(spark, tile_dir):
     cat = catalog.catalog_from_dir(spark, tile_dir)
-    rows = {(r.tile_lat, r.tile_lon): r for r in cat.collect()}
+    assert cat.schema == catalog.CATALOG_SCHEMA
+    got = cat.collect()
+    # sorted by filename; junk, the unreadable zip and the bad-size entry
+    # are skipped
+    assert [r.filename for r in got] == ["N35E138.hgt", "N35E139.hgt", "N36E138.hgt"]
+    rows = {(r.tile_lat, r.tile_lon): r for r in got}
     assert set(rows) == {(35, 138), (36, 138), (35, 139)}
     assert all(r.samples == 1201 for r in rows.values())
     # plain .hgt beat the zip: center of N35E139 is the interp tile (0 at center
     # would be 100 at (600,600)); the zip variant had 777
-    grid = hgt.decode_tile(bytes(rows[(35, 139)].data))
+    assert rows[(35, 139)].path.endswith("/N35E139.hgt")
+    grid = hgt.decode_tile(catalog._read_blob_from_path(rows[(35, 139)].path))
     assert grid[600, 600] == 100
     # zip-only tile decoded correctly
-    grid2 = hgt.decode_tile(bytes(rows[(36, 138)].data))
+    assert rows[(36, 138)].path.endswith("/N36E138.hgt.zip")
+    grid2 = hgt.decode_tile(catalog._read_blob_from_path(rows[(36, 138)].path))
     assert grid2[600, 600] == 1000
+
+
+def _jobs(spark, body):
+    """The Spark jobs ``body()`` launches, counted by job id in one job
+    group, and what it returned."""
+    sc = spark.sparkContext
+    group = f"count-{id(body)}"
+    sc.setJobGroup(group, "job count")
+    try:
+        out = body()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+def test_catalog_job_counts(spark, tile_dir):
+    """A catalog is metadata built on the driver: a tile_dir engine plus
+    preload() launches exactly one job (the decode check), a grids
+    engine's path index none. A grids catalog is a LocalRelation, not a
+    Python RDD (no ``Scan ExistingRDD``), and a catalog= frame without
+    ``path`` is refused."""
+    from htg_spark.profile import absent, faults, plan_nodes, present
+
+    def dir_preload():
+        return ElevationEngine(spark, tile_dir=tile_dir).preload()
+
+    n, stats = _jobs(spark, dir_preload)
+    assert (n, stats["tiles_matched"], stats["tiles_failed"]) == (1, 3, 0)
+    grids = {(35, 138): fixtures.tile_corners(), (36, 138): fixtures.tile_gradient()}
+    n, n_tiles = _jobs(spark, lambda: ElevationEngine(spark, grids=grids).n_tiles())
+    assert (n, n_tiles) == (0, 2)
+    nodes = plan_nodes(catalog.catalog_from_grids(spark, grids))
+    assert faults(nodes, [absent("Scan ExistingRDD"), present("LocalTableScan")]) == []
+    blobs = catalog.catalog_from_grids(spark, grids).drop("path")
+    with pytest.raises(ValueError, match="catalog_from_grids"):
+        ElevationEngine(spark, catalog=blobs)
 
 
 def test_catalog_dir_engine_end_to_end(spark, tile_dir):

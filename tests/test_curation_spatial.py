@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from htg_spark import cells
 from htg_spark.operators import curation, geo_misc
+from htg_spark.profile import absent, count, faults, plan_nodes, present, render
 
 # --- independent geohash reference: the textbook successive-halving loop ---
 
@@ -297,21 +298,9 @@ def test_mixture_weights_exact(spark):
 # --- IDW interpolation vs quadratic fold -------------------------------------
 
 
-def _plan_text(df) -> str:
-    import io
-    from contextlib import redirect_stdout
-
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
-
-
-def _n_shuffle_exchanges(df) -> int:
-    import re
-
-    # shuffle Exchanges only — "BroadcastExchange" deliberately not matched
-    return len(re.findall(r"\(\d+\) Exchange\b", _plan_text(df)))
+def _assert_plan(df, gates):
+    nodes = plan_nodes(df)
+    assert not faults(nodes, gates), render(nodes)
 
 
 def test_idw_interpolate_matches_quadratic_fold(spark):
@@ -364,10 +353,15 @@ def test_idw_interpolate_matches_quadratic_fold(spark):
         qx_col="qx",
         qy_col="qy",
     )
-    plan = _plan_text(out)
-    assert "CartesianProduct" not in plan and "SortMergeJoin" not in plan
-    assert "BroadcastHashJoin" in plan
-    assert _n_shuffle_exchanges(out) == 1  # only the query_id aggregation
+    # one Exchange (BroadcastExchange not counted): the query_id aggregation
+    _assert_plan(
+        out,
+        [
+            absent("CartesianProduct", "SortMergeJoin"),
+            present("BroadcastHashJoin"),
+            count("Exchange", 1, 1),
+        ],
+    )
 
     got = {r_.qid: r_ for r_ in out.collect()}
     assert set(got) == set(range(64))
@@ -426,11 +420,7 @@ def test_trajectory_segments_semantics(spark):
         "lat", "lon",
     )
     out = trajectory_segments(df, cut_d2=0.0625)
-    import re
-
-    plan = _plan_text(out)
-    assert len(re.findall(r"\(\d+\) Exchange\b", plan)) == 1
-    assert len(re.findall(r"\(\d+\) Sort\b", plan)) == 1
+    _assert_plan(out, [count("Exchange", 1, 1), count("Sort", 1, 1)])
 
     segs = {r.segment_id: r for r in out.collect()}
     assert set(segs) == {1, 4, 6, 7}
@@ -477,7 +467,8 @@ def test_cell_smooth_hand_case(spark):
     ]
     df = spark.createDataFrame(rows, "event_id long, lat double, lon double")
     out = smooth_cell_counts(df, level=4)
-    assert _n_shuffle_exchanges(out) == 2  # density rollup + halo re-key
+    # density rollup + halo re-key (BroadcastExchange not counted)
+    _assert_plan(out, [count("Exchange", 2, 2)])
 
     import math as m
 

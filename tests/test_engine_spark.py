@@ -283,9 +283,9 @@ def test_cogroup_blob_source_path(spark, grids, points_pdf, tile_dir):
 
 
 def test_auto_strategy_counts_catalog_once(spark, grids, points_pdf):
-    """The catalog is read once per engine, for its path index (here the
-    spill of an in-memory catalog): a Spark action in the hot path of
-    every repeated join is a driver-side stall at scale."""
+    """The catalog is read once per engine, for its path index: a catalog
+    read in the hot path of every repeated join is a driver-side stall at
+    scale."""
     eng = ElevationEngine(spark, grids=grids)
     calls = {"n": 0}
     orig = eng.catalog.select
@@ -304,29 +304,30 @@ def test_auto_strategy_counts_catalog_once(spark, grids, points_pdf):
 
 def test_catalog_measure_is_thread_safe(spark, grids, monkeypatch):
     """preload(blocking=False) runs catalog prep on a background thread;
-    the lazy one-time spill of an in-memory catalog must stream the
-    catalog and write its tiles EXACTLY once even under concurrent first
-    calls (without the lock, each thread would collect the catalog and
-    leak a broadcast index)."""
+    the lazy one-time path index must collect the catalog EXACTLY once
+    even under concurrent first calls (without the lock, each thread would
+    collect the catalog and leak a broadcast index). An in-memory
+    catalog's tiles are spilled once, on the driver, when it is built."""
     import threading
 
-    from htg_spark import engine as engine_mod
+    from htg_spark import catalog as catalog_mod
 
-    eng = ElevationEngine(spark, grids=grids)
     calls = {"select": 0, "spill": 0}
-    orig_select = eng.catalog.select
-    orig_spill = engine_mod._spill_blob
-
-    def counting_select(*a, **k):
-        calls["select"] += 1
-        return orig_select(*a, **k)
+    orig_spill = catalog_mod._spill_blob
 
     def counting_spill(*a, **k):
         calls["spill"] += 1
         return orig_spill(*a, **k)
 
+    monkeypatch.setattr(catalog_mod, "_spill_blob", counting_spill)
+    eng = ElevationEngine(spark, grids=grids)
+    orig_select = eng.catalog.select
+
+    def counting_select(*a, **k):
+        calls["select"] += 1
+        return orig_select(*a, **k)
+
     eng.catalog.select = counting_select
-    monkeypatch.setattr(engine_mod, "_spill_blob", counting_spill)
     threads = [threading.Thread(target=eng.n_tiles) for _ in range(8)]
     for t in threads:
         t.start()
@@ -338,7 +339,7 @@ def test_catalog_measure_is_thread_safe(spark, grids, monkeypatch):
 
 def test_auto_blob_source_picks_path(spark, grids, points_pdf, tmp_path):
     """strategy='auto' past the grid cache reads tiles by path on every
-    catalog, path-bearing or in-memory (spilled to files): the salted
+    catalog, a tile directory or in-memory (spilled to files): the salted
     input rows cross one Exchange and no Exchange carries the binary data
     column — at 100 TB of rasters the blobs must never ride a shuffle.
     Within the cache, auto runs map-side with no Exchange at all."""
@@ -478,7 +479,7 @@ def test_read_blob_from_path_uri_handling(tmp_path):
     """The binaryFile path column is a URI: percent-encoded characters must
     decode, and non-local schemes must fail with a clear contract error
     (not a bogus FileNotFoundError deep inside a task)."""
-    from htg_spark.engine import _read_blob_from_path
+    from htg_spark.catalog import _read_blob_from_path
 
     p = tmp_path / "tile dir" / "N35E138.hgt"
     p.parent.mkdir()
@@ -491,27 +492,23 @@ def test_read_blob_from_path_uri_handling(tmp_path):
 
 
 def test_preload_gates_blob_broadcast(spark):
-    """preload on a path-less catalog builds the path index: it spills the
-    blobs to content-named files, and only their names are broadcast —
-    never the blobs (a driver OOM exactly when preload matters most). Its
-    300 tiles share one blob, so one file is written and shipped."""
-    from htg_spark import engine as engine_mod
-    from htg_spark.catalog import CATALOG_SCHEMA
+    """preload builds the path index, and only names are broadcast —
+    never the blobs (a driver OOM exactly when preload matters most). An
+    in-memory catalog is spilled to content-named files on the driver:
+    its 300 tiles share one grid, so one file is written and shipped."""
+    from htg_spark import catalog as catalog_mod
 
-    rows = [
-        (i // 40, i % 40, 1201, f"T{i:05d}.hgt", bytearray(b"xx"))
-        for i in range(300)
-    ]
-    cat = spark.createDataFrame(rows, CATALOG_SCHEMA)
-    eng = ElevationEngine(spark, catalog=cat)
+    grid = np.full((1201, 1201), 4321, dtype=np.int16)
+    before = _spill_files()
+    eng = ElevationEngine(spark, grids={(i // 40, i % 40): grid for i in range(300)})
     stats = eng.preload()
-    assert stats["tiles_matched"] == 300
+    assert (stats["tiles_matched"], stats["tiles_failed"]) == (300, 0)
     index = eng._path_index().value
     assert len(index) == 300 and len(set(index.values())) == 1
     name = next(iter(index.values()))
-    with open(os.path.join(engine_mod._SPILL_DIR, name), "rb") as f:
-        assert f.read() == b"xx"
-    cat.unpersist()
+    assert set(_spill_files()) - set(before) == {name}
+    with open(os.path.join(catalog_mod._SPILL_DIR, name), "rb") as f:
+        assert f.read() == hgt.encode_tile(grid)
 
 
 def test_phash_derivation_matches_numpy(spark, engine):
@@ -906,32 +903,37 @@ def test_spill_isolates_engines_sharing_a_tile_key(spark):
             assert eng.get_elevations_batch([(35.5, 138.5), (36.5, 138.5)]) == [want, 100]
 
 
-def test_second_engine_spills_nothing_new(spark, grids, points_pdf, monkeypatch):
-    """A spilled file is named by the SHA-256 of its bytes, hashed
-    JVM-side, so a second engine over the same grids streams no blob and
-    writes no file: it ships the existing names and joins the same rows."""
+def _spill_files() -> dict:
+    """{name: (inode, mtime)} of every spilled tile file. A spill writes a
+    temporary file and renames it over the name, so a rewrite changes
+    both."""
+    from htg_spark import catalog as catalog_mod
+
+    d = catalog_mod._SPILL_DIR
+    return {
+        n: (s.st_ino, s.st_mtime_ns)
+        for n in (os.listdir(d) if d else ())
+        for s in [os.stat(os.path.join(d, n))]
+    }
+
+
+def test_second_engine_spills_nothing_new(spark, grids, points_pdf):
+    """A spilled file is named by the SHA-256 of its bytes, so a second
+    engine over the same grids writes no file: it ships the existing names
+    and joins the same rows."""
     import hashlib
 
-    from htg_spark import engine as engine_mod
+    from htg_spark import catalog as catalog_mod
 
     first = ElevationEngine(spark, grids=grids)
     index = first._path_index().value
     for name in set(index.values()):
-        with open(os.path.join(engine_mod._SPILL_DIR, name), "rb") as f:
+        with open(os.path.join(catalog_mod._SPILL_DIR, name), "rb") as f:
             assert name == hashlib.sha256(f.read()).hexdigest() + ".hgt"
-    spilled = sorted(os.listdir(engine_mod._SPILL_DIR))
-    blobs = []
-    orig_spill = engine_mod._spill_blob
-
-    def spy(sc, name, blob=None):
-        blobs.append(blob)
-        return orig_spill(sc, name, blob)
-
-    monkeypatch.setattr(engine_mod, "_spill_blob", spy)
+    spilled = _spill_files()
     second = ElevationEngine(spark, grids=grids)
     assert second._path_index().value == index
-    assert len(blobs) == len(grids) and all(b is None for b in blobs)
-    assert sorted(os.listdir(engine_mod._SPILL_DIR)) == spilled
+    assert _spill_files() == spilled
     df = spark.createDataFrame(points_pdf.head(300))
 
     def rows(eng):
@@ -948,8 +950,9 @@ def test_nan_coordinate_casts_without_warning(spark, grids):
     import warnings
 
     eng = ElevationEngine(spark, grids=grids)
-    # spill outside the block: PySpark's toLocalIterator leaves its socket
-    # to the garbage collector, which warns (ResourceWarning) on collection
+    # build the path index outside the block: PySpark leaves a collect()'s
+    # socket to the garbage collector, which warns (ResourceWarning) on
+    # collection
     eng.n_tiles()
     coords = [(np.nan, 138.5), (35.5, 138.5), (35.5, np.nan)]
     with warnings.catch_warnings():
@@ -958,30 +961,26 @@ def test_nan_coordinate_casts_without_warning(spark, grids):
         assert eng.get_elevations_batch(coords, default=-1) == [-1, 500, -1]
 
 
-def test_spill_streams_only_missing_tiles_by_key(spark, grids, monkeypatch):
+def test_spill_streams_only_missing_tiles_by_key(spark, grids):
     """When some spill files already exist, only the tiles whose file is
-    missing stream to the driver, selected by tile key and named from the
-    collected SHA-256 hashes; the tiles already on disk keep their names."""
+    missing are written, named by the SHA-256 of their bytes; the files
+    already on disk keep their names and are not rewritten."""
     import hashlib
 
-    from htg_spark import engine as engine_mod
+    from htg_spark import catalog as catalog_mod
 
     index = ElevationEngine(spark, grids=grids)._path_index().value
     extra = np.random.default_rng(2024).integers(0, 3000, size=(1201, 1201)).astype(np.int16)
     blob = hgt.encode_tile(extra)
-    written = []
-    orig_spill = engine_mod._spill_blob
-
-    def spy(sc, name, blob=None):
-        if blob is not None:
-            written.append((name, blob))
-        return orig_spill(sc, name, blob)
-
-    monkeypatch.setattr(engine_mod, "_spill_blob", spy)
+    before = _spill_files()
     eng = ElevationEngine(spark, grids={**grids, (50, 50): extra})
     name = hashlib.sha256(blob).hexdigest() + ".hgt"
     assert eng._path_index().value == {**index, (50, 50): name}
-    assert written == [(name, blob)]
+    after = _spill_files()
+    assert set(after) - set(before) == {name}
+    assert {n: after[n] for n in before} == before
+    with open(os.path.join(catalog_mod._SPILL_DIR, name), "rb") as f:
+        assert f.read() == blob
     assert eng.get_elevation(50.5, 50.5) == int(extra[600, 600])
 
 

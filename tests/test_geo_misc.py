@@ -58,13 +58,10 @@ def test_knn_points_join_exact_and_zero_shuffle(spark):
     """Top-k nearest POIs: brute-force NumPy agreement on ranks and
     distances, deterministic poi_id tie-break for an equidistant point,
     and a zero-Exchange map-only plan."""
-    import io
-    import re
-    from contextlib import redirect_stdout
-
     import numpy as np
 
     from htg_spark.operators.geo_misc import knn_points_join
+    from htg_spark.profile import JOINS, absent, faults, partitioned, plan_nodes, render, shuffles
 
     pois = [(0, 0.0, 0.0), (1, 0.0, 10.0), (2, 10.0, 0.0), (3, 10.0, 10.0)]
     # (5,5) ties ALL FOUR pois at d2=50 -> ranks must follow poi_id order
@@ -87,17 +84,12 @@ def test_knn_points_join_exact_and_zero_shuffle(spark):
         assert got["rank"].tolist() == [1, 2, 3]
     assert out[out.image_id == "tie"]["poi_id"].tolist() == [0, 1, 2]
 
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        knn_points_join(pts, pois, k=3).explain("formatted")
-    plan = buf.getvalue()
     # zero shuffle Exchanges EXCEPT the scale-adaptive scan spread (a
     # round-robin repartition that fires only because this test input has
     # fewer partitions than cores; absent at production partition counts)
-    n_ex = len(re.findall(r"\(\d+\) Exchange\b", plan))
-    n_spread = plan.count("Arguments: RoundRobinPartitioning(")
-    assert n_ex - n_spread == 0 and n_spread <= 1
-    assert "Join" not in plan
+    nodes = plan_nodes(knn_points_join(pts, pois, k=3))
+    gates = [shuffles(0), partitioned("RoundRobinPartitioning", 0, 1), absent(*JOINS)]
+    assert not faults(nodes, gates), render(nodes)
 
 
 def test_dbscan_clusters_hand_case(spark):

@@ -6,6 +6,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from htg_spark.operators import ann, dedup, text
+from htg_spark.profile import absent, count, faults, plan_nodes, render
+
+NO_CROSS = absent("CartesianProduct", "BroadcastNestedLoopJoin")
+
+
+def _assert_plan(df, gates):
+    nodes = plan_nodes(df)
+    assert not faults(nodes, gates), render(nodes)
 
 
 @pytest.fixture(scope="module")
@@ -512,14 +520,7 @@ def test_sessionize(spark):
     ]
     assert out["duration_us"].tolist() == [600_000_000, 0, 0]
     assert out["n_event_types"].tolist() == [2, 1, 1]
-    import io
-    import re
-    from contextlib import redirect_stdout
-
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        ev.sessionize(df).explain("formatted")
-    assert len(re.findall(r"\(\d+\) Exchange", buf.getvalue())) == 1
+    _assert_plan(ev.sessionize(df), [count("Exchange", 1, 1)])
 
 
 def test_asof_join_semantics(spark):
@@ -585,20 +586,12 @@ def test_asof_join_semantics(spark):
 
     # ONE Exchange with AND without the tiebreak: the dup-ts resolution
     # rides the window sort order, never a groupBy pre-reduce
-    import io
-    import re
-    from contextlib import redirect_stdout
-
     for tb in (None, "mid"):
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            ev.asof_join(
-                probes, markers, key_col="uid", ts_col="us",
-                payload_cols=["mid"], tiebreak_col=tb,
-            ).explain("formatted")
-        plan = buf.getvalue()
-        assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1
-        assert "CartesianProduct" not in plan and "BroadcastNestedLoop" not in plan
+        out = ev.asof_join(
+            probes, markers, key_col="uid", ts_col="us",
+            payload_cols=["mid"], tiebreak_col=tb,
+        )
+        _assert_plan(out, [count("Exchange", 1, 1), NO_CROSS])
 
 
 def test_interval_join_semantics(spark):
@@ -654,15 +647,7 @@ def test_interval_join_semantics(spark):
     with pytest.raises(ValueError, match="bucket_us"):
         ev.interval_join(probes, windows, bucket_us=0)
 
-    import io
-    import re
-    from contextlib import redirect_stdout
-
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        ev.interval_join(probes, windows, bucket_us=10).explain("formatted")
-    plan = buf.getvalue()
-    assert "CartesianProduct" not in plan and "BroadcastNestedLoop" not in plan
+    _assert_plan(ev.interval_join(probes, windows, bucket_us=10), [NO_CROSS])
 
 
 def test_phash_banding_63bit(spark):
@@ -981,8 +966,7 @@ def test_near_dup_pairs_bucketed_full_recall(emb):
     want = set(zip(exact["id_a"], exact["id_b"]))
     assert got == want
     # and the plan must not contain a cartesian product
-    plan = ann.near_dup_pairs(df, tables, threshold=0.999)._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
+    _assert_plan(ann.near_dup_pairs(df, tables, threshold=0.999), [NO_CROSS])
 
 
 def _clustered_corpus(spark, n_clusters=12, per_cluster=30, dim=16, seed=3):
@@ -1199,16 +1183,9 @@ def test_funnel_stages_semantics(spark, tmp_path):
     assert out["u6"].stage == 1
 
     # plan: ONE Exchange, ONE Sort serve both windows and the groupBy
-    import io
-    import re
-    from contextlib import redirect_stdout
-
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        q_funnel_stages(spark, str(tmp_path)).explain("formatted")
-    plan = buf.getvalue()
-    assert len(re.findall(r"\(\d+\) Exchange\b", plan)) == 1
-    assert len(re.findall(r"\(\d+\) Sort\b", plan)) == 1
+    _assert_plan(
+        q_funnel_stages(spark, str(tmp_path)), [count("Exchange", 1, 1), count("Sort", 1, 1)]
+    )
 
 
 # --- incremental corpus dedup -------------------------------------------------

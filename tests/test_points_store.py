@@ -7,6 +7,14 @@ import pandas as pd
 from htg_spark import fixtures
 from htg_spark.engine import ElevationEngine
 from htg_spark.points_store import read_points, write_points
+from htg_spark.profile import absent, count, faults, partition_filter, plan_nodes, present, render
+
+ANY_EXCHANGE = ("Exchange", "BroadcastExchange", "ReusedExchange")
+
+
+def _assert_plan(df, gates):
+    nodes = plan_nodes(df)
+    assert not faults(nodes, gates), render(nodes)
 
 
 def test_partition_pruning(spark, tmp_path):
@@ -28,14 +36,7 @@ def test_partition_pruning(spark, tmp_path):
     one = read_points(spark, path, bbox=(35.2, 138.2, 35.8, 138.8))
     # pruning is applied at planning: the scan must carry a p_cell
     # PartitionFilter (inputFiles() reflects the pre-pushdown file index)
-    import io
-    from contextlib import redirect_stdout
-
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        one.explain(True)
-    plan = buf.getvalue()
-    assert "PartitionFilters" in plan and "p_cell" in plan.split("PartitionFilters", 1)[1][:200]
+    _assert_plan(one, [partition_filter("p_cell")])
     got = one.toPandas()
     expect = pdf[(pdf.lat >= 35) & (pdf.lat < 36) & (pdf.lon >= 138) & (pdf.lon < 139)]
     assert len(got) == len(expect)
@@ -53,16 +54,6 @@ def test_write_from_phash(spark, tmp_path):
     back = read_points(spark, path)
     assert back.count() == 200
     assert "p_cell" in back.columns and "lat" in back.columns
-
-
-def _plan_of(df):
-    import io
-    from contextlib import redirect_stdout
-
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
 
 
 def test_bucketed_join_elides_exchange(spark, tmp_path):
@@ -93,9 +84,7 @@ def test_bucketed_join_elides_exchange(spark, tmp_path):
         lb = read_bucketed(spark, "t_fact_b")
         rb = read_bucketed(spark, "t_dim_b")
         joined = lb.join(rb, "k").select("k", "v", "w")
-        plan = _plan_of(joined)
-        assert "Exchange" not in plan, plan
-        assert "SortMergeJoin" in plan, plan
+        _assert_plan(joined, [absent(*ANY_EXCHANGE), present("SortMergeJoin")])
         # the co-located result must equal the plain shuffling join
         plain = (
             fact_df.join(dim_df, "k")
@@ -112,12 +101,11 @@ def test_bucketed_join_elides_exchange(spark, tmp_path):
         ).collect()[0]
         assert (got["n"], got["chk"]) == (plain["n"], plain["chk"])
         # aggregation on the bucket key rides the same metadata: no Exchange
-        agg_plan = _plan_of(lb.groupBy("k").agg(F.sum("v").alias("s")))
-        assert "Exchange" not in agg_plan, agg_plan
+        _assert_plan(lb.groupBy("k").agg(F.sum("v").alias("s")), [absent(*ANY_EXCHANGE)])
         # a catalog-blind read of the SAME files loses the bucket spec and
         # must re-shuffle — the read path through the catalog is load-bearing
         blind = spark.read.parquet(str(tmp_path / "fact")).join(rb, "k")
-        assert "Exchange" in _plan_of(blind)
+        _assert_plan(blind, [count(ANY_EXCHANGE, 1)])
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
         spark.sql("DROP TABLE IF EXISTS t_fact_b")

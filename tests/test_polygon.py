@@ -381,11 +381,8 @@ def test_polygon_metrics_exact_and_plan(spark):
     never touch: a unit square (area 1, centroid at its center), a CW
     triangle (negative area2), and a concave ring. Plan must stay
     map-only (zero Exchanges)."""
-    import io
-    import re
-    from contextlib import redirect_stdout
-
     from htg_spark.operators.polygon import polygon_metrics
+    from htg_spark.profile import absent, faults, plan_nodes, render
 
     rings = {
         1: [(0.0, 0.0), (1.0, 0.0), (1.0, 1.0), (0.0, 1.0)],  # CCW square
@@ -398,10 +395,8 @@ def test_polygon_metrics_exact_and_plan(spark):
     )
     out = polygon_metrics(df)
 
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        out.explain("formatted")
-    assert len(re.findall(r"\(\d+\) Exchange\b", buf.getvalue())) == 0
+    nodes = plan_nodes(out)
+    assert not faults(nodes, [absent("Exchange")]), render(nodes)
 
     got = {r.poly_id: r for r in out.collect()}
     for k, ring in rings.items():
