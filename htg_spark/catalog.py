@@ -5,9 +5,10 @@ A catalog is a DataFrame of ``CATALOG_SCHEMA``, ``(tile_lat, tile_lon,
 samples, filename, path)``: one row per 1-degree tile, metadata only, a
 JVM ``LocalRelation`` built on the driver with no Spark job. Every reader
 opens ``path`` (raw HGT: big-endian int16, row-major, row 0 = north; or a
-``.hgt.zip`` holding one) through the one reading seam,
-``_read_blob_from_path``, as the reference opens a tile's file when a
-query first needs it (``htg/src/service.rs:546-576``, ``tile.rs:93-138``).
+``.hgt.zip`` holding one) through the one grid reader, ``_read_grid``, as
+the reference opens a tile's file when a query first needs it
+(``htg/src/service.rs:546-576``, ``tile.rs:93-138``). Grid caches key a
+tile by its file's stamp (``_file_stamp``: path, mtime, size).
 Sources: in-memory grids (``catalog_from_grids``), each written once to a
 file named by the SHA-256 of its bytes; or a directory of ``*.hgt`` /
 ``*.hgt.zip`` files (``catalog_from_dir``), listed and never read, the
@@ -30,6 +31,7 @@ import zipfile
 from collections.abc import Iterator
 from urllib.parse import unquote, urlparse
 
+import numpy as np
 import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
@@ -68,23 +70,43 @@ def _local_path(path: str) -> str:
     )
 
 
-def _read_blob_from_path(path: str) -> bytes:
-    """The raw HGT bytes of the tile file ``path``: the one reading seam of
-    every plan, raster product and the point API (rasters live in shared
-    storage and only their paths ride a plan). Unwraps a ``.hgt.zip``
-    (first .hgt entry, service.rs:546-576). A bare file name is a spilled
-    tile (``_spill_blob``), resolved with ``SparkFiles.get``."""
+def _tile_file(path: str) -> str:
+    """The local file of the tile path ``path``: a bare file name is a
+    spilled tile (``_spill_blob``), resolved with ``SparkFiles.get``; any
+    other path goes through ``_local_path``."""
     if os.path.basename(path) == path:
         from pyspark import SparkFiles
 
-        with open(SparkFiles.get(path), "rb") as f:
-            return f.read()
-    p = _local_path(path)
+        return SparkFiles.get(path)
+    return _local_path(path)
+
+
+def _read_blob_from_path(path: str) -> bytes:
+    """The raw HGT bytes of the tile file ``path``, which ``_read_grid``
+    decodes (rasters live in shared storage and only their paths ride a
+    plan). Unwraps a ``.hgt.zip`` (first .hgt entry, service.rs:546-576)."""
+    p = _tile_file(path)
     with open(p, "rb") as f:
         raw = f.read()
     if p.endswith(".hgt.zip"):
         raw = hgt.extract_hgt_from_zip(raw)
     return raw
+
+
+def _read_grid(path: str) -> np.ndarray:
+    """The decoded grid of the tile file ``path``: read, unzip, decode
+    (``hgt.decode_tile``). Every whole-tile product and every grid cache
+    decodes a tile here."""
+    return hgt.decode_tile(_read_blob_from_path(path))
+
+
+def _file_stamp(path: str) -> tuple:
+    """The identity of the tile file ``path`` as a grid-cache key: (local
+    path, st_mtime_ns, st_size). A file rewritten in place gets a new key,
+    so no cache serves bytes the file no longer holds."""
+    p = os.path.abspath(_tile_file(path))
+    st = os.stat(p)
+    return p, st.st_mtime_ns, st.st_size
 
 
 # The spilled tiles of every in-memory catalog in this process: one
@@ -168,7 +190,7 @@ def map_tiles(catalog: DataFrame, fn, schema: str, *cols: str) -> DataFrame:
     """Run a per-tile NumPy function over every row of ``catalog``: the one
     seam of every whole-tile raster product. Selects ``tile_lat, tile_lon,
     *cols, path`` into one map-only ``mapInArrow`` stage that reads and
-    decodes each row's tile (``_read_blob_from_path``); ``fn(row, grid)``
+    decodes each row's tile (``_read_grid``); ``fn(row, grid)``
     gets the row as a dict and the decoded grid, and yields output tuples
     in the order of ``schema``, a DDL string. Output batches are flushed
     under the int32-offset cap (``_FLUSH_BYTES``)."""
@@ -177,7 +199,7 @@ def map_tiles(catalog: DataFrame, fn, schema: str, *cols: str) -> DataFrame:
     flush_bytes = _FLUSH_BYTES  # the driver's value, pickled with the UDF
 
     def per_tile(row):
-        return fn(row, hgt.decode_tile(_read_blob_from_path(row["path"])))
+        return fn(row, _read_grid(row["path"]))
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         yield from _tile_batches(batches, per_tile, arrow_schema, flush_bytes)
@@ -312,7 +334,7 @@ def preload(
     """Warm the catalog like SrtmService::preload (service.rs:685-722):
     optional bbox pruning (strict-inequality overlap, service.rs:102-110),
     then a per-tile decode check in ONE distributed pass, each tile read by
-    path (``_read_blob_from_path``) — the job doubles as the per-tile error
+    path (``_read_grid``) — the job doubles as the per-tile error
     channel PreloadStats needs (service.rs:707-711 Ok/Err per load_tile).
     Persists nothing. Returns [(tile_lat, tile_lon, ok), ...] where
     ok=False marks a tile whose file failed to read or decode (matched
@@ -341,7 +363,7 @@ def preload(
                     ok.append(True)
                     continue
                 try:
-                    hgt.decode_tile(_read_blob_from_path(p))
+                    _read_grid(p)
                     ok.append(True)
                 except Exception:
                     ok.append(False)

@@ -16,10 +16,10 @@ elevation ``(tile_lat, tile_lon, in_coverage, tile_found, knn_used,
 elevation)``. Spark plans it as ``ArrowEvalPython``, which keeps every
 other column of the row in the JVM: only the two float64 arguments
 (16 B/row) cross into Python, never the image payload. The kernel groups
-its rows by tile (``hgt.tile_groups``) and reads decoded grids from an
-executor-local LRU (the distributed analog of the reference's moka cache,
-``service.rs:168``). The UDF runs the kernel over up to
-``_KERNEL_BUFFER_ROWS`` rows at a time, not per Arrow batch, so a task
+its rows by tile (``hgt.tile_groups``) and reads decoded grids from the
+Python process's one LRU (``_GridCache``, the distributed analog of the
+reference's moka cache, ``service.rs:168``). The UDF runs the kernel over
+up to ``_KERNEL_BUFFER_ROWS`` rows at a time, not per Arrow batch, so a task
 reads each of its tiles about once even when its rows arrive interleaved
 and it holds more tiles than the cache.
 
@@ -27,13 +27,16 @@ One blob source: every tile is read by path, as the reference reads
 every tile (``service.rs:546-576``). The catalog is metadata only,
 ``(tile_lat, tile_lon, samples, filename, path)`` (``catalog``): a
 ``tile_dir`` catalog names its own files, a ``grids`` one the
-content-named files it was spilled to on the driver. The blob getter
-(``_path_blob_getter``) looks a tile key up in a per-engine broadcast
-{tile key: path} index (``_path_index``) and reads the file at the one
-reading seam, ``catalog._read_blob_from_path``. A user ``catalog=`` frame
-must carry ``path`` too.
+content-named files it was spilled to on the driver. The kernel UDF
+looks a tile key up in a per-engine broadcast {tile key: path} index
+(``_path_index``) and asks the process's grid cache for that path. The
+cache keys a grid by its file's stamp (``catalog._file_stamp``: path,
+mtime, size) and reads a miss with ``catalog._read_grid``, so engines over
+the same files share decoded grids, and a tile file rewritten in place is
+read again without any invalidation. A user ``catalog=`` frame must carry
+``path`` too.
 
-Two row layouts over that one getter:
+Two row layouts over that one cache:
 
 - **map-side** (``strategy='broadcast'``; and ``'cogroup'`` / ``'auto'``
   when the catalog holds no more tiles than ``cache_size`` and
@@ -125,8 +128,9 @@ def _python_workers_reused(spark) -> bool:
 
 
 class _GridCache:
-    """Executor-local decoded-grid LRU — the distributed analog of the
-    reference's moka tile cache (service.rs:168, capacity in tiles)."""
+    """Decoded-grid LRU keyed by tile file (``catalog._file_stamp``) — the
+    analog of the reference's moka tile cache (service.rs:168, capacity in
+    tiles)."""
 
     def __init__(self, capacity: int = 64):
         self.capacity = capacity
@@ -134,43 +138,38 @@ class _GridCache:
         self.hits = 0
         self.misses = 0
 
-    def get(self, key, blob_getter):
+    def get(self, path: str | None):
+        """The decoded grid of the tile file ``path``; None for None (a
+        tile key the path index lacks). The stamp is taken before the
+        read, so a file rewritten meanwhile is read again on its next
+        lookup rather than served stale under its new stamp."""
+        if path is None:
+            return None
+        key = cat_mod._file_stamp(path)
         if key in self.data:
             self.hits += 1
             self.data.move_to_end(key)
             return self.data[key]
         self.misses += 1
-        blob = blob_getter(key)
-        if blob is None:
-            return None
-        grid = hgt.decode_tile(bytes(blob))
-        self.data[key] = grid
-        if len(self.data) > self.capacity:
+        grid = self.data[key] = cat_mod._read_grid(path)
+        while len(self.data) > self.capacity:
             self.data.popitem(last=False)
         return grid
 
 
-# Per-worker cache registry, LRU over engine tokens: long-lived Python
-# workers outlive driver-side engines, and clear_cache() rotates the token,
-# so stale tokens must be EVICTED (not just orphaned) or every rotation
-# strands up to cache_size decoded grids per worker forever. The cap bounds
-# how many engines can share a worker before an ACTIVE engine's grids get
-# evicted mid-job (correct results, silent re-decode churn) — 16 engines x
-# 64-grid default is comfortably past any realistic concurrent-engine count
-# while still reclaiming rotated tokens promptly.
-_MAX_CACHE_TOKENS = 16
-_EXECUTOR_CACHE: "OrderedDict[str, _GridCache]" = OrderedDict()
+# The grid cache of this Python process, shared by the joins of every
+# engine; a reused worker keeps it across tasks and passes.
+_PROCESS_GRIDS = _GridCache()
 
 
-def _executor_cache(token: str, capacity: int) -> _GridCache:
-    c = _EXECUTOR_CACHE.get(token)
-    if c is None:
-        c = _EXECUTOR_CACHE[token] = _GridCache(capacity)
-        while len(_EXECUTOR_CACHE) > _MAX_CACHE_TOKENS:
-            _EXECUTOR_CACHE.popitem(last=False)
-    else:
-        _EXECUTOR_CACHE.move_to_end(token)
-    return c
+def _process_grids(capacity: int) -> _GridCache:
+    """This process's grid cache, its capacity set to ``capacity`` (the
+    calling engine's ``cache_size``). The kernel UDF reaches the cache
+    through this module function, which is pickled by reference: a global
+    named in the UDF's closure would be pickled by value, a fresh cache per
+    task."""
+    _PROCESS_GRIDS.capacity = capacity
+    return _PROCESS_GRIDS
 
 
 def assign_nearest_center(
@@ -211,6 +210,16 @@ def assign_nearest_center(
     return sc[best_i].astype(np.int64)
 
 
+def _elevations(grid: np.ndarray, row_pos, col_pos, mode: str) -> np.ndarray:
+    """Float64 elevations of ``grid`` at continuous grid positions, NaN
+    where void: bilinear, or nearest/floor (``mode``) with the void
+    sentinel mapped to NaN."""
+    if mode == "bilinear":
+        return hgt.lookup_bilinear_pos(grid, row_pos, col_pos)[0]
+    vals = hgt.lookup_nearest_pos(grid, row_pos, col_pos, rounding=mode)
+    return np.where(vals == hgt.VOID_VALUE, np.nan, vals.astype(np.float64))
+
+
 def kernel_batch(
     lat: np.ndarray,
     lon: np.ndarray,
@@ -243,12 +252,8 @@ def kernel_batch(
             missing_pts.append(gi)
             continue
         found[gi] = True
-        if mode == "bilinear":
-            vals, _void = hgt.lookup_bilinear(grid, lat[gi], lon[gi])
-            elev[gi] = vals  # NaN where void
-        else:
-            vals = hgt.lookup_nearest(grid, lat[gi], lon[gi], rounding=mode)
-            elev[gi] = np.where(vals == hgt.VOID_VALUE, np.nan, vals.astype(np.float64))
+        row_pos, col_pos = hgt.grid_position(lat[gi], lon[gi], grid.shape[0])
+        elev[gi] = _elevations(grid, row_pos, col_pos, mode)
 
     # kNN nearest-tile fallback for in-coverage points with no tile (J6)
     if missing_pts and knn_centers is not None and len(knn_centers):
@@ -267,14 +272,7 @@ def kernel_batch(
             gi = mi[sub]
             found[gi] = True
             nm1 = grid.shape[0] - 1.0
-            row_pos = (1.0 - fr_lat[sub]) * nm1
-            col_pos = fr_lon[sub] * nm1
-            if mode == "bilinear":
-                vals, _void = hgt.lookup_bilinear_pos(grid, row_pos, col_pos)
-                elev[gi] = vals
-            else:
-                vals = hgt.lookup_nearest_pos(grid, row_pos, col_pos, rounding=mode)
-                elev[gi] = np.where(vals == hgt.VOID_VALUE, np.nan, vals.astype(np.float64))
+            elev[gi] = _elevations(grid, (1.0 - fr_lat[sub]) * nm1, fr_lon[sub] * nm1, mode)
 
     return {
         "lat": lat,
@@ -395,23 +393,24 @@ def _kernel_batches(
         yield from run(buf)
 
 
-def _kernel_udf(get_blob, kernel: TileKernel, token: str, cache_cap: int):
+def _kernel_udf(paths, kernel: TileKernel, cache_cap: int):
     """The one Python stage of both row layouts: a scalar-iterator
     ``arrow_udf`` over (lat, lon) returning the kernel's fields as a
     struct. Spark plans it as ArrowEvalPython, which keeps every other
     column in the JVM, so only the two float64 arguments cross into Python
-    and the payload never counts toward an Arrow batch. ``get_blob(key)``
-    runs executor-side and returns raw tile bytes or None; grids are
-    decoded once per worker into the engine's executor cache."""
+    and the payload never counts toward an Arrow batch. A tile key's path
+    comes from the broadcast {tile key: path} index ``paths``; its grid
+    from the process's grid cache, at capacity ``cache_cap``."""
     buffer_rows = _KERNEL_BUFFER_ROWS  # the driver's value, pickled with the UDF
 
     def tile_kernel(
         batches: Iterator[tuple[pa.Array, pa.Array]],
     ) -> Iterator[pa.Array]:
-        cache = _executor_cache(token, cache_cap)
+        cache = _process_grids(cache_cap)
+        index = paths.value
 
         def get_grid(key):
-            return cache.get(key, get_blob)
+            return cache.get(index.get(key))
 
         yield from _kernel_batches(batches, get_grid, kernel, buffer_rows)
 
@@ -427,18 +426,6 @@ def _by_tile_key(items) -> dict:
             raise ValueError(f"the catalog holds more than one row for tile key {key}")
         out[key] = value
     return out
-
-
-def _path_blob_getter(paths):
-    """The blob getter of every plan and of the point API, over the
-    broadcast {tile key: path} index (``ElevationEngine._path_index``):
-    reads the tile at the one seam, ``catalog._read_blob_from_path``."""
-
-    def get_blob(key):
-        path = paths.value.get(key)
-        return None if path is None else cat_mod._read_blob_from_path(path)
-
-    return get_blob
 
 
 def _quoted(name: str):
@@ -468,14 +455,8 @@ class ElevationEngine:
         tile_dir: str | None = None,
         cache_size: int = 64,
     ):
-        import uuid
-
         self.spark = spark
         self.cache_size = cache_size
-        # executor-cache namespace: a per-engine UUID, NOT id(self) — Python
-        # recycles ids after GC and executor workers outlive driver objects,
-        # so an id-keyed cache could serve another catalog's grids
-        self._cache_token = uuid.uuid4().hex
         if catalog is not None:
             if "path" not in catalog.columns:
                 raise ValueError(
@@ -491,8 +472,6 @@ class ElevationEngine:
             raise ValueError("one of catalog / grids / tile_dir is required")
         # broadcast {tile key: path} (_path_index)
         self._paths = None
-        # (n, 2) int64 catalog tile keys, the kNN centres (tile_centers)
-        self._centers: np.ndarray | None = None
         # tiles warmed by previous preload() calls — the driver-side ledger
         # behind PreloadStats.tiles_already_cached (service.rs:705-708).
         # The reference consults the LIVE moka cache, whose capacity
@@ -527,7 +506,7 @@ class ElevationEngine:
     # the distributed path, so semantics are identical by construction.
 
     def _local_get_grid(self, key):
-        return self._driver_cache.get(key, _path_blob_getter(self._path_index()))
+        return self._driver_cache.get(self._path_index().value.get(key))
 
     def get_elevation(self, lat: float, lon: float, rounding: str = "nearest"):
         """Optional[int] — void/missing -> None; out-of-coverage raises
@@ -683,18 +662,15 @@ class ElevationEngine:
         }
 
     def clear_cache(self):
-        """Invalidate cached decoded grids (service.rs:617; the reference
-        KEEPS the cumulative hit/miss counters — test_clear_cache asserts
-        miss_count continues at 2 after a clear). Executor-side caches are
-        namespaced by the engine token, so rotating it makes every reused
-        worker re-decode on the next job. The preload ledger resets too:
-        after a clear, the next preload() re-loads every tile rather than
-        reporting it already_cached (matching the reference, where preload
-        consults the just-emptied moka cache)."""
-        import uuid
-
+        """Empty the point API's decoded-grid cache (service.rs:617; the
+        reference KEEPS the cumulative hit/miss counters — test_clear_cache
+        asserts miss_count continues at 2 after a clear). The preload
+        ledger resets too: after a clear, the next preload() re-loads every
+        tile rather than reporting it already_cached (matching the
+        reference, where preload consults the just-emptied moka cache).
+        Executor grid caches need no invalidation: they key a grid by its
+        file's stamp, so a rewritten tile file is read again anyway."""
         self._driver_cache.data.clear()
-        self._cache_token = uuid.uuid4().hex
         with self._prep_lock:
             self._preloaded_keys.clear()
 
@@ -738,15 +714,13 @@ class ElevationEngine:
                     paths = _by_tile_key(
                         ((r.tile_lat, r.tile_lon), str(r.path)) for r in rows
                     )
-                    self._centers = np.array(list(paths), dtype=np.int64).reshape(-1, 2)
                     self._paths = self.spark.sparkContext.broadcast(paths)
         return self._paths
 
     def tile_centers(self) -> np.ndarray:
         """(n, 2) int64 catalog tile keys — the kNN centres, taken from the
-        path index."""
-        self._path_index()
-        return self._centers
+        path index's keys."""
+        return np.array(list(self._path_index().value), dtype=np.int64).reshape(-1, 2)
 
     # -- the join ------------------------------------------------------------
 
@@ -824,11 +798,9 @@ class ElevationEngine:
         kernel = _elevation_kernel(mode, knn_fallback)
         out = self._tile_join(pts, kernel, strategy, id_col, n_salts)
 
-        if default is not None:
-            out = out.withColumn(
-                "elevation", F.coalesce(F.col("elevation"), F.lit(default))
-            )
         if observe:
+            # observed before `default` fills the NULLs, so void_hits
+            # counts voids with or without a default
             from pyspark.sql import Observation
 
             obs = Observation("elevation_join")
@@ -842,9 +814,13 @@ class ElevationEngine:
                 F.sum(F.col("knn_used").cast("long")).alias("knn_fallbacks"),
                 F.sum(
                     (F.col("tile_found") & F.col("elevation").isNull()).cast("long")
-                ).alias("void_hits") if default is None else F.lit(0).alias("void_hits"),
+                ).alias("void_hits"),
             )
             self.last_observation = obs
+        if default is not None:
+            out = out.withColumn(
+                "elevation", F.coalesce(F.col("elevation"), F.lit(default))
+            )
         return out
 
     def _tile_join(
@@ -882,7 +858,7 @@ class ElevationEngine:
             rows = keyed.repartition(n_parts, "_gk").drop("_gk")
         if kernel.knn:
             kernel = kernel.with_centers(self.tile_centers())
-        udf = _kernel_udf(_path_blob_getter(paths), kernel, self._cache_token, self.cache_size)
+        udf = _kernel_udf(paths, kernel, self.cache_size)
         return _append_kernel(rows, udf, kernel.names)
 
     # -- the salted layout -----------------------------------------------------

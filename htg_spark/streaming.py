@@ -47,17 +47,6 @@ def stream_terrain_join(engine: ElevationEngine, stream: DataFrame, **kw) -> Dat
     return terrain_join(engine, stream, strategy="broadcast", **kw)
 
 
-def tile_hit_counts(enriched_stream: DataFrame, window: str = "1 minute") -> DataFrame:
-    """Example stateful layer: per-tile hit counts over processing-time
-    windows on the enriched stream (cache-stats analog, service.rs:41-63)."""
-    return (
-        enriched_stream.withColumn("ts", F.current_timestamp())
-        .withWatermark("ts", "0 seconds")
-        .groupBy(F.window("ts", window), "tile_lat", "tile_lon")
-        .agg(F.count("*").alias("hits"))
-    )
-
-
 def stream_geofence(
     stream: DataFrame,
     polygons: DataFrame,

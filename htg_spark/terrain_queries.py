@@ -580,7 +580,13 @@ def _pyramid_hillshade_sql() -> str:
     |dr|), weight_y = -dr * (2 - |dc|) reproduce the 1-2-1 Horn sums;
     validity = every neighbor block non-void, interior cells only); stage
     3 is the identical hillshade float order + round-half-away byte
-    quantization as the base render oracle."""
+    quantization as the base render oracle.
+
+    The self-join is an equi-join: ``nb`` crosses each interior cell with
+    the nine (dr, dc) offsets and names the neighbour's (nr, nc). DuckDB
+    1.0 runs a BETWEEN range join here for minutes, and with ``r + dr``
+    written into the join condition it hash-joins on lvl alone; the
+    equi-join takes under a second."""
     return f"""
 WITH g AS (
   SELECT r.range AS r, c.range AS c FROM range(0, 1200) r, range(0, 1200) c
@@ -602,18 +608,20 @@ p AS (
     END AS q
   FROM lv
 ),
-st AS (
-  SELECT a.lvl, a.r, a.c,
-    bool_and(b.cnt > 0) AS ok,
-    CAST(sum(b.q * (b.c - a.c) * (2 - abs(b.r - a.r))) AS BIGINT) AS gxs,
-    CAST(sum(b.q * (a.r - b.r) * (2 - abs(b.c - a.c))) AS BIGINT) AS gys
-  FROM p a JOIN p b
-    ON b.lvl = a.lvl
-   AND b.r BETWEEN a.r - 1 AND a.r + 1
-   AND b.c BETWEEN a.c - 1 AND a.c + 1
+nb AS (
+  SELECT a.lvl, a.r, a.c, o.dr, o.dc, a.r + o.dr AS nr, a.c + o.dc AS nc
+  FROM p a
+  CROSS JOIN (SELECT dr.range AS dr, dc.range AS dc FROM range(-1, 2) dr, range(-1, 2) dc) o
   WHERE a.r >= 1 AND a.r <= (1200 // (1 << a.lvl)) - 2
     AND a.c >= 1 AND a.c <= (1200 // (1 << a.lvl)) - 2
-  GROUP BY a.lvl, a.r, a.c
+),
+st AS (
+  SELECT n.lvl, n.r, n.c,
+    bool_and(b.cnt > 0) AS ok,
+    CAST(sum(b.q * n.dc * (2 - abs(n.dr))) AS BIGINT) AS gxs,
+    CAST(sum(b.q * (-n.dr) * (2 - abs(n.dc))) AS BIGINT) AS gys
+  FROM nb n JOIN p b ON b.lvl = n.lvl AND b.r = n.nr AND b.c = n.nc
+  GROUP BY n.lvl, n.r, n.c
 ),
 d AS (
   SELECT lvl, ok,

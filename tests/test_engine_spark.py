@@ -458,21 +458,72 @@ def test_cogroup_adaptive_salting_spreads_hot_tile(spark, engine, grids):
     assert np.array_equal(av[m], bv[m])
 
 
-def test_executor_cache_token_lru():
-    """clear_cache() rotates the engine token; long-lived Python workers
-    must EVICT stale tokens' decoded grids, not orphan them forever."""
-    from htg_spark import engine as eng_mod
+def test_rewritten_tile_file_is_read_again(spark, tmp_path):
+    """A tile file rewritten in place (new bytes, new mtime) is read again
+    without clear_cache(): every grid cache keys a tile by its file's stamp
+    (path, mtime, size), so the point API and a join on the same engine
+    both return the new values."""
+    f = tmp_path / "N35E138.hgt"
+    f.write_bytes(hgt.encode_tile(fixtures.tile_center(500)))
+    eng = ElevationEngine(spark, tile_dir=str(tmp_path))
+    df = spark.createDataFrame(pd.DataFrame({"image_id": ["a"], "lat": [35.5], "lon": [138.5]}))
 
-    eng_mod._EXECUTOR_CACHE.clear()
-    for i in range(eng_mod._MAX_CACHE_TOKENS + 3):
-        eng_mod._executor_cache(f"tok{i}", capacity=4)
-    assert len(eng_mod._EXECUTOR_CACHE) == eng_mod._MAX_CACHE_TOKENS
-    assert "tok0" not in eng_mod._EXECUTOR_CACHE  # oldest evicted
-    # touching an existing token refreshes it (LRU, not FIFO)
-    eng_mod._executor_cache("tok3", capacity=4)
-    eng_mod._executor_cache("tokX", capacity=4)
-    assert "tok3" in eng_mod._EXECUTOR_CACHE
-    eng_mod._EXECUTOR_CACHE.clear()
+    def joined():
+        return eng.elevation_join(df, strategy="broadcast").first()["elevation"]
+
+    assert eng.get_elevation(35.5, 138.5) == 500
+    assert joined() == 500
+    st = os.stat(f)
+    f.write_bytes(hgt.encode_tile(fixtures.tile_center(700)))
+    os.utime(f, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    assert eng.get_elevation(35.5, 138.5) == 700
+    assert joined() == 700
+
+
+@pytest.mark.parametrize("knn", [False, True])
+@pytest.mark.parametrize("default", [None, -1])
+def test_observation_counts_match_the_oracle(spark, knn, default):
+    """elevation_join(observe=True) publishes the domain counters of the
+    join on its Observation; each equals the count computed with the hgt
+    reference, with and without a default (void_hits counts the voids the
+    default then fills). The fixture holds in-tile, void, missing-tile and
+    out-of-coverage rows; with kNN on, the missing-tile rows fall back to
+    the nearest tile's edge, which holds no void."""
+    grids = fixtures.default_catalog_grids()
+    grids[(36, 138)] = grids[(36, 138)].copy()
+    grids[(36, 138)][500:700, 500:700] = hgt.VOID_VALUE
+    rng = np.random.default_rng(5)
+    n = 600
+    lat = 35.0 + rng.random(n) * 2.0
+    lon = 138.0 + rng.random(n) * 2.0
+    void = slice(0, n, 7)  # inside the void block
+    lat[void] = 36.45 + rng.random(len(lat[void])) * 0.1
+    lon[void] = 138.45 + rng.random(len(lon[void])) * 0.1
+    lat[1::11], lon[1::11] = 50.2, 50.3  # missing tile
+    lat[2::13] = 75.0  # out of coverage
+    pdf = pd.DataFrame({"image_id": [f"p{i}" for i in range(n)], "lat": lat, "lon": lon})
+
+    in_cov = hgt.is_valid_srtm_coord(lat, lon)
+    tl, tn = hgt.tile_key(lat, lon)
+    has_tile = in_cov & np.array([(a, b) in grids for a, b in zip(tl, tn)])
+    vals = hgt.get_elevations_batch(np.stack([lat, lon], axis=1), grids, default=-(10**6))
+    n_missing = int((in_cov & ~has_tile).sum())
+    expected = {
+        "rows": n,
+        "out_of_coverage": int((~in_cov).sum()),
+        "missing_tile": 0 if knn else n_missing,
+        "knn_fallbacks": n_missing if knn else 0,
+        "void_hits": int((has_tile & (vals == -(10**6))).sum()),
+    }
+    assert expected["void_hits"] > 0 and n_missing > 0 and expected["out_of_coverage"] > 0
+
+    eng = ElevationEngine(spark, grids=grids)
+    out = eng.elevation_join(
+        spark.createDataFrame(pdf), strategy="broadcast", knn_fallback=knn,
+        default=default, observe=True,
+    )
+    out.collect()
+    assert dict(eng.last_observation.get) == expected
 
 
 def test_read_blob_from_path_uri_handling(tmp_path):
@@ -611,7 +662,7 @@ def test_path_plan_moves_input_rows_once(spark, tile_dir, points_pdf):
         assert "caption" in exchange.output, render(nodes)
 
 
-def test_kernel_buffer_reads_each_tile_once():
+def test_kernel_buffer_reads_each_tile_once(tmp_path, monkeypatch):
     """A shuffled partition reaches the kernel UDF with its tiles
     interleaved, so every Arrow batch touches every tile of the task. The
     UDF body runs the kernel over a buffer of batches: with more tiles
@@ -621,14 +672,18 @@ def test_kernel_buffer_reads_each_tile_once():
     kernel's."""
     import pyarrow as pa
 
+    from htg_spark import catalog as catalog_mod
     from htg_spark import engine as engine_mod
 
     rng = np.random.default_rng(11)
     cells_ = [(30 + i, 100 + j) for i in range(2) for j in range(3)]  # 6 tiles
-    blobs = {
-        c: hgt.encode_tile(rng.integers(-50, 3000, size=(1201, 1201)).astype(np.int16))
-        for c in cells_
-    }
+    paths = {}
+    for c in cells_:
+        f = tmp_path / hgt.coords_to_filename(*c)
+        f.write_bytes(
+            hgt.encode_tile(rng.integers(-50, 3000, size=(1201, 1201)).astype(np.int16))
+        )
+        paths[c] = str(f)
     n, n_batches = 600, 5
     lat = 30 + rng.random(n * n_batches) * 2
     lon = 100 + rng.random(n * n_batches) * 3
@@ -637,17 +692,20 @@ def test_kernel_buffer_reads_each_tile_once():
         for i in range(0, n * n_batches, n)
     ]
     reads = []
+    read_grid = catalog_mod._read_grid
 
-    def get_blob(key):
-        reads.append(key)
-        return blobs.get(key)
+    def counted_read(path):
+        reads.append(path)
+        return read_grid(path)
+
+    monkeypatch.setattr(catalog_mod, "_read_grid", counted_read)
 
     def kernel(buffer_rows):
         reads.clear()
         cache = engine_mod._GridCache(2)  # fewer slots than tiles per task
         return list(
             engine_mod._kernel_batches(
-                iter(batches), lambda k: cache.get(k, get_blob),
+                iter(batches), lambda k: cache.get(paths.get(k)),
                 engine_mod._elevation_kernel("bilinear"), buffer_rows=buffer_rows,
             )
         ), list(reads)
