@@ -26,5 +26,5 @@ def entry(spark: SparkSession) -> DataFrame:
     eng = driver_queries.get_engine(spark)
     pts = driver_queries.derive_points(spark.read.parquet(f"{sf_dir}/events.parquet"))
     return eng.elevation_join(
-        pts, mode="bilinear", strategy="broadcast", id_col="event_id", knn_fallback=True
+        pts, mode="bilinear", strategy="broadcast", knn_fallback=True
     )

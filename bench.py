@@ -58,11 +58,11 @@ def main():
         "floor_broadcast": dict(mode="floor", strategy="broadcast"),
         "bilinear_broadcast": dict(mode="bilinear", strategy="broadcast"),
         "nearest_knn": dict(mode="nearest", strategy="broadcast", knn_fallback=True),
-        "nearest_cogroup_salted": dict(mode="nearest", strategy="cogroup", n_salts=16),
-        "nearest_cogroup_path": dict(mode="nearest", strategy="cogroup", n_salts=16),
+        "nearest_cogroup_salted": dict(mode="nearest", strategy="cogroup"),
+        "nearest_cogroup_path": dict(mode="nearest", strategy="cogroup"),
     }
     # a grid cache below the catalog's 36 tiles sends the salted leaf down
-    # the salted layout (rows shuffled once by salted tile key); its index
+    # the shuffled layout (rows rebalanced once by tile key); its index
     # reuses the in-memory engine's spill files, built out of the timed region
     salted_eng = ElevationEngine(spark, catalog=eng.catalog, cache_size=16)
     salted_eng._path_index()

@@ -152,7 +152,7 @@ def run_pip(pts: DataFrame, polys: DataFrame):
 
 def run_join(eng: ElevationEngine, pts: DataFrame, mode: str, strategy: str, **kw):
     """Execute the join and force full materialization; returns (rows, checksum)."""
-    out = eng.elevation_join(pts, mode=mode, strategy=strategy, id_col="point_id", **kw)
+    out = eng.elevation_join(pts, mode=mode, strategy=strategy, **kw)
     # checksum must be order-insensitive across partition groupings: quantize
     # to int64 before summing (a float64 sum depends on aggregation order)
     row = out.agg(
@@ -171,7 +171,7 @@ def run_terrain(eng: ElevationEngine, pts: DataFrame, strategy: str = "broadcast
     bit-deterministic, so the quantized longs are too)."""
     from .operators import terrain
 
-    out = terrain.terrain_join(eng, pts, strategy=strategy, id_col="point_id")
+    out = terrain.terrain_join(eng, pts, strategy=strategy)
     d = terrain.terrain_cols(F.col("gxs"), F.col("gys"))
     sel = out.select(
         "gxs", "gys", "terrain_ok",

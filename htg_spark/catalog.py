@@ -27,6 +27,7 @@ import os
 import shutil
 import tempfile
 import threading
+import weakref
 import zipfile
 from collections.abc import Iterator
 from urllib.parse import unquote, urlparse
@@ -116,12 +117,16 @@ def _file_stamp(path: str) -> tuple:
 # same grids write and ship each tile once.
 _SPILL_LOCK = threading.Lock()
 _SPILL_DIR: str | None = None
+# {SparkContext: names it already ships}: addFile of a shipped name only
+# logs an "added already" warning, once per tile per catalog
+_SHIPPED: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def _spill_blob(sc, blob: bytes) -> str:
     """Spill one tile: write ``blob`` to ``<sha256 hex of its bytes>.hgt``
     in ``_SPILL_DIR`` (made on first use) unless that file exists, ship it
-    with ``sc.addFile`` and return the name."""
+    with ``sc.addFile`` unless ``sc`` already ships it, and return the
+    name."""
     global _SPILL_DIR
     name = hashlib.sha256(blob).hexdigest() + ".hgt"
     with _SPILL_LOCK:
@@ -133,7 +138,10 @@ def _spill_blob(sc, blob: bytes) -> str:
             with open(path + ".tmp", "wb") as f:
                 f.write(blob)
             os.replace(path + ".tmp", path)
-    sc.addFile(path)  # a no-op for a path this context already ships
+        shipped = _SHIPPED.setdefault(sc, set())
+        if name not in shipped:
+            sc.addFile(path)
+            shipped.add(name)
     return name
 
 

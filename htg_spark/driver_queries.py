@@ -50,7 +50,7 @@ _ENGINES: dict[tuple[str, int], ElevationEngine] = {}
 
 def get_engine(spark: SparkSession, cache_size: int = 64) -> ElevationEngine:
     """The in-memory gradient catalog. ``cache_size=2``, below its tile
-    count, gives the engine whose cogroup joins take the salted layout."""
+    count, gives the engine whose cogroup joins take the shuffled layout."""
     key = (spark.sparkContext.applicationId, cache_size)
     if key not in _ENGINES:
         g = gradient_void_grid()
@@ -226,21 +226,21 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_elevation_nearest(spark, sf_dir):
     eng = get_engine(spark)
     pts = derive_points(_events(spark, sf_dir))
-    out = eng.elevation_join(pts, mode="nearest", strategy="broadcast", id_col="event_id")
+    out = eng.elevation_join(pts, mode="nearest", strategy="broadcast")
     return out.select("event_id", F.col("elevation").cast("int").alias("elevation"))
 
 
 def q_elevation_floor(spark, sf_dir):
     eng = get_engine(spark)
     pts = derive_points(_events(spark, sf_dir))
-    out = eng.elevation_join(pts, mode="floor", strategy="broadcast", id_col="event_id")
+    out = eng.elevation_join(pts, mode="floor", strategy="broadcast")
     return out.select("event_id", F.col("elevation").cast("int").alias("elevation"))
 
 
 def q_elevation_bilinear(spark, sf_dir):
     eng = get_engine(spark)
     pts = derive_points(_events(spark, sf_dir))
-    out = eng.elevation_join(pts, mode="bilinear", strategy="broadcast", id_col="event_id")
+    out = eng.elevation_join(pts, mode="bilinear", strategy="broadcast")
     return out.select("event_id", F.col("elevation").cast("double").alias("elevation"))
 
 
@@ -317,9 +317,7 @@ def q_mercator_warp(spark, sf_dir):
     rollup is ONE hash aggregation on the output tile key."""
     eng = get_engine(spark)
     pixels = warp_pixel_grid(spark)
-    out = eng.elevation_join(
-        pixels, mode="nearest", strategy="broadcast", id_col="pixel_id"
-    )
+    out = eng.elevation_join(pixels, mode="nearest", strategy="broadcast")
     e = F.col("elevation").cast("int")
     return out.groupBy("zx", "zy").agg(
         F.count(F.lit(1)).alias("n_px"),
@@ -399,22 +397,18 @@ FROM ev GROUP BY zx, zy
 def q_elevation_default_fill(spark, sf_dir):
     eng = get_engine(spark)
     pts = derive_points(_events(spark, sf_dir))
-    out = eng.elevation_join(
-        pts, mode="nearest", strategy="broadcast", id_col="event_id", default=-1
-    )
+    out = eng.elevation_join(pts, mode="nearest", strategy="broadcast", default=-1)
     return out.select("event_id", F.col("elevation").cast("int").alias("elevation"))
 
 
 def q_elevation_cogroup(spark, sf_dir):
-    """Same join through the salted scale layout (J5): the in-memory engine
-    with a grid cache smaller than its catalog, so the rows are salted by
-    tile and shuffled once while each task reads the spilled tiles by
+    """Same join through the shuffled scale layout (J5): the in-memory
+    engine with a grid cache smaller than its catalog, so the rows are
+    rebalanced once by tile key while each task reads the spilled tiles by
     path — proves the shuffle variant returns identical rows."""
     eng = get_engine(spark, cache_size=2)
     pts = derive_points(_events(spark, sf_dir))
-    out = eng.elevation_join(
-        pts, mode="nearest", strategy="cogroup", id_col="event_id", n_salts=4
-    )
+    out = eng.elevation_join(pts, mode="nearest", strategy="cogroup")
     return out.select("event_id", F.col("elevation").cast("int").alias("elevation"))
 
 
@@ -423,20 +417,18 @@ def q_elevation_cogroup_path(spark, sf_dir):
     from (shared) storage by path. At 100 TB of rasters the blobs must
     never ride a shuffle — this query proves that plan returns the
     identical rows. Its 3-tile catalog fits the grid cache, so the join
-    runs map-side; the plan audit also gates the over-cache (salted)
+    runs map-side; the plan audit also gates the over-cache (shuffled)
     shape."""
     eng = get_path_engine(spark)
     pts = derive_points(_events(spark, sf_dir))
-    out = eng.elevation_join(
-        pts, mode="nearest", strategy="cogroup", id_col="event_id", n_salts=4
-    )
+    out = eng.elevation_join(pts, mode="nearest", strategy="cogroup")
     return out.select("event_id", F.col("elevation").cast("int").alias("elevation"))
 
 
 def q_tile_assignment(spark, sf_dir):
     eng = get_engine(spark)
     pts = derive_points(_events(spark, sf_dir))
-    out = eng.elevation_join(pts, mode="nearest", strategy="broadcast", id_col="event_id")
+    out = eng.elevation_join(pts, mode="nearest", strategy="broadcast")
     return out.select(
         "event_id",
         "tile_lat",
@@ -450,7 +442,7 @@ def q_tile_assignment(spark, sf_dir):
 def q_coverage_counts(spark, sf_dir):
     eng = get_engine(spark)
     pts = derive_points(_events(spark, sf_dir))
-    out = eng.elevation_join(pts, mode="nearest", strategy="broadcast", id_col="event_id")
+    out = eng.elevation_join(pts, mode="nearest", strategy="broadcast")
     return (
         out.groupBy("in_coverage", "tile_found")
         .agg(F.count("*").alias("n"))
@@ -484,7 +476,7 @@ def q_knn_fallback(spark, sf_dir):
     eng = get_engine(spark)
     pts = derive_points(_events(spark, sf_dir))
     out = eng.elevation_join(
-        pts, mode="nearest", strategy="broadcast", id_col="event_id", knn_fallback=True
+        pts, mode="nearest", strategy="broadcast", knn_fallback=True
     )
     return out.where(F.col("knn_used")).select(
         "event_id",
@@ -495,17 +487,14 @@ def q_knn_fallback(spark, sf_dir):
 
 
 def q_elevation_cogroup_knn(spark, sf_dir):
-    """J6 through the salted scale layout: the same kNN-fallback rows as
+    """J6 through the shuffled scale layout: the same kNN-fallback rows as
     q_knn_fallback, produced on the in-memory engine with a grid cache
-    smaller than its catalog (rows salted by tile and shuffled once; the
+    smaller than its catalog (rows rebalanced once by tile key; the
     kernel falls back to the nearest catalog tile in the same pass).
     Shares the broadcast-path `knn` oracle."""
     eng = get_engine(spark, cache_size=2)
     pts = derive_points(_events(spark, sf_dir))
-    out = eng.elevation_join(
-        pts, mode="nearest", strategy="cogroup", id_col="event_id",
-        knn_fallback=True, n_salts=4,
-    )
+    out = eng.elevation_join(pts, mode="nearest", strategy="cogroup", knn_fallback=True)
     return out.where(F.col("knn_used")).select(
         "event_id",
         "tile_lat",
@@ -529,10 +518,10 @@ def q_accuracy_stats(spark, sf_dir):
     (scripts/compare_elevations.py:136-157) — exact int arithmetic."""
     eng = get_engine(spark)
     pts = derive_points(_events(spark, sf_dir))
-    a = eng.elevation_join(pts, mode="nearest", strategy="broadcast", id_col="event_id").select(
+    a = eng.elevation_join(pts, mode="nearest", strategy="broadcast").select(
         "event_id", F.col("elevation").alias("e_n")
     )
-    b = eng.elevation_join(pts, mode="floor", strategy="broadcast", id_col="event_id").select(
+    b = eng.elevation_join(pts, mode="floor", strategy="broadcast").select(
         "event_id", F.col("elevation").alias("e_f")
     )
     j = a.join(b, "event_id").where(F.col("e_n").isNotNull() & F.col("e_f").isNotNull())
@@ -592,7 +581,7 @@ def q_images_geotag_join(spark, sf_dir):
     eng = get_engine(spark)
     imgs = derive_image_phash(_events(spark, sf_dir))
     out = eng.elevation_join(
-        imgs, mode="nearest", strategy="broadcast", id_col="image_id",
+        imgs, mode="nearest", strategy="broadcast",
         knn_fallback=True,
     )
     return out.select(
@@ -768,7 +757,7 @@ def q_images_elevation_join(spark, sf_dir):
     imgs = derive_images_table(_events(spark, sf_dir))
     eng = get_engine(spark)
     out = eng.elevation_join(
-        imgs, mode="nearest", strategy="broadcast", id_col="image_id",
+        imgs, mode="nearest", strategy="broadcast",
         knn_fallback=True,
     )
     stats = multimodal.image_stats(out.select("image_id", "bytes", "w", "h", "fmt"))

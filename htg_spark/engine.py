@@ -43,13 +43,14 @@ Two row layouts over that one cache:
   ``spark.python.worker.reuse`` is on, Spark's default): the kernel UDF
   runs on the input partitions. Reused Python workers keep every decoded
   tile across tasks and passes, so grouping rows by tile buys nothing: no
-  histogram job, no salting, no shuffle; ``n_salts`` is not read.
-- **salted** (``'cogroup'`` / ``'auto'`` otherwise: more tiles than the
+  shuffle.
+- **shuffled** (``'cogroup'`` / ``'auto'`` otherwise: more tiles than the
   cache, or workers not reused, so each task starts with an empty cache):
-  the full input rows are salted with the 2% histogram (hot cells get up
-  to ``n_salts`` salts, a row's salt hashed from ``id_col``) and
-  repartitioned ONCE on the salted tile key, so each task sees few tiles.
-  Tiles never ride the shuffle.
+  the full input rows cross ONE rebalance Exchange on their tile key
+  (``floor(lat)``, ``floor(lon)``), so each task sees few tiles. AQE
+  (``OptimizeSkewInRebalancePartitions``) splits a hot tile by bytes and
+  sizes the tasks at run time; no job runs while the plan is built. Tiles
+  never ride the shuffle.
 
 Semantics (exact parity with the reference; FIXTURES.md §6):
 - out-of-coverage (|lat|>60, |lon|>180, inclusive bounds valid):
@@ -59,7 +60,7 @@ Semantics (exact parity with the reference; FIXTURES.md §6):
   (service.rs:344-347, tile.rs:271-273)
 - nearest = Rust f64::round (half away from zero); floor = srtm.py variant
 - every input row comes out once with its payload untouched; no layout
-  joins by ``id_col``, so duplicate ids stay rows of their own
+  reads an id column, so duplicate ids stay rows of their own
 
 kNN nearest-tile fallback (new, north rule): in-coverage points whose tile
 is absent are assigned the catalog tile with the nearest center (squared
@@ -68,8 +69,9 @@ into that tile's [0,1] frac range — half-open boundary semantics preserved
 via the explicit frac-based kernels. It runs in the kernel on both
 layouts, against the index's tile keys.
 
-NULL (or NaN) coordinates are out of coverage under both layouts and for
-every kernel: lat/lon pass through unchanged, the tile key is NULL and the
+NULL (or NaN) coordinates, and coordinates whose floor lies outside int32
+(±inf, 1e10), are out of coverage under both layouts and for every
+kernel: lat/lon pass through unchanged, the tile key is NULL and the
 kernel's values are NULL (elevation NULL/default; terrain_ok false).
 """
 
@@ -99,24 +101,6 @@ _KERNEL = [
     ("tile_found", T.BooleanType()),
     ("knn_used", T.BooleanType()),
 ]
-
-
-# Largest n_salts whose packed group key (ElevationEngine._group_key) is
-# exact in int32 for every valid latitude: the top cell (tile_lat 90,
-# tile_lon 180) packs to 65,340 * n_salts + salt with salt < n_salts, so
-# 65,341 * n_salts - 1 must stay below 2^31.
-MAX_SALTS = (1 << 31) // (181 * 361)
-
-
-def check_n_salts(n_salts) -> int:
-    """``n_salts`` as an int in [1, MAX_SALTS], else ValueError. The joins
-    that take ``n_salts`` check it up front on every plan, so a bad value
-    fails the same way whichever plan would (or would not) read it."""
-    if isinstance(n_salts, bool) or not isinstance(n_salts, numbers.Integral):
-        raise ValueError(f"n_salts must be an int, got {n_salts!r}")
-    if not 1 <= n_salts <= MAX_SALTS:
-        raise ValueError(f"n_salts must be in [1, {MAX_SALTS}], got {n_salts}")
-    return int(n_salts)
 
 
 def _python_workers_reused(spark) -> bool:
@@ -338,11 +322,14 @@ def _kernel_arrays(
 ) -> list[pa.Array]:
     """``kernel`` over two Arrow float64 columns, returned as the Arrow
     arrays of its fields. A NULL (or NaN) coordinate reads as NaN: out of
-    coverage, with a NULL tile key."""
+    coverage, with a NULL tile key. So is a coordinate whose floor lies
+    outside int32 (±inf, 1e10), which NumPy's int32 cast would wrap."""
     lat_np = lat.to_numpy(zero_copy_only=False)
     lon_np = lon.to_numpy(zero_copy_only=False)
     cols = kernel.columns(lat_np, lon_np, get_grid)
-    no_key = np.isnan(lat_np) | np.isnan(lon_np)
+    floors = np.floor(np.stack([lat_np, lon_np]))  # NaN compares False below
+    i32 = np.iinfo(np.int32)
+    no_key = ~((floors >= i32.min) & (floors <= i32.max)).all(axis=0)
     for k in ("tile_lat", "tile_lon"):
         cols[k] = np.ma.masked_array(cols[k], no_key)
     return [pa.array(cols[n]) for n in kernel.names]
@@ -353,8 +340,7 @@ def _kernel_arrays(
 # interleaved, so every batch touches every tile of the task; run per
 # batch, a task holding more tiles than the grid cache would re-read and
 # re-decode each tile on every batch. Over the buffer each tile is read
-# once, and _kernel_partitions sizes tasks to ~400k rows, so a task is
-# usually one buffer. A Spark sort on the tile key cannot do this: the
+# once. A Spark sort on the tile key cannot do this: the
 # optimizer drops a sortWithinPartitions under an aggregate or join
 # consumer. Cost: a full buffer peaks at ~40 MB of NumPy + Arrow arrays in
 # the Python worker (measured, bilinear elevation), and the JVM queues the
@@ -455,8 +441,14 @@ class ElevationEngine:
         tile_dir: str | None = None,
         cache_size: int = 64,
     ):
+        if (
+            isinstance(cache_size, bool)
+            or not isinstance(cache_size, numbers.Integral)
+            or cache_size < 0
+        ):
+            raise ValueError(f"cache_size must be an int >= 0, got {cache_size!r}")
         self.spark = spark
-        self.cache_size = cache_size
+        self.cache_size = int(cache_size)
         if catalog is not None:
             if "path" not in catalog.columns:
                 raise ValueError(
@@ -729,7 +721,6 @@ class ElevationEngine:
         points: DataFrame,
         mode: str = "nearest",
         strategy: str = "auto",
-        id_col: str = "image_id",
         default=None,
         knn_fallback: bool = False,
         n_salts: int = 8,
@@ -758,30 +749,28 @@ class ElevationEngine:
           holds no more tiles than ``cache_size`` and
           ``spark.python.worker.reuse`` is on: every reused Python worker
           then keeps every tile in its grid cache. Otherwise the input rows
-          are salted by tile (salt hashed from ``id_col``, which must then
-          exist) and shuffled once, so each task sees few tiles. Tiles
-          never enter a shuffle: at 100 TB of rasters that is the plan.
+          cross one rebalance Exchange on their tile key, so each task sees
+          few tiles, and AQE splits a hot tile by bytes. Tiles never enter
+          a shuffle: at 100 TB of rasters that is the plan.
 
-        n_salts: the most salt buckets a hot cell fans out to, an int in
-        [1, MAX_SALTS]; checked on every plan, read only by the salted
-        layout.
+        n_salts is accepted and not read: no layout salts any more. It is
+        kept because existing callers pass it (perfbench's
+        ``enrich_cogroup`` passes ``n_salts=16``).
 
         Eager Spark jobs (launched while the plan is built, before any
         action on the result):
 
         - strict=True: 1 job per call (the out-of-coverage check).
-        - the salted layout: the salt histogram (``_salt_table``), 2 jobs
-          per call.
         - once per engine, then cached: the path index (``_path_index``),
           which collects the catalog's keys and paths: no job for a
           ``tile_dir`` or ``grids`` catalog (a LocalRelation), whatever a
           user ``catalog=`` frame's plan takes otherwise.
 
-        The map-side layout launches none after the engine's first join.
+        Neither layout launches any other: the shuffled one is sized by
+        AQE at run time, with no pre-pass.
         """
         if mode not in ("nearest", "floor", "bilinear"):
             raise ValueError(f"bad mode {mode!r}")
-        n_salts = check_n_salts(n_salts)
         pts = points
         if "lat" not in pts.columns or "lon" not in pts.columns:
             if "phash" not in pts.columns:
@@ -796,7 +785,7 @@ class ElevationEngine:
                 raise ValueError("coordinates out of SRTM coverage (strict mode)")
 
         kernel = _elevation_kernel(mode, knn_fallback)
-        out = self._tile_join(pts, kernel, strategy, id_col, n_salts)
+        out = self._tile_join(pts, kernel, strategy)
 
         if observe:
             # observed before `default` fills the NULLs, so void_hits
@@ -823,27 +812,20 @@ class ElevationEngine:
             )
         return out
 
-    def _tile_join(
-        self,
-        pts: DataFrame,
-        kernel: TileKernel,
-        strategy: str,
-        id_col: str,
-        n_salts: int,
-    ) -> DataFrame:
+    def _tile_join(self, pts: DataFrame, kernel: TileKernel, strategy: str) -> DataFrame:
         """The strategy dispatch shared by every tile-kernel join
         (``elevation_join``, ``terrain.terrain_join``): runs ``kernel`` on
         one of the two row layouts, tiles read by path through the executor
-        grid cache. ``pts`` carries (lat, lon); ``n_salts`` is already
-        checked.
+        grid cache. ``pts`` carries (lat, lon).
 
         'broadcast' runs map-side. 'cogroup' and 'auto' run map-side when
         the whole catalog fits the grid cache and Python workers are
-        reused: a worker then keeps every tile across tasks and passes, and
-        ``n_salts`` is not read. Otherwise the FULL input rows are salted
-        by cell and repartitioned once on the salted tile key, so each task
-        sees few tiles: with reuse off every task starts with an empty
-        cache."""
+        reused: a worker then keeps every tile across tasks and passes.
+        Otherwise the FULL input rows cross one rebalance Exchange on their
+        tile key, so each task sees few tiles (with reuse off every task
+        starts with an empty cache); AQE splits a hot tile by bytes. The
+        key columns are bigint floors, not int casts, so a huge coordinate
+        cannot overflow them, and are dropped again above the Exchange."""
         if strategy not in ("auto", "broadcast", "cogroup"):
             raise ValueError(f"bad strategy {strategy!r}")
         paths = self._path_index()
@@ -851,123 +833,16 @@ class ElevationEngine:
         if strategy != "broadcast" and not (
             len(paths.value) <= self.cache_size and _python_workers_reused(pts.sparkSession)
         ):
-            if id_col not in pts.columns:
-                raise ValueError(f"the salted layout needs an id column {id_col!r}")
-            keyed, est_rows = self._salted_key(pts, id_col, n_salts)
-            n_parts = self._kernel_partitions(pts.sparkSession, est_rows)
-            rows = keyed.repartition(n_parts, "_gk").drop("_gk")
+            # temporary key columns, named past any input column
+            keys = ["_tile_lat", "_tile_lon"]
+            while set(keys) & set(pts.columns):
+                keys = ["_" + k for k in keys]
+            rows = (
+                pts.withColumns({k: F.floor(c) for k, c in zip(keys, ("lat", "lon"))})
+                .hint("rebalance", *keys)
+                .drop(*keys)
+            )
         if kernel.knn:
             kernel = kernel.with_centers(self.tile_centers())
         udf = _kernel_udf(paths, kernel, self.cache_size)
         return _append_kernel(rows, udf, kernel.names)
-
-    # -- the salted layout -----------------------------------------------------
-
-    # histogram pre-pass sample rate: k_salt needs only order-of-magnitude
-    # per-cell counts (it is clamped to [1, n_salts] and the target is a
-    # RATIO of sampled counts, so the 1/f scale factors cancel) — a 2%
-    # sample makes the pre-pass ~free instead of a second full scan of the
-    # points table per join call. Cells the sample misses default to
-    # k_salt=1 via the coalesce in _salt, which is exactly
-    # right: a cell too cold to appear in a 2% sample is not a skew cell.
-    HIST_SAMPLE_FRACTION = 0.02
-
-    def _salt_table(self, keys: DataFrame, n_salts: int) -> tuple[DataFrame, float]:
-        """Adaptive salt counts from the histogram pre-pass over `keys`
-        (tile_lat, tile_lon per input row): returns (salt table
-        (tile_lat int, tile_lon int, k_salt int), estimated input rows).
-        The pre-pass counts a HIST_SAMPLE_FRACTION sample per 1-degree cell
-        (output bounded by 64,800 cells — safe to collect; this collect is
-        the plan's one intended eager job) and gives each cell
-        k(cell) = clamp(ceil(count / target_rows_per_salt), 1, n_salts)
-        salt buckets, so only hot cells fan out. The table is built from a
-        pyarrow.Table: a JVM LocalRelation, where createDataFrame(list)
-        would parallelize a Python RDD and run a Python-worker job on every
-        use just to broadcast it."""
-        import math
-
-        hist = (
-            keys.sample(fraction=self.HIST_SAMPLE_FRACTION, seed=42)
-            .groupBy("tile_lat", "tile_lon")
-            .count()
-            .collect()
-        )
-        # scale sampled counts to FULL-scale estimates before any absolute
-        # threshold: the 1.0-row floor on `target` must bind on estimated
-        # real counts, not on 2% sampled counts (a uniform 300-row input
-        # would otherwise read target=1 sampled row and salt everything)
-        f = self.HIST_SAMPLE_FRACTION
-        est = [(r["tile_lat"], r["tile_lon"], r["count"] / f) for r in hist]
-        total_rows = sum(c for _, _, c in est) or 1
-        slots = keys.sparkSession.sparkContext.defaultParallelism
-        target = max(total_rows / max(slots * 2, 1), 1.0)
-        # salt only cells ABOVE 2x the per-slot target: a cell under 2x is
-        # ordinary partition imbalance, not skew, and the 2x guard band also
-        # absorbs the sampling noise of borderline-cold cells (a cell whose
-        # sampled count is within noise of the target must not flap into
-        # k_salt=2 and needlessly split its rows)
-        k_salt = [
-            1 if c <= 2 * target else int(min(math.ceil(c / target), n_salts))
-            for _, _, c in est
-        ]
-        table = pa.table(
-            {
-                "tile_lat": pa.array([e[0] for e in est], pa.int32()),
-                "tile_lon": pa.array([e[1] for e in est], pa.int32()),
-                "k_salt": pa.array(k_salt, pa.int32()),
-            }
-        )
-        return keys.sparkSession.createDataFrame(table), total_rows
-
-    @staticmethod
-    def _kernel_partitions(spark: SparkSession, est_rows: float) -> int:
-        """Explicit partition count of the salted layout's kernel stage, sized
-        from the histogram's row estimate: AQE's byte-based coalescing
-        merges the kernel stage below core count (measured 23 tasks on 32
-        cores at 48M rows) and straggler groups serialize; conversely a
-        count pinned high wastes per-task Arrow setup at small volume.
-        ~400k rows per task measured best across both bench volumes (48M
-        rows: 32 parts 8.0s / 64 parts 6.1s / 128 parts 4.7s; 4.8M rows:
-        32 parts 2.2s / 64 parts 2.6s, interleaved minima), floored at the
-        configured shuffle parallelism and capped against task explosion."""
-        floor = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        return min(4096, max(floor, int(est_rows // 400_000)))
-
-    @staticmethod
-    def _salt(id_col: str, k_salt):
-        """Row salt in [0, k_salt): xxhash64 of the row id, so a recompute
-        puts every row in the same bucket (cells missing from the salt
-        table get k_salt = 1)."""
-        k = F.coalesce(k_salt, F.lit(1))
-        return F.pmod(F.xxhash64(_quoted(id_col)), k).cast("int")
-
-    @staticmethod
-    def _group_key(tile_lat, tile_lon, salt, n_salts: int):
-        """ONE packed int key instead of (tile_lat, tile_lon, salt):
-        mixed-radix gk = ((tile_lat+90) * 361 + (tile_lon+180)) * n_salts
-        + salt — collision-free (salt < n_salts, lon+180 < 361), exact in
-        int32 for n_salts up to MAX_SALTS, and 8 fewer bytes on every row
-        through the exchange. NULL for a NULL coordinate."""
-        return (
-            ((tile_lat + 90).cast("long") * 361 + (tile_lon + 180).cast("long"))
-            * n_salts
-            + salt
-        ).cast("int")
-
-    def _salted_key(self, frame: DataFrame, id_col: str, n_salts: int):
-        """The salted layout's one salting step: returns (frame + ``_gk``,
-        estimated input rows). ``_gk`` is the packed (tile_lat, tile_lon,
-        salt) key of each row, its salt drawn from the row's cell in the
-        histogram's salt table (``_salt_table``)."""
-        tl = cells.tile_lat(F.col("lat"))
-        tn = cells.tile_lon(F.col("lon"))
-        salt_df, est_rows = self._salt_table(
-            frame.select(tl.alias("tile_lat"), tn.alias("tile_lon")), n_salts
-        )
-        salt = F.broadcast(salt_df.toDF("_salt_lat", "_salt_lon", "_k_salt"))
-        keyed = frame.join(
-            salt, (tl == F.col("_salt_lat")) & (tn == F.col("_salt_lon")), "left"
-        )
-        gk = self._group_key(tl, tn, self._salt(id_col, F.col("_k_salt")), n_salts)
-        keyed = keyed.select(*[_quoted(c) for c in frame.columns], gk.alias("_gk"))
-        return keyed, est_rows

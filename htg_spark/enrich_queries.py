@@ -144,9 +144,7 @@ def q_geojson_enrich(spark, sf_dir):
     eng = get_engine(spark)
     feats = features_to_df(spark, GEOJSON_DOC)
     pts = explode_positions(feats)
-    joined = eng.elevation_join(
-        pts, mode="nearest", strategy="broadcast", id_col="feature_id"
-    )
+    joined = eng.elevation_join(pts, mode="nearest", strategy="broadcast")
     return joined.select(
         "feature_id",
         "pos_idx",

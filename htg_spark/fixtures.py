@@ -209,7 +209,7 @@ def make_images_pdf(
 
     Exact input_hint shape: (image_id:string, bytes:binary, w:int32, h:int32,
     fmt:string, caption:string, phash:int64). A `skew_frac` fraction of rows
-    is crammed into one 0.01°x0.01° hot cluster (salting test); small
+    is crammed into one 0.01°x0.01° hot cluster (skew test); small
     fractions get out-of-coverage (lat>60) or missing-tile (50.x, 50.x)
     phash-mapped coordinates to exercise default/NULL paths
     (service.rs:456-459, service.rs:1044-1052).

@@ -88,9 +88,10 @@ def extract_hgt_from_zip(raw: bytes) -> bytes:
 def tile_key(lat, lon):
     """(floor(lat), floor(lon)) as int32 — floor, NOT trunc (service.rs:493).
 
-    Vectorized; accepts scalars or arrays. A NaN coordinate casts to an
-    arbitrary key without a warning: it is out of coverage, so no caller
-    reads that key.
+    Vectorized; accepts scalars or arrays. A NaN coordinate, or one whose
+    floor lies outside int32 (±inf, 1e10), casts to an arbitrary key
+    without a warning. It is out of coverage, so no lookup reads that key,
+    and the joins report it as a NULL key (``engine._kernel_arrays``).
     """
     with np.errstate(invalid="ignore"):
         return (

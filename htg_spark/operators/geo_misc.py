@@ -124,9 +124,7 @@ def radius_neighbors(
     runs inside the join stage, and only surviving (id) hits reach the
     single count/min aggregation — so this is ONE shuffle of narrow
     columns at any corpus size, never an all-pairs product. Dense-cluster
-    skew (many points in one cell) is the AQE skew-join case; for extreme
-    hotspots the salting pattern from engine.elevation_join applies
-    unchanged. `scale` MUST be a power of two so x*scale and r*r are exact
+    skew (many points in one cell) is the AQE skew-join case. `scale` MUST be a power of two so x*scale and r*r are exact
     IEEE doubles — both engines and the SQL oracle agree bit-for-bit.
 
     Output: (id, n_neighbors, min_d2 — NULL when no neighbor in range).
@@ -243,8 +241,7 @@ def idw_interpolate(
     runs inside the join stage, and ONE narrow Exchange on query_id
     carries only (query_id, d2, id, value) survivors to the aggregation.
     Per-query neighbor lists are bounded by local sample density times
-    r^2; for hotspot cells the AQE skew-join / salting pattern from
-    engine.elevation_join applies unchanged.
+    r^2; hotspot cells are the AQE skew-join case.
 
     Bit parity: `scale` must be a power of two (x*scale and r*r exact),
     `eps` exactly representable (default 2^-24 — regularizes d2 == 0 when

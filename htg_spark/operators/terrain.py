@@ -56,7 +56,8 @@ The map-side layout is map-only: one ``ArrowEvalPython`` kernel UDF reads
 tiles by path and sees only (lat, lon), so the payload stays in the JVM
 (ZERO shuffle Exchanges, gated in PLANS.md); per buffer the work is one
 argsort group-by plus nine vectorized gathers. Past the engine's grid
-cache the rows take the salted layout, exactly as in ``elevation_join``.
+cache the rows cross one rebalance Exchange on their tile key, exactly as
+in ``elevation_join``.
 """
 
 from __future__ import annotations
@@ -68,7 +69,7 @@ from pyspark.sql import types as T
 
 from .. import hgt
 from ..catalog import map_tiles
-from ..engine import TileKernel, check_n_salts
+from ..engine import TileKernel
 
 # default sun: azimuth 315 (NW), altitude 45. Exact-double literals shared
 # verbatim with the SQL oracle (cos45*sin315 == -0.5 and cos45*cos315 ==
@@ -179,13 +180,7 @@ def _terrain_columns(lat, lon, get_grid) -> dict:
 TERRAIN_KERNEL = TileKernel(_terrain_columns, _TERRAIN_FIELDS)
 
 
-def terrain_join(
-    engine,
-    points: DataFrame,
-    strategy: str = "auto",
-    id_col: str = "event_id",
-    n_salts: int = 8,
-) -> DataFrame:
+def terrain_join(engine, points: DataFrame, strategy: str = "auto") -> DataFrame:
     """Append (lat, lon, tile_lat, tile_lon, in_coverage, tile_found,
     terrain_ok, gxs, gys) to `points`. gxs/gys are NULL wherever
     terrain_ok is false.
@@ -199,22 +194,22 @@ def terrain_join(
       partitions, no shuffle.
     - strategy='auto' (default) or 'cogroup': map-side too when the
       catalog fits the engine's grid cache and Python workers are reused;
-      otherwise the rows are salted by tile (by ``id_col``) and shuffled
-      once, so each task sees few tiles.
+      otherwise the rows cross one rebalance Exchange on their tile key,
+      so each task sees few tiles.
 
     Every input row comes out once with its payload untouched, so
-    duplicate ids stay separate rows. A NULL (or NaN) lat/lon passes
-    through unchanged and is out of coverage: NULL tile key, terrain_ok
-    false, NULL gxs/gys. All plans return identical rows
+    duplicate ids stay separate rows. A NULL (or NaN) lat/lon, or one
+    whose floor lies outside int32 (±inf, 1e10), passes through unchanged
+    and is out of coverage: NULL tile key, terrain_ok false, NULL gxs/gys.
+    All plans return identical rows
     (test_terrain_cogroup_equals_broadcast).
 
     Derived float products are deliberately NOT computed here: apply
     ``terrain_cols`` (JVM codegen) on the result.
     """
-    n_salts = check_n_salts(n_salts)
     if "lat" not in points.columns or "lon" not in points.columns:
         raise ValueError("points need (lat, lon) columns")
-    return engine._tile_join(points, TERRAIN_KERNEL, strategy, id_col, n_salts)
+    return engine._tile_join(points, TERRAIN_KERNEL, strategy)
 
 
 def aspect_octant_col(gxs: Column, gys: Column) -> Column:

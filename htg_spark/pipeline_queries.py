@@ -547,7 +547,7 @@ def q_pipeline_e2e(spark, sf_dir):
     from . import driver_queries as dq
 
     eng = dq.get_engine(spark)
-    out = eng.elevation_join(pts, mode="nearest", strategy="broadcast", id_col="cid")
+    out = eng.elevation_join(pts, mode="nearest", strategy="broadcast")
     return out.select(
         "cid", "n_emails", "n_tokens", "quality", "pred_lang",
         F.col("elevation").cast("int").alias("elevation"),

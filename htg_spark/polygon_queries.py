@@ -216,9 +216,7 @@ def q_polygon_zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         strategy="broadcast",
         exact="fold",
     )
-    enriched = eng.elevation_join(
-        contained, mode="nearest", strategy="broadcast", id_col="event_id"
-    )
+    enriched = eng.elevation_join(contained, mode="nearest", strategy="broadcast")
     elev = F.col("elevation").cast("int")
     n_elev = F.count(elev)
     return enriched.groupBy("poly_id").agg(

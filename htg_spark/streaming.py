@@ -26,7 +26,7 @@ def stream_elevation_join(
     streaming DataFrame.
 
     Only the map-side layout is stateless and therefore streaming-safe;
-    the salted layout would repartition every micro-batch.
+    the shuffled layout would repartition every micro-batch.
     """
     if not stream.isStreaming:
         raise ValueError("stream_elevation_join expects a streaming DataFrame")
@@ -38,7 +38,7 @@ def stream_terrain_join(engine: ElevationEngine, stream: DataFrame, **kw) -> Dat
     DataFrame: the map-side stencil kernel UDF (``strategy='broadcast'``)
     is stateless map-only (tiles read by path, nothing shuffles, no
     state), so it is streaming-safe by construction — the terrain twin of
-    stream_elevation_join. The salted layout is deliberately not offered
+    stream_elevation_join. The shuffled layout is deliberately not offered
     for streams (it would repartition every micro-batch)."""
     if not stream.isStreaming:
         raise ValueError("stream_terrain_join expects a streaming DataFrame")

@@ -67,16 +67,14 @@ def q_terrain_horn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_terrain_cogroup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The same Horn products through the salted SCALE layout (the plan
+    """The same Horn products through the shuffled SCALE layout (the plan
     for a catalog past the grid cache): the in-memory engine with
-    cache_size 2, so the rows are salted by tile and shuffled once and the
+    cache_size 2, so the rows are rebalanced once by tile key and the
     kernel UDF reads the spilled tiles by path — shares the terrain_horn
     oracle, proving the shuffle variant returns identical rows."""
     eng = get_engine(spark, cache_size=2)
     pts = derive_points(_events(spark, sf_dir))
-    out = terrain.terrain_join(
-        eng, pts, strategy="cogroup", id_col="event_id", n_salts=4
-    )
+    out = terrain.terrain_join(eng, pts, strategy="cogroup")
     d = terrain.terrain_cols(F.col("gxs"), F.col("gys"))
     return out.select(
         "event_id",
@@ -319,9 +317,7 @@ def q_path_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     # group events scan would push all 900k samples through one core
     pts = spread_scan(derive_points(_events(spark, sf_dir)))
     samples = path_samples(pts)
-    out = eng.elevation_join(
-        samples, mode="nearest", strategy="broadcast", id_col="event_id"
-    )
+    out = eng.elevation_join(samples, mode="nearest", strategy="broadcast")
 
     w = Window.partitionBy("event_id").orderBy("step")
     wprev = w.rowsBetween(Window.unboundedPreceding, -1)

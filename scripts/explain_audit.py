@@ -10,8 +10,8 @@ partitioning, output columns): no expression ids or paths, so an
 unchanged tree writes identical bytes.
 
 The engine's contract: the map-side layout is one map-only Arrow stage;
-the salted layout moves the input rows through one Exchange, only when the
-catalog exceeds the engine's grid cache, for an in-memory and a tile_dir
+the shuffled layout moves the input rows through one rebalance Exchange on
+their tile key, only when the catalog exceeds the engine's grid cache, for an in-memory and a tile_dir
 catalog alike; no engine plan cogroups, reads a checkpoint or moves the
 tile blobs.
 
@@ -60,12 +60,12 @@ ENGINE = [
     no_column("data", "Exchange"),
 ]
 MAP_SIDE = ENGINE + [shuffles(0), present("ArrowEvalPython")]
-# the input rows move once, into the kernel UDF only: no id re-join or
-# grouped/mapped Arrow node
-SALTED = ENGINE + [
+# the input rows move once, into the kernel UDF only: no salt join, no id
+# re-join, no grouped/mapped Arrow node
+SHUFFLED = ENGINE + [
     shuffles(1),
     present("ArrowEvalPython"),
-    absent("SortMergeJoin", "MapInArrow"),
+    absent("SortMergeJoin", "BroadcastHashJoin", "MapInArrow"),
 ]
 # checkpointed bases only: no direct parquet scan survives into the plan
 CHECKPOINTED = [count(SCAN, 0, 0), present(CHECKPOINT), NO_CROSS]
@@ -73,14 +73,14 @@ CHECKPOINTED = [count(SCAN, 0, 0), present(CHECKPOINT), NO_CROSS]
 
 def sections(spark, sf_dir):
     eng = dq.get_engine(spark)
-    salted_eng = dq.get_engine(spark, cache_size=2)
+    shuffled_eng = dq.get_engine(spark, cache_size=2)
     path_eng = dq.get_path_engine(spark)
     over_eng = ElevationEngine(spark, catalog=path_eng.catalog, cache_size=2)
 
     def join(e, **kw):
         def build(spark, sf_dir):
             pts = dq.derive_points(spark.read.parquet(f"{sf_dir}/events.parquet"))
-            return e.elevation_join(pts, mode="nearest", id_col="event_id", **kw)
+            return e.elevation_join(pts, mode="nearest", **kw)
 
         return build
 
@@ -93,11 +93,11 @@ def sections(spark, sf_dir):
             redacted.select("cid", F.col("kept_text").alias("text")), id_col="cid"
         )
 
-    salted_text = (
-        "The input rows are salted by cell (a broadcast join with the "
-        "histogram's salt table) and cross one hash Exchange on the salted "
-        "tile key; ArrowEvalPython then runs the kernel UDF, reading tiles "
-        "by path."
+    shuffled_text = (
+        "The input rows cross one rebalance Exchange on their tile key "
+        "(floor(lat), floor(lon)), which AQE splits by bytes when a tile is "
+        "hot; no job runs while the plan is built. ArrowEvalPython then "
+        "runs the kernel UDF, reading tiles by path."
     )
     window_text = (
         "events scan -> epoch-µs projection -> one user-hash Exchange "
@@ -111,14 +111,14 @@ def sections(spark, sf_dir):
          "engine's index (this in-memory catalog spilled to files); payload "
          "columns stay in the JVM.",
          join(eng, strategy="broadcast"), MAP_SIDE),
-        ("Cogroup join, in-memory catalog exceeds the grid cache (salted)",
+        ("Cogroup join, in-memory catalog exceeds the grid cache (shuffled)",
          "The catalog was spilled once to content-named files shipped with "
          "addFile, so this plan reads tiles by path like a tile_dir engine. "
-         + salted_text,
-         join(salted_eng, strategy="cogroup", n_salts=4), SALTED),
-        ("Cogroup join, in-memory catalog exceeds the grid cache (salted, kNN fallback)",
+         + shuffled_text,
+         join(shuffled_eng, strategy="cogroup"), SHUFFLED),
+        ("Cogroup join, in-memory catalog exceeds the grid cache (shuffled, kNN fallback)",
          "As above, with the kNN fallback in the same kernel pass.",
-         join(salted_eng, strategy="cogroup", n_salts=4, knn_fallback=True), SALTED),
+         join(shuffled_eng, strategy="cogroup", knn_fallback=True), SHUFFLED),
         ("Scan pruning sanity (events parquet)",
          "The scan reads only event_id/user_id.",
          lambda spark, sf_dir: spark.read.parquet(f"{sf_dir}/events.parquet")
@@ -133,13 +133,13 @@ def sections(spark, sf_dir):
          "every reused Python worker keeps every tile across tasks: no "
          "histogram job, no salt join, ArrowEvalPython on the input "
          "partitions reading tiles by path.",
-         join(path_eng, strategy="cogroup", n_salts=4),
+         join(path_eng, strategy="cogroup"),
          MAP_SIDE + [no_column("data")]),
-        ("Cogroup join, tile_dir catalog exceeds the grid cache (salted)",
-         salted_text + " No catalog-side shuffle: at 100 TB of rasters the "
+        ("Cogroup join, tile_dir catalog exceeds the grid cache (shuffled)",
+         shuffled_text + " No catalog-side shuffle: at 100 TB of rasters the "
          "tiles must never ride a shuffle (tasks read them from shared "
          "storage).",
-         join(over_eng, strategy="cogroup", n_salts=4), SALTED),
+         join(over_eng, strategy="cogroup"), SHUFFLED),
         ("Embedding near-dup (multi-table LSH bucketed)",
          "per-table bucket self-equi-joins (SortMergeJoin/ShuffledHashJoin "
          "on bk) unioned + deduped, cosine on candidates only.",

@@ -102,6 +102,26 @@ def test_from_env(spark, tmp_path, monkeypatch):
     assert ElevationEngine.from_env(spark).cache_capacity() == 100  # default
 
 
+def test_cache_size_must_be_a_non_negative_int(spark, tmp_path, monkeypatch):
+    """A negative cache_size once made every grid-cache lookup raise
+    KeyError on the driver and in every worker; both constructors now
+    refuse it, and any non-int, with a ValueError naming cache_size. Zero
+    is a valid capacity: every lookup reads its tile again."""
+    grids = {(35, 138): fixtures.tile_center(500)}
+    for bad in (-1, 2.5, "8", True, None):
+        with pytest.raises(ValueError, match="cache_size"):
+            ElevationEngine(spark, grids=grids, cache_size=bad)
+    (tmp_path / "N35E138.hgt").write_bytes(hgt.encode_tile(fixtures.tile_center(500)))
+    monkeypatch.setenv("HTG_DATA_DIR", str(tmp_path))
+    monkeypatch.setenv("HTG_CACHE_SIZE", "-1")
+    with pytest.raises(ValueError, match="cache_size"):
+        ElevationEngine.from_env(spark)
+    monkeypatch.setenv("HTG_CACHE_SIZE", "0")
+    eng = ElevationEngine.from_env(spark)
+    assert eng.get_elevation(35.5, 138.5) == 500 == eng.get_elevation(35.5, 138.5)
+    assert eng.cache_stats()["miss_count"] == 2
+
+
 def test_preload_all_and_bbox(spark):
     eng = ElevationEngine(spark, grids=fixtures.default_catalog_grids())
     stats = eng.preload()

@@ -93,6 +93,30 @@ def test_catalog_job_counts(spark, tile_dir):
         ElevationEngine(spark, catalog=blobs)
 
 
+def test_catalog_from_grids_ships_each_file_once(spark, monkeypatch):
+    """A spilled tile file is shipped with addFile once per SparkContext:
+    a second catalog over the same grids makes no addFile call (each would
+    log an "added already" warning per tile), and a new grid is still
+    shipped."""
+    grids = {(35, 138): fixtures.tile_corners(), (36, 138): fixtures.tile_gradient()}
+    catalog.catalog_from_grids(spark, grids)
+    sc = spark.sparkContext
+    shipped = []
+    add_file = sc.addFile
+
+    def spy(path, *args):
+        shipped.append(path)
+        return add_file(path, *args)
+
+    monkeypatch.setattr(sc, "addFile", spy)
+    catalog.catalog_from_grids(spark, grids)
+    assert shipped == []
+    new = np.random.default_rng(41).integers(0, 3000, size=(1201, 1201)).astype(np.int16)
+    cat = catalog.catalog_from_grids(spark, {**grids, (50, 50): new})
+    (path,) = shipped
+    assert path.endswith(cat.where("tile_lat = 50").first().path)
+
+
 def test_catalog_dir_engine_end_to_end(spark, tile_dir):
     eng = ElevationEngine(spark, tile_dir=tile_dir)
     assert eng.get_elevation(35.5, 138.5) == 500

@@ -125,10 +125,10 @@ def test_reference_expectations_through_spark(spark, engine):
 
 
 def test_cogroup_equals_broadcast(spark, engine, grids, points_pdf):
-    """The salted layout over an in-memory catalog (grid cache smaller than
-    the catalog: rows salted and shuffled, tiles read from the spill)
-    returns the broadcast plan's rows."""
-    salted = ElevationEngine(spark, grids=grids, cache_size=2)
+    """The shuffled layout over an in-memory catalog (grid cache smaller
+    than the catalog: rows rebalanced by tile key, tiles read from the
+    spill) returns the broadcast plan's rows."""
+    shuffled = ElevationEngine(spark, grids=grids, cache_size=2)
     df = spark.createDataFrame(points_pdf)
     for mode in ("nearest", "bilinear"):
         a = (
@@ -137,7 +137,7 @@ def test_cogroup_equals_broadcast(spark, engine, grids, points_pdf):
             .toPandas()
         )
         b = (
-            salted.elevation_join(df, mode=mode, strategy="cogroup", n_salts=4)
+            shuffled.elevation_join(df, mode=mode, strategy="cogroup")
             .orderBy("image_id")
             .toPandas()
         )
@@ -177,10 +177,10 @@ def test_knn_fallback(spark, grids):
 
 
 def test_cogroup_knn_equals_broadcast_knn(spark, engine, grids, points_pdf):
-    """J6 via the scale path: the kNN fallback on the salted layout over an
+    """J6 via the scale path: the kNN fallback on the shuffled layout over an
     in-memory catalog (grid cache smaller than the catalog) must return
     row-identical results to the broadcast-path kNN for every mode."""
-    salted = ElevationEngine(spark, grids=grids, cache_size=2)
+    shuffled = ElevationEngine(spark, grids=grids, cache_size=2)
     df = spark.createDataFrame(points_pdf)
     for mode in ("nearest", "bilinear"):
         a = (
@@ -189,7 +189,7 @@ def test_cogroup_knn_equals_broadcast_knn(spark, engine, grids, points_pdf):
             .toPandas()
         )
         b = (
-            salted.elevation_join(df, mode=mode, strategy="cogroup", knn_fallback=True, n_salts=4)
+            shuffled.elevation_join(df, mode=mode, strategy="cogroup", knn_fallback=True)
             .orderBy("image_id")
             .toPandas()
         )
@@ -252,9 +252,7 @@ def test_cogroup_blob_source_path(spark, grids, points_pdf, tile_dir):
             .toPandas()
         )
         b = (
-            eng.elevation_join(
-                df, mode=mode, strategy="cogroup", knn_fallback=knn, n_salts=4
-            )
+            eng.elevation_join(df, mode=mode, strategy="cogroup", knn_fallback=knn)
             .orderBy("image_id")
             .toPandas()
         )
@@ -270,16 +268,17 @@ def test_cogroup_blob_source_path(spark, grids, points_pdf, tile_dir):
         assert np.array_equal(np.isnan(av[plain]), np.isnan(want[plain]))
         assert np.array_equal(av[plain & ~np.isnan(av)], want[plain & ~np.isnan(want)])
 
-    # contract errors: an unknown strategy; the salted layout (cache_size 2)
-    # hashes its salt from id_col, which the map-side layout never reads
+    # contract error: an unknown strategy. Neither layout reads an id
+    # column, so a frame without one joins on both (cache_size 2 and 64),
+    # and an input column named like the shuffled layout's temporary key
+    # passes through
     with pytest.raises(ValueError, match="bad strategy"):
         eng.elevation_join(df, strategy="inline")
-    no_id = df.drop("image_id")
-    with pytest.raises(ValueError, match="id column"):
-        ElevationEngine(spark, tile_dir=tile_dir, cache_size=2).elevation_join(
-            no_id, strategy="cogroup"
-        )
-    assert eng.elevation_join(no_id, strategy="cogroup").count() == len(points_pdf)
+    no_id = df.drop("image_id").withColumn("_tile_lat", F.lit("kept"))
+    for cache_size in (2, 64):
+        eng = ElevationEngine(spark, tile_dir=tile_dir, cache_size=cache_size)
+        out = eng.elevation_join(no_id, strategy="cogroup")
+        assert out.where(F.col("_tile_lat") == "kept").count() == len(points_pdf)
 
 
 def test_auto_strategy_counts_catalog_once(spark, grids, points_pdf):
@@ -339,8 +338,8 @@ def test_catalog_measure_is_thread_safe(spark, grids, monkeypatch):
 
 def test_auto_blob_source_picks_path(spark, grids, points_pdf, tmp_path):
     """strategy='auto' past the grid cache reads tiles by path on every
-    catalog, a tile directory or in-memory (spilled to files): the salted
-    input rows cross one Exchange and no Exchange carries the binary data
+    catalog, a tile directory or in-memory (spilled to files): the input
+    rows cross one rebalance Exchange and no Exchange carries the binary data
     column — at 100 TB of rasters the blobs must never ride a shuffle.
     Within the cache, auto runs map-side with no Exchange at all."""
     from htg_spark import hgt as hgt_mod
@@ -351,7 +350,7 @@ def test_auto_blob_source_picks_path(spark, grids, points_pdf, tmp_path):
         (tiles / hgt_mod.coords_to_filename(tl, tn)).write_bytes(hgt_mod.encode_tile(grid))
     df = spark.createDataFrame(points_pdf.head(50))
 
-    # cache_size below the tile count: the salted layout
+    # cache_size below the tile count: the shuffled layout
     for eng in (
         ElevationEngine(spark, tile_dir=str(tiles), cache_size=2),
         ElevationEngine(spark, grids=grids, cache_size=2),
@@ -380,7 +379,7 @@ def test_cogroup_knn_in_memory_builds_without_jobs(spark, grids, points_pdf):
     eng = ElevationEngine(spark, grids=grids)
     assert len(grids) <= eng.cache_size
     df = spark.createDataFrame(points_pdf.head(200))
-    kw = dict(strategy="cogroup", knn_fallback=True, n_salts=4)
+    kw = dict(strategy="cogroup", knn_fallback=True)
     eng.elevation_join(df, **kw)  # spills the catalog once
     sc = spark.sparkContext
     sc.setJobGroup("cogroup-knn-build", "plan build only")
@@ -393,69 +392,114 @@ def test_cogroup_knn_in_memory_builds_without_jobs(spark, grids, points_pdf):
     assert out.where("knn_used").count() > 0
 
 
-def test_cogroup_adaptive_salting_spreads_hot_tile(spark, engine, grids):
+def test_cogroup_rebalance_spreads_hot_tile(spark, engine, grids):
     """Skew stress (SURVEY.md §4): 90% of points land in ONE 1-degree cell.
-    The adaptive salt pre-pass must fan that cell out across n_salts shuffle
-    groups of near-equal size (max/median <= 2 at n_salts=8) and keep cold
-    cells at one group each — and the salted result must still equal the
-    broadcast join row-for-row."""
+    On the shuffled layout (grid cache smaller than the catalog) AQE splits
+    that tile's rows over several kernel tasks by bytes: at a 16k advisory
+    partition size the hot tile spans at least 2 tasks and no task holds
+    more than half the rows (a plain repartition on the tile key keeps all
+    of them in one task). The result still equals the broadcast join
+    row-for-row."""
     rng = np.random.default_rng(7)
     n_hot, n_cold = 9000, 1000
-    lat = np.concatenate(
-        [35.0 + rng.random(n_hot), 33.0 + rng.random(n_cold)]
-    )
-    lon = np.concatenate(
-        [138.0 + rng.random(n_hot), -97.0 + rng.random(n_cold)]
-    )
+    lat = np.concatenate([35.0 + rng.random(n_hot), 33.0 + rng.random(n_cold)])
+    lon = np.concatenate([138.0 + rng.random(n_hot), -97.0 + rng.random(n_cold)])
     pdf = pd.DataFrame(
         {"image_id": [f"s{i:05d}" for i in range(n_hot + n_cold)], "lat": lat, "lon": lon}
     )
     df = spark.createDataFrame(pdf)
-
-    def unpack(frame):
-        """tile_lat, tile_lon, salt out of the packed salted key _gk."""
-        c = F.floor(F.col("_gk") / 8)
-        return frame.select(
-            (F.floor(c / 361) - 90).cast("int").alias("tile_lat"),
-            (c % 361 - 180).cast("int").alias("tile_lon"),
-            (F.col("_gk") % 8).cast("int").alias("salt"),
+    shuffled = ElevationEngine(spark, grids=grids, cache_size=2)  # fewer slots than tiles
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "16k")
+    try:
+        out = shuffled.elevation_join(df, mode="nearest", strategy="cogroup")
+        # the kernel stage's task of each row, read above the kernel UDF
+        tasks = (
+            out.select(F.spark_partition_id().alias("task"), "tile_lat", "tile_lon", "elevation")
+            .groupBy("task", "tile_lat", "tile_lon")
+            .count()
+            .toPandas()
         )
+        b = out.orderBy("image_id").toPandas()
+    finally:
+        spark.conf.set(key, old)
+    hot = tasks[(tasks.tile_lat == 35) & (tasks.tile_lon == 138)]
+    assert hot["count"].sum() == n_hot
+    assert hot["task"].nunique() >= 2, tasks
+    assert tasks.groupby("task")["count"].sum().max() <= (n_hot + n_cold) / 2, tasks
 
-    # the salted layout salts the FULL input rows (payload included)
-    keyed, est_rows = engine._salted_key(
-        df.withColumn("caption", F.lit("c")), "image_id", n_salts=8
-    )
-    # the histogram's row estimate (it sizes the kernel stage) is returned
-    assert 0.5 * (n_hot + n_cold) < est_rows < 1.5 * (n_hot + n_cold)
-    slots = spark.sparkContext.defaultParallelism
-    target = (n_hot + n_cold) / (slots * 2)
-    groups = unpack(keyed).groupBy("tile_lat", "tile_lon", "salt").count().toPandas()
-    hot = groups[(groups.tile_lat == 35) & (groups.tile_lon == 138)]
-    cold = groups[(groups.tile_lat == 33) & (groups.tile_lon == -97)]
-    # hot cell fans out to all 8 salts; cold cell crosses the shuffle once
-    assert sorted(hot["salt"]) == list(range(8))
-    assert cold["salt"].tolist() == [0]
-    # xxhash64 spreads the hot cell evenly: max/median rows per group <= 2
-    assert hot["count"].max() / hot["count"].median() <= 2.0
-    # no group exceeds 2x the per-slot target the pre-pass aimed for
-    assert groups["count"].max() <= 2 * target
-
-    a = (
-        engine.elevation_join(df, mode="nearest", strategy="broadcast")
-        .orderBy("image_id")
-        .toPandas()
-    )
-    salted = ElevationEngine(spark, grids=grids, cache_size=2)  # fewer slots than tiles
-    b = (
-        salted.elevation_join(df, mode="nearest", strategy="cogroup", n_salts=8)
-        .orderBy("image_id")
-        .toPandas()
-    )
+    a = engine.elevation_join(df, mode="nearest", strategy="broadcast").orderBy("image_id")
+    a = a.toPandas()
     av = a["elevation"].to_numpy(dtype="float64", na_value=np.nan)
     bv = b["elevation"].to_numpy(dtype="float64", na_value=np.nan)
     assert np.array_equal(np.isnan(av), np.isnan(bv))
     m = ~np.isnan(av)
     assert np.array_equal(av[m], bv[m])
+
+
+def test_over_cache_plans_build_without_jobs(spark, grids, tile_dir, points_pdf):
+    """Building an over-cache join (the catalog past the grid cache, so the
+    rows take the shuffled layout) launches no Spark job, for
+    elevation_join and terrain_join, over a tile_dir catalog and an
+    in-memory one: AQE sizes the rebalance at run time. The deleted salt
+    histogram ran 2 jobs on every build."""
+    from htg_spark.operators.terrain import terrain_join
+
+    df = spark.createDataFrame(points_pdf.assign(caption="c"))
+    sc = spark.sparkContext
+    for source in (dict(tile_dir=tile_dir), dict(grids=grids)):
+        eng = ElevationEngine(spark, cache_size=2, **source)
+        sc.setJobGroup("over-cache-build", "plan build only")
+        try:
+            outs = [
+                eng.elevation_join(df, strategy="cogroup", knn_fallback=True),
+                terrain_join(eng, df, strategy="cogroup"),
+            ]
+            jobs = sc.statusTracker().getJobIdsForGroup("over-cache-build")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert list(jobs) == []
+        for out in outs:
+            nodes = plan_nodes(out)
+            assert not faults(nodes, [count("Exchange", 1, 1)]), render(nodes)
+        assert outs[0].where("knn_used").count() > 0
+
+
+def test_huge_coordinates_get_a_null_key_on_every_plan(spark, grids):
+    """A coordinate whose floor lies outside int32 (1e10, inf, -1e12) is out
+    of coverage with a NULL tile key and NULL values, on the broadcast,
+    map-side cogroup and shuffled cogroup plans alike, for elevation_join
+    and terrain_join. The shuffled plan once aborted with CAST_OVERFLOW on
+    its int tile key, and the map-side one returned NumPy's wrapped key
+    -2147483648."""
+    from htg_spark.operators.terrain import terrain_join
+
+    df = spark.createDataFrame(
+        [("a", 1e10, 5.0), ("b", float("inf"), 1.0), ("c", 10.0, -1e12)],
+        "image_id string, lat double, lon double",
+    )
+    mem = ElevationEngine(spark, grids=grids)
+    plans = [
+        (mem, "broadcast"), (mem, "cogroup"),
+        (ElevationEngine(spark, grids=grids, cache_size=2), "cogroup"),
+    ]
+    joins = [  # (join, its NULL columns, its false columns)
+        (lambda e, s: e.elevation_join(df, strategy=s, knn_fallback=True),
+         ["elevation"], ["knn_used"]),
+        (lambda e, s: terrain_join(e, df, strategy=s), ["gxs", "gys"], ["terrain_ok"]),
+    ]
+    for join, nulls, falses in joins:
+        nulls = ["tile_lat", "tile_lon", *nulls]
+        falses = ["in_coverage", "tile_found", *falses]
+        cols = ["image_id", "lat", "lon", *nulls, *falses]
+        got = [_rows(join(eng, strategy), cols) for eng, strategy in plans]
+        for other in got[1:]:
+            pd.testing.assert_frame_equal(other, got[0])
+        rows = got[0]
+        assert len(rows) == 3
+        assert rows[nulls].isna().all().all(), rows
+        assert not rows[falses].to_numpy(dtype=bool).any(), rows
 
 
 def test_rewritten_tile_file_is_read_again(spark, tmp_path):
@@ -630,13 +674,13 @@ def test_filename_expressions_match_python(spark):
 
 
 def test_path_plan_moves_input_rows_once(spark, tile_dir, points_pdf):
-    """The salted layout reads tiles by path, so only the input rows move:
-    ONE shuffle Exchange (the salted-key repartition; the histogram
-    pre-pass has already run while the plan was built), no cogroup, no
-    id re-join, no data column in any Exchange — with kNN as well. The
-    plan shuffles for tile locality when the catalog holds more tiles than
-    the engine's grid cache, or when spark.python.worker.reuse is off (every
-    task then starts a fresh worker with an empty cache). The setting is
+    """The shuffled layout reads tiles by path, so only the input rows move:
+    ONE shuffle Exchange (the rebalance on the tile key), no cogroup, no
+    salt join, no id re-join, no data column in any Exchange — with kNN as
+    well. The plan shuffles for tile locality when the catalog holds more
+    tiles than the engine's grid cache, or when spark.python.worker.reuse
+    is off (every task then starts a fresh worker with an empty cache). The
+    setting is
     read from the live context conf, as the Python runners read it, and
     restored before anything runs."""
     df = spark.createDataFrame(points_pdf.assign(caption="c"))
@@ -646,20 +690,22 @@ def test_path_plan_moves_input_rows_once(spark, tile_dir, points_pdf):
         eng = ElevationEngine(spark, tile_dir=tile_dir, cache_size=cache_size)
         conf.set("spark.python.worker.reuse", reuse)
         try:
-            nodes = plan_nodes(
-                eng.elevation_join(df, strategy="cogroup", knn_fallback=knn, n_salts=4)
-            )
+            nodes = plan_nodes(eng.elevation_join(df, strategy="cogroup", knn_fallback=knn))
         finally:
             conf.set("spark.python.worker.reuse", "true")
         gates = [
             count("Exchange", 1, 1),
             no_column("data", "Exchange"),
             present("ArrowEvalPython"),
-            absent("SortMergeJoin", *COGROUPS, "MapInArrow", "Scan ExistingRDD"),
+            absent(
+                "SortMergeJoin", "BroadcastHashJoin", *COGROUPS, "MapInArrow",
+                "Scan ExistingRDD",
+            ),
         ]
         assert not faults(nodes, gates), render(nodes)
         (exchange,) = [n for n in nodes if n.name == "Exchange"]
         assert "caption" in exchange.output, render(nodes)
+        assert exchange.keys == ("_tile_lat", "_tile_lon"), render(nodes)
 
 
 def test_kernel_buffer_reads_each_tile_once(tmp_path, monkeypatch):
@@ -736,7 +782,7 @@ def test_kernel_buffer_spans_batches_under_spark(spark, tile_dir, points_pdf, mo
         out = {}
         for strategy in ("broadcast", "cogroup"):
             j = eng.elevation_join(
-                df, strategy=strategy, mode="bilinear", knn_fallback=True, n_salts=4
+                df, strategy=strategy, mode="bilinear", knn_fallback=True
             )
             out[strategy] = _rows(j, cols)
         return out
@@ -763,7 +809,7 @@ def test_path_plan_duplicate_ids_match_broadcast(spark, grids, tile_dir):
     """Duplicate ids with a payload column: the cogroup strategy keeps one
     output row per input row, exactly like broadcast, and both match the
     hgt.py oracle (the old cogroup id re-join multiplied duplicates) —
-    under the salted layout (grid cache smaller than the catalog) and the
+    under the shuffled layout (grid cache smaller than the catalog) and the
     map-side one (catalog fits the cache), over a tile_dir catalog and an
     in-memory one."""
     pdf = pd.DataFrame(
@@ -784,7 +830,7 @@ def test_path_plan_duplicate_ids_match_broadcast(spark, grids, tile_dir):
         eng = ElevationEngine(spark, cache_size=cache_size, **source)
         kw = dict(mode=mode, knn_fallback=True)
         a = _rows(eng.elevation_join(df, strategy="broadcast", **kw), cols)
-        b = _rows(eng.elevation_join(df, strategy="cogroup", n_salts=4, **kw), cols)
+        b = _rows(eng.elevation_join(df, strategy="cogroup", **kw), cols)
         assert len(a) == len(b) == len(pdf)
         pd.testing.assert_frame_equal(a, b)
         got = a["elevation"].to_numpy(dtype="float64", na_value=np.nan)
@@ -798,7 +844,7 @@ def test_null_lat_is_out_of_coverage_under_every_plan(spark, grids, tile_dir):
     """A NULL lat is out of coverage under both layouts alike: lat stays
     NULL, tile key and elevation are NULL (the deleted inline cogroup once
     raised TypeError on the NULL group key). The cogroup strategy runs
-    salted (grid cache smaller than the catalog) and map-side (catalog
+    shuffled (grid cache smaller than the catalog) and map-side (catalog
     fits the cache), over a tile_dir catalog and an in-memory one."""
     rows = [("n1", None, 138.5, "p"), ("n2", 35.5, 138.5, "q"), ("n3", 40.2, 138.4, "r")]
     df = spark.createDataFrame(rows, "image_id string, lat double, lon double, caption string")
@@ -809,8 +855,8 @@ def test_null_lat_is_out_of_coverage_under_every_plan(spark, grids, tile_dir):
         mem_eng = ElevationEngine(spark, grids=grids, cache_size=cache_size)
         kw = dict(mode="nearest", knn_fallback=knn)
         a = _rows(path_eng.elevation_join(df, strategy="broadcast", **kw), cols)
-        b = _rows(path_eng.elevation_join(df, strategy="cogroup", n_salts=4, **kw), cols)
-        c = _rows(mem_eng.elevation_join(df, strategy="cogroup", n_salts=4, **kw), cols)
+        b = _rows(path_eng.elevation_join(df, strategy="cogroup", **kw), cols)
+        c = _rows(mem_eng.elevation_join(df, strategy="cogroup", **kw), cols)
         pd.testing.assert_frame_equal(a, b)
         pd.testing.assert_frame_equal(a, c)
         n1 = a[a.image_id == "n1"].iloc[0]
@@ -840,13 +886,12 @@ def test_repeated_broadcast_knn_join_builds_without_jobs(spark, grids, points_pd
 def test_path_plan_runs_map_side_when_catalog_fits_cache(spark, grids, tile_dir, points_pdf):
     """With no more tiles than the grid cache, a reused Python worker keeps
     every tile across tasks and passes, so the by-path plan runs the kernel
-    UDF map-side on the input partitions: no histogram job, no salting, no
-    shuffle Exchange, and a repeated join builds without a Spark job
+    UDF map-side on the input partitions: no shuffle Exchange, and a repeated join builds without a Spark job
     (test_cogroup_blob_source_path checks its rows)."""
     eng = ElevationEngine(spark, tile_dir=tile_dir)
     assert len(grids) <= eng.cache_size
     df = spark.createDataFrame(points_pdf.assign(caption="c"))
-    path_kw = dict(strategy="cogroup", n_salts=4)
+    path_kw = dict(strategy="cogroup")
     for knn in (False, True):
         nodes = plan_nodes(eng.elevation_join(df, knn_fallback=knn, **path_kw))
         gates = [
@@ -866,46 +911,6 @@ def test_path_plan_runs_map_side_when_catalog_fits_cache(spark, grids, tile_dir,
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert list(jobs) == []
     assert out.where("knn_used").count() > 0
-
-
-def test_bad_n_salts_raises_under_every_plan(spark, grids, tile_dir):
-    """n_salts is checked when the join is called, on every plan —
-    including the broadcast and map-side by-path plans, which never read
-    it — so a bad value fails the same way everywhere (it used to fail
-    inside a task with REMAINDER_BY_ZERO at 0, pass silently at -1, and
-    overflow the packed int32 group key past MAX_SALTS)."""
-    from htg_spark.engine import MAX_SALTS
-    from htg_spark.operators.terrain import terrain_join
-
-    df = spark.createDataFrame(
-        [("a", 35.5, 138.5), ("b", 36.2, 138.4), ("c", 70.0, 0.0)],
-        "image_id string, lat double, lon double",
-    )
-    mem = ElevationEngine(spark, grids=grids)
-    plans = [
-        (mem, dict(strategy="broadcast")),
-        (ElevationEngine(spark, grids=grids, cache_size=2), dict(strategy="cogroup")),
-    ] + [
-        (ElevationEngine(spark, tile_dir=tile_dir, cache_size=c), dict(strategy="cogroup"))
-        for c in (2, 64)  # salted and map-side layouts
-    ]
-    for bad in (0, -1, MAX_SALTS + 1, 4.0, "4", True, None):
-        for eng, kw in plans:
-            with pytest.raises(ValueError, match="n_salts"):
-                eng.elevation_join(df, n_salts=bad, **kw)
-        for strategy in ("broadcast", "cogroup"):
-            with pytest.raises(ValueError, match="n_salts"):
-                terrain_join(mem, df, strategy=strategy, id_col="image_id", n_salts=bad)
-
-    # MAX_SALTS is the exact int32 bound of the packed key at the top cell
-    top = ElevationEngine._group_key(F.lit(90), F.lit(180), F.lit(MAX_SALTS - 1), MAX_SALTS)
-    assert spark.range(1).select(top.alias("gk")).first()["gk"] == 65341 * MAX_SALTS - 1
-    assert 65341 * (MAX_SALTS + 1) - 1 > 2**31 - 1
-    # both ends of the range run on the salted layout, equal to broadcast
-    cols = ["image_id", "lat", "lon", "tile_lat", "tile_lon", "elevation"]
-    want = _rows(mem.elevation_join(df, strategy="broadcast"), cols)
-    for (eng, kw), n in itertools.product([plans[1], plans[2]], (1, MAX_SALTS)):
-        pd.testing.assert_frame_equal(_rows(eng.elevation_join(df, n_salts=n, **kw), cols), want)
 
 
 def test_point_api_on_tile_dir_reads_tiles_by_path(spark, grids, tile_dir, points_pdf):
@@ -939,7 +944,7 @@ def test_spill_isolates_engines_sharing_a_tile_key(spark):
     """Two in-memory engines in one session hold different grids under the
     same tile key. Spilled files are named by a hash of their bytes, so
     neither engine reads the other's tile: each returns its own
-    elevations through the join, salted (cache_size 2) and map-side
+    elevations through the join, shuffled (cache_size 2) and map-side
     (cache_size 64), and through the point API."""
     key = (35, 138)
     grid_a = np.full((1201, 1201), 100, dtype=np.int16)
@@ -954,7 +959,7 @@ def test_spill_isolates_engines_sharing_a_tile_key(spark):
             eng = ElevationEngine(spark, grids={key: grid, **extra}, cache_size=cache_size)
             got = {
                 r.image_id: r.elevation
-                for r in eng.elevation_join(df, strategy="cogroup", n_salts=4).collect()
+                for r in eng.elevation_join(df, strategy="cogroup").collect()
             }
             assert got == {"a": want, "b": 100, "c": 700}, cache_size
             assert eng.get_elevation(35.5, 138.5) == want

@@ -166,7 +166,7 @@ def test_terrain_join_plan_is_map_only(spark):
 def test_terrain_join_default_strategy_is_auto(spark):
     """A default terrain_join plans like a default elevation_join
     (strategy='auto'): over a catalog with more tiles than the grid cache
-    the rows take the salted layout, one shuffle Exchange. (The old
+    the rows take the shuffled layout, one shuffle Exchange. (The old
     default, 'broadcast', ran map-side at any catalog size.)"""
     from htg_spark.driver_queries import CATALOG_KEYS, get_engine
 
@@ -509,7 +509,7 @@ def test_render_hillshade_flushes_large_batches(monkeypatch, spark):
 
 def test_terrain_cogroup_equals_broadcast(spark):
     """Every terrain plan returns the broadcast plan's rows: the cogroup
-    strategy both salted (cache_size 2, fewer slots than catalog tiles)
+    strategy both shuffled (cache_size 2, fewer slots than catalog tiles)
     and map-side (cache_size 64), over the tile_dir catalog and the
     in-memory one (spilled to files). The input adds a NULL-lat row, which
     passes through with a NULL tile key and terrain_ok false, and a second
@@ -530,7 +530,7 @@ def test_terrain_cogroup_equals_broadcast(spark):
             "tile_found", "terrain_ok", "gxs", "gys"]
 
     def rows(eng, frame, **kw):
-        out = terrain.terrain_join(eng, frame, id_col="event_id", n_salts=4, **kw)
+        out = terrain.terrain_join(eng, frame, **kw)
         return out.select(*cols).orderBy("event_id", "note").collect()
 
     ref = rows(get_engine(spark), pts)
@@ -560,7 +560,7 @@ def test_terrain_cogroup_equals_broadcast(spark):
 def test_terrain_cogroup_path_never_shuffles_blobs(spark):
     """Terrain cogroup over a tile_dir catalog: no Exchange in the plan may
     carry the binary data column (same gate as the elevation path plan),
-    whether the rows are salted and shuffled (cache_size 2, fewer slots
+    whether the rows are rebalanced by tile key (cache_size 2, fewer slots
     than catalog tiles: one Exchange) or run map-side (cache_size 64: no
     Exchange)."""
     from htg_spark.driver_queries import get_path_engine
@@ -568,11 +568,9 @@ def test_terrain_cogroup_path_never_shuffles_blobs(spark):
 
     pts = derive_points(spark.read.parquet("/root/testdata/sf0.001/events.parquet"))
     path_eng = get_path_engine(spark)  # cache_size 64
-    salted_eng = ElevationEngine(spark, catalog=path_eng.catalog, cache_size=2)
-    for eng, n_exchanges in ((path_eng, 0), (salted_eng, 1)):
-        out = terrain.terrain_join(
-            eng, pts, strategy="cogroup", id_col="event_id", n_salts=4,
-        )
+    shuffled_eng = ElevationEngine(spark, catalog=path_eng.catalog, cache_size=2)
+    for eng, n_exchanges in ((path_eng, 0), (shuffled_eng, 1)):
+        out = terrain.terrain_join(eng, pts, strategy="cogroup")
         nodes = plan_nodes(out)
         gates = [count("Exchange", n_exchanges, n_exchanges), no_column("data", "Exchange")]
         assert not faults(nodes, gates), render(nodes)
