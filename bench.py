@@ -61,9 +61,9 @@ def main():
         "nearest_cogroup_salted": dict(mode="nearest", strategy="cogroup"),
         "nearest_cogroup_path": dict(mode="nearest", strategy="cogroup"),
     }
-    # a grid cache below the catalog's 36 tiles sends the salted leaf down
-    # the shuffled layout (rows rebalanced once by tile key); its index
-    # reuses the in-memory engine's spill files, built out of the timed region
+    # the salted leaf runs under a grid cache below the catalog's 36 tiles,
+    # so its workers evict and map tiles again; its index reuses the
+    # in-memory engine's spill files, built out of the timed region
     salted_eng = ElevationEngine(spark, catalog=eng.catalog, cache_size=16)
     salted_eng._path_index()
     engines = {"nearest_cogroup_salted": salted_eng, "nearest_cogroup_path": path_eng}

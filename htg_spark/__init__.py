@@ -3,7 +3,7 @@
 Re-expresses SRTM-style per-point elevation lookup (reference:
 pedrosanzmtz/htg, a Rust mmap/LRU engine) as bulk raster<->vector joins over
 DataFrames: geotagged image+caption rows are cell-encoded in vectorized
-Arrow UDFs and joined (map-side, or rebalanced by tile key) against
+Arrow UDFs and joined map-side against
 a tile catalog of HGT grids, with nearest/floor/bilinear kernels, kNN
 nearest-tile fallback, per-partition checkpoint lineage, and exact parity
 with the reference's index math and void/missing semantics.

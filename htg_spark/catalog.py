@@ -9,6 +9,14 @@ opens ``path`` (raw HGT: big-endian int16, row-major, row 0 = north; or a
 the reference opens a tile's file when a query first needs it
 (``htg/src/service.rs:546-576``, ``tile.rs:93-138``). Grid caches key a
 tile by its file's stamp (``_file_stamp``: path, mtime, size).
+
+A plain ``.hgt`` file is memory-mapped (``tile.rs:66-77`` maps every
+tile). A file replaced with ``os.replace`` is always safe: live maps keep
+the old inode, and the new stamp maps the new file. A file truncated
+between two lookups gets a new stamp, so its next read raises ValueError
+naming the size, and the old map is never touched again. One race
+remains, as with the reference's ``Mmap``: a file truncated in place
+*during* a kernel call that reads its map can raise SIGBUS in that worker.
 Sources: in-memory grids (``catalog_from_grids``), each written once to a
 file named by the SHA-256 of its bytes; or a directory of ``*.hgt`` /
 ``*.hgt.zip`` files (``catalog_from_dir``), listed and never read, the
@@ -82,23 +90,22 @@ def _tile_file(path: str) -> str:
     return _local_path(path)
 
 
-def _read_blob_from_path(path: str) -> bytes:
-    """The raw HGT bytes of the tile file ``path``, which ``_read_grid``
-    decodes (rasters live in shared storage and only their paths ride a
-    plan). Unwraps a ``.hgt.zip`` (first .hgt entry, service.rs:546-576)."""
-    p = _tile_file(path)
-    with open(p, "rb") as f:
-        raw = f.read()
-    if p.endswith(".hgt.zip"):
-        raw = hgt.extract_hgt_from_zip(raw)
-    return raw
-
-
 def _read_grid(path: str) -> np.ndarray:
-    """The decoded grid of the tile file ``path``: read, unzip, decode
-    (``hgt.decode_tile``). Every whole-tile product and every grid cache
-    decodes a tile here."""
-    return hgt.decode_tile(_read_blob_from_path(path))
+    """The decoded grid of the tile file ``path``: every whole-tile product
+    and every grid cache decodes a tile here. A plain ``.hgt`` file (a
+    spilled one too) is memory-mapped read-only, as the reference maps
+    every tile (``tile.rs:66-77``): a miss costs an ``open`` and the
+    workers of one host share the page cache's copy of the file. Its size
+    is checked first (``hgt.samples_for_size``, the check
+    ``hgt.decode_tile`` makes), so a truncated file raises ValueError
+    naming its size. A ``.hgt.zip`` is read and its first .hgt entry
+    extracted and decoded (service.rs:546-576)."""
+    p = _tile_file(path)
+    if p.endswith(".hgt.zip"):
+        with open(p, "rb") as f:
+            return hgt.decode_tile(hgt.extract_hgt_from_zip(f.read()))
+    n = hgt.samples_for_size(os.path.getsize(p))
+    return np.memmap(p, dtype=">i2", mode="r", shape=(n, n))
 
 
 def _file_stamp(path: str) -> tuple:

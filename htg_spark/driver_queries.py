@@ -50,7 +50,7 @@ _ENGINES: dict[tuple[str, int], ElevationEngine] = {}
 
 def get_engine(spark: SparkSession, cache_size: int = 64) -> ElevationEngine:
     """The in-memory gradient catalog. ``cache_size=2``, below its tile
-    count, gives the engine whose cogroup joins take the shuffled layout."""
+    count, gives an engine whose grid caches evict and re-read tiles."""
     key = (spark.sparkContext.applicationId, cache_size)
     if key not in _ENGINES:
         g = gradient_void_grid()
@@ -402,10 +402,10 @@ def q_elevation_default_fill(spark, sf_dir):
 
 
 def q_elevation_cogroup(spark, sf_dir):
-    """Same join through the shuffled scale layout (J5): the in-memory
-    engine with a grid cache smaller than its catalog, so the rows are
-    rebalanced once by tile key while each task reads the spilled tiles by
-    path — proves the shuffle variant returns identical rows."""
+    """Same join at scale shape (J5): the in-memory engine with a grid
+    cache smaller than its catalog, so each task evicts and maps the
+    spilled tiles again by path — proves the over-cache join returns
+    identical rows."""
     eng = get_engine(spark, cache_size=2)
     pts = derive_points(_events(spark, sf_dir))
     out = eng.elevation_join(pts, mode="nearest", strategy="cogroup")
@@ -417,7 +417,7 @@ def q_elevation_cogroup_path(spark, sf_dir):
     from (shared) storage by path. At 100 TB of rasters the blobs must
     never ride a shuffle — this query proves that plan returns the
     identical rows. Its 3-tile catalog fits the grid cache, so the join
-    runs map-side; the plan audit also gates the over-cache (shuffled)
+    runs with every tile cached; the plan audit also gates the over-cache
     shape."""
     eng = get_path_engine(spark)
     pts = derive_points(_events(spark, sf_dir))
@@ -487,10 +487,10 @@ def q_knn_fallback(spark, sf_dir):
 
 
 def q_elevation_cogroup_knn(spark, sf_dir):
-    """J6 through the shuffled scale layout: the same kNN-fallback rows as
-    q_knn_fallback, produced on the in-memory engine with a grid cache
-    smaller than its catalog (rows rebalanced once by tile key; the
-    kernel falls back to the nearest catalog tile in the same pass).
+    """J6 at scale shape: the same kNN-fallback rows as q_knn_fallback,
+    produced on the in-memory engine with a grid cache smaller than its
+    catalog (the kernel falls back to the nearest catalog tile in the same
+    pass).
     Shares the broadcast-path `knn` oracle."""
     eng = get_engine(spark, cache_size=2)
     pts = derive_points(_events(spark, sf_dir))

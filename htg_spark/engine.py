@@ -3,12 +3,12 @@
 Re-expresses the reference's one join — ``batch_with_tile_grouping``
 (``htg/src/service.rs:409-480``: group points by tile key, load each tile
 once, apply the kernel, reassemble in input order) — as one Python stage
-over two row layouts. The stage takes the kernel as a parameter
+on the input partitions. The stage takes the kernel as a parameter
 (``TileKernel``: NumPy code over a batch of points plus its output struct)
 and serves both kernels of this repo: elevation (``kernel_batch``, via
 ``elevation_join``) and the Horn terrain stencil
-(``operators.terrain.terrain_join``). Both joins share one strategy
-dispatch (``_tile_join``).
+(``operators.terrain.terrain_join``). Both joins share one plan
+(``_tile_join``).
 
 The stage is a scalar-iterator ``arrow_udf`` over ``(lat, lon)``
 (``_kernel_udf``) that returns the kernel's columns as a struct — for
@@ -36,21 +36,16 @@ the same files share decoded grids, and a tile file rewritten in place is
 read again without any invalidation. A user ``catalog=`` frame must carry
 ``path`` too.
 
-Two row layouts over that one cache:
-
-- **map-side** (``strategy='broadcast'``; and ``'cogroup'`` / ``'auto'``
-  when the catalog holds no more tiles than ``cache_size`` and
-  ``spark.python.worker.reuse`` is on, Spark's default): the kernel UDF
-  runs on the input partitions. Reused Python workers keep every decoded
-  tile across tasks and passes, so grouping rows by tile buys nothing: no
-  shuffle.
-- **shuffled** (``'cogroup'`` / ``'auto'`` otherwise: more tiles than the
-  cache, or workers not reused, so each task starts with an empty cache):
-  the full input rows cross ONE rebalance Exchange on their tile key
-  (``floor(lat)``, ``floor(lon)``), so each task sees few tiles. AQE
-  (``OptimizeSkewInRebalancePartitions``) splits a hot tile by bytes and
-  sizes the tasks at run time; no job runs while the plan is built. Tiles
-  never ride the shuffle.
+One row layout, for every catalog size: the kernel UDF runs on the input
+partitions, with no Exchange and no job while the plan is built. A plain
+``.hgt`` tile is a read-only memory map of its file, as the reference maps
+every tile (``htg/src/tile.rs:66-77``), so a grid-cache miss costs an
+``open``, not a copy of the file, and the Python workers of a host share
+one page-cache copy of each tile. A catalog larger than ``cache_size``
+therefore needs no shuffle by tile key: the buffer evicts and maps tiles
+again cheaply. Reused Python workers keep their cache across tasks and
+passes. For a world catalog, tile locality comes from storage: a points
+table written by ``points_store.write_points`` is partitioned by tile cell.
 
 Semantics (exact parity with the reference; FIXTURES.md §6):
 - out-of-coverage (|lat|>60, |lon|>180, inclusive bounds valid):
@@ -59,20 +54,20 @@ Semantics (exact parity with the reference; FIXTURES.md §6):
 - void sample / any-void bilinear corner: NULL/default
   (service.rs:344-347, tile.rs:271-273)
 - nearest = Rust f64::round (half away from zero); floor = srtm.py variant
-- every input row comes out once with its payload untouched; no layout
+- every input row comes out once with its payload untouched; no plan
   reads an id column, so duplicate ids stay rows of their own
 
 kNN nearest-tile fallback (new, north rule): in-coverage points whose tile
 is absent are assigned the catalog tile with the nearest center (squared
 euclidean in degrees, ties by (tile_lat, tile_lon)), coordinates clamped
 into that tile's [0,1] frac range — half-open boundary semantics preserved
-via the explicit frac-based kernels. It runs in the kernel on both
-layouts, against the index's tile keys.
+via the explicit frac-based kernels. It runs in the kernel, against the
+index's tile keys.
 
 NULL (or NaN) coordinates, and coordinates whose floor lies outside int32
-(±inf, 1e10), are out of coverage under both layouts and for every
-kernel: lat/lon pass through unchanged, the tile key is NULL and the
-kernel's values are NULL (elevation NULL/default; terrain_ok false).
+(±inf, 1e10), are out of coverage for every kernel: lat/lon pass through
+unchanged, the tile key is NULL and the kernel's values are NULL
+(elevation NULL/default; terrain_ok false).
 """
 
 from __future__ import annotations
@@ -103,18 +98,14 @@ _KERNEL = [
 ]
 
 
-def _python_workers_reused(spark) -> bool:
-    """``spark.python.worker.reuse`` (Spark's default: true). Read from the
-    context's live conf, as the Python runners read it; ``getConf()``
-    would copy every entry over Py4J on each join."""
-    reuse = spark.sparkContext._conf.get("spark.python.worker.reuse", "true")
-    return reuse.strip().lower() == "true"
-
-
 class _GridCache:
     """Decoded-grid LRU keyed by tile file (``catalog._file_stamp``) — the
     analog of the reference's moka tile cache (service.rs:168, capacity in
-    tiles)."""
+    tiles). A plain ``.hgt`` grid is a read-only memory map of its file
+    (``catalog._read_grid``), so the capacity bounds open maps, not bytes:
+    each live map holds one open file descriptor, and a cache holds at most
+    ``capacity`` of them (an evicted map closes once nothing else holds
+    it)."""
 
     def __init__(self, capacity: int = 64):
         self.capacity = capacity
@@ -336,11 +327,11 @@ def _kernel_arrays(
 
 
 # Rows the kernel UDF gathers before it runs the kernel (8 default Arrow
-# batches). A shuffled partition reaches the UDF with its tiles
+# batches). An input partition reaches the UDF with its tiles
 # interleaved, so every batch touches every tile of the task; run per
-# batch, a task holding more tiles than the grid cache would re-read and
-# re-decode each tile on every batch. Over the buffer each tile is read
-# once. A Spark sort on the tile key cannot do this: the
+# batch, a task holding more tiles than the grid cache would map each tile
+# again and fault its pages in on every batch. Over the buffer each tile
+# is read once. A Spark sort on the tile key cannot do this: the
 # optimizer drops a sortWithinPartitions under an aggregate or join
 # consumer. Cost: a full buffer peaks at ~40 MB of NumPy + Arrow arrays in
 # the Python worker (measured, bilinear elevation), and the JVM queues the
@@ -380,7 +371,7 @@ def _kernel_batches(
 
 
 def _kernel_udf(paths, kernel: TileKernel, cache_cap: int):
-    """The one Python stage of both row layouts: a scalar-iterator
+    """The one Python stage of every join: a scalar-iterator
     ``arrow_udf`` over (lat, lon) returning the kernel's fields as a
     struct. Spark plans it as ArrowEvalPython, which keeps every other
     column in the JVM, so only the two float64 arguments cross into Python
@@ -431,7 +422,14 @@ def _append_kernel(frame: DataFrame, kernel_udf, names: list[str]) -> DataFrame:
 
 class ElevationEngine:
     """DataFrame-level elevation service — the `SrtmService` analog
-    (API parity table: SURVEY.md §2.8; htg-python/src/lib.rs:110-316)."""
+    (API parity table: SURVEY.md §2.8; htg-python/src/lib.rs:110-316).
+
+    ``cache_size`` is the capacity, in tiles, of the LRU grid cache of the
+    point API and of each Python worker running a join (``_GridCache``),
+    and nothing else: every join plans the same at any catalog size. A
+    plain ``.hgt`` tile is memory-mapped, so it bounds open maps, not
+    bytes; each map holds one open file descriptor, so it also bounds a
+    worker's open tile files."""
 
     def __init__(
         self,
@@ -738,24 +736,14 @@ class ElevationEngine:
         strict=True replicates the single-point API contract: raise on any
         out-of-coverage row (service.rs:485-490) instead of defaulting.
 
-        strategy picks the row layout (module docstring). Every plan reads
-        tiles by path through the executor grid cache, and all return the
-        same rows:
+        Every join is one map-side plan (module docstring): the kernel UDF
+        on the input partitions, tiles read by path through the executor
+        grid cache, no Exchange, whatever the catalog's size.
 
-        - 'broadcast': map-side, the kernel UDF on the input partitions,
-          no shuffle. (The name is kept from the plan that broadcast the
-          tile blobs.)
-        - 'cogroup' and 'auto' (default): map-side too when the catalog
-          holds no more tiles than ``cache_size`` and
-          ``spark.python.worker.reuse`` is on: every reused Python worker
-          then keeps every tile in its grid cache. Otherwise the input rows
-          cross one rebalance Exchange on their tile key, so each task sees
-          few tiles, and AQE splits a hot tile by bytes. Tiles never enter
-          a shuffle: at 100 TB of rasters that is the plan.
-
-        n_salts is accepted and not read: no layout salts any more. It is
-        kept because existing callers pass it (perfbench's
-        ``enrich_cogroup`` passes ``n_salts=16``).
+        strategy ('auto', the default, 'broadcast' or 'cogroup') is
+        validated and selects nothing; n_salts is accepted and not read.
+        Both stay because existing callers pass them (perfbench passes
+        ``strategy="broadcast"`` and ``"cogroup"``, and ``n_salts=16``).
 
         Eager Spark jobs (launched while the plan is built, before any
         action on the result):
@@ -766,8 +754,7 @@ class ElevationEngine:
           ``tile_dir`` or ``grids`` catalog (a LocalRelation), whatever a
           user ``catalog=`` frame's plan takes otherwise.
 
-        Neither layout launches any other: the shuffled one is sized by
-        AQE at run time, with no pre-pass.
+        The plan launches no other.
         """
         if mode not in ("nearest", "floor", "bilinear"):
             raise ValueError(f"bad mode {mode!r}")
@@ -813,36 +800,15 @@ class ElevationEngine:
         return out
 
     def _tile_join(self, pts: DataFrame, kernel: TileKernel, strategy: str) -> DataFrame:
-        """The strategy dispatch shared by every tile-kernel join
-        (``elevation_join``, ``terrain.terrain_join``): runs ``kernel`` on
-        one of the two row layouts, tiles read by path through the executor
-        grid cache. ``pts`` carries (lat, lon).
-
-        'broadcast' runs map-side. 'cogroup' and 'auto' run map-side when
-        the whole catalog fits the grid cache and Python workers are
-        reused: a worker then keeps every tile across tasks and passes.
-        Otherwise the FULL input rows cross one rebalance Exchange on their
-        tile key, so each task sees few tiles (with reuse off every task
-        starts with an empty cache); AQE splits a hot tile by bytes. The
-        key columns are bigint floors, not int casts, so a huge coordinate
-        cannot overflow them, and are dropped again above the Exchange."""
+        """The one plan of every tile-kernel join (``elevation_join``,
+        ``terrain.terrain_join``): ``kernel`` runs map-side, in the kernel
+        UDF on the input partitions, with tiles read by path through the
+        executor grid cache; no Exchange at any catalog size. ``pts``
+        carries (lat, lon). ``strategy`` is validated and selects nothing."""
         if strategy not in ("auto", "broadcast", "cogroup"):
             raise ValueError(f"bad strategy {strategy!r}")
         paths = self._path_index()
-        rows = pts
-        if strategy != "broadcast" and not (
-            len(paths.value) <= self.cache_size and _python_workers_reused(pts.sparkSession)
-        ):
-            # temporary key columns, named past any input column
-            keys = ["_tile_lat", "_tile_lon"]
-            while set(keys) & set(pts.columns):
-                keys = ["_" + k for k in keys]
-            rows = (
-                pts.withColumns({k: F.floor(c) for k, c in zip(keys, ("lat", "lon"))})
-                .hint("rebalance", *keys)
-                .drop(*keys)
-            )
         if kernel.knn:
             kernel = kernel.with_centers(self.tile_centers())
         udf = _kernel_udf(paths, kernel, self.cache_size)
-        return _append_kernel(rows, udf, kernel.names)
+        return _append_kernel(pts, udf, kernel.names)

@@ -50,14 +50,12 @@ Per-POINT stencils treat tiles as independent, matching the reference
 (tile.rs:299-318); the boundary-correct whole-raster path is the halo
 exchange at the bottom of this module (``mosaic_horn_stats``).
 
-Scale shape: the elevation join's own plans (``ElevationEngine._tile_join``),
-with the terrain kernel in place of the elevation kernel.
-The map-side layout is map-only: one ``ArrowEvalPython`` kernel UDF reads
-tiles by path and sees only (lat, lon), so the payload stays in the JVM
-(ZERO shuffle Exchanges, gated in PLANS.md); per buffer the work is one
-argsort group-by plus nine vectorized gathers. Past the engine's grid
-cache the rows cross one rebalance Exchange on their tile key, exactly as
-in ``elevation_join``.
+Scale shape: the elevation join's own plan (``ElevationEngine._tile_join``),
+with the terrain kernel in place of the elevation kernel. It is map-only
+at every catalog size: one ``ArrowEvalPython`` kernel UDF reads
+memory-mapped tiles by path and sees only (lat, lon), so the payload stays
+in the JVM (ZERO shuffle Exchanges, gated in PLANS.md); per buffer the work
+is one argsort group-by plus nine vectorized gathers.
 """
 
 from __future__ import annotations
@@ -185,17 +183,11 @@ def terrain_join(engine, points: DataFrame, strategy: str = "auto") -> DataFrame
     terrain_ok, gxs, gys) to `points`. gxs/gys are NULL wherever
     terrain_ok is false.
 
-    Runs ``TERRAIN_KERNEL`` on the engine's elevation-join plans
-    (``ElevationEngine._tile_join``), with the same strategy rules as
-    ``elevation_join``; every plan reads tiles by path and only (lat, lon)
-    cross into Python:
-
-    - strategy='broadcast': map-side, the kernel UDF on the input
-      partitions, no shuffle.
-    - strategy='auto' (default) or 'cogroup': map-side too when the
-      catalog fits the engine's grid cache and Python workers are reused;
-      otherwise the rows cross one rebalance Exchange on their tile key,
-      so each task sees few tiles.
+    Runs ``TERRAIN_KERNEL`` on the engine's elevation-join plan
+    (``ElevationEngine._tile_join``): the kernel UDF on the input
+    partitions, tiles read by path, only (lat, lon) cross into Python, no
+    Exchange at any catalog size. ``strategy`` ('auto', 'broadcast' or
+    'cogroup') is validated, as in ``elevation_join``, and selects nothing.
 
     Every input row comes out once with its payload untouched, so
     duplicate ids stay separate rows. A NULL (or NaN) lat/lon, or one

@@ -16,8 +16,7 @@ def get_spark(
     """Build (or reuse) a SparkSession.
 
     Defaults chosen for the raster<->vector join at scale:
-    - AQE on (runtime coalescing, skew-join splitting, and the split of a
-      hot tile in the elevation join's rebalance Exchange)
+    - AQE on (runtime coalescing and skew-join splitting)
     - Arrow execution on (all kernels are pandas/Arrow UDFs; per-row Python is
       banned by design)
     - shuffle partitions sized to cores locally; on a real cluster set it to

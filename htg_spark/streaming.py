@@ -2,11 +2,11 @@
 SURVEY.md §2.7: the reference has no streaming surface; parity does not
 require it, but a 100TB ingest pipeline does).
 
-The map-side elevation join (``strategy='broadcast'``) is a stateless
-map-only transformation (one ArrowEvalPython kernel UDF reading tiles by
-path through the executor grid cache — no shuffle, no state), so it
-composes with any streaming source/sink unchanged: readStream -> derive
-points -> elevation_join(strategy='broadcast') -> writeStream. Watermarks /
+Every elevation join is a stateless map-only transformation (one
+ArrowEvalPython kernel UDF reading tiles by path through the executor grid
+cache — no shuffle, no state), so it composes with any streaming
+source/sink unchanged: readStream -> derive points -> elevation_join ->
+writeStream. Watermarks /
 windowed aggregation can be layered on the enriched stream by the caller
 (elevation columns are ordinary columns).
 """
@@ -22,29 +22,23 @@ from .engine import ElevationEngine
 def stream_elevation_join(
     engine: ElevationEngine, stream: DataFrame, mode: str = "nearest", **kw
 ) -> DataFrame:
-    """Apply the map-side elevation join (``strategy='broadcast'``) to a
-    streaming DataFrame.
-
-    Only the map-side layout is stateless and therefore streaming-safe;
-    the shuffled layout would repartition every micro-batch.
-    """
+    """Apply the elevation join to a streaming DataFrame: every join is
+    map-only and stateless, so every join is streaming-safe."""
     if not stream.isStreaming:
         raise ValueError("stream_elevation_join expects a streaming DataFrame")
-    return engine.elevation_join(stream, mode=mode, strategy="broadcast", **kw)
+    return engine.elevation_join(stream, mode=mode, **kw)
 
 
 def stream_terrain_join(engine: ElevationEngine, stream: DataFrame, **kw) -> DataFrame:
     """Apply the Horn terrain join (operators/terrain.py) to a streaming
-    DataFrame: the map-side stencil kernel UDF (``strategy='broadcast'``)
-    is stateless map-only (tiles read by path, nothing shuffles, no
-    state), so it is streaming-safe by construction — the terrain twin of
-    stream_elevation_join. The shuffled layout is deliberately not offered
-    for streams (it would repartition every micro-batch)."""
+    DataFrame: the stencil kernel UDF is stateless map-only (tiles read by
+    path, nothing shuffles, no state), so every terrain join is
+    streaming-safe — the terrain twin of stream_elevation_join."""
     if not stream.isStreaming:
         raise ValueError("stream_terrain_join expects a streaming DataFrame")
     from .operators.terrain import terrain_join
 
-    return terrain_join(engine, stream, strategy="broadcast", **kw)
+    return terrain_join(engine, stream, **kw)
 
 
 def stream_geofence(

@@ -67,11 +67,11 @@ def q_terrain_horn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_terrain_cogroup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The same Horn products through the shuffled SCALE layout (the plan
-    for a catalog past the grid cache): the in-memory engine with
-    cache_size 2, so the rows are rebalanced once by tile key and the
-    kernel UDF reads the spilled tiles by path — shares the terrain_horn
-    oracle, proving the shuffle variant returns identical rows."""
+    """The same Horn products at SCALE shape (a catalog past the grid
+    cache): the in-memory engine with cache_size 2, so the kernel UDF
+    evicts and maps the spilled tiles again by path — shares the
+    terrain_horn oracle, proving the over-cache join returns identical
+    rows."""
     eng = get_engine(spark, cache_size=2)
     pts = derive_points(_events(spark, sf_dir))
     out = terrain.terrain_join(eng, pts, strategy="cogroup")

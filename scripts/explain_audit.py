@@ -9,11 +9,10 @@ the expected text, the gates and the node outline (names, Exchange
 partitioning, output columns): no expression ids or paths, so an
 unchanged tree writes identical bytes.
 
-The engine's contract: the map-side layout is one map-only Arrow stage;
-the shuffled layout moves the input rows through one rebalance Exchange on
-their tile key, only when the catalog exceeds the engine's grid cache, for an in-memory and a tile_dir
-catalog alike; no engine plan cogroups, reads a checkpoint or moves the
-tile blobs.
+The engine's contract: every join is one map-only Arrow stage on the
+input partitions, whether or not the catalog fits the engine's grid cache,
+for an in-memory and a tile_dir catalog alike; no engine plan shuffles,
+cogroups, reads a checkpoint or moves the tile blobs.
 
 Run from the repo root: python scripts/explain_audit.py
 """
@@ -60,20 +59,13 @@ ENGINE = [
     no_column("data", "Exchange"),
 ]
 MAP_SIDE = ENGINE + [shuffles(0), present("ArrowEvalPython")]
-# the input rows move once, into the kernel UDF only: no salt join, no id
-# re-join, no grouped/mapped Arrow node
-SHUFFLED = ENGINE + [
-    shuffles(1),
-    present("ArrowEvalPython"),
-    absent("SortMergeJoin", "BroadcastHashJoin", "MapInArrow"),
-]
 # checkpointed bases only: no direct parquet scan survives into the plan
 CHECKPOINTED = [count(SCAN, 0, 0), present(CHECKPOINT), NO_CROSS]
 
 
 def sections(spark, sf_dir):
     eng = dq.get_engine(spark)
-    shuffled_eng = dq.get_engine(spark, cache_size=2)
+    over_mem_eng = dq.get_engine(spark, cache_size=2)
     path_eng = dq.get_path_engine(spark)
     over_eng = ElevationEngine(spark, catalog=path_eng.catalog, cache_size=2)
 
@@ -93,11 +85,12 @@ def sections(spark, sf_dir):
             redacted.select("cid", F.col("kept_text").alias("text")), id_col="cid"
         )
 
-    shuffled_text = (
-        "The input rows cross one rebalance Exchange on their tile key "
-        "(floor(lat), floor(lon)), which AQE splits by bytes when a tile is "
-        "hot; no job runs while the plan is built. ArrowEvalPython then "
-        "runs the kernel UDF, reading tiles by path."
+    over_cache_text = (
+        "The catalog holds more tiles than the engine's cache_size, and the "
+        "plan is the same: ArrowEvalPython runs the kernel UDF on the input "
+        "partitions, reading tiles by path through each worker's grid "
+        "cache of memory-mapped tiles. No Exchange, and no job runs while "
+        "the plan is built."
     )
     window_text = (
         "events scan -> epoch-µs projection -> one user-hash Exchange "
@@ -111,14 +104,14 @@ def sections(spark, sf_dir):
          "engine's index (this in-memory catalog spilled to files); payload "
          "columns stay in the JVM.",
          join(eng, strategy="broadcast"), MAP_SIDE),
-        ("Cogroup join, in-memory catalog exceeds the grid cache (shuffled)",
+        ("Cogroup join, in-memory catalog exceeds the grid cache (map-side)",
          "The catalog was spilled once to content-named files shipped with "
          "addFile, so this plan reads tiles by path like a tile_dir engine. "
-         + shuffled_text,
-         join(shuffled_eng, strategy="cogroup"), SHUFFLED),
-        ("Cogroup join, in-memory catalog exceeds the grid cache (shuffled, kNN fallback)",
+         + over_cache_text,
+         join(over_mem_eng, strategy="cogroup"), MAP_SIDE),
+        ("Cogroup join, in-memory catalog exceeds the grid cache (map-side, kNN fallback)",
          "As above, with the kNN fallback in the same kernel pass.",
-         join(shuffled_eng, strategy="cogroup", knn_fallback=True), SHUFFLED),
+         join(over_mem_eng, strategy="cogroup", knn_fallback=True), MAP_SIDE),
         ("Scan pruning sanity (events parquet)",
          "The scan reads only event_id/user_id.",
          lambda spark, sf_dir: spark.read.parquet(f"{sf_dir}/events.parquet")
@@ -135,11 +128,11 @@ def sections(spark, sf_dir):
          "partitions reading tiles by path.",
          join(path_eng, strategy="cogroup"),
          MAP_SIDE + [no_column("data")]),
-        ("Cogroup join, tile_dir catalog exceeds the grid cache (shuffled)",
-         shuffled_text + " No catalog-side shuffle: at 100 TB of rasters the "
-         "tiles must never ride a shuffle (tasks read them from shared "
+        ("Cogroup join, tile_dir catalog exceeds the grid cache (map-side)",
+         over_cache_text + " No catalog-side shuffle: at 100 TB of rasters "
+         "the tiles must never ride a shuffle (tasks read them from shared "
          "storage).",
-         join(over_eng, strategy="cogroup"), SHUFFLED),
+         join(over_eng, strategy="cogroup"), MAP_SIDE + [no_column("data")]),
         ("Embedding near-dup (multi-table LSH bucketed)",
          "per-table bucket self-equi-joins (SortMergeJoin/ShuffledHashJoin "
          "on bk) unioned + deduped, cosine on candidates only.",

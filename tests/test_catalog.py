@@ -49,11 +49,11 @@ def test_catalog_from_dir(spark, tile_dir):
     # plain .hgt beat the zip: center of N35E139 is the interp tile (0 at center
     # would be 100 at (600,600)); the zip variant had 777
     assert rows[(35, 139)].path.endswith("/N35E139.hgt")
-    grid = hgt.decode_tile(catalog._read_blob_from_path(rows[(35, 139)].path))
+    grid = catalog._read_grid(rows[(35, 139)].path)
     assert grid[600, 600] == 100
     # zip-only tile decoded correctly
     assert rows[(36, 138)].path.endswith("/N36E138.hgt.zip")
-    grid2 = hgt.decode_tile(catalog._read_blob_from_path(rows[(36, 138)].path))
+    grid2 = catalog._read_grid(rows[(36, 138)].path)
     assert grid2[600, 600] == 1000
 
 

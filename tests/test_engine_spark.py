@@ -125,10 +125,10 @@ def test_reference_expectations_through_spark(spark, engine):
 
 
 def test_cogroup_equals_broadcast(spark, engine, grids, points_pdf):
-    """The shuffled layout over an in-memory catalog (grid cache smaller
-    than the catalog: rows rebalanced by tile key, tiles read from the
-    spill) returns the broadcast plan's rows."""
-    shuffled = ElevationEngine(spark, grids=grids, cache_size=2)
+    """An over-cache engine over an in-memory catalog (grid cache smaller
+    than the catalog: tiles evicted and read again from the spill) returns
+    the broadcast plan's rows."""
+    over = ElevationEngine(spark, grids=grids, cache_size=2)
     df = spark.createDataFrame(points_pdf)
     for mode in ("nearest", "bilinear"):
         a = (
@@ -137,7 +137,7 @@ def test_cogroup_equals_broadcast(spark, engine, grids, points_pdf):
             .toPandas()
         )
         b = (
-            shuffled.elevation_join(df, mode=mode, strategy="cogroup")
+            over.elevation_join(df, mode=mode, strategy="cogroup")
             .orderBy("image_id")
             .toPandas()
         )
@@ -177,10 +177,10 @@ def test_knn_fallback(spark, grids):
 
 
 def test_cogroup_knn_equals_broadcast_knn(spark, engine, grids, points_pdf):
-    """J6 via the scale path: the kNN fallback on the shuffled layout over an
-    in-memory catalog (grid cache smaller than the catalog) must return
+    """J6 via the scale path: the kNN fallback on an over-cache engine over
+    an in-memory catalog (grid cache smaller than the catalog) must return
     row-identical results to the broadcast-path kNN for every mode."""
-    shuffled = ElevationEngine(spark, grids=grids, cache_size=2)
+    over = ElevationEngine(spark, grids=grids, cache_size=2)
     df = spark.createDataFrame(points_pdf)
     for mode in ("nearest", "bilinear"):
         a = (
@@ -189,7 +189,7 @@ def test_cogroup_knn_equals_broadcast_knn(spark, engine, grids, points_pdf):
             .toPandas()
         )
         b = (
-            shuffled.elevation_join(df, mode=mode, strategy="cogroup", knn_fallback=True)
+            over.elevation_join(df, mode=mode, strategy="cogroup", knn_fallback=True)
             .orderBy("image_id")
             .toPandas()
         )
@@ -238,9 +238,8 @@ def test_cogroup_blob_source_path(spark, grids, points_pdf, tile_dir):
     """A tile_dir catalog: each task reads its tiles from shared storage by
     path. Results must be row-identical to the broadcast path and match
     the hgt.py oracle — including through a .hgt.zip tile, for nearest and
-    bilinear, with and without kNN fallback — under the shuffled by-path
-    plan (grid cache smaller than the catalog) and the map-side one
-    (catalog fits the cache)."""
+    bilinear, with and without kNN fallback — with a grid cache smaller
+    than the catalog and one that holds it."""
     df = spark.createDataFrame(points_pdf)
     for cache_size, mode, knn in itertools.product(
         (2, 64), ("nearest", "bilinear"), (False, True)
@@ -268,10 +267,9 @@ def test_cogroup_blob_source_path(spark, grids, points_pdf, tile_dir):
         assert np.array_equal(np.isnan(av[plain]), np.isnan(want[plain]))
         assert np.array_equal(av[plain & ~np.isnan(av)], want[plain & ~np.isnan(want)])
 
-    # contract error: an unknown strategy. Neither layout reads an id
-    # column, so a frame without one joins on both (cache_size 2 and 64),
-    # and an input column named like the shuffled layout's temporary key
-    # passes through
+    # contract error: an unknown strategy. No plan reads an id column, so
+    # a frame without one joins (cache_size 2 and 64), and an input column
+    # named `_tile_lat` passes through
     with pytest.raises(ValueError, match="bad strategy"):
         eng.elevation_join(df, strategy="inline")
     no_id = df.drop("image_id").withColumn("_tile_lat", F.lit("kept"))
@@ -338,10 +336,10 @@ def test_catalog_measure_is_thread_safe(spark, grids, monkeypatch):
 
 def test_auto_blob_source_picks_path(spark, grids, points_pdf, tmp_path):
     """strategy='auto' past the grid cache reads tiles by path on every
-    catalog, a tile directory or in-memory (spilled to files): the input
-    rows cross one rebalance Exchange and no Exchange carries the binary data
-    column — at 100 TB of rasters the blobs must never ride a shuffle.
-    Within the cache, auto runs map-side with no Exchange at all."""
+    catalog, a tile directory or in-memory (spilled to files), map-side:
+    no Exchange, so neither the rows nor the binary data column ride a
+    shuffle — at 100 TB of rasters the blobs must never ride one. Within
+    the cache, auto runs map-side with no Exchange at all."""
     from htg_spark import hgt as hgt_mod
 
     tiles = tmp_path / "tiles"
@@ -350,18 +348,17 @@ def test_auto_blob_source_picks_path(spark, grids, points_pdf, tmp_path):
         (tiles / hgt_mod.coords_to_filename(tl, tn)).write_bytes(hgt_mod.encode_tile(grid))
     df = spark.createDataFrame(points_pdf.head(50))
 
-    # cache_size below the tile count: the shuffled layout
+    # cache_size below the tile count
     for eng in (
         ElevationEngine(spark, tile_dir=str(tiles), cache_size=2),
         ElevationEngine(spark, grids=grids, cache_size=2),
     ):
         nodes = plan_nodes(eng.elevation_join(df, strategy="auto"))
-        # same invariant the plan audit hard-gates for every engine section:
-        # no Exchange may carry the binary data column
+        # the invariant the plan audit hard-gates for every engine section
         gates = [
             present("ArrowEvalPython"),
             absent(*COGROUPS),
-            count("Exchange", 1, 1),
+            count("Exchange", 0, 0),
             no_column("data", "Exchange"),
         ]
         assert not faults(nodes, gates), render(nodes)
@@ -392,58 +389,11 @@ def test_cogroup_knn_in_memory_builds_without_jobs(spark, grids, points_pdf):
     assert out.where("knn_used").count() > 0
 
 
-def test_cogroup_rebalance_spreads_hot_tile(spark, engine, grids):
-    """Skew stress (SURVEY.md §4): 90% of points land in ONE 1-degree cell.
-    On the shuffled layout (grid cache smaller than the catalog) AQE splits
-    that tile's rows over several kernel tasks by bytes: at a 16k advisory
-    partition size the hot tile spans at least 2 tasks and no task holds
-    more than half the rows (a plain repartition on the tile key keeps all
-    of them in one task). The result still equals the broadcast join
-    row-for-row."""
-    rng = np.random.default_rng(7)
-    n_hot, n_cold = 9000, 1000
-    lat = np.concatenate([35.0 + rng.random(n_hot), 33.0 + rng.random(n_cold)])
-    lon = np.concatenate([138.0 + rng.random(n_hot), -97.0 + rng.random(n_cold)])
-    pdf = pd.DataFrame(
-        {"image_id": [f"s{i:05d}" for i in range(n_hot + n_cold)], "lat": lat, "lon": lon}
-    )
-    df = spark.createDataFrame(pdf)
-    shuffled = ElevationEngine(spark, grids=grids, cache_size=2)  # fewer slots than tiles
-    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-    old = spark.conf.get(key)
-    spark.conf.set(key, "16k")
-    try:
-        out = shuffled.elevation_join(df, mode="nearest", strategy="cogroup")
-        # the kernel stage's task of each row, read above the kernel UDF
-        tasks = (
-            out.select(F.spark_partition_id().alias("task"), "tile_lat", "tile_lon", "elevation")
-            .groupBy("task", "tile_lat", "tile_lon")
-            .count()
-            .toPandas()
-        )
-        b = out.orderBy("image_id").toPandas()
-    finally:
-        spark.conf.set(key, old)
-    hot = tasks[(tasks.tile_lat == 35) & (tasks.tile_lon == 138)]
-    assert hot["count"].sum() == n_hot
-    assert hot["task"].nunique() >= 2, tasks
-    assert tasks.groupby("task")["count"].sum().max() <= (n_hot + n_cold) / 2, tasks
-
-    a = engine.elevation_join(df, mode="nearest", strategy="broadcast").orderBy("image_id")
-    a = a.toPandas()
-    av = a["elevation"].to_numpy(dtype="float64", na_value=np.nan)
-    bv = b["elevation"].to_numpy(dtype="float64", na_value=np.nan)
-    assert np.array_equal(np.isnan(av), np.isnan(bv))
-    m = ~np.isnan(av)
-    assert np.array_equal(av[m], bv[m])
-
-
 def test_over_cache_plans_build_without_jobs(spark, grids, tile_dir, points_pdf):
-    """Building an over-cache join (the catalog past the grid cache, so the
-    rows take the shuffled layout) launches no Spark job, for
-    elevation_join and terrain_join, over a tile_dir catalog and an
-    in-memory one: AQE sizes the rebalance at run time. The deleted salt
-    histogram ran 2 jobs on every build."""
+    """Building an over-cache join (the catalog past the grid cache)
+    launches no Spark job and plans no Exchange, for elevation_join and
+    terrain_join, over a tile_dir catalog and an in-memory one. The
+    deleted salt histogram ran 2 jobs on every build."""
     from htg_spark.operators.terrain import terrain_join
 
     df = spark.createDataFrame(points_pdf.assign(caption="c"))
@@ -462,16 +412,16 @@ def test_over_cache_plans_build_without_jobs(spark, grids, tile_dir, points_pdf)
         assert list(jobs) == []
         for out in outs:
             nodes = plan_nodes(out)
-            assert not faults(nodes, [count("Exchange", 1, 1)]), render(nodes)
+            assert not faults(nodes, [count("Exchange", 0, 0)]), render(nodes)
         assert outs[0].where("knn_used").count() > 0
 
 
 def test_huge_coordinates_get_a_null_key_on_every_plan(spark, grids):
     """A coordinate whose floor lies outside int32 (1e10, inf, -1e12) is out
     of coverage with a NULL tile key and NULL values, on the broadcast,
-    map-side cogroup and shuffled cogroup plans alike, for elevation_join
-    and terrain_join. The shuffled plan once aborted with CAST_OVERFLOW on
-    its int tile key, and the map-side one returned NumPy's wrapped key
+    cogroup and over-cache cogroup plans alike, for elevation_join and
+    terrain_join. A deleted shuffled plan once aborted with CAST_OVERFLOW
+    on its int tile key, and the map-side one returned NumPy's wrapped key
     -2147483648."""
     from htg_spark.operators.terrain import terrain_join
 
@@ -524,6 +474,31 @@ def test_rewritten_tile_file_is_read_again(spark, tmp_path):
     assert joined() == 700
 
 
+def test_truncated_tile_file_raises_then_is_mapped_again(spark, tmp_path):
+    """A tile file truncated between two joins gives an error naming its
+    size, not a dead worker: its stamp changed, so the worker's grid cache
+    reads it again, and the size check refuses it before anything is
+    mapped (the old map stays in the cache, never touched). Restored, the
+    file is mapped again and the join is right."""
+    f = tmp_path / "N35E138.hgt"
+    blob = hgt.encode_tile(fixtures.tile_center(500))
+    f.write_bytes(blob)
+    eng = ElevationEngine(spark, tile_dir=str(tmp_path))
+    df = spark.createDataFrame(pd.DataFrame({"image_id": ["a"], "lat": [35.5], "lon": [138.5]}))
+
+    def joined():
+        return eng.elevation_join(df, strategy="cogroup").first()["elevation"]
+
+    assert joined() == 500
+    os.truncate(f, 1000)
+    with pytest.raises(Exception, match="Invalid HGT file size: 1000 bytes"):
+        joined()
+    st = os.stat(f)
+    f.write_bytes(blob)
+    os.utime(f, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    assert joined() == 500
+
+
 @pytest.mark.parametrize("knn", [False, True])
 @pytest.mark.parametrize("default", [None, -1])
 def test_observation_counts_match_the_oracle(spark, knn, default):
@@ -570,20 +545,21 @@ def test_observation_counts_match_the_oracle(spark, knn, default):
     assert dict(eng.last_observation.get) == expected
 
 
-def test_read_blob_from_path_uri_handling(tmp_path):
+def test_read_grid_uri_handling(tmp_path):
     """The binaryFile path column is a URI: percent-encoded characters must
     decode, and non-local schemes must fail with a clear contract error
     (not a bogus FileNotFoundError deep inside a task)."""
-    from htg_spark.catalog import _read_blob_from_path
+    from htg_spark.catalog import _read_grid
 
+    grid = fixtures.tile_center(500)
     p = tmp_path / "tile dir" / "N35E138.hgt"
     p.parent.mkdir()
-    p.write_bytes(b"\x01\x02\x03")
+    p.write_bytes(hgt.encode_tile(grid))
     uri = "file://" + str(p.parent).replace(" ", "%20") + "/N35E138.hgt"
-    assert _read_blob_from_path(uri) == b"\x01\x02\x03"
-    assert _read_blob_from_path(str(p)) == b"\x01\x02\x03"
+    assert np.array_equal(_read_grid(uri), grid)
+    assert np.array_equal(_read_grid(str(p)), grid)
     with pytest.raises(NotImplementedError, match="s3a"):
-        _read_blob_from_path("s3a://bucket/N35E138.hgt")
+        _read_grid("s3a://bucket/N35E138.hgt")
 
 
 def test_preload_gates_blob_broadcast(spark):
@@ -673,43 +649,49 @@ def test_filename_expressions_match_python(spark):
             assert (back["a"][i], back["b"][i]) == e
 
 
-def test_path_plan_moves_input_rows_once(spark, tile_dir, points_pdf):
-    """The shuffled layout reads tiles by path, so only the input rows move:
-    ONE shuffle Exchange (the rebalance on the tile key), no cogroup, no
-    salt join, no id re-join, no data column in any Exchange — with kNN as
-    well. The plan shuffles for tile locality when the catalog holds more
-    tiles than the engine's grid cache, or when spark.python.worker.reuse
-    is off (every task then starts a fresh worker with an empty cache). The
-    setting is
-    read from the live context conf, as the Python runners read it, and
-    restored before anything runs."""
+def test_no_plan_shuffles(spark, tile_dir, points_pdf):
+    """Every elevation_join and terrain_join plan runs the kernel UDF on the
+    input partitions: no Exchange, no cogroup, no join, no data column, and
+    no Spark job while it is built — for cache_size 0, 2 and 64 (none, some
+    or all of the catalog's tiles in the grid cache), with
+    spark.python.worker.reuse on and off, and kNN on and off. The setting
+    is restored before anything runs."""
+    from htg_spark.operators.terrain import terrain_join
+
     df = spark.createDataFrame(points_pdf.assign(caption="c"))
     conf = spark.sparkContext._conf
-    shapes = [(2, "true"), (64, "false"), (64, "False ")]  # (cache_size, reuse)
-    for (cache_size, reuse), knn in itertools.product(shapes, (False, True)):
+    sc = spark.sparkContext
+    gates = [
+        count("Exchange", 0, 0),
+        no_column("data"),
+        present("ArrowEvalPython"),
+        absent(
+            "SortMergeJoin", "BroadcastHashJoin", *COGROUPS, "MapInArrow",
+            "Scan ExistingRDD",
+        ),
+    ]
+    for cache_size, reuse in itertools.product((0, 2, 64), ("true", "false")):
         eng = ElevationEngine(spark, tile_dir=tile_dir, cache_size=cache_size)
+        eng.n_tiles()  # the path index, once per engine
         conf.set("spark.python.worker.reuse", reuse)
+        sc.setJobGroup("no-shuffle-build", "plan build only")
         try:
-            nodes = plan_nodes(eng.elevation_join(df, strategy="cogroup", knn_fallback=knn))
+            outs = [
+                eng.elevation_join(df, strategy="cogroup", knn_fallback=knn)
+                for knn in (False, True)
+            ] + [terrain_join(eng, df, strategy="cogroup")]
+            jobs = sc.statusTracker().getJobIdsForGroup("no-shuffle-build")
         finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
             conf.set("spark.python.worker.reuse", "true")
-        gates = [
-            count("Exchange", 1, 1),
-            no_column("data", "Exchange"),
-            present("ArrowEvalPython"),
-            absent(
-                "SortMergeJoin", "BroadcastHashJoin", *COGROUPS, "MapInArrow",
-                "Scan ExistingRDD",
-            ),
-        ]
-        assert not faults(nodes, gates), render(nodes)
-        (exchange,) = [n for n in nodes if n.name == "Exchange"]
-        assert "caption" in exchange.output, render(nodes)
-        assert exchange.keys == ("_tile_lat", "_tile_lon"), render(nodes)
+        assert list(jobs) == [], (cache_size, reuse)
+        for out in outs:
+            nodes = plan_nodes(out)
+            assert not faults(nodes, gates), render(nodes)
 
 
 def test_kernel_buffer_reads_each_tile_once(tmp_path, monkeypatch):
-    """A shuffled partition reaches the kernel UDF with its tiles
+    """An input partition reaches the kernel UDF with its tiles
     interleaved, so every Arrow batch touches every tile of the task. The
     UDF body runs the kernel over a buffer of batches: with more tiles
     than the grid cache, each tile is still read once per buffer (per
@@ -770,8 +752,8 @@ def test_kernel_buffer_spans_batches_under_spark(spark, tile_dir, points_pdf, mo
     """The kernel UDF consumes several Arrow batches before it yields:
     with 64-row batches and a 300-row buffer, the broadcast and by-path
     plans (kNN on) still return exactly their one-batch results. The grid
-    cache holds fewer tiles than the catalog, so the by-path leg is the
-    shuffled plan, whose partitions interleave tiles."""
+    cache holds fewer tiles than the catalog, and the partitions interleave
+    tiles, so both legs evict and re-read tiles."""
     from htg_spark import engine as engine_mod
 
     df = spark.createDataFrame(points_pdf.assign(caption="c"))
@@ -809,9 +791,8 @@ def test_path_plan_duplicate_ids_match_broadcast(spark, grids, tile_dir):
     """Duplicate ids with a payload column: the cogroup strategy keeps one
     output row per input row, exactly like broadcast, and both match the
     hgt.py oracle (the old cogroup id re-join multiplied duplicates) —
-    under the shuffled layout (grid cache smaller than the catalog) and the
-    map-side one (catalog fits the cache), over a tile_dir catalog and an
-    in-memory one."""
+    with a grid cache smaller than the catalog and one that holds it, over
+    a tile_dir catalog and an in-memory one."""
     pdf = pd.DataFrame(
         {
             "image_id": ["a", "a", "b", "b", "c"],
@@ -841,11 +822,11 @@ def test_path_plan_duplicate_ids_match_broadcast(spark, grids, tile_dir):
 
 
 def test_null_lat_is_out_of_coverage_under_every_plan(spark, grids, tile_dir):
-    """A NULL lat is out of coverage under both layouts alike: lat stays
+    """A NULL lat is out of coverage under every plan alike: lat stays
     NULL, tile key and elevation are NULL (the deleted inline cogroup once
-    raised TypeError on the NULL group key). The cogroup strategy runs
-    shuffled (grid cache smaller than the catalog) and map-side (catalog
-    fits the cache), over a tile_dir catalog and an in-memory one."""
+    raised TypeError on the NULL group key). The cogroup strategy runs with
+    a grid cache smaller than the catalog and one that holds it, over a
+    tile_dir catalog and an in-memory one."""
     rows = [("n1", None, 138.5, "p"), ("n2", 35.5, 138.5, "q"), ("n3", 40.2, 138.4, "r")]
     df = spark.createDataFrame(rows, "image_id string, lat double, lon double, caption string")
     cols = ["image_id", "caption", "lat", "lon", "tile_lat", "tile_lon",
@@ -944,8 +925,8 @@ def test_spill_isolates_engines_sharing_a_tile_key(spark):
     """Two in-memory engines in one session hold different grids under the
     same tile key. Spilled files are named by a hash of their bytes, so
     neither engine reads the other's tile: each returns its own
-    elevations through the join, shuffled (cache_size 2) and map-side
-    (cache_size 64), and through the point API."""
+    elevations through the join, over-cache (cache_size 2) and within the
+    cache (cache_size 64), and through the point API."""
     key = (35, 138)
     grid_a = np.full((1201, 1201), 100, dtype=np.int16)
     grid_b = np.full((1201, 1201), 700, dtype=np.int16)

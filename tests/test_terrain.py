@@ -166,15 +166,14 @@ def test_terrain_join_plan_is_map_only(spark):
 def test_terrain_join_default_strategy_is_auto(spark):
     """A default terrain_join plans like a default elevation_join
     (strategy='auto'): over a catalog with more tiles than the grid cache
-    the rows take the shuffled layout, one shuffle Exchange. (The old
-    default, 'broadcast', ran map-side at any catalog size.)"""
+    it runs map-side too, with no Exchange."""
     from htg_spark.driver_queries import CATALOG_KEYS, get_engine
 
     eng = get_engine(spark, cache_size=2)
     assert len(CATALOG_KEYS) > eng.cache_size
     pts = derive_points(spark.read.parquet("/root/testdata/sf0.001/events.parquet"))
     nodes = plan_nodes(terrain.terrain_join(eng, pts))
-    gates = [count("Exchange", 1, 1), present("ArrowEvalPython")]
+    gates = [count("Exchange", 0, 0), present("ArrowEvalPython")]
     assert not faults(nodes, gates), render(nodes)
 
 
@@ -509,8 +508,8 @@ def test_render_hillshade_flushes_large_batches(monkeypatch, spark):
 
 def test_terrain_cogroup_equals_broadcast(spark):
     """Every terrain plan returns the broadcast plan's rows: the cogroup
-    strategy both shuffled (cache_size 2, fewer slots than catalog tiles)
-    and map-side (cache_size 64), over the tile_dir catalog and the
+    strategy with a grid cache smaller than the catalog (cache_size 2) and
+    one that holds it (cache_size 64), over the tile_dir catalog and the
     in-memory one (spilled to files). The input adds a NULL-lat row, which
     passes through with a NULL tile key and terrain_ok false, and a second
     row for one id with a different payload, which every plan keeps as a
@@ -558,21 +557,20 @@ def test_terrain_cogroup_equals_broadcast(spark):
 
 
 def test_terrain_cogroup_path_never_shuffles_blobs(spark):
-    """Terrain cogroup over a tile_dir catalog: no Exchange in the plan may
-    carry the binary data column (same gate as the elevation path plan),
-    whether the rows are rebalanced by tile key (cache_size 2, fewer slots
-    than catalog tiles: one Exchange) or run map-side (cache_size 64: no
-    Exchange)."""
+    """Terrain cogroup over a tile_dir catalog: the plan holds no Exchange,
+    so none carries the binary data column (same gate as the elevation path
+    plan), with a grid cache smaller than the catalog (cache_size 2) and
+    one that holds it (cache_size 64)."""
     from htg_spark.driver_queries import get_path_engine
     from htg_spark.engine import ElevationEngine
 
     pts = derive_points(spark.read.parquet("/root/testdata/sf0.001/events.parquet"))
     path_eng = get_path_engine(spark)  # cache_size 64
-    shuffled_eng = ElevationEngine(spark, catalog=path_eng.catalog, cache_size=2)
-    for eng, n_exchanges in ((path_eng, 0), (shuffled_eng, 1)):
+    over_eng = ElevationEngine(spark, catalog=path_eng.catalog, cache_size=2)
+    for eng in (path_eng, over_eng):
         out = terrain.terrain_join(eng, pts, strategy="cogroup")
         nodes = plan_nodes(out)
-        gates = [count("Exchange", n_exchanges, n_exchanges), no_column("data", "Exchange")]
+        gates = [count("Exchange", 0, 0), no_column("data", "Exchange")]
         assert not faults(nodes, gates), render(nodes)
 
 
